@@ -22,7 +22,7 @@ One-call lifecycle (the reference's `connector.Start`):
         # transport: START_REPLICATION socket -> envelope segments,
         # reconnect-with-backoff, durable-log resume  (own thread/process)
     lsn, q = eng.start(run_sql, wal_dir, state_dir, ckpt_dir,
-                       snapshot_reader=...)
+                       chunk_reader=...)
         # DDL -> snapshot seeds the mirror at the handoff LSN ->
         # post-handoff changes stream into the same mirror
 """
@@ -33,8 +33,10 @@ import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .config import EngineConfig, TableConfig
+from .snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
 from .snapshot.planner import SnapshotPlan, plan_auto
 from .sources import postgres as pg
 from .streaming.changelog_stream import changelog_stream, mirror_sink
@@ -47,6 +49,16 @@ class CdcEngine:
         config.validate()
         self.config = config
         self.spark = spark
+        self._structs: dict[str, StructType] = {}
+
+    def _ddl_struct(self, ddl: str) -> StructType:
+        """DDL string -> StructType, parsed once per engine: a parse is a
+        JVM round trip and the typed transports re-type every
+        micro-batch. DDL-aware — a naive split(',') would shred types
+        that contain commas (decimal(10,2), map<...>, struct<...>)."""
+        if ddl not in self._structs:
+            self._structs[ddl] = self.spark.createDataFrame([], ddl).schema
+        return self._structs[ddl]
 
     # -- management plane (O25-O27): DDL the operator executes against PG --
 
@@ -301,7 +313,7 @@ class CdcEngine:
         checkpoint_dir: str,
         n_buckets: int | None = None,
         keep_epochs: int | None = None,
-        claim_backend=None,
+        claim_backend: ClaimBackend = DEFAULT_BACKEND,
         merge_mode: str = "cow",
         compact_deltas: int = 8,
     ):
@@ -318,12 +330,9 @@ class CdcEngine:
         mirror size) and reads fold base+deltas; a bucket compacts when
         its pending delta count reaches `compact_deltas` (see
         merge_mirror_batch)."""
-        from .snapshot.claim_backend import DEFAULT_BACKEND
-
         return mirror_sink(
             stream_df, state_dir, checkpoint_dir, n_buckets=n_buckets,
-            keep_epochs=keep_epochs,
-            backend=claim_backend or DEFAULT_BACKEND,
+            keep_epochs=keep_epochs, backend=claim_backend,
             merge_mode=merge_mode, compact_deltas=compact_deltas,
         )
 
@@ -336,7 +345,7 @@ class CdcEngine:
         value_schema: str,
         pk_col: str = "pk",
         n_buckets: int | None = None,
-        claim_backend=None,
+        claim_backend: ClaimBackend = DEFAULT_BACKEND,
     ):
         """Whole-row TYPED mirror straight from the change envelope — the
         reference's sink contract (typed full-row events applied in commit
@@ -349,14 +358,10 @@ class CdcEngine:
         bucketed mirror with per-column TOAST repair (a column absent
         from an update's after map types to NULL and inherits the stored
         value)."""
-        from .streaming.changelog_stream import mirror_sink as _sink
-
-        from .snapshot.claim_backend import DEFAULT_BACKEND
-
         flat, value_cols = self._typed_flat(changes, table, value_schema, pk_col)
-        return _sink(
+        return mirror_sink(
             flat, state_dir, checkpoint_dir, n_buckets=n_buckets,
-            value_cols=value_cols, backend=claim_backend or DEFAULT_BACKEND,
+            value_cols=value_cols, backend=claim_backend,
         )
 
     def _typed_flat(self, changes, table: str, value_schema: str, pk_col: str):
@@ -369,21 +374,18 @@ class CdcEngine:
 
         from .envelope import typed_projection
 
-        # DDL-aware parse — a naive split(',') would shred types that
-        # contain commas (decimal(10,2), map<...>, struct<...>)
-        value_cols = tuple(
-            f.name for f in self.spark.createDataFrame([], value_schema).schema.fields
-        )
+        val_struct = self._ddl_struct(value_schema)
+        value_cols = tuple(f.name for f in val_struct.fields)
         sch, _, tbl = table.rpartition(".")
         env = changes.filter(
             (F.col("schema") == (sch or "public")) & (F.col("table") == tbl)
         ).withColumn(
             "_img", F.when(F.col("op") == "D", F.col("before")).otherwise(F.col("after"))
         )
-        pk_struct = self.spark.createDataFrame([], f"{pk_col} bigint").schema
-        val_struct = self.spark.createDataFrame([], value_schema).schema
         typed = typed_projection(
-            typed_projection(env, "_img", pk_struct), "after", val_struct
+            typed_projection(env, "_img", self._ddl_struct(f"{pk_col} bigint")),
+            "after",
+            val_struct,
         )
         flat = typed.select(
             "op",
@@ -436,7 +438,7 @@ class CdcEngine:
         ever_seen = set(sidecar["seen"])
         declared = [
             (f.name, f.dataType.simpleString())
-            for f in self.spark.createDataFrame([], declared_ddl).schema.fields
+            for f in self._ddl_struct(declared_ddl).fields
         ]
         rel_types = {n: pg_type_to_spark(t).simpleString() for n, t in rel_cols}
         out: list[tuple[str, str]] = []
@@ -479,7 +481,7 @@ class CdcEngine:
         n_buckets: int | None = None,
         evolve_schema: bool = False,
         wal_dir: str | None = None,
-        claim_backend=None,
+        claim_backend: ClaimBackend = DEFAULT_BACKEND,
     ):
         """O17 typed fan-out: ONE slot's envelope stream feeds every
         published table's whole-row mirror (the reference runs one
@@ -495,14 +497,10 @@ class CdcEngine:
         DDL independently through the pump's per-table Relation sidecar —
         same contract as `start(evolve_schema=True)`: supersets widen the
         manifest pin, pre-DDL rows read NULL for new columns."""
-        import os as _os
-
-        from .snapshot.claim_backend import DEFAULT_BACKEND
         from .streaming.changelog_stream import merge_mirror_batch
 
         if evolve_schema and wal_dir is None:
             raise ValueError("evolve_schema=True requires wal_dir=")
-        backend = claim_backend or DEFAULT_BACKEND
 
         def apply(batch_df, _spark_epoch: int) -> None:
             for table, vschema in tables.items():
@@ -517,12 +515,12 @@ class CdcEngine:
                 # epoch a seed already wrote (see mirror_sink)
                 merge_mirror_batch(
                     flat,
-                    _os.path.join(state_root, table.replace(".", "__")),
+                    os.path.join(state_root, table.replace(".", "__")),
                     epoch=None,
                     n_buckets=n_buckets,
                     value_cols=value_cols,
                     evolve_schema=evolve_schema,
-                    backend=backend,
+                    backend=claim_backend,
                     dropped_cols=dropped,
                 )
 
@@ -541,7 +539,6 @@ class CdcEngine:
         wal_dir: str,
         state_dir: str,
         checkpoint_dir: str,
-        snapshot_reader=None,
         mirror_buckets: int | None = None,
         value_schema: str = "after_val double",
         transport: str = "flat",
@@ -552,7 +549,7 @@ class CdcEngine:
         claim_ttl_s: float = 300.0,
         drain_timeout_s: float = 600.0,
         heartbeat_every_s: float | None = None,
-        claim_backend=None,
+        claim_backend: ClaimBackend = DEFAULT_BACKEND,
         merge_lock_ttl_s: float | None = None,
         evolve_schema: bool = False,
         merge_mode: str = "cow",
@@ -574,10 +571,14 @@ class CdcEngine:
            from before any snapshot row is read (O28 ordering)
         2. record the snapshot LSN (`pg_current_wal_lsn`) with the slot in
            place — the handoff watermark
-        3. `initial` / `snapshot_only`: bulk-load each captured table
-           (`snapshot_reader(table) -> DataFrame` with (pk, after_val),
-           e.g. a `snapshot_jdbc`/`snapshot_parquet` read) into the
-           bucketed mirror as op='R' rows at the snapshot LSN
+        3. `initial` / `snapshot_only`: seed each captured table into the
+           bucketed mirror as op='R' rows at the snapshot LSN through the
+           cooperative chunk queue (`_cooperative_seed`):
+           `chunk_reader(tcfg, chunk) -> DataFrame` with (pk, *value
+           columns), e.g. a `snapshot_jdbc`/`snapshot_parquet` read, reads
+           one chunk. A completed seed is skipped on restart and its
+           stored snapshot LSN reused; `config.resnapshot` clears the
+           queue so every chunk reprocesses (config.go:328).
         4. `snapshot_only`: done. `initial`/`never`: start the changelog
            stream from `wal_dir`, dropping events at or below the snapshot
            LSN (O28 — no gap, no duplicate) and merging into the mirror.
@@ -587,7 +588,7 @@ class CdcEngine:
         plane. Returns (snapshot_lsn, streaming_query_or_None).
 
         `value_schema` is the captured table's VALUE-column DDL (default
-        the single after_val column): the snapshot reader must produce
+        the single after_val column): the chunk reader must produce
         those columns, WAL segments must carry them, and the mirror
         stores the whole row with per-column TOAST repair (reference
         parity: sinks receive full-row images).
@@ -608,14 +609,14 @@ class CdcEngine:
         per-column TOAST repair.
 
         `chunk_planner` (tcfg -> chunk dicts, e.g.
-        `chunk_queue.manifest_from_plan(plan_auto(...))`) switches the
-        seed to PER-CHUNK COOPERATIVE mode (O23 at the reference's
-        worker-queue granularity): N apps started against the same
-        state_dir split each table's chunks through the shared claim
-        queue; `chunk_reader(tcfg, chunk) -> DataFrame` (REQUIRED with
-        chunk_planner — snapshot_reader's whole-table contract cannot
-        substitute) reads one chunk. The first app publishes the
-        snapshot LSN; every app adopts it. `claim_ttl_s` /
+        `chunk_queue.manifest_from_plan(plan_auto(...))`) splits each
+        table's seed into chunks; omitted, a table is ONE chunk
+        (`[{}]`, read whole — the reader gets `{"chunk_index": 0}`).
+        Either way the seed runs through the shared claim queue under
+        state_dir (O23 at the reference's worker-queue granularity): N
+        apps started against the same state_dir split the chunks, and a
+        peer waits for a chunk another app holds. The first app
+        publishes the snapshot LSN; every app adopts it. `claim_ttl_s` /
         `drain_timeout_s` / `heartbeat_every_s` tune the queue: a chunk
         claim goes stale (reclaimable by a peer) after `claim_ttl_s`
         without a heartbeat; a background heartbeat refreshes every
@@ -623,13 +624,13 @@ class CdcEngine:
         claim_ttl_s/4, so a long chunk read is never reclaimed
         mid-processing); `drain_timeout_s` bounds IDLE time — no chunk
         completing anywhere — not total drain wall-clock. `claim_backend`
-        selects the queue's atomic-marker medium
+        selects the atomic-marker medium of the queue and the mirror
         (`snapshot.claim_backend.ClaimBackend`): default POSIX hard-link
         claims for filesystem/NFS state dirs; pass an
         `ObjectStoreBackend` when state_dir is S3/GCS, where claims ride
         conditional PUTs (If-None-Match / If-Match) instead of links.
         `merge_lock_ttl_s` tunes the cross-process mirror merge lock's
-        staleness window for the cooperative seed: a SIGKILLed peer that
+        staleness window for the seed: a SIGKILLed peer that
         died holding the lock is taken over after this long (default the
         merge lock's own 300s; size it to a few times the longest single
         chunk merge, like claim_ttl_s for claims).
@@ -668,13 +669,13 @@ class CdcEngine:
         recommendation; the report goes to `on_maintenance` (wire
         `observability.CdcMetricsListener.record_mirror` for /status).
         See `streaming.changelog_stream.run_mirror_maintenance`."""
-        from pyspark.sql import functions as F
-
-        from .snapshot.claim_backend import DEFAULT_BACKEND
         from .sources.slot_keeper import lsn_to_int
-        from .streaming.changelog_stream import merge_mirror_batch
 
-        mirror_backend = claim_backend or DEFAULT_BACKEND
+        seeding = self.config.snapshot_mode in ("initial", "snapshot_only")
+        if seeding and chunk_reader is None:
+            raise ValueError(
+                f"snapshot_mode={self.config.snapshot_mode!r} needs a chunk_reader"
+            )
         if evolve_schema and transport != "envelope":
             # fail BEFORE any snapshot work: the text-plugin transports
             # carry no Relation messages, so there is no typed schema
@@ -683,124 +684,33 @@ class CdcEngine:
                 "evolve_schema=True requires transport='envelope' (the "
                 "pgoutput Relation sidecar is the schema authority)"
             )
-        # DDL-aware parse (see _typed_flat: split(',') breaks decimal/map)
-        value_cols = tuple(
-            f.name for f in self.spark.createDataFrame([], value_schema).schema.fields
-        )
+        value_cols = tuple(f.name for f in self._ddl_struct(value_schema).fields)
         for stmt in self.setup_sql():
             run_sql(stmt)
         (row,) = run_sql(pg.current_wal_lsn_sql())
         snapshot_lsn = lsn_to_int(row[0])
 
-        if self.config.snapshot_mode in ("initial", "snapshot_only"):
-            if chunk_planner is not None:
-                # O23 at CHUNK granularity (the reference's SKIP-LOCKED
-                # worker queue, worker.go:421-484): N apps share ONE
-                # table's chunks through the claim queue instead of one
-                # app owning the whole seed.
-                if chunk_reader is None:
-                    # snapshot_reader is NOT a substitute: its contract is
-                    # one whole-table read — calling it per chunk would
-                    # re-merge the full table once per chunk (or TypeError
-                    # on the documented 1-arg signature)
-                    raise ValueError("chunk_planner= requires chunk_reader=")
-                snapshot_lsn = self._cooperative_seed(
-                    chunk_planner,
-                    chunk_reader,
-                    state_dir,
-                    snapshot_lsn,
-                    value_cols,
-                    mirror_buckets,
-                    keep_epochs,
-                    claim_ttl_s=claim_ttl_s,
-                    drain_timeout_s=drain_timeout_s,
-                    heartbeat_every_s=heartbeat_every_s,
-                    claim_backend=claim_backend,
-                    merge_lock_ttl_s=merge_lock_ttl_s,
-                )
-                if self.config.snapshot_mode == "snapshot_only":
-                    return snapshot_lsn, None
-                return self._start_stream(
-                    wal_dir, state_dir, checkpoint_dir, snapshot_lsn,
-                    mirror_buckets, value_schema, value_cols, transport,
-                    table, keep_epochs, evolve_schema, backend=mirror_backend,
-                    merge_mode=merge_mode, compact_deltas=compact_deltas,
-                    view_state_dir=view_state_dir, view_groups=view_groups,
-                    view_value_col=view_value_col, view_minmax=view_minmax,
-                    maintain_every=maintain_every,
-                    maintain_min_deltas=maintain_min_deltas,
-                    maintain_auto_rebucket=maintain_auto_rebucket,
-                    on_maintenance=on_maintenance,
-                )
-            if snapshot_reader is None:
-                raise ValueError(
-                    f"snapshot_mode={self.config.snapshot_mode!r} needs a snapshot_reader"
-                )
-            # Snapshot-job doc (connector.go:406-444 pseudo-slot resume +
-            # worker.go claim queue at app granularity): a completed seed is
-            # SKIPPED on restart; `resnapshot=True` clears the marker so
-            # everything reprocesses (config.go:328, force_resnapshot
-            # integration tests); a live peer app holding the claim means
-            # the seed is theirs — we proceed to streaming either way.
-            from .snapshot import job_claim
-
-            if self.config.resnapshot:
-                job_claim.reset(state_dir)
-            while True:
-                claim = job_claim.acquire(state_dir)
-                if claim.acquired:
-                    wanted = set(
-                        self.config.snapshot_tables
-                        or [t.qualified for t in self.config.tables]
-                    )
-                    for tcfg in self.config.tables:
-                        if tcfg.qualified not in wanted:
-                            continue
-                        rows = snapshot_reader(tcfg).select(
-                            "pk",
-                            F.lit(snapshot_lsn).cast("long").alias("lsn"),
-                            F.lit("R").alias("op"),
-                            *value_cols,
-                        )
-                        merge_mirror_batch(
-                            rows,
-                            state_dir,
-                            n_buckets=mirror_buckets,
-                            value_cols=value_cols,
-                            # the seed merge is often the mirror's FIRST
-                            # write — it must pin the caller's retention,
-                            # or snapshot_only mode silently keeps 1
-                            keep_epochs=keep_epochs,
-                            backend=mirror_backend,
-                        )
-                    # Persist the seam: a later restart must anchor its
-                    # stream filter HERE, not at a fresh wal_lsn read —
-                    # re-reading the watermark after skipping the seed
-                    # would silently drop every event that landed while
-                    # the app was down.
-                    claim.mark_completed(info={"snapshot_lsn": snapshot_lsn})
-                    break
-                if job_claim.is_completed(state_dir):
-                    stored = job_claim.completed_info(state_dir).get("snapshot_lsn")
-                    # Legacy marker without an LSN: replay the whole WAL
-                    # dir — safe (idempotent max-LSN-wins merge; seeded
-                    # rows sit at the original snapshot LSN and win over
-                    # older replayed events), unlike any guess that could
-                    # skip events.
-                    snapshot_lsn = int(stored) if stored is not None else 0
-                    break
-                # a live peer is seeding this state_dir: streaming now
-                # would read a half-seeded mirror AND anchor at the wrong
-                # LSN — wait for its completion marker (or its crash,
-                # after which acquire() takes over via the TTL arm)
-                if job_claim.wait_completed(state_dir):
-                    continue  # completed: loop reads the stored LSN
-        if self.config.snapshot_mode == "snapshot_only":
-            return snapshot_lsn, None
+        if seeding:
+            snapshot_lsn = self._cooperative_seed(
+                chunk_planner or (lambda _tcfg: [{}]),
+                chunk_reader,
+                state_dir,
+                snapshot_lsn,
+                value_cols,
+                mirror_buckets,
+                keep_epochs,
+                claim_ttl_s=claim_ttl_s,
+                drain_timeout_s=drain_timeout_s,
+                heartbeat_every_s=heartbeat_every_s,
+                claim_backend=claim_backend,
+                merge_lock_ttl_s=merge_lock_ttl_s,
+            )
+            if self.config.snapshot_mode == "snapshot_only":
+                return snapshot_lsn, None
         return self._start_stream(
             wal_dir, state_dir, checkpoint_dir, snapshot_lsn, mirror_buckets,
             value_schema, value_cols, transport, table, keep_epochs,
-            evolve_schema, backend=mirror_backend, merge_mode=merge_mode,
+            evolve_schema, backend=claim_backend, merge_mode=merge_mode,
             compact_deltas=compact_deltas,
             view_state_dir=view_state_dir, view_groups=view_groups,
             view_value_col=view_value_col, view_minmax=view_minmax,
@@ -823,7 +733,7 @@ class CdcEngine:
         table,
         keep_epochs,
         evolve_schema=False,
-        backend=None,
+        backend: ClaimBackend = DEFAULT_BACKEND,
         merge_mode="cow",
         compact_deltas=8,
         view_state_dir=None,
@@ -836,17 +746,11 @@ class CdcEngine:
         on_maintenance=None,
     ):
         """Post-seed data plane: the changelog stream from `wal_dir`,
-        filtered to post-handoff events, merging into the mirror."""
-        from .snapshot.claim_backend import DEFAULT_BACKEND
-
-        backend = backend or DEFAULT_BACKEND
+        turned into flat change rows per micro-batch (`to_flat`), filtered
+        to post-handoff events, merging into the mirror."""
         from pyspark.sql import functions as F
 
-        from .streaming.changelog_stream import (
-            changelog_stream,
-            mirror_sink,
-            read_mirror,
-        )
+        from .streaming.changelog_stream import read_mirror
 
         view_kwargs = {}
         if view_state_dir is not None:
@@ -883,13 +787,24 @@ class CdcEngine:
                 on_maintenance=on_maintenance,
             )
 
+        if transport not in ("flat", "envelope", "wal2json", "test_decoding"):
+            raise ValueError(f"unknown transport {transport!r}")
+        if transport != "flat" and table is None:
+            raise ValueError(f"transport={transport!r} requires table=")
+        dropped_now = None
         if transport == "flat":
-            stream_schema = self.spark.createDataFrame(
-                [],
-                "op string, lsn bigint, xid bigint, commit_ts timestamp, "
-                f"pk bigint, {value_schema}",
-            ).schema
-            flat = changelog_stream(self.spark, wal_dir, schema=stream_schema)
+            stream_df = changelog_stream(
+                self.spark,
+                wal_dir,
+                schema=self._ddl_struct(
+                    "op string, lsn bigint, xid bigint, commit_ts timestamp, "
+                    f"pk bigint, {value_schema}"
+                ),
+            )
+
+            def to_flat(batch_df):
+                return batch_df
+
         elif transport == "test_decoding":
             # The text grammar's commit-ts stamp is a per-xid aggregate +
             # join — not expressible incrementally on an unbounded stream.
@@ -901,110 +816,67 @@ class CdcEngine:
             # degraded case is a txn that out-sizes the keeper's bounded
             # window escalation, which ships with NULL commit_ts, never a
             # wrong one; ordering rides (lsn, txn_seq), not commit_ts).
-            if table is None:
-                raise ValueError(f"transport={transport!r} requires table=")
             from .sources import lsn_stream
             from .sources.test_decoding import decode_test_decoding
 
             lsn_stream.register(self.spark)
-            raw = (
+            stream_df = (
                 self.spark.readStream.format("pq_cdc_wal")
                 .option("path", wal_dir)
                 .option("raw", "true")
                 .load()
             )
 
-            def transform(batch_df):
+            def to_flat(batch_df):
                 env = decode_test_decoding(batch_df)
-                flat, _ = self._typed_flat(env, table, value_schema, "pk")
-                return flat.filter(F.col("lsn") > snapshot_lsn)
+                return self._typed_flat(env, table, value_schema, "pk")[0]
 
-            return snapshot_lsn, mirror_sink(
-                raw,
-                state_dir,
-                checkpoint_dir,
-                n_buckets=mirror_buckets,
-                value_cols=value_cols,
-                keep_epochs=keep_epochs,
-                transform=transform,
-                backend=backend,
-                merge_mode=merge_mode,
-                compact_deltas=compact_deltas,
-                **view_kwargs,
-            )
-        elif transport in ("envelope", "wal2json"):
-            if table is None:
-                raise ValueError(f"transport={transport!r} requires table=")
-            env = (
+        else:
+            stream_df = (
                 self.envelope_changes(wal_dir)
                 if transport == "envelope"
                 else self.raw_changes(wal_dir, plugin="wal2json")
             )
             if evolve_schema:
-                if transport != "envelope":
-                    # the text-plugin transports carry no Relation
-                    # messages — there is no typed schema authority to
-                    # evolve from (wal2json/test_decoding payloads are
-                    # untyped JSON/text)
-                    raise ValueError(
-                        "evolve_schema=True requires transport='envelope' "
-                        "(the pgoutput Relation sidecar is the schema "
-                        "authority)"
-                    )
-
                 # one sidecar interpretation per micro-batch, shared by
-                # the typing transform AND the sink's drop list (review
-                # r9: calling _evolved_value_schema twice doubled the
-                # sidecar read + schema parse on the hot streaming path);
-                # re-read EVERY batch because mid-stream DDL (ADD/ALTER
-                # TYPE/DROP) changes the answer between batches
+                # the typing AND the sink's drop list (calling
+                # _evolved_value_schema twice doubles the sidecar read +
+                # schema parse on the hot streaming path); re-read EVERY
+                # batch because mid-stream DDL (ADD/ALTER TYPE/DROP)
+                # changes the answer between batches
                 batch_schema = {"dropped": ()}
 
-                def transform(batch_df):
+                def to_flat(batch_df):
                     vschema, dropped = self._evolved_value_schema(
                         wal_dir, table, value_schema
                     )
                     batch_schema["dropped"] = dropped
-                    flat, _ = self._typed_flat(batch_df, table, vschema, "pk")
-                    return flat.filter(F.col("lsn") > snapshot_lsn)
+                    return self._typed_flat(batch_df, table, vschema, "pk")[0]
 
                 def dropped_now() -> tuple[str, ...]:
                     # the sink calls this after transform ran for the
                     # same batch — consumes its cached answer
                     return batch_schema["dropped"]
 
-                return snapshot_lsn, mirror_sink(
-                    env,
-                    state_dir,
-                    checkpoint_dir,
-                    n_buckets=mirror_buckets,
-                    value_cols=None,  # inferred per batch (post-transform)
-                    keep_epochs=keep_epochs,
-                    transform=transform,
-                    evolve_schema=True,
-                    backend=backend,
-                    dropped_cols=dropped_now,
-                    merge_mode=merge_mode,
-                    compact_deltas=compact_deltas,
-                    **view_kwargs,
-                )
-            flat, _ = self._typed_flat(env, table, value_schema, "pk")
-        else:
-            raise ValueError(f"unknown transport {transport!r}")
-        if evolve_schema:
-            raise ValueError(
-                "evolve_schema=True requires transport='envelope' (the "
-                "pgoutput Relation sidecar is the schema authority)"
-            )
-        changes = flat.filter(F.col("lsn") > snapshot_lsn)
+            else:
+
+                def to_flat(batch_df):
+                    return self._typed_flat(batch_df, table, value_schema, "pk")[0]
+
         return snapshot_lsn, mirror_sink(
-            changes,
+            stream_df,
             state_dir,
             checkpoint_dir,
             n_buckets=mirror_buckets,
-            value_cols=value_cols,
+            # evolving: inferred per batch from the typed columns
+            value_cols=None if evolve_schema else value_cols,
             keep_epochs=keep_epochs,
+            transform=lambda batch_df: to_flat(batch_df).filter(
+                F.col("lsn") > snapshot_lsn
+            ),
+            evolve_schema=evolve_schema,
             backend=backend,
+            dropped_cols=dropped_now,
             merge_mode=merge_mode,
             compact_deltas=compact_deltas,
             **view_kwargs,
@@ -1022,7 +894,7 @@ class CdcEngine:
         claim_ttl_s: float = 300.0,
         drain_timeout_s: float = 600.0,
         heartbeat_every_s: float | None = None,
-        claim_backend=None,
+        claim_backend: ClaimBackend = DEFAULT_BACKEND,
         merge_lock_ttl_s: float | None = None,
     ) -> int:
         """Per-chunk cooperative snapshot seed (O23 at the reference's
@@ -1041,14 +913,17 @@ class CdcEngine:
         positions (e.g. after a crash-restart), and the single stream
         filter must not drop any table's events between its own anchor
         and a later table's (review r7: anchoring at the LAST table's
-        LSN silently lost the window in between)."""
+        LSN silently lost the window in between).
+
+        A state_dir seeded by the retired whole-table job claim holds a
+        `_snapshot_done` marker and no chunk queue. Re-seeding it at a
+        fresh LSN would keep rows deleted since the old seed, so that
+        layout raises instead: rebuild the state dir."""
         from pyspark.sql import functions as F
 
         from .snapshot import chunk_queue as cq
         from .streaming.changelog_stream import merge_mirror_batch
 
-        if claim_backend is None:
-            claim_backend = cq.DEFAULT_BACKEND
         if heartbeat_every_s is None:
             # default: beat well inside the claim TTL so a chunk whose
             # read outlasts claim_ttl_s is never reclaimed by a live peer
@@ -1066,12 +941,21 @@ class CdcEngine:
             qdir = os.path.join(
                 state_dir, "chunks", tcfg.qualified.replace(".", "__")
             )
+            if not cq.read_manifest(qdir, backend=claim_backend) and (
+                claim_backend.exists(os.path.join(state_dir, "_snapshot_done"))
+            ):
+                raise RuntimeError(
+                    f"{state_dir} was seeded by the retired whole-table "
+                    "snapshot job (_snapshot_done marker, no chunk queue); "
+                    "re-seeding it at a fresh LSN would keep rows deleted "
+                    "since that seed — rebuild the state dir"
+                )
             if self.config.resnapshot:
                 # force-resnapshot must clear the per-table chunk queue or
-                # persisted done markers silently re-seed NOTHING (r7
-                # advisor); like job_claim.reset / the reference's
-                # metadata wipe, this is a start-the-fleet-after action,
-                # not safe concurrent with a live peer's drain.
+                # persisted done markers silently re-seed NOTHING; like
+                # the reference's metadata wipe, this is a
+                # start-the-fleet-after action, not safe concurrent with a
+                # live peer's drain.
                 cq.reset(qdir, backend=claim_backend)
             cq.init_chunk_queue(
                 qdir,
@@ -1103,6 +987,9 @@ class CdcEngine:
                     state_dir,
                     n_buckets=mirror_buckets,
                     value_cols=value_cols,
+                    # the seed merge is often the mirror's FIRST write —
+                    # it must pin the caller's retention, or
+                    # snapshot_only mode silently keeps 1
                     keep_epochs=keep_epochs,
                     backend=claim_backend,
                     **lock_kw,
@@ -1123,37 +1010,37 @@ class CdcEngine:
         return min(published) if published else snapshot_lsn
 
     def state_as_of(
-        self, state_dir: str, epoch: int, claim_backend=None
+        self, state_dir: str, epoch: int,
+        claim_backend: ClaimBackend = DEFAULT_BACKEND,
     ) -> DataFrame:
         """Time-travel read of a retained mirror epoch (see
         `streaming.read_mirror_as_of`; requires the mirror's pinned
         keep_epochs retention to cover it)."""
-        from .snapshot.claim_backend import DEFAULT_BACKEND
         from .streaming import read_mirror_as_of
 
-        return read_mirror_as_of(
-            self.spark, state_dir, epoch, backend=claim_backend or DEFAULT_BACKEND
-        )
+        return read_mirror_as_of(self.spark, state_dir, epoch, backend=claim_backend)
 
-    def current_state(self, state_dir: str, claim_backend=None) -> DataFrame:
-        from .snapshot.claim_backend import DEFAULT_BACKEND
+    def current_state(
+        self, state_dir: str, claim_backend: ClaimBackend = DEFAULT_BACKEND
+    ) -> DataFrame:
         from .streaming import read_mirror
 
-        return read_mirror(
-            self.spark, state_dir, backend=claim_backend or DEFAULT_BACKEND
-        )
+        return read_mirror(self.spark, state_dir, backend=claim_backend)
 
-    def lookup(self, state_dir: str, pks: list[int], claim_backend=None) -> DataFrame:
+    def lookup(
+        self, state_dir: str, pks: list[int],
+        claim_backend: ClaimBackend = DEFAULT_BACKEND,
+    ) -> DataFrame:
         """Bucket-pruned point lookup in the mirror: reads only the bucket
         files the keys hash into (~len(pks)/n_buckets of the state)."""
-        from .snapshot.claim_backend import DEFAULT_BACKEND
         from .streaming import lookup_mirror
 
-        return lookup_mirror(
-            self.spark, state_dir, pks, backend=claim_backend or DEFAULT_BACKEND
-        )
+        return lookup_mirror(self.spark, state_dir, pks, backend=claim_backend)
 
-    def register_view(self, state_dir: str, name: str, claim_backend=None) -> DataFrame:
+    def register_view(
+        self, state_dir: str, name: str,
+        claim_backend: ClaimBackend = DEFAULT_BACKEND,
+    ) -> DataFrame:
         """Expose the mirror to SQL: `spark.sql(f"SELECT ... FROM {name}")`
         resolves to the state at the LAST MERGE COMMIT (SURVEY §7's
         catalog-resolution nice-to-have, done the Spark-first way).
@@ -1166,12 +1053,9 @@ class CdcEngine:
         race file deletion — the same exposure any non-MVCC file source
         has; use a table format (Delta/Iceberg) when snapshot-isolated
         readers are required."""
-        from .snapshot.claim_backend import DEFAULT_BACKEND
         from .streaming.changelog_stream import register_mirror_view
 
-        return register_mirror_view(
-            self.spark, state_dir, name, backend=claim_backend or DEFAULT_BACKEND
-        )
+        return register_mirror_view(self.spark, state_dir, name, backend=claim_backend)
 
     # -- observability (O33) ------------------------------------------------
 
@@ -1211,9 +1095,7 @@ def snapshot_only(
     `resnapshot=True` ignores the marker and rewrites everything
     (config.go:328; TestForceResnapshotOnlyMode).
     Returns True if a snapshot was written, False if resumed/skipped."""
-    import os as _os
-
-    if not resnapshot and _os.path.exists(_os.path.join(out_dir, "_SUCCESS")):
+    if not resnapshot and os.path.exists(os.path.join(out_dir, "_SUCCESS")):
         return False
     df.write.mode(
         "overwrite" if (resnapshot or mode == "overwrite") else "errorifexists"

@@ -10,9 +10,10 @@ processes it, heartbeating (`worker.go:383-399`) until
 `markChunkCompleted` (`worker.go:568-585`) records `status='completed'`
 plus `rows_processed`.
 
-`job_claim` covers the whole-job case (one app seeds, peers wait/skip).
-This module is the per-chunk queue for the case it consciously skipped:
-two or more Spark APPLICATIONS splitting one giant table's chunks. The
+This queue is the engine's only snapshot-seed coordinator
+(`CdcEngine._cooperative_seed`): two or more Spark APPLICATIONS split
+one giant table's chunks, and a whole-table seed is the one-chunk plan
+`[{}]` (one app seeds, peers wait on its claim, restarts skip it). The
 shared medium is the same state_dir the mirror lives in:
 
     state_dir/chunks/_manifest.json   all chunk descriptors (immutable,
@@ -220,8 +221,8 @@ def claim_next_chunk(
                 if backend.put_if_absent(path, doc):
                     return ChunkClaim(state_dir, instance_id, chunk, backend)
                 continue
-            # torn claim object (crashed writer): replace, same as
-            # job_claim.acquire's unparseable-claim arm
+            # torn claim object (crashed writer): replace it; waiting
+            # would spin forever, since staleness needs a heartbeat
             stale = True
         else:
             stale = now - float(cur.get("heartbeat_at", 0)) > claim_ttl_s
@@ -277,9 +278,9 @@ def all_chunks_completed(
 
 
 def reset(state_dir: str, backend: ClaimBackend = DEFAULT_BACKEND) -> None:
-    """Force-resnapshot support at chunk granularity (the cooperative twin
-    of `job_claim.reset`; reference: the coordinator wipes `cdc_snapshot_
-    chunks` and restarts an incomplete/forced job, coordinator.go:28-61):
+    """Force-resnapshot support (reference config.go:328 `Resnapshot`;
+    the coordinator wipes `cdc_snapshot_chunks` and restarts an
+    incomplete/forced job, coordinator.go:28-61):
     remove the manifest and every claim/done marker so the next
     `init_chunk_queue` republishes a fresh plan and all chunks reprocess.
     Like the reference's wipe, this is a SINGLE-OPERATOR action — run it

@@ -1,9 +1,9 @@
 """Atomic claim primitives behind the cooperative coordination files.
 
-The chunk queue (`snapshot.chunk_queue`) and the job claim
-(`snapshot.job_claim`) coordinate N independent applications through
-small JSON markers in a shared state_dir. Their correctness rests on
-exactly three atomic primitives:
+The chunk queue (`snapshot.chunk_queue`, the one snapshot-seed
+coordinator) and the mirror's lock/manifest files coordinate N
+independent applications through small JSON markers in a shared
+state_dir. Their correctness rests on exactly three atomic primitives:
 
   * put-if-absent  — publish a claim/manifest/done marker only if nobody
                      else has (the reference's INSERT ... ON CONFLICT DO
@@ -89,9 +89,9 @@ class ClaimBackend:
 
 
 class PosixLinkBackend(ClaimBackend):
-    """The default filesystem arm — hard-link create + rename, the exact
-    scheme `job_claim.acquire` established (private tmp write, `os.link`
-    publish: a peer can never observe a torn marker)."""
+    """The default filesystem arm — hard-link create + rename (private
+    tmp write, `os.link` publish: a peer can never observe a torn
+    marker)."""
 
     def ensure_dir(self, d: str) -> None:
         os.makedirs(d, exist_ok=True)

@@ -485,7 +485,7 @@ def test_engine_start_with_view_seeds_then_maintains(spark, tmp_path):
         str(wal_dir),
         state_dir,
         str(tmp_path / "ckpt"),
-        snapshot_reader=snapshot_reader,
+        chunk_reader=lambda t, _c: snapshot_reader(t),
         view_state_dir=view_dir,
         view_minmax=True,
     )
@@ -581,7 +581,7 @@ def test_engine_view_over_typed_wal2json_transport(spark, tmp_path):
         str(wal_dir),
         state_dir,
         str(tmp_path / "ckpt"),
-        snapshot_reader=snapshot_reader,
+        chunk_reader=lambda t, _c: snapshot_reader(t),
         value_schema="name string, qty double",
         transport="wal2json",
         table="public.users",

@@ -202,12 +202,18 @@ def test_reset_clears_bucket_markers(be):
                 if k.startswith(f"{state}/chunks/")]
 
 
-def test_engine_cooperative_seed_over_object_store(spark, tmp_path, be):
+@pytest.mark.parametrize("planned", [True, False], ids=["planner_given", "planner_omitted"])
+def test_engine_cooperative_seed_over_object_store(spark, tmp_path, be, planned):
     """engine.start(claim_backend=ObjectStoreBackend(...)): the chunk
     queue's markers AND the mirror's coordination (merge lock, manifest,
     epoch snapshots — r8 verdict item 1) land in the bucket, while the
     data parquet lands under state_dir through Spark's FS connectors —
-    the 100 TB deployment shape with zero POSIX coordination."""
+    the 100 TB deployment shape with zero POSIX coordination. With no
+    chunk_planner the whole-table seed is a one-chunk plan on the same
+    queue: nothing lands on local disk but the data parquet, and a
+    restart skips the completed seed."""
+    import os
+
     from pyspark.sql import Row
 
     from go_pq_cdc_spark.config import EngineConfig, TableConfig
@@ -230,32 +236,32 @@ def test_engine_cooperative_seed_over_object_store(spark, tmp_path, be):
 
         return Q.manifest_from_plan(plan_integer_range("pk", 1, 20, chunk_size=10))
 
+    reads = []
+
     def chunk_reader(tcfg, chunk):
+        reads.append(chunk["chunk_index"])
+        if not planned:
+            return source
         return source.filter(
             (source.pk >= chunk["range_start"]) & (source.pk <= chunk["range_end"])
         )
 
+    wal_lsn = {"v": "0/64"}  # 100
+
     def run_sql(sql):
-        return [("0/64",)] if "pg_current_wal_lsn" in sql else []
+        return [(wal_lsn["v"],)] if "pg_current_wal_lsn" in sql else []
 
     state_dir = str(tmp_path / "state")
-    lsn, q = eng.start(
-        run_sql,
-        str(tmp_path / "wal"),
-        state_dir,
-        str(tmp_path / "ckpt"),
-        chunk_planner=chunk_planner,
-        chunk_reader=chunk_reader,
-        claim_backend=be,
-    )
+    args = (run_sql, str(tmp_path / "wal"), state_dir, str(tmp_path / "ckpt"))
+    kw = {"chunk_planner": chunk_planner} if planned else {}
+    lsn, q = eng.start(*args, chunk_reader=chunk_reader, claim_backend=be, **kw)
     assert q is None and lsn == 100
+    assert reads == ([0, 1] if planned else [0])
     assert {
         r["pk"] for r in read_mirror(spark, state_dir, backend=be).collect()
     } == set(range(1, 21))
     # ALL coordination went through the bucket, not the filesystem:
     # queue markers, the mirror manifest, and its epoch snapshots
-    import os
-
     assert [k for k in be.client.objects if "/done." in k]
     assert f"{state_dir}/manifest.json" in be.client.objects
     assert [k for k in be.client.objects if "/manifests/e" in k]
@@ -263,5 +269,10 @@ def test_engine_cooperative_seed_over_object_store(spark, tmp_path, be):
         os.path.join(state_dir, "chunks", "public__users", "_manifest.json")
     )
     assert not os.path.exists(os.path.join(state_dir, "manifest.json"))
+    assert not [n for n in os.listdir(state_dir) if n.startswith("_snapshot_")]
     # the data parquet is real files under state_dir (Spark's FS)
     assert os.path.isdir(os.path.join(state_dir, "epochs"))
+    # restart: the completed seed is skipped and its stored LSN reused
+    wal_lsn["v"] = "0/1000"
+    lsn2, _ = eng.start(*args, chunk_reader=chunk_reader, claim_backend=be, **kw)
+    assert lsn2 == 100 and reads == ([0, 1] if planned else [0])

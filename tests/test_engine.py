@@ -217,7 +217,7 @@ def test_start_initial_lifecycle(spark, tmp_path):
         str(wal_dir),
         str(tmp_path / "state"),
         str(tmp_path / "ckpt"),
-        snapshot_reader=snapshot_reader,
+        chunk_reader=lambda t, _c: snapshot_reader(t),
     )
     assert snapshot_lsn == 20
     # slot is created after the publication and before the LSN read
@@ -290,7 +290,7 @@ def test_start_initial_lifecycle_delta_merge_mode(spark, tmp_path):
         str(wal_dir),
         state_dir,
         str(tmp_path / "ckpt"),
-        snapshot_reader=snapshot_reader,
+        chunk_reader=lambda t, _c: snapshot_reader(t),
         merge_mode="delta",
     )
     assert snapshot_lsn == 20
@@ -326,7 +326,7 @@ def test_start_snapshot_only(spark, tmp_path):
         str(tmp_path / "wal"),
         str(tmp_path / "state"),
         str(tmp_path / "ckpt"),
-        snapshot_reader=lambda t: spark.createDataFrame([Row(pk=1, after_val=0.5)]),
+        chunk_reader=lambda t, _c: spark.createDataFrame([Row(pk=1, after_val=0.5)]),
     )
     assert (snapshot_lsn, q) == (10, None)
     state = {r["pk"]: r["after_val"] for r in read_mirror(spark, str(tmp_path / "state")).collect()}
@@ -357,23 +357,56 @@ def test_start_snapshot_resume_and_force_resnapshot(spark, tmp_path):
         return spark.createDataFrame(data)
 
     args = (run_sql, str(tmp_path / "wal"), str(tmp_path / "state"), str(tmp_path / "ckpt"))
-    eng.start(*args, snapshot_reader=reader)
+    eng.start(*args, chunk_reader=lambda t, _c: reader(t))
     assert calls["n"] == 1
 
     # restart: completed marker -> seed skipped, reader untouched
-    eng.start(*args, snapshot_reader=reader)
+    eng.start(*args, chunk_reader=lambda t, _c: reader(t))
     assert calls["n"] == 1
 
     # new data + resnapshot=True -> reprocess everything
     data.append(Row(pk=2, after_val=2.5))
     eng.config.resnapshot = True
-    eng.start(*args, snapshot_reader=reader)
+    eng.start(*args, chunk_reader=lambda t, _c: reader(t))
     assert calls["n"] == 2
     state = {
         r["pk"]: r["after_val"]
         for r in read_mirror(spark, str(tmp_path / "state")).collect()
     }
     assert state == {1: 0.5, 2: 2.5}
+
+
+def test_start_rejects_legacy_snapshot_done_state_dir(spark, tmp_path):
+    """A state dir seeded by the retired whole-table job claim has a
+    `_snapshot_done` marker and no chunk queue. Re-seeding it at a fresh
+    LSN would leave rows deleted since the old seed in the mirror, so
+    start() refuses it before reading anything."""
+    import json
+
+    import pytest
+
+    eng = _engine(spark)
+    eng.config.snapshot_mode = "snapshot_only"
+    eng.config.snapshot_tables = ["public.users"]
+    state = tmp_path / "state"
+    state.mkdir()
+    (state / "_snapshot_done").write_text(json.dumps({"snapshot_lsn": 10}))
+
+    def run_sql(sql):
+        return [("0/A",)] if "pg_current_wal_lsn" in sql else []
+
+    def reader(t, _c):
+        raise AssertionError("legacy state dir must not be re-seeded")
+
+    with pytest.raises(RuntimeError, match="rebuild the state dir"):
+        eng.start(
+            run_sql,
+            str(tmp_path / "wal"),
+            str(state),
+            str(tmp_path / "ckpt"),
+            chunk_reader=reader,
+        )
+    assert not (state / "chunks").exists()
 
 
 def test_snapshot_only_force_resnapshot(spark, tmp_path):
@@ -441,7 +474,7 @@ def test_start_initial_lifecycle_multi_column(spark, tmp_path):
         str(wal_dir),
         str(tmp_path / "state"),
         str(tmp_path / "ckpt"),
-        snapshot_reader=snapshot_reader,
+        chunk_reader=lambda t, _c: snapshot_reader(t),
         value_schema="name string, qty bigint",
     )
     assert snapshot_lsn == 20
@@ -618,7 +651,7 @@ def test_resume_anchors_stream_at_stored_snapshot_lsn(spark, tmp_path):
 
     # run 1: seed + drain an empty stream, then stop
     _, q = eng.start(run_sql, str(wal), state, str(tmp_path / "ck1"),
-                     snapshot_reader=reader)
+                     chunk_reader=lambda t, _c: reader(t))
     q.processAllAvailable()
     q.stop()
     assert reader_calls == ["public.users"]
@@ -638,7 +671,7 @@ def test_resume_anchors_stream_at_stored_snapshot_lsn(spark, tmp_path):
 
     # run 2: seed skipped (completed), stream anchored at stored LSN 20
     lsn2, q2 = eng.start(run_sql, str(wal), state, str(tmp_path / "ck2"),
-                         snapshot_reader=reader)
+                         chunk_reader=lambda t, _c: reader(t))
     try:
         q2.processAllAvailable()
     finally:
@@ -711,7 +744,7 @@ def test_start_full_lifecycle_on_wal2json_transport(spark, tmp_path):
         str(wal_dir),
         str(tmp_path / "state"),
         str(tmp_path / "ck"),
-        snapshot_reader=reader,
+        chunk_reader=lambda t, _c: reader(t),
         value_schema="name string, qty bigint",
         transport="wal2json",
         table="public.users",
@@ -787,7 +820,7 @@ def test_start_full_lifecycle_on_test_decoding_transport(spark, tmp_path):
         str(wal_dir),
         str(tmp_path / "state"),
         str(tmp_path / "ck"),
-        snapshot_reader=reader,
+        chunk_reader=lambda t, _c: reader(t),
         value_schema="name string, qty bigint",
         transport="test_decoding",
         table="public.users",

@@ -457,7 +457,7 @@ def test_live_engine_full_lifecycle(spark, tmp_path):
             wal_dir,
             str(tmp_path / "state"),
             str(tmp_path / "ckpt"),
-            snapshot_reader=snapshot_reader,
+            chunk_reader=lambda t, _c: snapshot_reader(t),
             value_schema="val string, big string",
             transport="envelope",
             table=f"public.{T2}",
@@ -1489,7 +1489,7 @@ def test_live_engine_lifecycle_test_decoding(spark, tmp_path):
             wal_dir,
             str(tmp_path / "state"),
             str(tmp_path / "ckpt"),
-            snapshot_reader=snapshot_reader,
+            chunk_reader=lambda t, _c: snapshot_reader(t),
             value_schema="val string, big string",
             transport="test_decoding",
             table=f"public.{T8}",
@@ -1986,7 +1986,7 @@ def test_live_engine_schema_evolution_into_mirror(spark, tmp_path):
             wal_dir,
             state_dir,
             str(tmp_path / "ckpt"),
-            snapshot_reader=snapshot_reader,
+            chunk_reader=lambda t, _c: snapshot_reader(t),
             value_schema="val string",
             transport="envelope",
             table=f"public.{T4}",
@@ -2270,7 +2270,7 @@ def test_live_engine_alter_type_and_drop_column(spark, tmp_path):
             wal_dir,
             state_dir,
             str(tmp_path / "ckpt"),
-            snapshot_reader=snapshot_reader,
+            chunk_reader=lambda t, _c: snapshot_reader(t),
             value_schema="qty int, note string",
             transport="envelope",
             table=f"public.{T9}",
@@ -2421,7 +2421,7 @@ def test_live_engine_incremental_view(spark, tmp_path):
             wal_dir,
             state_dir,
             str(tmp_path / "ckpt"),
-            snapshot_reader=snapshot_reader,
+            chunk_reader=lambda t, _c: snapshot_reader(t),
             value_schema="val double, big string",
             transport="envelope",
             table=f"public.{TV}",

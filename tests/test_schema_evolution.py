@@ -303,7 +303,7 @@ def test_engine_start_evolves_typed_mirror(spark, tmp_path):
         wal,
         str(tmp_path / "state"),
         str(tmp_path / "ckpt"),
-        snapshot_reader=snapshot_reader,
+        chunk_reader=lambda t, _c: snapshot_reader(t),
         value_schema="name string",
         transport="envelope",
         table="public.users",
@@ -344,7 +344,7 @@ def test_engine_evolve_requires_envelope_transport(spark, tmp_path):
             str(tmp_path / "wal"),
             str(tmp_path / "state"),
             str(tmp_path / "ckpt"),
-            snapshot_reader=lambda t: spark.createDataFrame([], "pk bigint"),
+            chunk_reader=lambda t, _c: spark.createDataFrame([], "pk bigint"),
             value_schema="name string",
             transport="flat",
             evolve_schema=True,
