@@ -177,3 +177,81 @@ def test_partitions_raise_on_wal_hole():
         assert reader.latestOffset() == {"lsn": 9}
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def _touch_segment(dir_path, start_lsn, end_lsn, size):
+    """A segment file of `size` bytes (sparse — no disk cost): packing
+    reads only sizes, never contents."""
+    with open(lsn_stream.segment_path(dir_path, start_lsn, end_lsn), "wb") as f:
+        f.truncate(size)
+
+
+def test_partitions_pack_segments_by_bytes(tmp_path):
+    """Small segments share one input partition in LSN order; a run whose
+    packed size (bytes + per-file open cost) passes the cap splits into
+    several partitions that stay contiguous and tile (lo, hi] exactly."""
+    small = tmp_path / "small"
+    small.mkdir()
+    # landed out of LSN order: the packing order must come from the LSNs
+    for k in (7, 2, 0, 9, 4, 1, 8, 3, 6, 5):
+        _touch_segment(str(small), 10 * k, 10 * k + 9, 1000)
+    (part,) = lsn_stream.LsnStreamReader({"path": str(small)}).partitions(
+        {"lsn": -1}, {"lsn": 99}
+    )
+    assert [(s, e) for s, e, _p in part.segments] == [
+        (10 * k, 10 * k + 9) for k in range(10)
+    ]
+
+    big = tmp_path / "big"
+    big.mkdir()
+    mb = 1 << 20
+    sizes = [mb, 60 * mb, 60 * mb, 60 * mb, 10, 10, 130 * mb, 10] + [0] * 40
+    for k, size in enumerate(sizes):
+        _touch_segment(str(big), 100 + 10 * k, 109 + 10 * k, size)
+    hi = 109 + 10 * (len(sizes) - 1)
+    parts = lsn_stream.LsnStreamReader({"path": str(big)}).partitions(
+        {"lsn": 99}, {"lsn": hi}
+    )
+    assert len(parts) > 1
+    cur = 99
+    for p in parts:
+        for s, e, _path in p.segments:
+            assert s == cur + 1
+            cur = e
+        seg_bytes = [os.path.getsize(path) for _s, _e, path in p.segments]
+        # Spark's file-source rule: every file but the last fits under the
+        # cap counting the open cost; only a lone file may exceed it
+        packed = sum(b + lsn_stream.OPEN_COST_BYTES for b in seg_bytes[:-1])
+        assert len(seg_bytes) == 1 or packed + seg_bytes[-1] <= (
+            lsn_stream.MAX_PARTITION_BYTES
+        )
+    assert cur == hi
+
+
+def test_one_batch_over_many_segments_delivers_each_row_once(spark, wal):
+    """Six segments land before the query starts: one micro-batch, read
+    as ONE input partition, delivers every event exactly once."""
+    for k in range(6):
+        _write_segment(spark, wal, 10 * k, 10 * k + 9)
+    seen = []
+
+    def collect(batch_df, _batch_id):
+        seen.append(
+            (batch_df.rdd.getNumPartitions(), [r["lsn"] for r in batch_df.collect()])
+        )
+
+    stream = spark.readStream.format("pq_cdc_wal").option("path", wal).load()
+    q = (
+        stream.writeStream.foreachBatch(collect)
+        .option("checkpointLocation", os.path.join(wal, "ckpt_many"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    batches = [b for b in seen if b[1]]
+    assert len(batches) == 1
+    n_parts, lsns = batches[0]
+    assert n_parts == 1
+    assert sorted(lsns) == list(range(60))

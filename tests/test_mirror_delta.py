@@ -424,26 +424,42 @@ def test_compact_mirror_explicit_maintenance(spark, tmp_path):
 
 
 def test_bucket_files_are_pk_sorted(spark, tmp_path):
-    """Every state write lays each bucket file out pk-ascending so parquet
-    row-group min/max stats on pk prune point lookups INSIDE the
-    bucket-pruned file (free at write, pays once buckets outgrow one row
-    group)."""
+    """Every state write lays each bucket out as exactly ONE pk-ascending
+    file, so parquet row-group min/max stats on pk prune point lookups
+    INSIDE the bucket-pruned file (free at write, pays once buckets
+    outgrow one row group). More buckets than the session's cores, so
+    writer tasks each carry several buckets — still one file apiece —
+    through the cow merge, a compaction and a rebucket."""
     import pyarrow.parquet as pq
+
+    from go_pq_cdc_spark.streaming.changelog_stream import (
+        compact_mirror,
+        rebucket_mirror,
+    )
+
+    n = 16
+    assert spark.sparkContext.defaultParallelism < n
+
+    def check_buckets(sd, expect):
+        man = _read_manifest(sd)
+        assert len(man["buckets"]) == expect
+        for rel in man["buckets"].values():
+            bdir = os.path.join(sd, rel)
+            files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
+            assert len(files) == 1, f"bucket {rel} holds {len(files)} files"
+            pks = pq.read_table(os.path.join(bdir, files[0]), columns=["pk"])["pk"].to_pylist()
+            assert pks == sorted(pks), f"unsorted bucket file {rel}/{files[0]}"
 
     sd = str(tmp_path / "m")
     rows = [_ev("I", i + 1, 1, (i * 2654435761) % 4096, float(i)) for i in range(800)]
-    merge_mirror_batch(_batch(spark, rows), sd, n_buckets=4)
-    man = _read_manifest(sd)
-    checked = 0
-    for rel in man["buckets"].values():
-        bdir = os.path.join(sd, rel)
-        for f in os.listdir(bdir):
-            if not f.endswith(".parquet"):
-                continue
-            pks = pq.read_table(os.path.join(bdir, f), columns=["pk"])["pk"].to_pylist()
-            assert pks == sorted(pks), f"unsorted bucket file {rel}/{f}"
-            checked += 1
-    assert checked >= 4
+    merge_mirror_batch(_batch(spark, rows), sd, n_buckets=n)
+    check_buckets(sd, n)
+    upd = [_ev("U", 1000 + i, 2, (i * 2654435761) % 4096, -float(i)) for i in range(0, 800, 7)]
+    merge_mirror_batch(_batch(spark, upd), sd, merge_mode="delta")
+    assert compact_mirror(spark, sd) > 0
+    check_buckets(sd, n)
+    assert rebucket_mirror(spark, sd, factor=2) == 2 * n
+    check_buckets(sd, 2 * n)
 
 
 def test_auto_maintenance_policy_compacts_and_recommends(spark, tmp_path):

@@ -130,3 +130,41 @@ def test_condition_and_projection_reach_sql():
     (sql,) = chunk_sqls(tcfg, plan, condition="val <> 'x'")
     assert sql.startswith("SELECT pk, val FROM public.users")
     assert "AND (val <> 'x')" in sql
+
+
+def test_seed_merge_fetches_each_chunk_once(spark, tmp_path):
+    """A seed merge reads its chunk from PostgreSQL exactly once: the
+    bucket routing and the bucket write share one (persisted) read
+    instead of each re-running the executor-side fetch."""
+    from pyspark.sql import functions as F
+
+    from go_pq_cdc_spark.streaming.changelog_stream import (
+        merge_mirror_batch,
+        read_mirror,
+    )
+
+    log = tmp_path / "fetches.log"
+
+    def counting_fetch(conn_args, snapshot_id, sql):
+        # runs in executor processes: count through the filesystem
+        with open(log, "a") as f:
+            f.write("fetch\n")
+        return _fake_fetch(conn_args, snapshot_id, sql)
+
+    reader = make_socket_chunk_reader(
+        spark, CONN, schema_ddl="pk bigint, val string, flag boolean",
+        snapshot_id="snap-1", fetch=counting_fetch,
+    )
+    chunk = {"chunk_index": 0, "where": "pk >= 1 AND pk <= 40"}
+    seed = reader(TableConfig(name="users"), chunk).select(
+        "pk", F.lit(500).cast("long").alias("lsn"), F.lit("R").alias("op"),
+        "val", "flag",
+    )
+    state = str(tmp_path / "mirror")
+    merge_mirror_batch(seed, state, value_cols=("val", "flag"))
+
+    assert log.read_text().count("fetch") == 1
+    got = {r["pk"]: (r["val"], r["flag"], r["lsn"]) for r in read_mirror(spark, state).collect()}
+    assert got == {
+        pk: (_ROWS[pk][1], pk % 2 == 1, 500) for pk in range(1, 41)
+    }
