@@ -79,29 +79,6 @@ def toast_fill(df: DataFrame, value_col: str = "after_val") -> DataFrame:
     ).withColumn("filled_val", F.when(~last_m["reset"], last_m["v"]))
 
 
-def toast_fill_cols(df: DataFrame, value_cols: tuple[str, ...]) -> DataFrame:
-    """`toast_fill` generalized to a WHOLE ROW of value columns — the
-    reference delivers full-row images to sinks (tuple/data.go: each
-    column independently carries 'u' = TOAST-unchanged), so each column
-    gets its own carry-forward marker. Every marker's `last()` runs over
-    the SAME (pk, lsn) window spec, so Catalyst evaluates all columns
-    plus del_epoch in ONE WindowExec — one shuffle, one sort, regardless
-    of column count. Adds `filled_<col>` per value column."""
-    w = Window.partitionBy("pk").orderBy(*_order_cols(df))
-    out = df.withColumn(
-        "del_epoch",
-        F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).over(w).cast("long"),
-    )
-    for c in value_cols:
-        marker = F.when(
-            (F.col("op") == "D") | F.col(c).isNotNull(),
-            F.struct((F.col("op") == "D").alias("reset"), F.col(c).alias("v")),
-        )
-        last_m = F.last(marker, ignorenulls=True).over(w)
-        out = out.withColumn(f"filled_{c}", F.when(~last_m["reset"], last_m["v"]))
-    return out
-
-
 def before_image(df: DataFrame, value_col: str = "after_val") -> DataFrame:
     """O5/O6: reconstruct each UPDATE's old image (REPLICA IDENTITY FULL
     analogue) — the last non-null image strictly before the event, never

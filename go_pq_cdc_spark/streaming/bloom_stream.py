@@ -117,34 +117,3 @@ def bloom_state_fingerprint(
         F.sum(F.expr("bit_count(bits)")).cast("long").alias("bits_set"),
         F.sum("bits").cast("long").alias("state_sum"),
     )
-
-
-def bloom_seen_sink(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    group_col: str,
-    value_col: str,
-    k: int = BLOOM_K,
-    bits: int = BLOOM_BITS,
-    backend: ClaimBackend = DEFAULT_BACKEND,
-):
-    """Attach the Bloom seen-keys fold to a stream; returns the
-    StreamingQuery (processAllAvailable() drains in tests)."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda batch_df, epoch: update_bloom_state(
-                batch_df,
-                epoch,
-                state_dir,
-                group_col,
-                value_col,
-                k=k,
-                bits=bits,
-                backend=backend,
-            )
-        )
-        .start()
-    )

@@ -29,24 +29,26 @@ lock's acquire/heartbeat/takeover and the MANIFEST SWAP ITSELF to
 conditional requests, where the swap becomes a true compare-and-swap
 (If-Match on the etag read at merge start) — the residual POSIX
 last-writer-wins window between check_owned and os.replace does not
-exist there. Data directories (the `epochs/**` parquet Spark writes)
-are listed and garbage-collected through Spark's own Hadoop filesystem,
-which resolves file://, s3a:// and gs:// URIs alike — so a mirror whose
-state_dir is a bucket needs no POSIX anywhere. The reference's
-equivalent coordination is Postgres-backed and location-independent
+exist there. Bucket parquet under `epochs/**` is read, folded and
+written by Python workers through `pyarrow.fs` (`fold_bucket`, one
+task per bucket; `s3a://` is read as pyarrow's `s3://`); the data
+directories are listed and garbage-collected through Spark's own Hadoop
+filesystem, which resolves file://, s3a:// and gs:// URIs alike — so a
+mirror whose state_dir is a bucket needs no POSIX anywhere. The
+reference's equivalent coordination is Postgres-backed and location-independent
 (pq/snapshot/worker.go:421-484); this is the Spark-native analogue.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
+from ..operators.bucket_fold import STORED_ROW_SEQ, BucketFiles, BucketTask
 from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
 
 # Flat envelope used by the streaming tests/fixtures (a typed projection of
@@ -88,10 +90,6 @@ def changelog_stream(
 # a silent re-hash.
 MIRROR_BUCKETS = 32
 
-# txn_seq assigned to stored mirror rows inside a merge: consolidated
-# post-transaction state must order AFTER any replayed event of the same
-# commit lsn (real txn_seq values are small positive ints).
-STORED_ROW_SEQ = 1 << 62
 _MANIFEST = "manifest.json"
 
 
@@ -212,13 +210,14 @@ def _publish_manifest_snapshot(
         )
 
 
-# --- data-directory primitives (the parquet Spark writes) -------------------
+# --- data-directory primitives (the bucket parquet) -------------------------
 #
 # Coordination files ride the ClaimBackend; the DATA directories live
-# wherever Spark wrote them, so listing and deleting them goes through
-# Spark's Hadoop filesystem — the one component that already resolves
-# file://, s3a://, gs:// (and inherits the session's credentials). os.*
-# here would silently pin the mirror to POSIX.
+# under the state dir (written by the bucket tasks through pyarrow.fs),
+# and listing and deleting them goes through Spark's Hadoop filesystem —
+# the one component that already resolves file://, s3a://, gs:// (and
+# inherits the session's credentials). os.* here would silently pin the
+# mirror to POSIX.
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -240,49 +239,19 @@ def _fs_delete(spark: SparkSession, d: str) -> None:
     fs.delete(jpath, True)
 
 
-def _write_buckets(state: DataFrame, epoch_dir: str, n_buckets: int) -> set[int]:
-    """Write `state` (rows carrying their `pb` bucket id, at most
-    `n_buckets` distinct) as bucket dirs `pb=<b>` under `epoch_dir`;
-    returns the bucket ids written (a bucket whose every key was deleted
-    gets no dir). One writer task per core, capped at the bucket count:
-    hash-partitioning on pb puts each bucket wholly in one task, and the
-    (pb, pk) sort lets the partitioned writer finish one bucket's file
-    before opening the next — exactly one file per bucket dir however
-    many buckets share a task. pk-sorted files make parquet row-group
-    min/max stats on pk selective, so bucket-pruned point lookups
-    (lookup_mirror) skip row groups INSIDE the bucket too."""
-    spark = state.sparkSession
-    tasks = min(spark.sparkContext.defaultParallelism, max(n_buckets, 1))
-    (
-        state.repartition(tasks, "pb")
-        .sortWithinPartitions("pb", "pk")
-        .write.mode("overwrite")
-        .partitionBy("pb")
-        .parquet(epoch_dir)
-    )
-    return {
-        int(d.split("=", 1)[1])
-        for d in _fs_list_names(spark, epoch_dir)
-        if d.startswith("pb=")
-    }
+_STRUCTS: dict[str, T.StructType] = {}
 
 
 def _mirror_struct(spark: SparkSession, value_schema: str):
-    """StructType of the stored mirror row shape for a value DDL."""
-    return spark.createDataFrame(
-        [], f"pk bigint, lsn bigint, op string, {value_schema}"
-    ).schema
-
-
-def _delta_struct(spark: SparkSession, value_schema: str):
-    """StructType of a DELTA file row: raw change events, so the full
-    event identity (txn_seq) and the real op ('I'/'U'/'D'/'R') ride along
-    — the read-side fold needs both (base rows synthesize
-    txn_seq=STORED_ROW_SEQ at read, exactly like the COW merge's
-    stored-row read-back)."""
-    return spark.createDataFrame(
-        [], f"pk bigint, lsn bigint, op string, txn_seq bigint, {value_schema}"
-    ).schema
+    """StructType of the stored mirror row shape for a value DDL (parsed
+    once per DDL: a parse is a JVM round trip, and a point lookup needs
+    the struct on every call)."""
+    st = _STRUCTS.get(value_schema)
+    if st is None:
+        st = _STRUCTS[value_schema] = spark.createDataFrame(
+            [], f"pk bigint, lsn bigint, op string, {value_schema}"
+        ).schema
+    return st
 
 
 def _masked_cols(struct, dropped) -> list:
@@ -301,50 +270,58 @@ def _masked_cols(struct, dropped) -> list:
     ]
 
 
-def _fold_events(merged: DataFrame, value_cols: tuple[str, ...]) -> DataFrame:
-    """The ONE merge fold, shared by the COW merge, delta compaction, and
-    the merge-on-read fold: dedupe replayed events on their full identity
-    (pk, lsn, txn_seq) preferring the stored 'R' row (it already carries
-    the TOAST-repaired value, so the fill never sees an ambiguous tie),
-    per-column TOAST carry-forward, then max-(lsn, txn_seq)-wins with
-    DELETE removing the key. Input rows are events OR stored rows
-    (stored rows synthesize txn_seq=STORED_ROW_SEQ so they out-order any
-    replayed event of their own commit lsn); dropped columns must be
-    pre-masked to NULL by the caller — the fill then never resurrects
-    them. Output: (pk, lsn, op='R', *value_cols)."""
-    from ..operators.cdc import toast_fill_cols
+_RESULT_DDL = "pb int, kind string, rel string, rows long, t_lsn long, t_seq long"
+_ID_STRUCT = T.StructType([T.StructField("pb", T.IntegerType())])
 
-    w_dup = Window.partitionBy("pk", "lsn", "txn_seq").orderBy(
-        F.desc(F.col("op") == "R")
+
+def _event_schema(spark: SparkSession, struct: T.StructType) -> pa.Schema:
+    """Arrow schema of a fold input row: the mirror row with txn_seq as
+    the 4th column, in the Arrow types Spark exchanges with Python."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    s = to_arrow_schema(
+        struct, prefers_large_types=spark._jconf.arrowUseLargeVarTypes()
     )
-    merged = (
-        merged.withColumn("dup_rn", F.row_number().over(w_dup))
-        .filter(F.col("dup_rn") == 1)
-        .drop("dup_rn")
-    )
-    filled = toast_fill_cols(merged, value_cols)
-    w = Window.partitionBy("pk")
-    ev_key = F.struct("lsn", "txn_seq")
+    return s.insert(3, pa.field("txn_seq", pa.int64()))
+
+
+def _fold_groups(rows: DataFrame, task: BucketTask, n_buckets: int) -> list:
+    """Run `task` once per bucket of `rows` (which carry `pb`): one Spark
+    job, a shuffle on pb into one task per core, capped at the bucket
+    count. Returns the per-bucket result rows."""
+    spark = rows.sparkSession
+    tasks = min(spark.sparkContext.defaultParallelism, max(n_buckets, 1))
     return (
-        filled.withColumn("max_k", F.max(ev_key).over(w))
-        .filter((ev_key == F.col("max_k")) & (F.col("op") != "D"))
-        .select(
-            "pk",
-            "lsn",
-            F.lit("R").alias("op"),
-            *[F.col(f"filled_{c}").alias(c) for c in value_cols],
-        )
+        rows.repartition(tasks, "pb")
+        .groupBy("pb")
+        .applyInArrow(task.by_group(), _RESULT_DDL)
+        .collect()
     )
+
+
+def _apply_results(manifest: dict, results) -> None:
+    """Record per-bucket task results in the manifest: a delta file
+    appends to the bucket's debt; a new base (or none: every key
+    deleted) replaces the bucket and clears its debt."""
+    for r in results:
+        b = str(r["pb"])
+        if r["kind"] == "delta":
+            manifest.setdefault("deltas", {}).setdefault(b, []).append(r["rel"])
+            continue
+        if r["rel"] is None:
+            manifest["buckets"].pop(b, None)
+        else:
+            manifest["buckets"][b] = r["rel"]
+        (manifest.get("deltas") or {}).pop(b, None)
 
 
 def _manifest_df(
     spark: SparkSession,
     state_dir: str,
     manifest: dict,
-    pks: list[int] | None = None,
 ) -> DataFrame:
-    """DataFrame over one manifest's bucket set (shared by current,
-    time-travel, and point-lookup reads — one copy of the
+    """DataFrame over one manifest's bucket set (shared by current and
+    time-travel reads and `mirror_befores_for` — one copy of the
     schema/paths/fold logic).
 
     The read passes the manifest's pinned schema EXPLICITLY: after a
@@ -356,27 +333,17 @@ def _manifest_df(
     Columns the manifest marks dropped read as NULL (`_masked_cols`).
 
     MERGE-ON-READ (r9 verdict item 1): buckets with pending delta files
-    fold base + deltas per pk at read time (`_fold_events` — identical
-    semantics to the COW merge, so a delta-merged mirror reads equal to
-    a COW-merged one over the same log); buckets with NO deltas read
-    directly, zero fold overhead — the read cost of delta debt is
-    bounded by the compaction budget, never paid by untouched buckets.
-
-    `pks`, when given, filters every scan BEFORE the fold (the fold is
-    per-pk, so pre-filtering is exact) — the point-lookup fast path."""
+    fold base + deltas per pk at read time, one `fold_bucket` call per
+    bucket in a `mapInArrow` task (identical semantics to the cow merge,
+    so a delta-merged mirror reads equal to a cow-merged one over the
+    same log); buckets with NO deltas read directly, zero fold overhead
+    — the read cost of delta debt is bounded by the compaction budget,
+    never paid by untouched buckets."""
     value_schema = manifest.get("value_schema", "after_val double")
     struct = _mirror_struct(spark, value_schema)
     dead = set(manifest.get("dropped", {}))
-    masked = _masked_cols(struct, dead)
-    value_cols = tuple(f.name for f in struct.fields[3:])
     buckets = manifest["buckets"]
-    deltas = {
-        b: rels for b, rels in (manifest.get("deltas") or {}).items() if rels
-    }
-
-    def flt(df: DataFrame) -> DataFrame:
-        return df if pks is None else df.filter(F.col("pk").isin(pks))
-
+    deltas = [b for b, rels in (manifest.get("deltas") or {}).items() if rels]
     parts: list[DataFrame] = []
     plain = [
         os.path.join(state_dir, rel)
@@ -384,43 +351,13 @@ def _manifest_df(
         if b not in deltas
     ]
     if plain:
-        parts.append(flt(spark.read.schema(struct).parquet(*plain)).select(*masked))
-    if deltas:
-        delta_paths = [
-            os.path.join(state_dir, rel)
-            for rels in deltas.values()
-            for rel in rels
-        ]
-        dstruct = _delta_struct(spark, value_schema)
-        ev = flt(spark.read.schema(dstruct).parquet(*delta_paths)).select(
-            "pk", "lsn", "op", "txn_seq", *value_cols
+        parts.append(
+            spark.read.schema(struct).parquet(*plain).select(*_masked_cols(struct, dead))
         )
-        base_paths = [
-            os.path.join(state_dir, buckets[b]) for b in deltas if b in buckets
-        ]
-        if base_paths:
-            base = flt(spark.read.schema(struct).parquet(*base_paths)).select(
-                "pk",
-                "lsn",
-                "op",
-                F.lit(STORED_ROW_SEQ).cast("long").alias("txn_seq"),
-                *value_cols,
-            )
-            ev = base.unionByName(ev)
-        if dead:
-            ev = ev.select(
-                "pk",
-                "lsn",
-                "op",
-                "txn_seq",
-                *[
-                    F.lit(None).cast(struct[c].dataType).alias(c)
-                    if c in dead
-                    else F.col(c)
-                    for c in value_cols
-                ],
-            )
-        parts.append(_fold_events(ev, value_cols))
+    if deltas:
+        files = BucketFiles(state_dir, manifest, _event_schema(spark, struct))
+        ids = spark.createDataFrame([(int(b),) for b in deltas], _ID_STRUCT)
+        parts.append(ids.mapInArrow(files.fold_ids, struct))
     if not parts:
         return spark.createDataFrame([], struct)
     out = parts[0]
@@ -511,37 +448,35 @@ def lookup_mirror(
     merge's touched-buckets-only write guarantee. At 100 TB this is the
     difference between scanning the table and opening a few files.
 
-    The bucket ids are resolved on the driver (`_bucket_of`, a port of
-    Spark's xxhash64 whose parity with `_bucket_col` a test pins), so
-    routing a lookup runs no Spark job."""
-    manifest = _read_manifest(state_dir, backend)
-    n = int(manifest.get("n_buckets") or MIRROR_BUCKETS)
-    value_schema = manifest.get("value_schema", "after_val double")
-    struct = _mirror_struct(spark, value_schema)
-    empty = spark.createDataFrame([], struct)
-    all_deltas = manifest.get("deltas") or {}
-    if not pks or (not manifest["buckets"] and not all_deltas):
-        return empty
-    wanted = {_bucket_of(int(p), n) for p in pks}
-    # subset manifest over just the wanted buckets: the shared reader
-    # applies the pinned schema, the dropped-column mask, and the
-    # merge-on-read fold for buckets with pending deltas; the pk filter
-    # is pushed below the fold (per-pk semantics make that exact)
-    sub = {
-        "value_schema": value_schema,
-        "dropped": manifest.get("dropped", {}),
-        "buckets": {
-            b: rel for b, rel in manifest["buckets"].items() if int(b) in wanted
-        },
-        "deltas": {
-            b: rels for b, rels in all_deltas.items() if int(b) in wanted
-        },
-    }
-    if not sub["buckets"] and not any(sub["deltas"].values()):
-        return empty
-    return _manifest_df(
-        spark, state_dir, sub, pks=[int(p) for p in pks]
-    )
+    It runs no Spark job: the bucket ids are resolved on the driver
+    (`_bucket_of`, a port of Spark's xxhash64 whose parity with
+    `_bucket_col` a test pins), the routed bucket files are read on the
+    driver with a pk filter (the files are pk-sorted, so row-group stats
+    prune), pending deltas fold through `fold_bucket`, and the rows come
+    back as a local DataFrame. A read that loses a race with the merge's
+    GC (a bucket dir deleted after this lookup read its manifest) re-reads
+    the manifest and retries."""
+    want = sorted({int(p) for p in pks})
+    for attempt in range(3):
+        manifest = _read_manifest(state_dir, backend)
+        n = int(manifest.get("n_buckets") or MIRROR_BUCKETS)
+        struct = _mirror_struct(
+            spark, manifest.get("value_schema", "after_val double")
+        )
+        files = BucketFiles(state_dir, manifest, _event_schema(spark, struct))
+        routed: dict[int, list[int]] = {}
+        for p in want:
+            routed.setdefault(_bucket_of(p, n), []).append(p)
+        try:
+            parts = [files.state(b, pks=keys) for b, keys in routed.items()]
+            break
+        except FileNotFoundError:
+            if attempt == 2:
+                raise
+    # one chunk: createDataFrame ships a table chunk-wise, and an empty
+    # chunk (a routed bucket without the key) ends the stream early
+    table = pa.concat_tables([files.mirror_schema.empty_table(), *parts])
+    return spark.createDataFrame(table.combine_chunks(), struct)
 
 
 def mirror_befores_for(
@@ -598,8 +533,8 @@ def _gc_epochs(
     mid-GC only leaves garbage, never dangling references.
 
     Manifest snapshots are coordination files (ClaimBackend); the bucket
-    dirs are Spark-written parquet (Hadoop FS — works on any scheme the
-    session can read)."""
+    dirs are listed and deleted through Hadoop FS (works on any scheme
+    the session can read)."""
     mroot = os.path.join(state_dir, "manifests")
     retained: list[dict] = [manifest]
     # sort by the PARSED epoch number — a lexicographic filename sort
@@ -880,8 +815,17 @@ def merge_mirror_batch(
     — per-batch IO is O(batch ∪ touched-bucket state), independent of total
     mirror size. The stored mirror row is the old image for TOAST repair: a
     NULL new-image value inherits the stored value (unless a DELETE
-    intervenes) — `operators.cdc.toast_fill` applied batch-side, so
-    stream-maintained state equals batch `latest_state` over the full log.
+    intervenes), so stream-maintained state equals batch `latest_state`
+    over the full log.
+
+    Shape: ONE Spark job. The batch is projected, bucketed (`pb`) and
+    grouped; each bucket's task (`groupBy("pb").applyInArrow`) reads the
+    bucket's base and delta files by manifest path through pyarrow.fs,
+    folds them with the batch rows (`fold_bucket`), writes
+    `epochs/e<epoch>.<owner>/pb=<b>/part-0.parquet` sorted by pk (temp
+    file + rename) and returns one result row; the driver builds the
+    manifest from those rows. A batch with a TRUNCATE reruns the job once
+    (see below).
 
     Commit protocol: write new bucket dirs under `epochs/e<epoch>/`, then
     atomically swap the manifest. A crash before the swap leaves the old
@@ -920,8 +864,8 @@ def merge_mirror_batch(
     column's.
 
     `backend` selects the coordination medium for the lock, the live
-    manifest, and the epoch manifest snapshots (the data parquet rides
-    Spark's own filesystem either way): default POSIX for
+    manifest, and the epoch manifest snapshots (the data parquet is
+    written by the Python workers through pyarrow.fs either way): default POSIX for
     filesystem/NFS mirrors; an `ObjectStoreBackend` for S3/GCS state
     dirs, where the commit-point manifest swap is a TRUE CAS on the etag
     read at merge start — a zombie that slipped past the ownership fence
@@ -934,7 +878,7 @@ def merge_mirror_batch(
     rows. "delta" appends the batch's raw events as per-epoch delta
     files for the touched buckets WITHOUT reading base — write volume ∝
     BATCH size — and `read_mirror`/`read_mirror_as_of`/`lookup_mirror`
-    fold base+deltas per pk at read (`_fold_events`, the same dedup/
+    fold base+deltas per pk at read (`fold_bucket`, the same dedup/
     TOAST/winner semantics as the COW merge, so both arms read
     identically over the same log). A bucket whose pending delta count
     reaches `compact_deltas` is compacted INSIDE the same merge (base +
@@ -943,7 +887,10 @@ def merge_mirror_batch(
     amortized write cost by state/budget per compaction. Modes compose:
     a COW merge over a mirror with pending deltas folds and clears them
     for the buckets it touches; TRUNCATE always takes the full-rewrite
-    path (all stored state dies, all delta debt clears).
+    path (all stored state dies, all delta debt clears): every task
+    reports the last truncate position it saw, and if any saw one the
+    driver reruns the job once with that position, folding only later
+    events and dropping every stored bucket the rerun does not write.
 
     The delta arm's trade (the standard LSM one): a batch touching K
     buckets appends K small files (~1 per bucket, bounded open-file
@@ -1156,205 +1103,67 @@ def _merge_mirror_batch_locked(
     seq_in = (
         F.col("txn_seq") if "txn_seq" in batch_df.columns else F.lit(0)
     ).cast("long")
-    incoming = (
-        batch_df.select("pk", "lsn", "op", *value_cols, seq_in.alias("txn_seq"))
-        .withColumn("pb", _bucket_col(n_buckets=n_buckets))
-        # one read of the batch for the routing aggregate, the TRUNCATE
-        # bucket list, the delta append and the cow write: a seed chunk
-        # is fetched from PostgreSQL once, a WAL batch read once
-        .persist()
+    incoming = batch_df.select(
+        "pk", "lsn", "op", seq_in.alias("txn_seq"), *value_cols
+    ).withColumn("pb", _bucket_col(n_buckets=n_buckets))
+    files = BucketFiles(
+        state_dir, manifest,
+        _event_schema(spark, _mirror_struct(spark, manifest["value_schema"])),
     )
-    cached = incoming
-    try:
-        # Driver-side bucket routing (<= n_buckets ints — a plan-time scalar,
-        # like the reference's per-batch table routing), plus the last
-        # TRUNCATE position in the same single aggregate job.
-        stats = incoming.agg(
-            F.collect_set("pb").alias("pbs"),
-            F.max(F.when(F.col("op") == "T", F.struct("lsn", "txn_seq"))).alias(
-                "t_max"
-            ),
-        ).collect()[0]
-        truncated = stats["t_max"] is not None
-        if truncated:
-            # TRUNCATE semantics (op 'T' from either transport): every stored
-            # row and every batch event at or before the LAST truncate dies;
-            # only events strictly after it survive. All stored buckets are
-            # affected — each is rewritten with survivors or dropped from the
-            # manifest.
-            t_max = stats["t_max"]
-            incoming = incoming.filter(
-                F.struct("lsn", "txn_seq")
-                > F.struct(
-                    F.lit(t_max["lsn"]).cast("long"),
-                    F.lit(t_max["txn_seq"]).cast("long"),
-                )
-            )
-            affected = sorted(
-                {int(b) for b in manifest["buckets"]}
-                # delta-only buckets (merge-on-read debt, no base yet) die too
-                | {int(b) for b, rels in (manifest.get("deltas") or {}).items() if rels}
-                | {
-                    r["pb"]
-                    for r in incoming.select("pb").distinct().collect()
-                    if r["pb"] is not None  # NULL-pk rows hash to a NULL bucket
-                }
-            )
-        else:
-            affected = sorted(b for b in stats["pbs"] if b is not None)
-        def commit_manifest() -> None:
-            _commit_manifest(state_dir, manifest, manifest_etag, lock, backend)
+    # Writer-unique epoch dirs (suffixed with this merge's lock owner tag):
+    # two writers can NEVER target the same data directory, so even a
+    # zombie holder resuming after a lock takeover writes only an orphan —
+    # its rewrite cannot replace files a committed manifest references.
+    # The manifest, not the dir name, is the epoch's identity; a
+    # crashed/aborted merge leaves an unreferenced dir the next GC
+    # removes. Delta appends land in a sibling `.d` dir.
+    epoch_rel = os.path.join("epochs", f"e{epoch:09d}.{lock.owner[-8:]}")
+    # ONE Spark job: each touched bucket's task folds its stored state
+    # (read by manifest path) with the batch rows and writes the bucket's
+    # new file, or — in delta mode, under the budget — appends the rows
+    # as a delta file (merge-on-read, r9 verdict item 1: zero base reads,
+    # write volume ∝ batch); an over-budget bucket compacts in the same
+    # task. Dead (dropped) columns are masked on every fold input, so the
+    # TOAST fill never resurrects their stored values.
+    budget = max(int(compact_deltas), 1) if merge_mode == "delta" else None
+    results = _fold_groups(
+        incoming, BucketTask(files, epoch_rel, budget), n_buckets
+    )
+    cut = max(
+        ((r["t_lsn"], r["t_seq"]) for r in results if r["kind"] == "truncate"),
+        default=None,
+    )
+    if cut is not None:
+        # TRUNCATE (op 'T' from either transport, rare): every stored row
+        # and every batch event at or before the LAST truncate dies, in
+        # every bucket. Rerun once with that position: stored state is
+        # never read, only later events fold; every stored bucket the
+        # rerun does not rewrite leaves the manifest, all delta debt with
+        # it. The first run's files are overwritten or left for GC.
+        results = _fold_groups(
+            incoming, BucketTask(files, epoch_rel, truncated_at=cut), n_buckets
+        )
+        manifest["buckets"] = {}
+        manifest.pop("deltas", None)
+    _apply_results(manifest, results)
+    manifest["epoch"] = epoch
+    # Commit: fence (a zombie holder must abort HERE — its epoch dirs are
+    # unreferenced orphans the next GC removes), snapshot BEFORE the live
+    # swap (every epoch the retention window keeps is readable the moment
+    # the swap lands), then the etag-conditional live swap. An empty batch
+    # still commits its epoch (same buckets) so read_mirror_as_of works
+    # for it and the retention window counts epochs (r6 review).
+    _commit_manifest(state_dir, manifest, manifest_etag, lock, backend)
+    # refresh registered SQL views BEFORE GC deletes the bucket dirs their
+    # old plans reference (register_mirror_view / ADVICE r4)
+    _refresh_views(spark, state_dir, backend)
+    _gc_epochs(spark, state_dir, manifest, keep_epochs=keep_epochs,
+               backend=backend)
 
-        if not affected:
-            # an EMPTY epoch still committed in the stream's checkpoint — give
-            # it a snapshot (same buckets as the previous epoch) so
-            # read_mirror_as_of(empty_epoch) works and the retention window
-            # counts epochs, not just non-empty ones (r6 review)
-            manifest["epoch"] = epoch
-            commit_manifest()
-            _gc_epochs(spark, state_dir, manifest, keep_epochs=keep_epochs,
-                       backend=backend)
-            return
-        # Dead columns are masked to NULL on every input to the fold — the
-        # TOAST fill then never resurrects a dropped column's stored values.
-        def mask_dead(df: DataFrame) -> DataFrame:
-            if not dead:
-                return df
-            return df.select(
-                *[c for c in df.columns if c not in pin_types],
-                *[
-                    F.lit(None).cast(pin_types[c]).alias(c) if c in dead else F.col(c)
-                    for c in df.columns
-                    if c in pin_types
-                ],
-            )
 
-        all_deltas: dict = manifest.get("deltas") or {}
-        # Writer-unique epoch dirs (suffixed with this merge's lock owner tag):
-        # two writers can NEVER target the same data directory, so even a
-        # zombie holder resuming after a lock takeover writes only an orphan —
-        # its mode("overwrite") below cannot delete files a committed manifest
-        # references. The manifest, not the dir name, is the epoch's identity;
-        # a crashed/aborted merge leaves an unreferenced dir the next GC
-        # removes. Delta appends land in a sibling `.d` dir so a delta-mode
-        # merge that ALSO compacts never collides with its own base write.
-        epoch_rel = os.path.join("epochs", f"e{epoch:09d}.{lock.owner[-8:]}")
-        epoch_dir = os.path.join(state_dir, epoch_rel)
-        delta_rel = epoch_rel + ".d"
-        delta_dir = os.path.join(state_dir, delta_rel)
-
-        if merge_mode == "delta" and not truncated:
-            # MERGE-ON-READ (r9 verdict item 1): append the batch's raw events
-            # for buckets under their delta budget — ZERO base reads, write
-            # volume ∝ batch; compact the over-budget buckets inside the same
-            # epoch (their amortized write cost is state/budget per merge).
-            rewrite = sorted(
-                b
-                for b in affected
-                if len(all_deltas.get(str(b), ())) >= max(int(compact_deltas), 1)
-            )
-            append = sorted(set(affected) - set(rewrite))
-        elif truncated:
-            # TRUNCATE: all stored state (base AND delta debt) dies wholesale;
-            # survivors fold fresh — always the full-rewrite path.
-            rewrite, append = affected, []
-        else:
-            rewrite, append = affected, []
-
-        if append:
-            appended = _write_buckets(
-                incoming.filter(F.col("pb").isin([int(b) for b in append]))
-                .select("pk", "lsn", "op", "txn_seq", *value_cols, "pb"),
-                delta_dir,
-                len(append),
-            )
-            deltas = manifest.setdefault("deltas", {})
-            for b in append:
-                if b in appended:
-                    deltas.setdefault(str(b), []).append(
-                        os.path.join(delta_rel, f"pb={b}")
-                    )
-        if rewrite:
-            if truncated:
-                base_paths: list[str] = []  # stored state dies — never read back
-                delta_paths: list[str] = []
-            else:
-                base_paths = [
-                    os.path.join(state_dir, manifest["buckets"][str(b)])
-                    for b in rewrite
-                    if str(b) in manifest["buckets"]
-                ]
-                # pending merge-on-read debt folds in and clears (COW over a
-                # delta'd mirror, or a delta-mode compaction — same path)
-                delta_paths = [
-                    os.path.join(state_dir, rel)
-                    for b in rewrite
-                    for rel in all_deltas.get(str(b), ())
-                ]
-            parts = [
-                incoming.filter(F.col("pb").isin([int(b) for b in rewrite])).drop("pb")
-            ]
-            if base_paths:
-                # Stored rows are consolidated post-transaction state: give
-                # them a txn_seq ABOVE any event's so a stored 'R' row wins
-                # the fill/winner ordering against replayed events of the same
-                # commit (bucket files stay (pk, lsn, op, values) — no on-disk
-                # change). Explicit (possibly just-widened) schema: buckets
-                # written before a schema evolution lack the new columns and
-                # read as NULL.
-                parts.append(
-                    spark.read.schema(_mirror_struct(spark, manifest["value_schema"]))
-                    .parquet(*base_paths)
-                    .select("pk", "lsn", "op", *value_cols)
-                    .withColumn("txn_seq", F.lit(STORED_ROW_SEQ).cast("long"))
-                )
-            if delta_paths:
-                parts.append(
-                    spark.read.schema(_delta_struct(spark, manifest["value_schema"]))
-                    .parquet(*delta_paths)
-                    .select("pk", "lsn", "op", "txn_seq", *value_cols)
-                )
-            merged = parts[0]
-            for p in parts[1:]:
-                merged = merged.unionByName(p)
-            # One explicit shuffle on pk up front: hash(pk) satisfies the
-            # clustering requirement of ALL the fold's windows (incl. the
-            # (pk,lsn,txn_seq) dedup — subset rule), so the merge body runs on
-            # a single exchange.
-            par = spark.sparkContext.defaultParallelism
-            merged = merged.repartition(min(par, max(len(rewrite), 1)), F.col("pk"))
-            state = _fold_events(mask_dead(merged), value_cols).withColumn(
-                "pb", _bucket_col(n_buckets=n_buckets)
-            )
-            # one pk-sorted file per rewritten bucket dir
-            written = _write_buckets(state, epoch_dir, len(rewrite))
-            for b in rewrite:
-                if b in written:
-                    manifest["buckets"][str(b)] = os.path.join(epoch_rel, f"pb={b}")
-                else:
-                    # every key in the bucket was deleted
-                    manifest["buckets"].pop(str(b), None)
-            if truncated:
-                manifest.pop("deltas", None)  # all delta debt died with the state
-            elif all_deltas:
-                for b in rewrite:
-                    all_deltas.pop(str(b), None)  # folded in — debt cleared
-        manifest["epoch"] = epoch
-        # Commit: fence (a zombie holder must abort HERE — its epoch dirs are
-        # unreferenced orphans the next GC removes), snapshot BEFORE the live
-        # swap (every epoch the retention window keeps is readable the moment
-        # the swap lands), then the etag-conditional live swap.
-        commit_manifest()
-        # refresh registered SQL views BEFORE GC deletes the bucket dirs their
-        # old plans reference (register_mirror_view / ADVICE r4)
-        for view_name in _MIRROR_VIEWS.get(_views_key(state_dir), ()):
-            read_mirror(
-                batch_df.sparkSession, state_dir, backend
-            ).createOrReplaceTempView(view_name)
-        _gc_epochs(spark, state_dir, manifest, keep_epochs=keep_epochs,
-                   backend=backend)
-    finally:
-        cached.unpersist()
+def _refresh_views(spark: SparkSession, state_dir: str, backend: ClaimBackend) -> None:
+    for view_name in _MIRROR_VIEWS.get(_views_key(state_dir), ()):
+        read_mirror(spark, state_dir, backend).createOrReplaceTempView(view_name)
 
 
 def compact_mirror(
@@ -1376,18 +1185,17 @@ def compact_mirror(
     merges queue, a zombie loses the manifest CAS, time travel keeps
     working. Returns the number of buckets compacted (0 = nothing owed).
 
-    Scale shape: reads ONLY the indebted buckets' base+delta files, one
-    pk shuffle for the fold, writes exactly one file per compacted bucket
-    (`_write_buckets`)."""
+    Scale shape: one Spark job over the indebted bucket ids; each task
+    reads ONLY its bucket's base+delta files, folds them (`fold_bucket`)
+    and writes exactly one pk-sorted file."""
     backend.ensure_dir(state_dir)
     lock = _MergeLock(state_dir, ttl_s=lock_ttl_s, backend=backend)
     lock.acquire()
     try:
         manifest, manifest_etag = _read_manifest_versioned(state_dir, backend)
-        deltas = manifest.get("deltas") or {}
         owed = sorted(
             int(b)
-            for b, rels in deltas.items()
+            for b, rels in (manifest.get("deltas") or {}).items()
             if len(rels) >= max(int(min_deltas), 1)
         )
         if not owed:
@@ -1396,67 +1204,21 @@ def compact_mirror(
         if keep_epochs is None:
             keep_epochs = int(manifest.get("keep_epochs", 1))
         manifest["keep_epochs"] = int(keep_epochs)
-        n_buckets = int(manifest.get("n_buckets") or MIRROR_BUCKETS)
-        value_schema = manifest.get("value_schema", "after_val double")
-        struct = _mirror_struct(spark, value_schema)
-        value_cols = tuple(f.name for f in struct.fields[3:])
-        dead = set(manifest.get("dropped", {}))
-        ev = (
-            spark.read.schema(_delta_struct(spark, value_schema))
-            .parquet(
-                *[
-                    os.path.join(state_dir, rel)
-                    for b in owed
-                    for rel in deltas[str(b)]
-                ]
-            )
-            .select("pk", "lsn", "op", "txn_seq", *value_cols)
+        struct = _mirror_struct(
+            spark, manifest.get("value_schema", "after_val double")
         )
-        base_paths = [
-            os.path.join(state_dir, manifest["buckets"][str(b)])
-            for b in owed
-            if str(b) in manifest["buckets"]
-        ]
-        if base_paths:
-            ev = ev.unionByName(
-                spark.read.schema(struct)
-                .parquet(*base_paths)
-                .select("pk", "lsn", "op", *value_cols)
-                .withColumn("txn_seq", F.lit(STORED_ROW_SEQ).cast("long"))
-            )
-        if dead:
-            ev = ev.select(
-                "pk",
-                "lsn",
-                "op",
-                "txn_seq",
-                *[
-                    F.lit(None).cast(struct[c].dataType).alias(c)
-                    if c in dead
-                    else F.col(c)
-                    for c in value_cols
-                ],
-            )
-        par = spark.sparkContext.defaultParallelism
-        ev = ev.repartition(min(par, max(len(owed), 1)), F.col("pk"))
-        state = _fold_events(ev, value_cols).withColumn(
-            "pb", _bucket_col(n_buckets=n_buckets)
-        )
+        files = BucketFiles(state_dir, manifest, _event_schema(spark, struct))
         epoch_rel = os.path.join("epochs", f"e{epoch:09d}.{lock.owner[-8:]}")
-        epoch_dir = os.path.join(state_dir, epoch_rel)
-        written = _write_buckets(state, epoch_dir, len(owed))
-        for b in owed:
-            if b in written:
-                manifest["buckets"][str(b)] = os.path.join(epoch_rel, f"pb={b}")
-            else:
-                manifest["buckets"].pop(str(b), None)  # all keys deleted
-            deltas.pop(str(b), None)
+        task = BucketTask(files, epoch_rel)
+        results = (
+            spark.createDataFrame([(b,) for b in owed], _ID_STRUCT)
+            .mapInArrow(task.by_id(), _RESULT_DDL)
+            .collect()
+        )
+        _apply_results(manifest, results)
         manifest["epoch"] = epoch
         _commit_manifest(state_dir, manifest, manifest_etag, lock, backend)
-        for view_name in _MIRROR_VIEWS.get(_views_key(state_dir), ()):
-            read_mirror(spark, state_dir, backend).createOrReplaceTempView(
-                view_name
-            )
+        _refresh_views(spark, state_dir, backend)
         _gc_epochs(spark, state_dir, manifest, keep_epochs=keep_epochs,
                    backend=backend)
         return len(owed)
@@ -1616,8 +1378,9 @@ def rebucket_mirror(
     under power-of-two doubling — a key in old bucket b lands in b or
     b + N*2^i, never crossing other old buckets, which keeps
     `lookup_mirror`'s pruning exact at every point in history. Returns
-    the new bucket count. The write is one full-state shuffle — size it
-    like any table rewrite; the point is that it is ONLINE (concurrent
+    the new bucket count. The write is one full-state shuffle on the new
+    bucket id, then one `fold_bucket` task per new bucket writes its
+    pk-sorted file — size it like any table rewrite; the point is that it is ONLINE (concurrent
     merges queue on the lock, readers stay consistent), not free."""
     if factor < 2 or factor & (factor - 1):
         raise ValueError(f"rebucket factor must be a power of two, got {factor}")
@@ -1633,24 +1396,32 @@ def rebucket_mirror(
             keep_epochs = int(manifest.get("keep_epochs", 1))
         manifest["keep_epochs"] = int(keep_epochs)
         # consolidated current state (folds any delta debt) re-hashed to
-        # the new bucket count
-        state = _manifest_df(spark, state_dir, manifest).withColumn(
-            "pb", _bucket_col(n_buckets=new_n)
+        # the new bucket count, then one `fold_bucket` task per new bucket
+        # (no stored state under the new ids: the rows ARE the state)
+        struct = _mirror_struct(
+            spark, manifest.get("value_schema", "after_val double")
+        )
+        state = _manifest_df(spark, state_dir, manifest).select(
+            "pk", "lsn", "op",
+            F.lit(STORED_ROW_SEQ).cast("long").alias("txn_seq"),
+            *struct.names[3:],
+            _bucket_col(n_buckets=new_n).alias("pb"),
+        )
+        files = BucketFiles(
+            state_dir,
+            {"buckets": {}, "dropped": manifest.get("dropped", {})},
+            _event_schema(spark, struct),
         )
         epoch_rel = os.path.join("epochs", f"e{epoch:09d}.{lock.owner[-8:]}")
-        epoch_dir = os.path.join(state_dir, epoch_rel)
-        written = _write_buckets(state, epoch_dir, new_n)
-        manifest["buckets"] = {
-            str(b): os.path.join(epoch_rel, f"pb={b}") for b in sorted(written)
-        }
+        manifest["buckets"] = {}
+        _apply_results(
+            manifest, _fold_groups(state, BucketTask(files, epoch_rel), new_n)
+        )
         manifest.pop("deltas", None)  # folded into the rewrite
         manifest["n_buckets"] = new_n
         manifest["epoch"] = epoch
         _commit_manifest(state_dir, manifest, manifest_etag, lock, backend)
-        for view_name in _MIRROR_VIEWS.get(_views_key(state_dir), ()):
-            read_mirror(spark, state_dir, backend).createOrReplaceTempView(
-                view_name
-            )
+        _refresh_views(spark, state_dir, backend)
         _gc_epochs(spark, state_dir, manifest, keep_epochs=keep_epochs,
                    backend=backend)
         return new_n
@@ -1701,9 +1472,8 @@ def mirror_sink(
     Spark's foreachBatch batch id: the two counters live in different
     namespaces (the engine's snapshot seed already consumed mirror epoch
     0 before the stream's batch 0 arrives), and a collision is data loss
-    — the colliding batch's `mode("overwrite")` epoch-dir write wipes
-    every seeded bucket it doesn't itself touch while the manifest still
-    references them (found by the live-PostgreSQL engine lifecycle
+    — the colliding batch's epoch-dir write replaces seeded buckets
+    the manifest still references (found by the live-PostgreSQL engine lifecycle
     test). A checkpoint REPLAY of a batch re-merges idempotently into a
     fresh epoch instead of overwriting (events dedupe against stored
     rows on (pk, lsn, txn_seq)); a pre-swap crash leaves only

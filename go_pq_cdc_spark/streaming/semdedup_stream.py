@@ -183,40 +183,3 @@ def semdedup_batch_against_index(
         backend.put(marker, {"batch_id": int(batch_id)})
     finally:
         nb.unpersist()
-
-
-def incremental_semdedup_sink(
-    stream_df: DataFrame,
-    index_path: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    within_batch: bool = True,
-    backend: ClaimBackend = DEFAULT_BACKEND,
-):
-    """Attach streaming semantic dedup to a vector stream. Returns the
-    StreamingQuery; processAllAvailable() drains in tests. The index may
-    start empty (first batch creates it) or be pre-seeded with
-    `similarity.ivf_index_write` over a historical corpus."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda batch_df, epoch: semdedup_batch_against_index(
-                batch_df,
-                epoch,
-                index_path,
-                pairs_dir,
-                centroids,
-                id_col,
-                vec_col,
-                threshold,
-                within_batch=within_batch,
-                backend=backend,
-            )
-        )
-        .start()
-    )

@@ -142,26 +142,3 @@ def read_hll_view(
             [], "grp bigint, est_distinct double, n_buckets bigint"
         )
     return hll_estimate(st, ["grp"])
-
-
-def hll_view_sink(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    group_col: str,
-    value_col: str,
-    backend: ClaimBackend = DEFAULT_BACKEND,
-):
-    """Attach the HLL distinct-view fold to a stream; returns the
-    StreamingQuery (processAllAvailable() drains in tests)."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda batch_df, epoch: update_hll_view_state(
-                batch_df, epoch, state_dir, group_col, value_col,
-                backend=backend,
-            )
-        )
-        .start()
-    )

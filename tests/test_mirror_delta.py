@@ -34,6 +34,7 @@ from go_pq_cdc_spark.snapshot.claim_backend import (
 )
 from go_pq_cdc_spark.streaming.changelog_stream import (
     FLAT_CHANGE_SCHEMA,
+    _bucket_col,
     _read_manifest,
     lookup_mirror,
     merge_mirror_batch,
@@ -96,7 +97,7 @@ def test_delta_reads_equal_cow_over_same_log(spark, tmp_path):
     """The core contract: a delta-merged mirror reads IDENTICAL to a
     COW-merged one over the same event log — TOAST inheritance across
     the base/delta boundary, deletes, and replayed duplicates included
-    (the fold is the same `_fold_events`, applied at read instead of at
+    (the fold is the same `fold_bucket`, applied at read instead of at
     write)."""
     cow, delta = str(tmp_path / "cow"), str(tmp_path / "delta")
     for rows in _LOG:
@@ -460,6 +461,48 @@ def test_bucket_files_are_pk_sorted(spark, tmp_path):
     check_buckets(sd, n)
     assert rebucket_mirror(spark, sd, factor=2) == 2 * n
     check_buckets(sd, 2 * n)
+
+
+def test_cow_merge_runs_at_most_two_spark_jobs(spark, tmp_path):
+    """A cow merge is ONE grouped-map Spark job over the batch (each
+    bucket's task reads its files, folds and writes), which adaptive
+    execution submits as two jobs: the shuffle map stage and the result
+    stage. No cache fill, no routing aggregate, no separate write job —
+    however many buckets the batch touches."""
+    d = str(tmp_path / "m")
+    merge_mirror_batch(
+        _batch(spark, [_ev("I", i + 1, 1, i, float(i)) for i in range(400)]), d
+    )
+    # updates (half TOAST-unchanged) and deletes spread over ~all buckets
+    batch = _batch(spark, [
+        _ev("D" if i % 7 == 0 else "U", 1000 + i, 2, i,
+            None if i % 2 else -float(i))
+        for i in range(0, 400, 3)
+    ])
+    touched = {
+        r["b"]
+        for r in batch.select(_bucket_col("pk", 32).alias("b")).distinct().collect()
+    }
+    assert len(touched) >= 24
+    sc = spark.sparkContext
+    group = f"cow-merge-{os.getpid()}-{id(batch)}"
+    sc.setJobGroup(group, "one cow merge")
+    try:
+        merge_mirror_batch(batch, d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, f"cow merge ran {len(jobs)} Spark jobs"
+    want = {i: (float(i), i + 1) for i in range(400)}
+    for i in range(0, 400, 3):
+        if i % 7 == 0:
+            del want[i]
+        elif i % 2 == 0:
+            want[i] = (-float(i), 1000 + i)
+        else:
+            want[i] = (float(i), 1000 + i)  # TOAST NULL inherits
+    assert _state(spark, d) == want
 
 
 def test_auto_maintenance_policy_compacts_and_recommends(spark, tmp_path):

@@ -5,7 +5,7 @@ independent Python model."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from go_pq_cdc_spark.functions import portable as P
 from go_pq_cdc_spark.snapshot import plan_ctid_blocks, plan_integer_range, plan_offset
@@ -193,6 +193,114 @@ def test_incremental_mirror_equals_batch_state(spark_session_holder, data, cuts)
     want = {
         r["pk"]: (r["last_val"], r["last_lsn"]) for r in latest_state(full).collect()
     }
+    assert got == want
+
+
+_FOLD_EVENT = st.tuples(
+    st.one_of(st.none(), st.integers(0, 5)),  # pk: small range, NULL pk too
+    st.integers(0, 2),  # lsn step: 0 = same commit lsn (txn_seq splits it)
+    st.sampled_from(["I", "U", "U", "D", "I", "U", "T"]),
+    st.one_of(st.none(), st.floats(0, 100, allow_nan=False, width=32)),
+    st.one_of(st.none(), st.integers(-9, 9)),
+)
+
+
+@given(
+    data=st.lists(_FOLD_EVENT, min_size=1, max_size=40),
+    stored=st.integers(0, 40),
+    tie=st.booleans(),
+    drop=st.booleans(),
+)
+# pinned: a DELETE that ships an image, then a TOAST-NULL re-insert
+@example(
+    data=[(1, 1, "I", 5.0, 3), (1, 1, "U", None, None), (1, 1, "D", 7.0, 2),
+          (1, 1, "I", None, 4)],
+    stored=0, tie=False, drop=False,
+)
+# pinned: a replayed event sharing a stored row's identity
+@example(data=[(2, 1, "I", 1.0, 1), (2, 0, "U", 2.0, None)], stored=2, tie=True, drop=False)
+# pinned: NULL pk, TRUNCATE inside the stored prefix, dropped column
+@example(
+    data=[(None, 1, "I", 1.0, 1), (3, 1, "I", 2.0, 2), (0, 1, "T", None, None),
+          (3, 1, "U", None, 5), (None, 0, "U", 4.0, None)],
+    stored=3, tie=False, drop=True,
+)
+@settings(max_examples=20, deadline=None)
+def test_arrow_fold_matches_latest_state(spark_session_holder, data, stored, tie, drop):
+    """`fold_bucket` (the Arrow fold every mirror write and read runs)
+    gives the same state as `operators.cdc.latest_state` over the whole
+    log. The fold's input is what a merge feeds it: the state after a
+    prefix of the log as stored 'R' rows (txn_seq=STORED_ROW_SEQ), that
+    prefix replayed (at-least-once delivery), optionally a replayed event
+    sharing a stored row's identity (the stored row must win), then the
+    rest of the log. Logs carry TOAST NULLs, deletes and re-inserts,
+    several events per commit lsn, NULL pks, TRUNCATE ('T': every row at
+    or before the last one dies) and, optionally, a dropped column (reads
+    NULL, never inherits)."""
+    import pyarrow as pa
+
+    from go_pq_cdc_spark.operators.cdc import latest_state
+    from go_pq_cdc_spark.operators.bucket_fold import STORED_ROW_SEQ, fold_bucket
+
+    spark = spark_session_holder
+    events, lsn, seq = [], 10, 0
+    for pk, step, op, val, qty in data:
+        lsn, seq = lsn + step, (seq + 1 if step == 0 else 1)
+        if op == "T":
+            pk = val = qty = None  # TRUNCATE carries no key and no image
+        events.append((pk, lsn, op, seq, val, None if qty is None else float(qty)))
+
+    def oracle(log):
+        """latest_state per value column over the log with TRUNCATE
+        applied; {pk: (after_val, qty, lsn)}."""
+        cut = max(((e[1], e[3]) for e in log if e[2] == "T"), default=None)
+        log = [e for e in log if e[2] != "T" and (cut is None or (e[1], e[3]) > cut)]
+        if not log:
+            return {}
+        out = {}
+        for i, c in ((4, "after_val"), (5, "qty")):
+            df = spark.createDataFrame(
+                [(e[0], e[1], e[2], e[3], e[i]) for e in log],
+                "pk long, lsn long, op string, txn_seq long, after_val double",
+            )
+            for r in latest_state(df).collect():
+                out.setdefault(r["pk"], {})[c] = r["last_val"]
+                out[r["pk"]]["lsn"] = r["last_lsn"]
+        return {pk: (v["after_val"], v["qty"], v["lsn"]) for pk, v in out.items()}
+
+    # a merge boundary never splits a commit: the batch before it holds
+    # whole transactions (a stored row out-orders its own commit lsn)
+    while 0 < stored < len(events) and events[stored][1] == events[stored - 1][1]:
+        stored += 1
+    prefix = events[:stored]
+    rows = [
+        (pk, l, "R", STORED_ROW_SEQ, v, q) for pk, (v, q, l) in oracle(prefix).items()
+    ]
+    if tie and rows:
+        pk, l, _op, s, v, q = rows[0]
+        rows.append((pk, l, "U", s, (v or 0.0) + 1000.0, 99.0))
+    rows += prefix + events[stored:]
+    cols = list(zip(*rows))
+    table = pa.table(
+        {
+            "pk": pa.array(cols[0], pa.int64()),
+            "lsn": pa.array(cols[1], pa.int64()),
+            "op": pa.array(cols[2], pa.string()),
+            "txn_seq": pa.array(cols[3], pa.int64()),
+            "after_val": pa.array(cols[4], pa.float64()),
+            "qty": pa.array(cols[5], pa.float64()),
+        }
+    )
+    folded = fold_bucket(table, ("after_val", "qty"), dropped=("qty",) if drop else ())
+    pks = folded["pk"].to_pylist()
+    assert pks == sorted(pks, key=lambda p: (p is not None, p))  # pk-sorted, NULL first
+    assert set(folded["op"].to_pylist()) <= {"R"}
+    got = {
+        r["pk"]: (r["after_val"], r["qty"], r["lsn"]) for r in folded.to_pylist()
+    }
+    want = oracle(events)
+    if drop:
+        want = {pk: (v, None, l) for pk, (v, _q, l) in want.items()}
     assert got == want
 
 

@@ -278,11 +278,16 @@ def test_mirror_bucket_count_equivalence_and_pinning(spark, tmpdirs):
     assert suggest_mirror_buckets(10 << 40, 512 << 20) == 32768
 
 
-def test_lookup_mirror_prunes_to_hashed_buckets(spark, tmpdirs):
+def test_lookup_mirror_prunes_to_hashed_buckets(spark, tmpdirs, monkeypatch):
     """Read-side counterpart of the touched-buckets write gate: a point
     lookup must return exactly the filtered full-read rows while reading
     ONLY the bucket files its keys hash into — point-query IO is
-    ~len(pks)/n_buckets of the state, independent of mirror size."""
+    ~len(pks)/n_buckets of the state, independent of mirror size. The
+    lookup reads on the driver (no Spark scan), so the files it opens are
+    recorded at its bucket reader."""
+    from urllib.parse import urlparse
+
+    from go_pq_cdc_spark.operators.bucket_fold import BucketFiles
     from go_pq_cdc_spark.streaming.changelog_stream import lookup_mirror
 
     os.makedirs(tmpdirs["state"], exist_ok=True)
@@ -291,15 +296,26 @@ def test_lookup_mirror_prunes_to_hashed_buckets(spark, tmpdirs):
     )
     merge_mirror_batch(big, tmpdirs["state"])
 
+    opened = []
+    read = BucketFiles._read
+
+    def spy(self, rel, *a, **kw):
+        opened.append(os.path.join(tmpdirs["state"], rel))
+        return read(self, rel, *a, **kw)
+
+    monkeypatch.setattr(BucketFiles, "_read", spy)
     got = lookup_mirror(spark, tmpdirs["state"], [7, 8])
     rows = {(r["pk"], r["after_val"]) for r in got.collect()}
     assert rows == {(7, 7.0), (8, 8.0)}
 
-    full_files = set(read_mirror(spark, tmpdirs["state"]).inputFiles())
-    lookup_files = set(got.inputFiles())
-    assert lookup_files and lookup_files < full_files  # strictly pruned
-    assert len(lookup_files) <= 2 * max(
-        1, len(full_files) // 16
+    full_dirs = {
+        os.path.dirname(urlparse(f).path)
+        for f in read_mirror(spark, tmpdirs["state"]).inputFiles()
+    }
+    lookup_dirs = set(opened)
+    assert lookup_dirs and lookup_dirs < full_dirs  # strictly pruned
+    assert len(lookup_dirs) <= 2 * max(
+        1, len(full_dirs) // 16
     )  # ~2 buckets of 32, not the table
 
     # empty key set and missing keys degrade cleanly
