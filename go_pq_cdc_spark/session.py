@@ -26,6 +26,10 @@ def _spark_major_version() -> int:
         return 4
 
 
+def _package_root() -> str:
+    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(app_name: str = "go-pq-cdc-spark", *, cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
@@ -67,7 +71,17 @@ def get_spark(app_name: str = "go-pq-cdc-spark", *, cpus: int | None = None) -> 
         builder = builder.config("spark.sql.legacy.parquet.nanosAsLong", "true")
     active = SparkSession.getActiveSession()
     if active is None:
-        builder = builder.master(f"local[{n}]").config("spark.driver.memory", "16g")
+        builder = (
+            builder.master(f"local[{n}]")
+            .config("spark.driver.memory", "16g")
+            # SparkContext (static) confs, so they apply only when this
+            # call creates the context: the worker daemon that keeps zip
+            # directory caches across tasks (_worker_daemon.py), and the
+            # package root on the workers' PYTHONPATH so that daemon and
+            # the Python UDFs import from any working directory.
+            .config("spark.python.daemon.module", "go_pq_cdc_spark._worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", _package_root())
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -75,7 +89,9 @@ def get_spark(app_name: str = "go-pq-cdc-spark", *, cpus: int | None = None) -> 
 
 def apply_session_defaults(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable engine defaults to an externally provided
-    session (the driver hands us one in ``__spark_entry__.entry``)."""
+    session (the driver hands us one in ``__spark_entry__.entry``). The
+    worker daemon and the workers' ``PYTHONPATH`` are SparkContext confs,
+    which only ``get_spark`` sets, when it creates the context."""
     confs = [
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.adaptive.enabled", "true"),

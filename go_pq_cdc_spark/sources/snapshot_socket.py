@@ -77,6 +77,44 @@ def chunk_sqls(
     return [chunk_query(table, c.where, condition) for c in plan.chunks]
 
 
+def _read_chunks(
+    spark: SparkSession,
+    sqls: list[str],
+    conn_args: dict,
+    schema_ddl: str,
+    snapshot_id: str | None,
+    fetch,
+) -> DataFrame:
+    """One partition, so one Python task, per chunk SELECT. The source is a
+    JVM `range` with one row per partition (no Python-side parallelize, no
+    shuffle) that picks its SELECT from a literal array (shipped once per
+    executor with the stage, not once per task with the function). Each
+    task fetches its chunk as string columns through `mapInArrow`, so the
+    workers never import pandas, and Catalyst casts them to `schema_ddl`."""
+    fields = spark.createDataFrame([], schema_ddl).schema
+    names = [f.name for f in fields]
+    str_schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            for sql in batch.column("sql").to_pylist():
+                rows = fetch(conn_args, snapshot_id, sql)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([r[k] for r in rows], pa.string()) for k in range(len(names))],
+                    names=names,
+                )
+
+    sql_at = F.array(*[F.lit(q) for q in sqls]).cast("array<string>")
+    src = spark.range(len(sqls), numPartitions=max(len(sqls), 1)).select(
+        F.element_at(sql_at, F.col("id").cast("int") + 1).alias("sql")
+    )
+    return src.mapInArrow(gen, str_schema).select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields]
+    )
+
+
 def snapshot_socket_read(
     spark: SparkSession,
     conn_args: dict,
@@ -99,28 +137,9 @@ def snapshot_socket_read(
     `pg_export_snapshot()`) has to remain open until this DataFrame is
     fully consumed — same lifetime rule as the reference coordinator and
     the JDBC path."""
-    fields = spark.createDataFrame([], schema_ddl).schema
-    names = [f.name for f in fields]
-    str_schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
-    sqls = chunk_sqls(table, plan, condition)
-    src = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(sqls)], "chunk_index int, sql string"
-    ).repartition(max(len(sqls), 1), "chunk_index")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for sql in pdf["sql"]:
-                rows = fetch(conn_args, snapshot_id, sql)
-                yield pd.DataFrame(
-                    {n: [r[k] for r in rows] for k, n in enumerate(names)},
-                    dtype=object,
-                )
-
-    text = src.mapInPandas(gen, str_schema)
-    return text.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields]
+    return _read_chunks(
+        spark, chunk_sqls(table, plan, condition), conn_args, schema_ddl,
+        snapshot_id, fetch,
     )
 
 
@@ -160,28 +179,9 @@ def make_socket_chunk_reader(
     driver materialization, no JDBC jar)."""
 
     def reader(tcfg: TableConfig, chunk: dict) -> DataFrame:
-        fields = spark.createDataFrame([], schema_ddl).schema
-        names = [f.name for f in fields]
-        str_schema = T.StructType(
-            [T.StructField(n, T.StringType()) for n in names]
-        )
-        sql = cooperative_chunk_sql(tcfg, chunk, condition)
-        src = spark.createDataFrame([(0, sql)], "chunk_index int, sql string")
-
-        def gen(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                for s in pdf["sql"]:
-                    rows = fetch(conn_args, snapshot_id, s)
-                    yield pd.DataFrame(
-                        {n: [r[k] for r in rows] for k, n in enumerate(names)},
-                        dtype=object,
-                    )
-
-        text = src.mapInPandas(gen, str_schema)
-        return text.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields]
+        return _read_chunks(
+            spark, [cooperative_chunk_sql(tcfg, chunk, condition)], conn_args,
+            schema_ddl, snapshot_id, fetch,
         )
 
     return reader

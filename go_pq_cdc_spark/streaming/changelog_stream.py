@@ -599,6 +599,9 @@ def _gc_epochs(
 
 _MERGE_LOCK = ".merge.lock.json"
 _MERGE_LOCK_TTL_S = 300.0
+# floor on the heartbeat period: a tiny ttl (0 is the takeover idiom)
+# must not turn the beat into a busy loop of backend reads and swaps
+_MIN_BEAT_S = 0.05
 
 
 class MirrorLockLost(RuntimeError):
@@ -654,7 +657,7 @@ class _MergeLock:
         self._beat_stop = threading.Event()
 
         def beat():
-            while not self._beat_stop.wait(self.ttl_s / 4):
+            while not self._beat_stop.wait(max(self.ttl_s / 4, _MIN_BEAT_S)):
                 cur, etag = self.backend.read(self.path)
                 if cur is None or cur.get("owner") != self.owner:
                     return  # lost — the pre-swap fence will abort the merge

@@ -276,3 +276,29 @@ def test_engine_cooperative_seed_over_object_store(spark, tmp_path, be, planned)
     wal_lsn["v"] = "0/1000"
     lsn2, _ = eng.start(*args, chunk_reader=chunk_reader, claim_backend=be, **kw)
     assert lsn2 == 100 and reads == ([0, 1] if planned else [0])
+
+
+def test_zero_ttl_merge_lock_heartbeat_does_not_spin():
+    """A merge lock held with ttl_s=0 (the takeover idiom; also reachable
+    through `merge_mirror_batch(lock_ttl_s=0.0)`) heartbeats at a floored
+    period instead of busy-looping backend reads and swaps."""
+    from go_pq_cdc_spark.streaming.changelog_stream import _MergeLock
+
+    class CountingBackend(ObjectStoreBackend):
+        reads = 0
+
+        def read(self, path):
+            CountingBackend.reads += 1
+            return super().read(path)
+
+    lock = _MergeLock(
+        "s3://bucket/mirror", ttl_s=0.0, backend=CountingBackend(FakeObjectStore())
+    )
+    lock.acquire()
+    try:
+        time.sleep(0.5)
+    finally:
+        lock.release()
+    # ~10 beats of 2 reads each at the 50 ms floor; a spinning beat does
+    # thousands in 0.5 s
+    assert CountingBackend.reads <= 50

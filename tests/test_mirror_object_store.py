@@ -262,7 +262,7 @@ def test_heartbeat_cannot_reinstall_after_takeover(be, tmp_path):
     assert cur["owner"] == b.owner
     a.release()  # conditional: must not remove b's lock
     b.check_owned()
-    b.release()  # stops b's heartbeat thread (ttl 0 beats without pause)
+    b.release()  # stops b's heartbeat thread
 
 
 def test_crash_orphan_snapshot_is_replaced_on_retry(spark, tmp_path, be):

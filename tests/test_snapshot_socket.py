@@ -77,7 +77,10 @@ def test_chunk_reader_factory_for_cooperative_seed(spark):
     )
     tcfg = TableConfig(name="users")
     chunk = {"chunk_index": 0, "where": "pk >= 11 AND pk <= 30"}
-    got = {r["pk"] for r in reader(tcfg, chunk).collect()}
+    df = reader(tcfg, chunk)
+    # one partition, so one Python task, per chunk
+    assert df.rdd.getNumPartitions() == 1
+    got = {r["pk"] for r in df.collect()}
     assert got == set(range(11, 31))
 
 
