@@ -13,7 +13,7 @@ DataFrame code over those or a maintained current-state mirror table.
     eng.setup_sql()                  # DDL to run against Postgres once
     df  = eng.snapshot_df(...)       # consistent chunk-parallel snapshot
     st  = eng.changes(dir)           # streaming change events
-    q   = eng.mirror(st, state, ck)  # maintained queryable mirror
+    q   = mirror_sink(st, state, ck) # maintained mirror (streaming)
     cur = eng.current_state(state)   # the mirror as a DataFrame
 
 One-call lifecycle (the reference's `connector.Start`):
@@ -305,36 +305,6 @@ class CdcEngine:
 
             return decode_test_decoding(raw)
         raise ValueError(f"unknown poll plugin {plugin!r}")
-
-    def mirror(
-        self,
-        stream_df: DataFrame,
-        state_dir: str,
-        checkpoint_dir: str,
-        n_buckets: int | None = None,
-        keep_epochs: int | None = None,
-        claim_backend: ClaimBackend = DEFAULT_BACKEND,
-        merge_mode: str = "cow",
-        compact_deltas: int = 8,
-    ):
-        """Maintain a queryable current-state mirror (M3 apply idiom).
-        `n_buckets` sizes a fresh mirror (buckets ~ state_size /
-        target_rewrite_size, `suggest_mirror_buckets`); existing mirrors
-        keep their manifest-pinned count. `keep_epochs` > 1 retains epoch
-        snapshots for `state_as_of` time travel (None keeps the mirror's
-        pinned policy). `claim_backend` selects the mirror's coordination
-        medium (lock/manifest/snapshots — `snapshot.claim_backend`);
-        default POSIX, pass an ObjectStoreBackend for S3/GCS state
-        dirs. `merge_mode="delta"` is the state≫batch production arm:
-        micro-batches append per-epoch delta files (write ∝ batch, not
-        mirror size) and reads fold base+deltas; a bucket compacts when
-        its pending delta count reaches `compact_deltas` (see
-        merge_mirror_batch)."""
-        return mirror_sink(
-            stream_df, state_dir, checkpoint_dir, n_buckets=n_buckets,
-            keep_epochs=keep_epochs, backend=claim_backend,
-            merge_mode=merge_mode, compact_deltas=compact_deltas,
-        )
 
     def typed_mirror(
         self,
@@ -1008,17 +978,6 @@ class CdcEngine:
                 backend=claim_backend,
             )
         return min(published) if published else snapshot_lsn
-
-    def state_as_of(
-        self, state_dir: str, epoch: int,
-        claim_backend: ClaimBackend = DEFAULT_BACKEND,
-    ) -> DataFrame:
-        """Time-travel read of a retained mirror epoch (see
-        `streaming.read_mirror_as_of`; requires the mirror's pinned
-        keep_epochs retention to cover it)."""
-        from .streaming import read_mirror_as_of
-
-        return read_mirror_as_of(self.spark, state_dir, epoch, backend=claim_backend)
 
     def current_state(
         self, state_dir: str, claim_backend: ClaimBackend = DEFAULT_BACKEND

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cdc import agg_view_deltas, log_view_deltas, value_group
 from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
-from .versioned_state import VersionedState
+from .versioned_state import VersionedState, _fs_delete, _fs_list_names, _hadoop_fs
 
 STATE_SCHEMA = (
     "grp long, n_keys long, sum_cents long, ssq_cents2 decimal(38,0), "
@@ -232,8 +232,6 @@ def stage_view_deltas(
     short-circuit above fires on checkpoint replay BEFORE the thunk is
     invoked, so a replayed batch never pays the before-read it is
     forbidden from using anyway (r10 advisor)."""
-    from .changelog_stream import _hadoop_fs
-
     ddir = os.path.join(state_dir, "deltas", f"d{batch_id:012d}")
     # staged deltas are parquet DATA — probe/write/GC them through
     # Spark's Hadoop FS (any scheme), like every other data dir
@@ -336,8 +334,6 @@ def _check_not_shadowed(
 
 
 def _gc_delta_dirs(spark: SparkSession, state_dir: str, below: int) -> None:
-    from .changelog_stream import _fs_delete, _fs_list_names
-
     droot = os.path.join(state_dir, "deltas")
     for e in _fs_list_names(spark, droot):
         if e.startswith("d") and e[1:].isdigit() and int(e[1:]) < below:

@@ -31,10 +31,12 @@ conditional requests, where the swap becomes a true compare-and-swap
 last-writer-wins window between check_owned and os.replace does not
 exist there. Bucket parquet under `epochs/**` is read, folded and
 written by Python workers through `pyarrow.fs` (`fold_bucket`, one
-task per bucket; `s3a://` is read as pyarrow's `s3://`); the data
-directories are listed and garbage-collected through Spark's own Hadoop
-filesystem, which resolves file://, s3a:// and gs:// URIs alike — so a
-mirror whose state_dir is a bucket needs no POSIX anywhere. The
+task per bucket; `s3a://` is read as pyarrow's `s3://`), and the driver
+lists, sizes and garbage-collects those directories through the same
+layer; only Spark scans of the mirror go through Spark's Hadoop
+filesystem — so a mirror whose state_dir is a bucket needs no POSIX
+anywhere. Every write (merge, compaction, rebucket) is one transaction,
+`_mirror_write`: lock, fold, manifest CAS, GC. The
 reference's equivalent coordination is Postgres-backed and location-independent
 (pq/snapshot/worker.go:421-484); this is the Spark-native analogue.
 """
@@ -44,11 +46,17 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.bucket_fold import STORED_ROW_SEQ, BucketFiles, BucketTask
+from ..operators.bucket_fold import (
+    STORED_ROW_SEQ,
+    BucketFiles,
+    BucketTask,
+    arrow_uri,
+)
 from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
 
 # Flat envelope used by the streaming tests/fixtures (a typed projection of
@@ -212,40 +220,35 @@ def _publish_manifest_snapshot(
 
 # --- data-directory primitives (the bucket parquet) -------------------------
 #
-# Coordination files ride the ClaimBackend; the DATA directories live
-# under the state dir (written by the bucket tasks through pyarrow.fs),
-# and listing and deleting them goes through Spark's Hadoop filesystem —
-# the one component that already resolves file://, s3a://, gs:// (and
-# inherits the session's credentials). os.* here would silently pin the
-# mirror to POSIX.
+# Coordination files ride the ClaimBackend; the DATA directories under the
+# state dir are written by the bucket tasks through pyarrow.fs, and the
+# driver lists, sizes and deletes them through the same layer, with one
+# handle per pass resolved as the writers resolve it (`arrow_uri`: local
+# paths, `s3a://` as pyarrow's `s3://` with the AWS default credential
+# chain). Only Spark scans of the mirror (`read_mirror`) go through
+# Spark's Hadoop filesystem. os.* here would silently pin the mirror to
+# POSIX.
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+def _data_fs(state_dir: str) -> tuple[pafs.FileSystem, str]:
+    """(pyarrow filesystem, root path) of a mirror's data directories."""
+    return pafs.FileSystem.from_uri(arrow_uri(state_dir))
 
 
-def _fs_list_names(spark: SparkSession, d: str) -> list[str]:
-    """Child entry names directly under a data dir; [] when absent."""
-    fs, jpath = _hadoop_fs(spark, d)
-    if not fs.exists(jpath):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(jpath)]
-
-
-def _fs_delete(spark: SparkSession, d: str) -> None:
-    fs, jpath = _hadoop_fs(spark, d)
-    fs.delete(jpath, True)
+def _children(fs: pafs.FileSystem, path: str) -> list:
+    """FileInfo of each entry directly under `path`; [] when absent."""
+    return fs.get_file_info(pafs.FileSelector(path, allow_not_found=True))
 
 
 _STRUCTS: dict[str, T.StructType] = {}
 
 
-def _mirror_struct(spark: SparkSession, value_schema: str):
-    """StructType of the stored mirror row shape for a value DDL (parsed
-    once per DDL: a parse is a JVM round trip, and a point lookup needs
-    the struct on every call)."""
+def _mirror_struct(spark: SparkSession, manifest: dict) -> T.StructType:
+    """StructType of a manifest's stored mirror row shape (parsed once per
+    value DDL: a parse is a JVM round trip, and a point lookup needs the
+    struct on every call). Mirrors created before multi-column support
+    pin no DDL and store `after_val double`."""
+    value_schema = manifest.get("value_schema", "after_val double")
     st = _STRUCTS.get(value_schema)
     if st is None:
         st = _STRUCTS[value_schema] = spark.createDataFrame(
@@ -283,6 +286,13 @@ def _event_schema(spark: SparkSession, struct: T.StructType) -> pa.Schema:
         struct, prefers_large_types=spark._jconf.arrowUseLargeVarTypes()
     )
     return s.insert(3, pa.field("txn_seq", pa.int64()))
+
+
+def _bucket_files(spark: SparkSession, state_dir: str, manifest: dict) -> BucketFiles:
+    """The manifest's bucket files, typed by its row shape."""
+    return BucketFiles(
+        state_dir, manifest, _event_schema(spark, _mirror_struct(spark, manifest))
+    )
 
 
 def _fold_groups(rows: DataFrame, task: BucketTask, n_buckets: int) -> list:
@@ -339,8 +349,7 @@ def _manifest_df(
     same log); buckets with NO deltas read directly, zero fold overhead
     — the read cost of delta debt is bounded by the compaction budget,
     never paid by untouched buckets."""
-    value_schema = manifest.get("value_schema", "after_val double")
-    struct = _mirror_struct(spark, value_schema)
+    struct = _mirror_struct(spark, manifest)
     dead = set(manifest.get("dropped", {}))
     buckets = manifest["buckets"]
     deltas = [b for b, rels in (manifest.get("deltas") or {}).items() if rels]
@@ -355,7 +364,7 @@ def _manifest_df(
             spark.read.schema(struct).parquet(*plain).select(*_masked_cols(struct, dead))
         )
     if deltas:
-        files = BucketFiles(state_dir, manifest, _event_schema(spark, struct))
+        files = _bucket_files(spark, state_dir, manifest)
         ids = spark.createDataFrame([(int(b),) for b in deltas], _ID_STRUCT)
         parts.append(ids.mapInArrow(files.fold_ids, struct))
     if not parts:
@@ -426,8 +435,8 @@ def register_mirror_view(
     backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame:
     """Temp view over the mirror's current manifest, KEPT CURRENT across
-    merges: `merge_mirror_batch` re-registers every view recorded here
-    right after its manifest swap (and before GC deletes the superseded
+    writes: `_mirror_write` re-registers every view recorded here right
+    after its manifest swap (and before GC deletes the superseded
     bucket dirs the old view plan referenced — ADVICE r4)."""
     _MIRROR_VIEWS.setdefault(_views_key(state_dir), set()).add(name)
     df = read_mirror(spark, state_dir, backend)
@@ -460,10 +469,8 @@ def lookup_mirror(
     for attempt in range(3):
         manifest = _read_manifest(state_dir, backend)
         n = int(manifest.get("n_buckets") or MIRROR_BUCKETS)
-        struct = _mirror_struct(
-            spark, manifest.get("value_schema", "after_val double")
-        )
-        files = BucketFiles(state_dir, manifest, _event_schema(spark, struct))
+        struct = _mirror_struct(spark, manifest)
+        files = _bucket_files(spark, state_dir, manifest)
         routed: dict[int, list[int]] = {}
         for p in want:
             routed.setdefault(_bucket_of(p, n), []).append(p)
@@ -502,8 +509,7 @@ def mirror_befores_for(
     keys = keys_df.select("pk").distinct()
     wanted = {r["b"] for r in keys.select(_bucket_col("pk", n).alias("b")).distinct().collect()}
     sub = {
-        "value_schema": manifest.get("value_schema", "after_val double"),
-        "dropped": manifest.get("dropped", {}),
+        **manifest,
         "buckets": {
             b: rel for b, rel in manifest["buckets"].items() if int(b) in wanted
         },
@@ -519,22 +525,20 @@ def mirror_befores_for(
 
 
 def _gc_epochs(
-    spark: SparkSession,
-    state_dir: str,
-    manifest: dict,
-    keep_epochs: int = 1,
-    backend: ClaimBackend = DEFAULT_BACKEND,
+    state_dir: str, manifest: dict, backend: ClaimBackend = DEFAULT_BACKEND
 ) -> None:
     """Remove bucket dirs referenced by NO retained manifest: the live
     one plus the last `keep_epochs - 1` snapshot manifests (time-travel
-    retention). Snapshot manifests older than the retention window are
-    deleted first, so a crash mid-GC can never leave a readable snapshot
-    pointing at deleted buckets. Safe after the manifest swap: a crash
-    mid-GC only leaves garbage, never dangling references.
+    retention, the live manifest's pin). Snapshot manifests older than
+    the retention window are deleted first, so a crash mid-GC can never
+    leave a readable snapshot pointing at deleted buckets. Safe after the
+    manifest swap: a crash mid-GC only leaves garbage, never dangling
+    references.
 
     Manifest snapshots are coordination files (ClaimBackend); the bucket
-    dirs are listed and deleted through Hadoop FS (works on any scheme
-    the session can read)."""
+    dirs are listed and deleted through pyarrow.fs, the layer the bucket
+    tasks write them through, with one filesystem handle for the pass."""
+    keep_epochs = int(manifest.get("keep_epochs", 1))
     mroot = os.path.join(state_dir, "manifests")
     retained: list[dict] = [manifest]
     # sort by the PARSED epoch number — a lexicographic filename sort
@@ -558,18 +562,19 @@ def _gc_epochs(
         for rels in (m.get("deltas") or {}).values()
         for rel in rels
     }
-    eroot = os.path.join(state_dir, "epochs")
-    for epoch in _fs_list_names(spark, eroot):
-        edir = os.path.join(eroot, epoch)
-        remaining = []
-        for bdir in _fs_list_names(spark, edir):
-            rel = os.path.join("epochs", epoch, bdir)
-            if bdir.startswith("pb=") and rel not in live:
-                _fs_delete(spark, os.path.join(edir, bdir))
+    fs, root = _data_fs(state_dir)
+    for edir in _children(fs, f"{root}/epochs"):
+        if edir.type != pafs.FileType.Directory:
+            continue
+        remaining = False
+        for bdir in _children(fs, edir.path):
+            rel = os.path.join("epochs", edir.base_name, bdir.base_name)
+            if bdir.base_name.startswith("pb=") and rel not in live:
+                fs.delete_dir(bdir.path)
             else:
-                remaining.append(bdir)
+                remaining = True
         if not remaining:
-            _fs_delete(spark, edir)
+            fs.delete_dir(edir.path)
 
 
 # --- cross-process merge serialization --------------------------------------
@@ -714,7 +719,7 @@ def _commit_manifest(
     lock: _MergeLock,
     backend: ClaimBackend,
 ) -> None:
-    """The commit point (shared by the merge and the rebucket tool).
+    """The commit point of `_mirror_write`.
     Fence (ownership), guarded snapshot pre-publish (time travel —
     readable the moment the swap lands, but a zombie can never overwrite
     a committed peer's snapshot: `_publish_manifest_snapshot`), then the
@@ -741,6 +746,77 @@ def _commit_manifest(
     backend.put(
         _snapshot_manifest_path(state_dir, manifest["epoch"]), manifest
     )
+
+
+def _mirror_write(
+    spark: SparkSession,
+    state_dir: str,
+    body,
+    epoch: int | None = None,
+    keep_epochs: int | None = None,
+    lock_ttl_s: float = _MERGE_LOCK_TTL_S,
+    backend: ClaimBackend = DEFAULT_BACKEND,
+) -> dict | None:
+    """THE mirror write transaction; a merge, a compaction and a rebucket
+    differ only in `body(manifest, epoch_rel)`. It gets the NEXT manifest
+    (epoch and retention pinned) under the merge lock, writes its buckets
+    under `epoch_rel` and returns their task results, or None to end
+    without committing. The manifest then commits by CAS on the etag read
+    here, views re-point, and GC drops every unreferenced data dir.
+    Returns the committed manifest, or None."""
+    backend.ensure_dir(state_dir)
+    lock = _MergeLock(state_dir, ttl_s=lock_ttl_s, backend=backend)
+    lock.acquire()
+    try:
+        # the commit swap is conditional on the manifest version read here
+        # (etag-enforcing backends make that a true CAS)
+        manifest, manifest_etag = _read_manifest_versioned(state_dir, backend)
+        if epoch is None:
+            epoch = manifest["epoch"] + 1
+        elif epoch <= manifest["epoch"]:
+            # Reusing a committed epoch number would overwrite bucket dirs /
+            # the immutable manifest snapshot retained manifests still
+            # reference (the mirror_sink/seed collision class, live-PG
+            # lifecycle finding) — time-travel history must never be
+            # rewritten. A crash-before-swap replay is fine: the manifest
+            # counter never advanced, so the replayed epoch is still fresh.
+            raise ValueError(
+                f"mirror epoch {epoch} at {state_dir} is not fresh (live "
+                f"manifest epoch {manifest['epoch']}) and would overwrite bucket "
+                "dirs or manifest snapshots a retained manifest still "
+                "references; pass epoch=None to use the manifest counter"
+            )
+        # Retention is a property of the STORED mirror (like n_buckets /
+        # value_schema): pinned in the manifest so a writer using the default
+        # (engine seeding, multi_mirror_sink, an ad-hoc merge) can never
+        # silently destroy another writer's retained time-travel history
+        # (r6 review). Passing an explicit value UPDATES the pin — retention
+        # is an adjustable policy, not a layout invariant.
+        if keep_epochs is None:
+            keep_epochs = manifest.get("keep_epochs", 1)
+        manifest["keep_epochs"] = int(keep_epochs)
+        manifest["epoch"] = epoch
+        # Writer-unique epoch dirs (suffixed with this writer's lock owner
+        # tag): two writers can NEVER target the same data directory, so
+        # even a zombie holder resuming after a lock takeover writes only an
+        # orphan — its rewrite cannot replace files a committed manifest
+        # references. The manifest, not the dir name, is the epoch's
+        # identity; a crashed/aborted write leaves an unreferenced dir the
+        # next GC removes. Delta appends land in a sibling `.d` dir.
+        epoch_rel = os.path.join("epochs", f"e{epoch:09d}.{lock.owner[-8:]}")
+        results = body(manifest, epoch_rel)
+        if results is None:
+            return None
+        _apply_results(manifest, results)
+        _commit_manifest(state_dir, manifest, manifest_etag, lock, backend)
+        # refresh registered SQL views BEFORE GC deletes the bucket dirs
+        # their old plans reference (register_mirror_view / ADVICE r4)
+        for view_name in _MIRROR_VIEWS.get(_views_key(state_dir), ()):
+            read_mirror(spark, state_dir, backend).createOrReplaceTempView(view_name)
+        _gc_epochs(state_dir, manifest, backend)
+        return manifest
+    finally:
+        lock.release()
 
 
 _RESERVED_COLS = frozenset({"op", "lsn", "txn_seq", "xid", "commit_ts", "pk", "pb"})
@@ -830,17 +906,13 @@ def merge_mirror_batch(
     manifest from those rows. A batch with a TRUNCATE reruns the job once
     (see below).
 
-    Commit protocol: write new bucket dirs under `epochs/e<epoch>/`, then
-    atomically swap the manifest. A crash before the swap leaves the old
-    manifest (and every directory it references) intact; replaying the same
-    epoch overwrites the orphan and converges because the merge is
-    idempotent.
-
-    Concurrency: the whole read-manifest → write-epoch → swap critical
-    section runs under a per-mirror cross-process lock (see _MergeLock), so
-    N cooperating apps merging chunks into one shared mirror serialize
-    instead of wiping each other's epoch dirs. Raises `MirrorLockLost`
-    (pre-swap, mirror untouched) if the lock is lost mid-merge.
+    Commit and concurrency: the merge is one `_mirror_write` transaction
+    under the per-mirror cross-process lock, so N cooperating apps merging
+    chunks into one shared mirror serialize. A crash before the manifest
+    swap leaves the old manifest (and every directory it references)
+    intact and an orphan epoch dir the next GC removes; replaying the
+    batch converges because the merge is idempotent. Raises
+    `MirrorLockLost` (pre-swap, mirror untouched) if the lock is lost.
 
     Schema evolution: `value_cols=None` infers the batch's value columns
     (everything but the op/lsn/txn_seq/xid/commit_ts/pk envelope columns);
@@ -905,268 +977,191 @@ def merge_mirror_batch(
     the exact rel paths."""
     if merge_mode not in ("cow", "delta"):
         raise ValueError(f"merge_mode must be 'cow' or 'delta', got {merge_mode!r}")
-    backend.ensure_dir(state_dir)
-    lock = _MergeLock(state_dir, ttl_s=lock_ttl_s, backend=backend)
-    lock.acquire()
-    try:
-        _merge_mirror_batch_locked(
-            batch_df, state_dir, lock, epoch=epoch, n_buckets=n_buckets,
-            value_cols=value_cols, keep_epochs=keep_epochs,
-            evolve_schema=evolve_schema, backend=backend,
-            dropped_cols=dropped_cols, merge_mode=merge_mode,
-            compact_deltas=compact_deltas,
-        )
-    finally:
-        lock.release()
-
-
-def _merge_mirror_batch_locked(
-    batch_df: DataFrame,
-    state_dir: str,
-    lock: _MergeLock,
-    epoch: int | None = None,
-    n_buckets: int | None = None,
-    value_cols: tuple[str, ...] | None = ("after_val",),
-    keep_epochs: int | None = None,
-    evolve_schema: bool = False,
-    backend: ClaimBackend = DEFAULT_BACKEND,
-    dropped_cols: tuple[str, ...] | None = None,
-    merge_mode: str = "cow",
-    compact_deltas: int = 8,
-) -> None:
     spark = batch_df.sparkSession
     if value_cols is None:
         value_cols = tuple(
             f.name for f in batch_df.schema.fields if f.name not in _RESERVED_COLS
         )
-    # capture the manifest's version at read: the commit swap below is
-    # conditional on it (etag-enforcing backends make that a true CAS)
-    manifest, manifest_etag = _read_manifest_versioned(state_dir, backend)
-    if epoch is None:
-        epoch = manifest["epoch"] + 1
-    elif epoch <= manifest["epoch"]:
-        # Reusing a committed epoch number would overwrite bucket dirs /
-        # the immutable manifest snapshot retained manifests still
-        # reference (the mirror_sink/seed collision class, live-PG
-        # lifecycle finding) — time-travel history must never be
-        # rewritten. A crash-before-swap replay is fine: the manifest
-        # counter never advanced, so the replayed epoch is still fresh.
-        raise ValueError(
-            f"mirror epoch {epoch} at {state_dir} is not fresh (live "
-            f"manifest epoch {manifest['epoch']}) and would overwrite bucket "
-            "dirs or manifest snapshots a retained manifest still "
-            "references; pass epoch=None to use the manifest counter"
-        )
-    # Retention is a property of the STORED mirror (like n_buckets /
-    # value_schema): pinned in the manifest so a writer using the default
-    # (engine seeding, multi_mirror_sink, an ad-hoc merge) can never
-    # silently destroy another writer's retained time-travel history
-    # (r6 review). Passing an explicit value UPDATES the pin — retention
-    # is an adjustable policy, not a layout invariant.
-    if keep_epochs is None:
-        keep_epochs = int(manifest.get("keep_epochs", 1))
-    manifest["keep_epochs"] = int(keep_epochs)
-    # Bucket count is a property of the STORED mirror, not of the caller:
-    # first write pins it in the manifest; after that a conflicting request
-    # is a rebuild, not a silent re-hash (keys would land in other buckets
-    # and the touched-bucket invariant would corrupt state).
-    stored_n = manifest.get("n_buckets")
-    if stored_n is None:
-        n_buckets = n_buckets or MIRROR_BUCKETS
-        manifest["n_buckets"] = n_buckets
-    elif n_buckets is not None and n_buckets != stored_n:
-        raise ValueError(
-            f"mirror at {state_dir} was created with n_buckets={stored_n}; "
-            f"re-bucketing to {n_buckets} is an explicit migration "
-            "(rebucket_mirror / tools/rebucket_mirror.py), never a "
-            "silent re-hash"
-        )
-    else:
-        n_buckets = stored_n
-    # The value-column schema is likewise a property of the STORED mirror
-    # (reference parity: a sink table's row shape). Pinned at first write;
-    # a later merge with different columns is a rebuild, not a silent
-    # schema drift.
-    incoming_fields = [
-        (c, batch_df.schema[c].dataType.simpleString()) for c in value_cols
-    ]
-    value_schema = ", ".join(f"{n} {t}" for n, t in incoming_fields)
-    stored_schema = manifest.get("value_schema")
-    if stored_schema is None:
-        if manifest["buckets"] and value_schema != "after_val double":
-            # pre-multi-column mirror: its buckets hold (after_val double)
-            # by construction — pinning ANY other schema over them (other
-            # columns OR a differently-typed after_val) would mix parquet
-            # types across buckets
-            raise ValueError(
-                f"mirror at {state_dir} predates multi-column support "
-                f"(stores after_val double); merging [{value_schema}] "
-                "requires a rebuild"
-            )
-        manifest["value_schema"] = value_schema
-    elif stored_schema != value_schema:
-        if not evolve_schema:
-            # full DDL comparison — same NAMES with different TYPES would
-            # write mixed-type parquet across buckets and break the union
-            # at read time (r5 review finding)
-            raise ValueError(
-                f"mirror at {state_dir} stores [{stored_schema}]; merging "
-                f"[{value_schema}] requires a rebuild"
-            )
-        # Widen: the union of stored + batch columns, stored order first
-        # (bucket files already on disk keep their layout; an explicit-
-        # schema read fills what a file lacks with NULL). A column whose
-        # TYPE differs widens IN PLACE when the pair is a safe parquet
-        # read-promotion (`widened_type` — the reference's Relation-cache
-        # overwrite makes the new tuples authoritative, relation.go:68-87;
-        # Spark's promotion rules make the old files readable under the
-        # wider pin). A non-widenable change is still a rebuild.
-        stored_fields = [
-            (f.name, f.dataType.simpleString())
-            for f in spark.createDataFrame([], stored_schema).schema.fields
-        ]
-        st_types = dict(stored_fields)
-        in_types = dict(incoming_fields)
-        conflicts = []
-        target_fields = []
-        for n, st_t in stored_fields:
-            in_t = in_types.get(n, st_t)
-            w = widened_type(st_t, in_t)
-            if w is None:
-                conflicts.append(f"{n} ({st_t} vs {in_t})")
-                w = st_t
-            target_fields.append((n, w))
-        if conflicts:
-            raise ValueError(
-                f"mirror at {state_dir} stores [{stored_schema}]; batch "
-                f"columns [{', '.join(conflicts)}] change type in a way "
-                "parquet read-promotion cannot widen — rebuild required "
-                "(safe widenings: int-chain, float->double, decimal "
-                "precision, int->decimal)"
-            )
-        target_fields += [
-            (n, t) for n, t in incoming_fields if n not in st_types
-        ]
-        value_schema = ", ".join(f"{n} {t}" for n, t in target_fields)
-        manifest["value_schema"] = value_schema
-        # project the batch onto the union: a replayed pre-DDL segment is
-        # missing the new column — NULL there means "unchanged" to the
-        # TOAST fill, which inherits any stored value (exactly right).
-        # The cast is the widening direction by construction (lossless);
-        # a replayed NARROW segment casts up to the pin.
-        batch_df = batch_df.select(
-            *[c for c in batch_df.columns if c not in in_types],
-            *[
-                F.col(n).cast(t).alias(n)
-                if n in in_types
-                else F.lit(None).cast(t).alias(n)
-                for n, t in target_fields
-            ],
-        )
-        value_cols = tuple(n for n, _t in target_fields)
 
-    # Column DROPS (evolve_schema; r8 verdict item 7): record the drop
-    # epoch in the manifest. The column keeps its slot in the pinned row
-    # shape (bucket files still hold pre-drop values; time travel through
-    # pre-drop manifest snapshots still serves them), but from this epoch
-    # on reads mask it to NULL and the merge stops inheriting its stored
-    # values through the TOAST fill — new tuples are authoritative, the
-    # reference's Relation-cache overwrite (relation.go:68-87).
-    pin_fields = [
-        (f.name, f.dataType.simpleString())
-        for f in spark.createDataFrame([], manifest["value_schema"]).schema.fields
-    ]
-    pin_types = dict(pin_fields)
-    if dropped_cols:
-        if not evolve_schema:
-            raise ValueError("dropped_cols= requires evolve_schema=True")
-        drops = manifest.setdefault("dropped", {})
-        for c in dropped_cols:
-            if c in pin_types and c not in drops:
-                drops[c] = epoch
-    dead = set(manifest.get("dropped", {}))
-    if dropped_cols is not None:
-        # authoritative per-batch drop list (the engine's Relation
-        # sidecar): a manifest-dropped column that REAPPEARS in the live
-        # schema is a re-created same-name column — un-masking it would
-        # resurrect pre-drop stored values as if they were the new
-        # column's; fail loudly instead of either loss mode
-        readded = (dead - set(dropped_cols)) & set(value_cols)
-        if readded:
+    def fold(manifest: dict, epoch_rel: str) -> list:
+        # the pins below narrow the caller's batch to the stored mirror
+        nonlocal batch_df, value_cols, n_buckets
+        # Bucket count is a property of the STORED mirror, not of the caller:
+        # first write pins it in the manifest; after that a conflicting request
+        # is a rebuild, not a silent re-hash (keys would land in other buckets
+        # and the touched-bucket invariant would corrupt state).
+        stored_n = manifest.get("n_buckets")
+        if stored_n is None:
+            n_buckets = n_buckets or MIRROR_BUCKETS
+            manifest["n_buckets"] = n_buckets
+        elif n_buckets is not None and n_buckets != stored_n:
             raise ValueError(
-                f"columns {sorted(readded)} were dropped (mirror at "
-                f"{state_dir}) and re-added with the same name; the "
-                "mirror cannot distinguish old stored values from the "
-                "new column — rebuild required"
+                f"mirror at {state_dir} was created with n_buckets={stored_n}; "
+                f"re-bucketing to {n_buckets} is an explicit migration "
+                "(rebucket_mirror / tools/rebucket_mirror.py), never a "
+                "silent re-hash"
             )
+        else:
+            n_buckets = stored_n
+        # The value-column schema is likewise a property of the STORED mirror
+        # (reference parity: a sink table's row shape). Pinned at first write;
+        # a later merge with different columns is a rebuild, not a silent
+        # schema drift.
+        incoming_fields = [
+            (c, batch_df.schema[c].dataType.simpleString()) for c in value_cols
+        ]
+        value_schema = ", ".join(f"{n} {t}" for n, t in incoming_fields)
+        stored_schema = manifest.get("value_schema")
+        if stored_schema is None:
+            if manifest["buckets"] and value_schema != "after_val double":
+                # pre-multi-column mirror: its buckets hold (after_val double)
+                # by construction — pinning ANY other schema over them (other
+                # columns OR a differently-typed after_val) would mix parquet
+                # types across buckets
+                raise ValueError(
+                    f"mirror at {state_dir} predates multi-column support "
+                    f"(stores after_val double); merging [{value_schema}] "
+                    "requires a rebuild"
+                )
+            manifest["value_schema"] = value_schema
+        elif stored_schema != value_schema:
+            if not evolve_schema:
+                # full DDL comparison — same NAMES with different TYPES would
+                # write mixed-type parquet across buckets and break the union
+                # at read time (r5 review finding)
+                raise ValueError(
+                    f"mirror at {state_dir} stores [{stored_schema}]; merging "
+                    f"[{value_schema}] requires a rebuild"
+                )
+            # Widen: the union of stored + batch columns, stored order first
+            # (bucket files already on disk keep their layout; an explicit-
+            # schema read fills what a file lacks with NULL). A column whose
+            # TYPE differs widens IN PLACE when the pair is a safe parquet
+            # read-promotion (`widened_type` — the reference's Relation-cache
+            # overwrite makes the new tuples authoritative, relation.go:68-87;
+            # Spark's promotion rules make the old files readable under the
+            # wider pin). A non-widenable change is still a rebuild.
+            stored_fields = [
+                (f.name, f.dataType.simpleString())
+                for f in _mirror_struct(spark, manifest).fields[3:]
+            ]
+            st_types = dict(stored_fields)
+            in_types = dict(incoming_fields)
+            conflicts = []
+            target_fields = []
+            for n, st_t in stored_fields:
+                in_t = in_types.get(n, st_t)
+                w = widened_type(st_t, in_t)
+                if w is None:
+                    conflicts.append(f"{n} ({st_t} vs {in_t})")
+                    w = st_t
+                target_fields.append((n, w))
+            if conflicts:
+                raise ValueError(
+                    f"mirror at {state_dir} stores [{stored_schema}]; batch "
+                    f"columns [{', '.join(conflicts)}] change type in a way "
+                    "parquet read-promotion cannot widen — rebuild required "
+                    "(safe widenings: int-chain, float->double, decimal "
+                    "precision, int->decimal)"
+                )
+            target_fields += [
+                (n, t) for n, t in incoming_fields if n not in st_types
+            ]
+            value_schema = ", ".join(f"{n} {t}" for n, t in target_fields)
+            manifest["value_schema"] = value_schema
+            # project the batch onto the union: a replayed pre-DDL segment is
+            # missing the new column — NULL there means "unchanged" to the
+            # TOAST fill, which inherits any stored value (exactly right).
+            # The cast is the widening direction by construction (lossless);
+            # a replayed NARROW segment casts up to the pin.
+            batch_df = batch_df.select(
+                *[c for c in batch_df.columns if c not in in_types],
+                *[
+                    F.col(n).cast(t).alias(n)
+                    if n in in_types
+                    else F.lit(None).cast(t).alias(n)
+                    for n, t in target_fields
+                ],
+            )
+            value_cols = tuple(n for n, _t in target_fields)
 
-    # Event-order key: commit-rewritten envelopes carry (lsn, txn_seq) —
-    # all rows of one transaction share the commit lsn and txn_seq splits
-    # them; flat fixtures without txn_seq get 0 (their lsns are unique).
-    seq_in = (
-        F.col("txn_seq") if "txn_seq" in batch_df.columns else F.lit(0)
-    ).cast("long")
-    incoming = batch_df.select(
-        "pk", "lsn", "op", seq_in.alias("txn_seq"), *value_cols
-    ).withColumn("pb", _bucket_col(n_buckets=n_buckets))
-    files = BucketFiles(
-        state_dir, manifest,
-        _event_schema(spark, _mirror_struct(spark, manifest["value_schema"])),
-    )
-    # Writer-unique epoch dirs (suffixed with this merge's lock owner tag):
-    # two writers can NEVER target the same data directory, so even a
-    # zombie holder resuming after a lock takeover writes only an orphan —
-    # its rewrite cannot replace files a committed manifest references.
-    # The manifest, not the dir name, is the epoch's identity; a
-    # crashed/aborted merge leaves an unreferenced dir the next GC
-    # removes. Delta appends land in a sibling `.d` dir.
-    epoch_rel = os.path.join("epochs", f"e{epoch:09d}.{lock.owner[-8:]}")
-    # ONE Spark job: each touched bucket's task folds its stored state
-    # (read by manifest path) with the batch rows and writes the bucket's
-    # new file, or — in delta mode, under the budget — appends the rows
-    # as a delta file (merge-on-read, r9 verdict item 1: zero base reads,
-    # write volume ∝ batch); an over-budget bucket compacts in the same
-    # task. Dead (dropped) columns are masked on every fold input, so the
-    # TOAST fill never resurrects their stored values.
-    budget = max(int(compact_deltas), 1) if merge_mode == "delta" else None
-    results = _fold_groups(
-        incoming, BucketTask(files, epoch_rel, budget), n_buckets
-    )
-    cut = max(
-        ((r["t_lsn"], r["t_seq"]) for r in results if r["kind"] == "truncate"),
-        default=None,
-    )
-    if cut is not None:
-        # TRUNCATE (op 'T' from either transport, rare): every stored row
-        # and every batch event at or before the LAST truncate dies, in
-        # every bucket. Rerun once with that position: stored state is
-        # never read, only later events fold; every stored bucket the
-        # rerun does not rewrite leaves the manifest, all delta debt with
-        # it. The first run's files are overwritten or left for GC.
+        # Column DROPS (evolve_schema; r8 verdict item 7): record the drop
+        # epoch in the manifest. The column keeps its slot in the pinned row
+        # shape (bucket files still hold pre-drop values; time travel through
+        # pre-drop manifest snapshots still serves them), but from this epoch
+        # on reads mask it to NULL and the merge stops inheriting its stored
+        # values through the TOAST fill — new tuples are authoritative, the
+        # reference's Relation-cache overwrite (relation.go:68-87).
+        if dropped_cols:
+            if not evolve_schema:
+                raise ValueError("dropped_cols= requires evolve_schema=True")
+            pinned = _mirror_struct(spark, manifest).names[3:]
+            drops = manifest.setdefault("dropped", {})
+            for c in dropped_cols:
+                if c in pinned and c not in drops:
+                    drops[c] = manifest["epoch"]
+        dead = set(manifest.get("dropped", {}))
+        if dropped_cols is not None:
+            # authoritative per-batch drop list (the engine's Relation
+            # sidecar): a manifest-dropped column that REAPPEARS in the live
+            # schema is a re-created same-name column — un-masking it would
+            # resurrect pre-drop stored values as if they were the new
+            # column's; fail loudly instead of either loss mode
+            readded = (dead - set(dropped_cols)) & set(value_cols)
+            if readded:
+                raise ValueError(
+                    f"columns {sorted(readded)} were dropped (mirror at "
+                    f"{state_dir}) and re-added with the same name; the "
+                    "mirror cannot distinguish old stored values from the "
+                    "new column — rebuild required"
+                )
+
+        # Event-order key: commit-rewritten envelopes carry (lsn, txn_seq) —
+        # all rows of one transaction share the commit lsn and txn_seq splits
+        # them; flat fixtures without txn_seq get 0 (their lsns are unique).
+        seq_in = (
+            F.col("txn_seq") if "txn_seq" in batch_df.columns else F.lit(0)
+        ).cast("long")
+        incoming = batch_df.select(
+            "pk", "lsn", "op", seq_in.alias("txn_seq"), *value_cols
+        ).withColumn("pb", _bucket_col(n_buckets=n_buckets))
+        files = _bucket_files(spark, state_dir, manifest)
+        # ONE Spark job: each touched bucket's task folds its stored state
+        # (read by manifest path) with the batch rows and writes the bucket's
+        # new file, or — in delta mode, under the budget — appends the rows
+        # as a delta file (merge-on-read, r9 verdict item 1: zero base reads,
+        # write volume ∝ batch); an over-budget bucket compacts in the same
+        # task. Dead (dropped) columns are masked on every fold input, so the
+        # TOAST fill never resurrects their stored values.
+        budget = max(int(compact_deltas), 1) if merge_mode == "delta" else None
         results = _fold_groups(
-            incoming, BucketTask(files, epoch_rel, truncated_at=cut), n_buckets
+            incoming, BucketTask(files, epoch_rel, budget), n_buckets
         )
-        manifest["buckets"] = {}
-        manifest.pop("deltas", None)
-    _apply_results(manifest, results)
-    manifest["epoch"] = epoch
-    # Commit: fence (a zombie holder must abort HERE — its epoch dirs are
-    # unreferenced orphans the next GC removes), snapshot BEFORE the live
-    # swap (every epoch the retention window keeps is readable the moment
-    # the swap lands), then the etag-conditional live swap. An empty batch
-    # still commits its epoch (same buckets) so read_mirror_as_of works
-    # for it and the retention window counts epochs (r6 review).
-    _commit_manifest(state_dir, manifest, manifest_etag, lock, backend)
-    # refresh registered SQL views BEFORE GC deletes the bucket dirs their
-    # old plans reference (register_mirror_view / ADVICE r4)
-    _refresh_views(spark, state_dir, backend)
-    _gc_epochs(spark, state_dir, manifest, keep_epochs=keep_epochs,
-               backend=backend)
+        cut = max(
+            ((r["t_lsn"], r["t_seq"]) for r in results if r["kind"] == "truncate"),
+            default=None,
+        )
+        if cut is not None:
+            # TRUNCATE (op 'T' from either transport, rare): every stored row
+            # and every batch event at or before the LAST truncate dies, in
+            # every bucket. Rerun once with that position: stored state is
+            # never read, only later events fold; every stored bucket the
+            # rerun does not rewrite leaves the manifest, all delta debt with
+            # it. The first run's files are overwritten or left for GC.
+            results = _fold_groups(
+                incoming, BucketTask(files, epoch_rel, truncated_at=cut), n_buckets
+            )
+            manifest["buckets"] = {}
+            manifest.pop("deltas", None)
+        return results
 
-
-def _refresh_views(spark: SparkSession, state_dir: str, backend: ClaimBackend) -> None:
-    for view_name in _MIRROR_VIEWS.get(_views_key(state_dir), ()):
-        read_mirror(spark, state_dir, backend).createOrReplaceTempView(view_name)
+    # An empty batch still commits its epoch (same buckets) so
+    # read_mirror_as_of works for it and the retention window counts
+    # epochs (r6 review).
+    _mirror_write(
+        spark, state_dir, fold, epoch=epoch, keep_epochs=keep_epochs,
+        lock_ttl_s=lock_ttl_s, backend=backend,
+    )
 
 
 def compact_mirror(
@@ -1191,105 +1186,28 @@ def compact_mirror(
     Scale shape: one Spark job over the indebted bucket ids; each task
     reads ONLY its bucket's base+delta files, folds them (`fold_bucket`)
     and writes exactly one pk-sorted file."""
-    backend.ensure_dir(state_dir)
-    lock = _MergeLock(state_dir, ttl_s=lock_ttl_s, backend=backend)
-    lock.acquire()
-    try:
-        manifest, manifest_etag = _read_manifest_versioned(state_dir, backend)
-        owed = sorted(
+    owed: list[int] = []
+
+    def fold(manifest: dict, epoch_rel: str) -> list | None:
+        owed.extend(sorted(
             int(b)
             for b, rels in (manifest.get("deltas") or {}).items()
             if len(rels) >= max(int(min_deltas), 1)
-        )
+        ))
         if not owed:
-            return 0
-        epoch = manifest["epoch"] + 1
-        if keep_epochs is None:
-            keep_epochs = int(manifest.get("keep_epochs", 1))
-        manifest["keep_epochs"] = int(keep_epochs)
-        struct = _mirror_struct(
-            spark, manifest.get("value_schema", "after_val double")
-        )
-        files = BucketFiles(state_dir, manifest, _event_schema(spark, struct))
-        epoch_rel = os.path.join("epochs", f"e{epoch:09d}.{lock.owner[-8:]}")
-        task = BucketTask(files, epoch_rel)
-        results = (
+            return None
+        files = _bucket_files(spark, state_dir, manifest)
+        return (
             spark.createDataFrame([(b,) for b in owed], _ID_STRUCT)
-            .mapInArrow(task.by_id(), _RESULT_DDL)
+            .mapInArrow(BucketTask(files, epoch_rel).by_id(), _RESULT_DDL)
             .collect()
         )
-        _apply_results(manifest, results)
-        manifest["epoch"] = epoch
-        _commit_manifest(state_dir, manifest, manifest_etag, lock, backend)
-        _refresh_views(spark, state_dir, backend)
-        _gc_epochs(spark, state_dir, manifest, keep_epochs=keep_epochs,
-                   backend=backend)
-        return len(owed)
-    finally:
-        lock.release()
 
-
-def mirror_changes_between(
-    spark: SparkSession,
-    state_dir: str,
-    epoch_a: int,
-    epoch_b: int,
-    backend: ClaimBackend = DEFAULT_BACKEND,
-) -> DataFrame:
-    """Net-change feed between two RETAINED mirror epochs — the
-    mirror-level `table_changes(a, b)` (the log-level twin is
-    `operators.cdc.changes_between`): the minimal I/U/D row set taking a
-    consumer from epoch A's state to epoch B's. Reads the two immutable
-    epoch snapshots (merge-on-read deltas fold per epoch as recorded),
-    full-outer diffs on pk with null-safe value comparison, and emits
-    one row per net-changed key: (pk, change_op, before_<col>...,
-    after_<col>...) over epoch B's (possibly evolution-widened) column
-    pin — columns epoch A predates read NULL on the before side.
-
-    Both epochs must still be retained (`keep_epochs`); a GC'd epoch
-    raises (read_mirror_as_of's contract). Scale shape: two
-    bucket-pruned snapshot reads and one pk equi-join — no log replay,
-    cost ∝ the two states, not history length."""
-    if epoch_a > epoch_b:
-        raise ValueError(f"epochs out of order: {epoch_a} > {epoch_b}")
-    mb, _ = backend.read(_snapshot_manifest_path(state_dir, epoch_b))
-    if mb is None:
-        raise ValueError(
-            f"mirror epoch {epoch_b} is not retained at {state_dir}"
-        )
-    struct_b = _mirror_struct(spark, mb.get("value_schema", "after_val double"))
-    value_fields = struct_b.fields[3:]
-
-    def side(epoch: int, tag: str) -> DataFrame:
-        df = read_mirror_as_of(spark, state_dir, epoch, backend)
-        cols = [
-            F.col(f.name).cast(f.dataType).alias(f"{tag}_{f.name}")
-            if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f"{tag}_{f.name}")
-            for f in value_fields
-        ]
-        return df.select("pk", F.lit(True).alias(f"in_{tag}"), *cols)
-
-    j = side(epoch_a, "before").join(side(epoch_b, "after"), "pk", "full_outer")
-    va = F.struct(*[F.col(f"before_{f.name}") for f in value_fields])
-    vb = F.struct(*[F.col(f"after_{f.name}") for f in value_fields])
-    present_a = F.coalesce(F.col("in_before"), F.lit(False))
-    present_b = F.coalesce(F.col("in_after"), F.lit(False))
-    change = (
-        F.when(~present_a & present_b, "I")
-        .when(present_a & ~present_b, "D")
-        .when(present_a & present_b & ~va.eqNullSafe(vb), "U")
+    _mirror_write(
+        spark, state_dir, fold, keep_epochs=keep_epochs,
+        lock_ttl_s=lock_ttl_s, backend=backend,
     )
-    return (
-        j.withColumn("change_op", change)
-        .filter(F.col("change_op").isNotNull())
-        .select(
-            "pk",
-            "change_op",
-            *[F.col(f"before_{f.name}") for f in value_fields],
-            *[F.col(f"after_{f.name}") for f in value_fields],
-        )
-    )
+    return len(owed)
 
 
 def mirror_stats(
@@ -1311,22 +1229,21 @@ def mirror_stats(
                                         live byte size: when this exceeds
                                         n_buckets, run rebucket_mirror.
 
-    Reads ONLY manifest-referenced paths through Spark's Hadoop FS (any
-    scheme the session resolves) — no Spark jobs, no full-state scan; at
-    100 TB this is a listing of n_buckets directories, not a read."""
+    Lists ONLY manifest-referenced dirs, through pyarrow.fs (the layer
+    the bucket tasks write them through, one handle per call) — no Spark
+    jobs, no JVM call, no full-state scan; at 100 TB this is a listing of
+    n_buckets directories, not a read."""
     manifest = _read_manifest(state_dir, backend)
+    fs, root = _data_fs(state_dir)
 
     def du(rel_paths: list[str]) -> tuple[int, int]:
-        total, files = 0, 0
-        for rel in rel_paths:
-            fs, jpath = _hadoop_fs(spark, os.path.join(state_dir, rel))
-            if not fs.exists(jpath):
-                continue
-            for st in fs.listStatus(jpath):
-                if st.isFile():
-                    total += st.getLen()
-                    files += 1
-        return total, files
+        sizes = [
+            i.size
+            for rel in rel_paths
+            for i in _children(fs, f"{root}/{rel}")
+            if i.type == pafs.FileType.File
+        ]
+        return sum(sizes), len(sizes)
 
     deltas = {
         b: rels for b, rels in (manifest.get("deltas") or {}).items() if rels
@@ -1387,49 +1304,31 @@ def rebucket_mirror(
     merges queue on the lock, readers stay consistent), not free."""
     if factor < 2 or factor & (factor - 1):
         raise ValueError(f"rebucket factor must be a power of two, got {factor}")
-    backend.ensure_dir(state_dir)
-    lock = _MergeLock(state_dir, ttl_s=lock_ttl_s, backend=backend)
-    lock.acquire()
-    try:
-        manifest, manifest_etag = _read_manifest_versioned(state_dir, backend)
-        old_n = int(manifest.get("n_buckets") or MIRROR_BUCKETS)
-        new_n = old_n * factor
-        epoch = manifest["epoch"] + 1
-        if keep_epochs is None:
-            keep_epochs = int(manifest.get("keep_epochs", 1))
-        manifest["keep_epochs"] = int(keep_epochs)
+
+    def rewrite(manifest: dict, epoch_rel: str) -> list:
+        new_n = int(manifest.get("n_buckets") or MIRROR_BUCKETS) * factor
         # consolidated current state (folds any delta debt) re-hashed to
         # the new bucket count, then one `fold_bucket` task per new bucket
         # (no stored state under the new ids: the rows ARE the state)
-        struct = _mirror_struct(
-            spark, manifest.get("value_schema", "after_val double")
-        )
         state = _manifest_df(spark, state_dir, manifest).select(
             "pk", "lsn", "op",
             F.lit(STORED_ROW_SEQ).cast("long").alias("txn_seq"),
-            *struct.names[3:],
+            *_mirror_struct(spark, manifest).names[3:],
             _bucket_col(n_buckets=new_n).alias("pb"),
         )
-        files = BucketFiles(
-            state_dir,
-            {"buckets": {}, "dropped": manifest.get("dropped", {})},
-            _event_schema(spark, struct),
+        files = _bucket_files(
+            spark, state_dir, {**manifest, "buckets": {}, "deltas": {}}
         )
-        epoch_rel = os.path.join("epochs", f"e{epoch:09d}.{lock.owner[-8:]}")
+        results = _fold_groups(state, BucketTask(files, epoch_rel), new_n)
         manifest["buckets"] = {}
-        _apply_results(
-            manifest, _fold_groups(state, BucketTask(files, epoch_rel), new_n)
-        )
         manifest.pop("deltas", None)  # folded into the rewrite
         manifest["n_buckets"] = new_n
-        manifest["epoch"] = epoch
-        _commit_manifest(state_dir, manifest, manifest_etag, lock, backend)
-        _refresh_views(spark, state_dir, backend)
-        _gc_epochs(spark, state_dir, manifest, keep_epochs=keep_epochs,
-                   backend=backend)
-        return new_n
-    finally:
-        lock.release()
+        return results
+
+    return _mirror_write(
+        spark, state_dir, rewrite, keep_epochs=keep_epochs,
+        lock_ttl_s=lock_ttl_s, backend=backend,
+    )["n_buckets"]
 
 
 def mirror_sink(

@@ -3,6 +3,8 @@ ingestion pipeline. Each micro-batch of documents is (1) deduped against
 the persisted MinHash index (`operators.dedup.minhash_index_write` layout)
 WITHOUT touching the indexed corpus text, then (2) appended to that index,
 so the next batch sees it. Near-dup pairs stream out partitioned by batch.
+`dedup_batch_against_index` is that per-batch step: a stream's
+`foreachBatch` body, or a plain call per batch.
 
 This is the CDC engine's sink-dispatch pattern (reference:
 /root/reference/pq/connector.go sink apply loop) applied to the dedup
@@ -25,8 +27,8 @@ Failure semantics: pairs are written with dynamic partition overwrite to
 idempotent); the index append is guarded by a per-batch marker under
 `<index>/_batches/` (a retried batch skips the append instead of
 double-inserting band rows). The marker is a COORDINATION object and
-rides the pluggable `ClaimBackend` (r11 — same medium split as the
-mirror and the view state: markers on conditional requests when the
+rides the pluggable `ClaimBackend` (r11 — the view state's medium
+split: markers on conditional requests when the
 index lives on an object store, data via Spark's Hadoop FS); the index
 existence probe goes through the Hadoop FS for the same reason.
 Candidate generation additionally `dropDuplicates` on the pair key, so
@@ -43,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
+from .versioned_state import _fs_list_names
 
 PAIR_SCHEMA = "doc_a bigint, doc_b bigint, jaccard double"
 
@@ -50,8 +53,6 @@ PAIR_SCHEMA = "doc_a bigint, doc_b bigint, jaccard double"
 def _index_exists(spark, index_path: str, prefix: str = "bucket=") -> bool:
     # existence probe through Spark's Hadoop FS (file://, s3a://, gs://)
     # — a single driver-side namenode/list call either way
-    from .changelog_stream import _fs_list_names
-
     return any(e.startswith(prefix) for e in _fs_list_names(spark, index_path))
 
 
@@ -128,43 +129,3 @@ def dedup_batch_against_index(
         backend.put(marker, {"batch_id": int(batch_id)})
     finally:
         nb.unpersist()
-
-
-def incremental_dedup_sink(
-    stream_df: DataFrame,
-    index_path: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    *,
-    portable: bool = True,
-    n_buckets: int = D.MINHASH_INDEX_BUCKETS,
-    within_batch: bool = True,
-    backend: ClaimBackend = DEFAULT_BACKEND,
-):
-    """Attach streaming incremental dedup to a document stream. Returns
-    the StreamingQuery; processAllAvailable() drains in tests. The index
-    may start empty (first batch creates it) or be pre-seeded with
-    `minhash_index_write` over a historical corpus."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda batch_df, epoch: dedup_batch_against_index(
-                batch_df,
-                epoch,
-                index_path,
-                pairs_dir,
-                id_col,
-                text_col,
-                threshold,
-                portable=portable,
-                n_buckets=n_buckets,
-                within_batch=within_batch,
-                backend=backend,
-            )
-        )
-        .start()
-    )

@@ -120,85 +120,3 @@ def buffer_streamed_txns(stream_df: DataFrame) -> DataFrame:
         # where timeouts work.
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas twin — Spark 4's successor stateful API
-# (SPARK-46815). Same O8 semantics as `buffer_streamed_txns`; state lives in
-# a ValueState (TTL-capable server-side, vs the legacy GroupStateTimeout),
-# and the processor object carries no cross-key Python state. Both operators
-# stay: applyInPandasWithState is the broadly-deployed API, this is the
-# forward path new Spark versions optimize.
-#
-# Environment note: TWS's Python<->JVM state server speaks protobuf
-# (google.protobuf), which this container does not ship — the equivalence
-# test (tests/test_streaming.py::test_streamed_txn_tws_twin_matches_legacy)
-# importorskips accordingly and runs wherever protobuf is installed; the
-# legacy operator above is the fully-tested in-container path.
-# ---------------------------------------------------------------------------
-
-
-def buffer_streamed_txns_tws(stream_df: DataFrame) -> DataFrame:
-    """`buffer_streamed_txns` on transformWithStateInPandas: per-XID
-    ValueState buffering, emit-on-commit in LSN order with the commit-LSN
-    stamp, drop-on-abort. Output schema identical to the legacy operator
-    (the streaming test asserts both produce the same rows)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _TxnProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._buf = handle.getValueState("buf", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            (xid,) = key
-            if self._buf.exists():
-                lsns, ops, pks, vals = (list(x) for x in self._buf.get())
-            else:
-                lsns, ops, pks, vals = [], [], [], []
-            commit_lsn = None
-            aborted = False
-            for pdf in rows:
-                for row in pdf.itertuples(index=False):
-                    if row.op == "C":
-                        commit_lsn = int(row.lsn)
-                    elif row.op == "A":
-                        aborted = True
-                    else:
-                        lsns.append(int(row.lsn))
-                        ops.append(row.op)
-                        pks.append(int(row.pk))
-                        vals.append(
-                            None if pd.isna(row.after_val) else float(row.after_val)
-                        )
-            if aborted:
-                self._buf.clear()
-                return
-            if commit_lsn is not None:
-                self._buf.clear()
-                if lsns:
-                    order = sorted(range(len(lsns)), key=lambda i: lsns[i])
-                    yield pd.DataFrame(
-                        {
-                            "xid": [xid] * len(order),
-                            "lsn": [lsns[i] for i in order],
-                            "op": [ops[i] for i in order],
-                            "pk": [pks[i] for i in order],
-                            "after_val": [vals[i] for i in order],
-                            "commit_lsn": [commit_lsn] * len(order),
-                        }
-                    )
-                return
-            self._buf.update((lsns, ops, pks, vals))
-
-        def close(self) -> None:
-            pass
-
-    return stream_df.groupBy("xid").transformWithStateInPandas(
-        statefulProcessor=_TxnProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

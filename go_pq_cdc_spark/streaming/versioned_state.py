@@ -7,14 +7,17 @@ Layout under `state_dir`:
     v{N:012d}/            parquet data for version N   (Spark's Hadoop FS)
     meta/v{N:012d}.json   commit marker + metadata     (ClaimBackend)
 
-Media split (the same one the mirror proved, changelog_stream.py:189-193):
-coordination objects — the meta markers that define which versions EXIST —
-ride the pluggable `snapshot.claim_backend.ClaimBackend`, so a state_dir
-on S3/GCS coordinates through conditional requests with no POSIX anywhere;
-the parquet DATA is written/read/GC'd through Spark's own Hadoop
-filesystem, which already resolves file://, s3a:// and gs:// with the
-session's credentials. The default `PosixLinkBackend` keeps everything on
-the local filesystem.
+Media split: coordination objects — the meta markers that define which
+versions EXIST — ride the pluggable `snapshot.claim_backend.ClaimBackend`,
+so a state_dir on S3/GCS coordinates through conditional requests with no
+POSIX anywhere; the parquet DATA is written and read by Spark, so it is
+also listed and GC'd through Spark's own Hadoop filesystem (`_hadoop_fs`
+and the two helpers below it, shared with the aggregate view's staged
+deltas and the dedup index probe), which resolves file://, s3a:// and
+gs:// with the session's credentials. The default `PosixLinkBackend`
+keeps everything on the local filesystem. (The mirror's bucket dirs are
+written by Python workers through pyarrow.fs and are listed and deleted
+through that layer instead — `streaming.changelog_stream`.)
 
 Commit protocol: the meta object is PUT strictly AFTER the version's
 parquet write returns, and a version is committed IFF its meta exists.
@@ -38,6 +41,26 @@ import os
 from pyspark.sql import SparkSession
 
 from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _fs_list_names(spark: SparkSession, d: str) -> list[str]:
+    """Child entry names directly under a data dir; [] when absent."""
+    fs, jpath = _hadoop_fs(spark, d)
+    if not fs.exists(jpath):
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(jpath)]
+
+
+def _fs_delete(spark: SparkSession, d: str) -> None:
+    fs, jpath = _hadoop_fs(spark, d)
+    fs.delete(jpath, True)
+
 
 # pre-r11 in-dir meta sidecars (one per state machine family) — their
 # presence marks a legacy layout; `tools/migrate_versioned_state.py`
@@ -160,8 +183,6 @@ class VersionedState:
         raise `keep` if readers may lag further."""
         if keep < 2:
             raise ValueError(f"keep must be >= 2 (retries read N-1), got {keep}")
-        from .changelog_stream import _fs_delete, _fs_list_names
-
         versions = []
         for name in self.backend.list_names(self._meta_dir()):
             if name.startswith("v") and name.endswith(".json"):

@@ -1,7 +1,7 @@
 """Streaming incremental dedup: micro-batches are deduped against the
 persisted MinHash index and appended to it, so later batches see earlier
-ones — the online ingestion path (drained with processAllAvailable, the
-same harness style as the mirror-sink scenarios)."""
+ones — the online ingestion path, one `dedup_batch_against_index` call
+per micro-batch (a stream's foreachBatch body)."""
 
 from __future__ import annotations
 
@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 
 from go_pq_cdc_spark.catalog import load_table
 from go_pq_cdc_spark.operators import dedup as D
-from go_pq_cdc_spark.streaming.dedup_stream import (
-    dedup_batch_against_index,
-    incremental_dedup_sink,
-)
+from go_pq_cdc_spark.streaming.dedup_stream import dedup_batch_against_index
 
 from .conftest import SF_DIR
 
@@ -35,13 +32,10 @@ def _shingleable_docs(spark, n):
     )
 
 
-def test_streaming_incremental_dedup_two_batches(spark):
+def test_incremental_dedup_two_batches(spark):
     base = tempfile.mkdtemp(prefix="gpcs_dstream_")
-    ind = os.path.join(base, "in")
     index_path = os.path.join(base, "mh_index")
     pairs_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ck")
-    os.makedirs(ind)
     try:
         docs = _shingleable_docs(spark, 3)
         a, b, c = docs
@@ -53,23 +47,11 @@ def test_streaming_incremental_dedup_two_batches(spark):
             (c["doc_id"] + 2000000, c["text"]),
             (c["doc_id"] + 3000000, c["text"]),
         ]
-        spark.createDataFrame(batch1, DOC_SCHEMA).coalesce(1).write.parquet(
-            os.path.join(ind, "b0")
-        )
-        stream = (
-            spark.readStream.schema(DOC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ind + "/*")
-        )
-        q = incremental_dedup_sink(stream, index_path, pairs_dir, ckpt)
-        try:
-            q.processAllAvailable()
-            spark.createDataFrame(batch2, DOC_SCHEMA).coalesce(1).write.parquet(
-                os.path.join(ind, "b1")
+        for batch_id, rows in enumerate((batch1, batch2)):
+            dedup_batch_against_index(
+                spark.createDataFrame(rows, DOC_SCHEMA), batch_id,
+                index_path, pairs_dir,
             )
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
         pairs = {
             (r["doc_a"], r["doc_b"], r["batch_id"]): r["jaccard"]

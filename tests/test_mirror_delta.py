@@ -342,49 +342,6 @@ def test_delta_arm_on_object_store_backend(spark, tmp_path):
     assert any(m.get("deltas", {}).values())
 
 
-def test_mirror_changes_between_epochs(spark, tmp_path):
-    """Mirror-level net-change feed (table_changes(a, b)): full-outer
-    diff of two retained epoch snapshots — keys whose value reverted or
-    only TOAST-inherited between the epochs collapse away; deltas fold
-    per epoch as recorded."""
-    from go_pq_cdc_spark.streaming.changelog_stream import (
-        mirror_changes_between,
-    )
-
-    d = str(tmp_path / "m")
-    merge_mirror_batch(
-        _batch(spark, [_ev("I", 10, 1, 1, 1.0), _ev("I", 11, 1, 2, 2.0)]),
-        d, epoch=0, keep_epochs=4,
-    )
-    merge_mirror_batch(
-        _batch(spark, [_ev("U", 20, 2, 1, 1.5), _ev("I", 21, 2, 3, 3.0)]),
-        d, epoch=1, merge_mode="delta",
-    )
-    # pk1's TOAST NULL inherits 1.5 -> net-unchanged between e1 and e2
-    merge_mirror_batch(
-        _batch(spark, [_ev("D", 30, 3, 2, None), _ev("U", 31, 3, 1, None)]),
-        d, epoch=2, merge_mode="delta",
-    )
-
-    def diff(a, b):
-        out = mirror_changes_between(spark, d, a, b)
-        assert set(out.columns) == {
-            "pk", "change_op", "before_after_val", "after_after_val"
-        }
-        return {
-            r["pk"]: (r["change_op"], r["after_after_val"])
-            for r in out.collect()
-        }
-
-    assert diff(0, 2) == {1: ("U", 1.5), 2: ("D", None), 3: ("I", 3.0)}
-    assert diff(1, 2) == {2: ("D", None)}  # pk1 TOAST-unchanged: collapsed
-    assert diff(2, 2) == {}
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="out of order"):
-        mirror_changes_between(spark, d, 2, 0)
-
-
 def test_compact_mirror_explicit_maintenance(spark, tmp_path):
     """compact_mirror folds every indebted bucket's base+deltas without
     waiting for a batch to touch it (the OPTIMIZE idiom): debt clears,

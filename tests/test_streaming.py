@@ -375,6 +375,9 @@ def test_mirror_crash_before_manifest_swap_keeps_old_state(spark, tmpdirs):
     merge_mirror_batch(b2, tmpdirs["state"], epoch=1)
     state = {r["pk"]: r["after_val"] for r in read_mirror(spark, tmpdirs["state"]).collect()}
     assert state == {1: 2.0}
+    # the commit's GC removed the crashed write's orphan, and its epoch
+    # dir with it (nothing else lived there)
+    assert not os.path.exists(os.path.dirname(orphan))
 
 
 def test_kafka_frames_serialization(spark):
@@ -595,59 +598,6 @@ def test_mirror_retention_is_pinned_and_empty_epochs_snapshot(spark, tmp_path):
     assert _read_manifest(state)["keep_epochs"] == 1
     with pytest.raises(ValueError, match="not retained"):
         read_mirror_as_of(spark, state, 2)
-
-
-def test_streamed_txn_tws_twin_matches_legacy(spark, tmpdirs):
-    """The transformWithStateInPandas txn buffer must reproduce the legacy
-    applyInPandasWithState operator's exact output: commit-gated delivery
-    in LSN order with the commit-LSN stamp, aborts invisible.
-
-    Env-gated like the live-PG suite: Spark's TWS state-server protocol
-    needs google.protobuf, which this container does not ship (the legacy
-    applyInPandasWithState operator — fully tested above — has no such
-    dependency). Runs anywhere protobuf is installed."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs protobuf (not in this container)",
-    )
-
-    from go_pq_cdc_spark.streaming.txn_buffer import buffer_streamed_txns_tws
-
-    indir = tmpdirs["in"] + "_tws"
-    os.makedirs(indir, exist_ok=True)
-    _write_batch(
-        spark, indir,
-        [_ev("I", 10, 100, 1, 1.0), _ev("U", 12, 100, 1, 1.1), _ev("I", 11, 200, 9, 9.0)],
-        0,
-    )
-    stream = changelog_stream(spark, indir + "/*")
-    out = buffer_streamed_txns_tws(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("txn_out_tws")
-        .option("checkpointLocation", tmpdirs["ckpt2"] + "_tws")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.sql("SELECT * FROM txn_out_tws").count() == 0
-        _write_batch(
-            spark, indir,
-            [_ev("C", 20, 100, 0, None), _ev("A", 21, 200, 0, None)],
-            1,
-        )
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM txn_out_tws ORDER BY lsn").collect()
-        assert [(r["xid"], r["lsn"], r["commit_lsn"]) for r in rows] == [
-            (100, 10, 20),
-            (100, 12, 20),
-        ]
-        assert not [r for r in rows if r["xid"] == 200], "aborted txn leaked"
-    finally:
-        q.stop()
 
 
 def test_epoch_collision_with_seeded_buckets_refused(spark, tmpdirs):
