@@ -29,6 +29,7 @@ One-call lifecycle (the reference's `connector.Start`):
 
 from __future__ import annotations
 
+import inspect
 import logging
 import os
 
@@ -39,9 +40,14 @@ from .config import EngineConfig, TableConfig
 from .snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
 from .snapshot.planner import SnapshotPlan, plan_auto
 from .sources import postgres as pg
-from .streaming.changelog_stream import changelog_stream, mirror_sink
+from .streaming.changelog_stream import file_change_stream, mirror_sink
 
 _log = logging.getLogger(__name__)
+
+_TRANSPORTS = ("flat", "envelope", "wal2json", "test_decoding")
+# the mirror_sink arguments `start` supplies itself; every other
+# mirror_sink keyword reaches it unchanged through `start(**mirror)`
+_OWN_SINK_ARGS = ("value_cols", "transform", "evolve_schema", "backend", "dropped_cols")
 
 
 class CdcEngine:
@@ -156,7 +162,7 @@ class CdcEngine:
 
     def changes(self, transport_dir: str) -> DataFrame:
         """Change-event stream from the file/Kafka transport directory."""
-        return changelog_stream(self.spark, transport_dir)
+        return file_change_stream(self.spark, transport_dir)
 
     def slot_keeper(self, run_sql, wal_dir: str, **kw):
         """The production transport loop for this config: polls the slot
@@ -305,34 +311,6 @@ class CdcEngine:
 
             return decode_test_decoding(raw)
         raise ValueError(f"unknown poll plugin {plugin!r}")
-
-    def typed_mirror(
-        self,
-        changes: DataFrame,
-        state_dir: str,
-        checkpoint_dir: str,
-        table: str,
-        value_schema: str,
-        pk_col: str = "pk",
-        n_buckets: int | None = None,
-        claim_backend: ClaimBackend = DEFAULT_BACKEND,
-    ):
-        """Whole-row TYPED mirror straight from the change envelope — the
-        reference's sink contract (typed full-row events applied in commit
-        order; connector.go sink dispatch + tuple/data.go decode) end to
-        end. `changes` is either transport's envelope stream
-        (`raw_changes` wal2json decode or the socket/pgoutput envelope
-        reader): filter to `table`, type the after-image string map with
-        `envelope.typed_projection` (the pk comes from the BEFORE image
-        for DELETEs — replica identity), and maintain the full row in the
-        bucketed mirror with per-column TOAST repair (a column absent
-        from an update's after map types to NULL and inherits the stored
-        value)."""
-        flat, value_cols = self._typed_flat(changes, table, value_schema, pk_col)
-        return mirror_sink(
-            flat, state_dir, checkpoint_dir, n_buckets=n_buckets,
-            value_cols=value_cols, backend=claim_backend,
-        )
 
     def _typed_flat(self, changes, table: str, value_schema: str, pk_col: str):
         """Envelope -> typed flat change rows for one table: filter, type
@@ -509,39 +487,29 @@ class CdcEngine:
         wal_dir: str,
         state_dir: str,
         checkpoint_dir: str,
-        mirror_buckets: int | None = None,
+        *,
         value_schema: str = "after_val double",
         transport: str = "flat",
         table: str | None = None,
-        keep_epochs: int | None = None,
         chunk_planner=None,
         chunk_reader=None,
         claim_ttl_s: float = 300.0,
         drain_timeout_s: float = 600.0,
-        heartbeat_every_s: float | None = None,
         claim_backend: ClaimBackend = DEFAULT_BACKEND,
-        merge_lock_ttl_s: float | None = None,
         evolve_schema: bool = False,
-        merge_mode: str = "cow",
-        compact_deltas: int = 8,
-        view_state_dir: str | None = None,
-        view_groups: int = 8,
-        view_value_col: str = "after_val",
-        view_minmax: bool = False,
-        maintain_every: int | None = None,
-        maintain_min_deltas: int = 4,
-        maintain_auto_rebucket: bool = False,
-        on_maintenance=None,
+        **mirror,
     ):
         """The reference's `connector.Start(ctx)` in one call
         (connector.go:57-142 sequencing; SURVEY §3.1-3.3):
 
+        0. check the inputs — transport, `table=`, the mirror options —
+           so a bad call fails before any statement reaches the server
         1. management DDL via `run_sql` — heartbeat, publication, replica
            identities, slot LAST-but-before-snapshot, so the slot pins WAL
            from before any snapshot row is read (O28 ordering)
         2. record the snapshot LSN (`pg_current_wal_lsn`) with the slot in
            place — the handoff watermark
-        3. `initial` / `snapshot_only`: seed each captured table into the
+        3. `initial` / `snapshot_only`: seed the mirrored table into the
            bucketed mirror as op='R' rows at the snapshot LSN through the
            cooperative chunk queue (`_cooperative_seed`):
            `chunk_reader(tcfg, chunk) -> DataFrame` with (pk, *value
@@ -551,7 +519,8 @@ class CdcEngine:
            queue so every chunk reprocesses (config.go:328).
         4. `snapshot_only`: done. `initial`/`never`: start the changelog
            stream from `wal_dir`, dropping events at or below the snapshot
-           LSN (O28 — no gap, no duplicate) and merging into the mirror.
+           LSN (O28 — no gap, no duplicate) and merging into the mirror
+           through one `mirror_sink` call.
 
         The transport runs separately (`slot_keeper` / `replicate` fill
         `wal_dir` with segments); this sequences control plane + data
@@ -576,7 +545,9 @@ class CdcEngine:
         All but the first need `table` (qualified name) and run the FULL
         reference lifecycle on the real transport: snapshot seeds typed
         rows, post-handoff envelope events are typed and merged with
-        per-column TOAST repair.
+        per-column TOAST repair. The mirror holds that one table, so the
+        seed covers only `table` (within `config.snapshot_tables` when
+        set); "flat" seeds every snapshot table into the mirror.
 
         `chunk_planner` (tcfg -> chunk dicts, e.g.
         `chunk_queue.manifest_from_plan(plan_auto(...))`) splits each
@@ -586,24 +557,20 @@ class CdcEngine:
         state_dir (O23 at the reference's worker-queue granularity): N
         apps started against the same state_dir split the chunks, and a
         peer waits for a chunk another app holds. The first app
-        publishes the snapshot LSN; every app adopts it. `claim_ttl_s` /
-        `drain_timeout_s` / `heartbeat_every_s` tune the queue: a chunk
-        claim goes stale (reclaimable by a peer) after `claim_ttl_s`
-        without a heartbeat; a background heartbeat refreshes every
-        `heartbeat_every_s` while a chunk processes (default
-        claim_ttl_s/4, so a long chunk read is never reclaimed
-        mid-processing); `drain_timeout_s` bounds IDLE time — no chunk
-        completing anywhere — not total drain wall-clock. `claim_backend`
-        selects the atomic-marker medium of the queue and the mirror
-        (`snapshot.claim_backend.ClaimBackend`): default POSIX hard-link
-        claims for filesystem/NFS state dirs; pass an
-        `ObjectStoreBackend` when state_dir is S3/GCS, where claims ride
-        conditional PUTs (If-None-Match / If-Match) instead of links.
-        `merge_lock_ttl_s` tunes the cross-process mirror merge lock's
-        staleness window for the seed: a SIGKILLed peer that
-        died holding the lock is taken over after this long (default the
-        merge lock's own 300s; size it to a few times the longest single
-        chunk merge, like claim_ttl_s for claims).
+        publishes the snapshot LSN; every app adopts it. A chunk claim
+        goes stale (reclaimable by a peer) after `claim_ttl_s` without a
+        heartbeat, and a background heartbeat refreshes it every
+        claim_ttl_s/4 while the chunk processes, so a long chunk read
+        is never reclaimed mid-processing. The seed's mirror merge lock
+        goes stale after the same `claim_ttl_s`: a peer that died
+        holding it is taken over then. `drain_timeout_s` bounds IDLE
+        time — no chunk completing anywhere — not total drain
+        wall-clock. `claim_backend` selects the atomic-marker medium of
+        the queue and the mirror (`snapshot.claim_backend.ClaimBackend`):
+        default POSIX hard-link claims for filesystem/NFS state dirs;
+        pass an `ObjectStoreBackend` when state_dir is S3/GCS, where
+        claims ride conditional PUTs (If-None-Match / If-Match) instead
+        of links.
 
         `evolve_schema=True` (envelope transport only) lets the typed
         mirror follow mid-stream DDL: the pump persists every pgoutput
@@ -616,44 +583,38 @@ class CdcEngine:
         DEFAULT backfills, so NULL is the honest CDC answer until the row
         is next written.
 
-        `merge_mode="delta"` applies the mirror's merge-on-read arm to
-        the STREAM's micro-batch merges (write ∝ batch instead of
-        touched-bucket state; per-bucket compaction at `compact_deltas`
-        pending files — see merge_mirror_batch). The snapshot seed is
-        always a full base write regardless: it IS the base the deltas
-        fold over.
+        Every other keyword is a mirror option (`n_buckets`,
+        `keep_epochs`, `merge_mode`, `compact_deltas`, `view_*`,
+        `maintain_*`, `on_maintenance`) and goes to
+        `streaming.changelog_stream.mirror_sink` unchanged — see it for
+        their meaning. The seed writes the mirror with the same
+        `n_buckets` and `keep_epochs`."""
+        from pyspark.sql import functions as F
 
-        `view_state_dir` co-maintains an incremental aggregate view
-        (per-group live-key count / exact sum, optionally min/max with
-        `view_minmax=True`) alongside the mirror from the same
-        micro-batches (`streaming.agg_view_stream`): the mirror supplies
-        before images (no REPLICA IDENTITY FULL needed), the seeded
-        mirror initializes view version 0, and min/max dirty-repair
-        reads the post-merge mirror. `view_value_col` picks the numeric
-        value column the view aggregates.
-
-        `maintain_every=N` (opt-in) runs the mirror maintenance policy
-        every N micro-batches: compact delta debt past
-        `maintain_min_deltas`, surface (or with
-        `maintain_auto_rebucket=True`, execute) a rebucket
-        recommendation; the report goes to `on_maintenance` (wire
-        `observability.CdcMetricsListener.record_mirror` for /status).
-        See `streaming.changelog_stream.run_mirror_maintenance`."""
         from .sources.slot_keeper import lsn_to_int
 
+        if transport not in _TRANSPORTS:
+            raise ValueError(f"unknown transport {transport!r}")
+        if transport != "flat" and table is None:
+            raise ValueError(f"transport={transport!r} requires table=")
+        if evolve_schema and transport != "envelope":
+            # the text-plugin transports carry no Relation messages, so
+            # there is no typed schema authority to evolve from
+            raise ValueError(
+                "evolve_schema=True requires transport='envelope' (the "
+                "pgoutput Relation sidecar is the schema authority)"
+            )
         seeding = self.config.snapshot_mode in ("initial", "snapshot_only")
         if seeding and chunk_reader is None:
             raise ValueError(
                 f"snapshot_mode={self.config.snapshot_mode!r} needs a chunk_reader"
             )
-        if evolve_schema and transport != "envelope":
-            # fail BEFORE any snapshot work: the text-plugin transports
-            # carry no Relation messages, so there is no typed schema
-            # authority to evolve from
-            raise ValueError(
-                "evolve_schema=True requires transport='envelope' (the "
-                "pgoutput Relation sidecar is the schema authority)"
-            )
+        # an unknown mirror option, or one start() sets itself, raises
+        # TypeError here
+        inspect.signature(mirror_sink).bind(
+            None, state_dir, checkpoint_dir,
+            **dict.fromkeys(_OWN_SINK_ARGS), **mirror,
+        )
         value_cols = tuple(f.name for f in self._ddl_struct(value_schema).fields)
         for stmt in self.setup_sql():
             run_sql(stmt)
@@ -667,103 +628,40 @@ class CdcEngine:
                 state_dir,
                 snapshot_lsn,
                 value_cols,
-                mirror_buckets,
-                keep_epochs,
+                table,
+                mirror.get("n_buckets"),
+                mirror.get("keep_epochs"),
                 claim_ttl_s=claim_ttl_s,
                 drain_timeout_s=drain_timeout_s,
-                heartbeat_every_s=heartbeat_every_s,
                 claim_backend=claim_backend,
-                merge_lock_ttl_s=merge_lock_ttl_s,
             )
             if self.config.snapshot_mode == "snapshot_only":
                 return snapshot_lsn, None
-        return self._start_stream(
-            wal_dir, state_dir, checkpoint_dir, snapshot_lsn, mirror_buckets,
-            value_schema, value_cols, transport, table, keep_epochs,
-            evolve_schema, backend=claim_backend, merge_mode=merge_mode,
-            compact_deltas=compact_deltas,
-            view_state_dir=view_state_dir, view_groups=view_groups,
-            view_value_col=view_value_col, view_minmax=view_minmax,
-            maintain_every=maintain_every,
-            maintain_min_deltas=maintain_min_deltas,
-            maintain_auto_rebucket=maintain_auto_rebucket,
-            on_maintenance=on_maintenance,
+        stream_df, to_flat, dropped_now = self._change_stream(
+            wal_dir, transport, table, value_schema, evolve_schema
+        )
+        return snapshot_lsn, mirror_sink(
+            stream_df,
+            state_dir,
+            checkpoint_dir,
+            # evolving: inferred per batch from the typed columns
+            value_cols=None if evolve_schema else value_cols,
+            transform=lambda batch_df: to_flat(batch_df).filter(
+                F.col("lsn") > snapshot_lsn
+            ),
+            evolve_schema=evolve_schema,
+            backend=claim_backend,
+            dropped_cols=dropped_now,
+            **mirror,
         )
 
-    def _start_stream(
-        self,
-        wal_dir,
-        state_dir,
-        checkpoint_dir,
-        snapshot_lsn,
-        mirror_buckets,
-        value_schema,
-        value_cols,
-        transport,
-        table,
-        keep_epochs,
-        evolve_schema=False,
-        backend: ClaimBackend = DEFAULT_BACKEND,
-        merge_mode="cow",
-        compact_deltas=8,
-        view_state_dir=None,
-        view_groups=8,
-        view_value_col="after_val",
-        view_minmax=False,
-        maintain_every=None,
-        maintain_min_deltas=4,
-        maintain_auto_rebucket=False,
-        on_maintenance=None,
-    ):
-        """Post-seed data plane: the changelog stream from `wal_dir`,
-        turned into flat change rows per micro-batch (`to_flat`), filtered
-        to post-handoff events, merging into the mirror."""
-        from pyspark.sql import functions as F
-
-        from .streaming.changelog_stream import read_mirror
-
-        view_kwargs = {}
-        if view_state_dir is not None:
-            from .streaming.agg_view_stream import (
-                latest_version,
-                seed_agg_view_from_state,
-            )
-
-            if latest_version(view_state_dir, backend=backend) is None:
-                # version 0 = the seeded mirror's state: without this,
-                # the first stream update of a snapshot-seeded key would
-                # retract value the view never credited. Idempotent
-                # (recomputes version 0); an empty mirror seeds an empty
-                # view, pinning the minmax-tracking mode either way.
-                seed_agg_view_from_state(
-                    read_mirror(self.spark, state_dir, backend),
-                    view_state_dir,
-                    n_groups=view_groups,
-                    value_col=view_value_col,
-                    track_minmax=view_minmax,
-                    backend=backend,
-                )
-            view_kwargs = {
-                "view_state_dir": view_state_dir,
-                "view_groups": view_groups,
-                "view_value_col": view_value_col,
-                "view_minmax": view_minmax,
-            }
-        if maintain_every:
-            view_kwargs.update(
-                maintain_every=maintain_every,
-                maintain_min_deltas=maintain_min_deltas,
-                maintain_auto_rebucket=maintain_auto_rebucket,
-                on_maintenance=on_maintenance,
-            )
-
-        if transport not in ("flat", "envelope", "wal2json", "test_decoding"):
-            raise ValueError(f"unknown transport {transport!r}")
-        if transport != "flat" and table is None:
-            raise ValueError(f"transport={transport!r} requires table=")
-        dropped_now = None
+    def _change_stream(self, wal_dir, transport, table, value_schema, evolve_schema):
+        """`start`'s data-plane input for one transport: (the change
+        stream from `wal_dir`, the per-micro-batch function turning its
+        rows into flat typed change rows, the per-batch dropped-column
+        callable or None)."""
         if transport == "flat":
-            stream_df = changelog_stream(
+            stream_df = file_change_stream(
                 self.spark,
                 wal_dir,
                 schema=self._ddl_struct(
@@ -771,11 +669,9 @@ class CdcEngine:
                     f"pk bigint, {value_schema}"
                 ),
             )
+            return stream_df, lambda batch_df: batch_df, None
 
-            def to_flat(batch_df):
-                return batch_df
-
-        elif transport == "test_decoding":
+        if transport == "test_decoding":
             # The text grammar's commit-ts stamp is a per-xid aggregate +
             # join — not expressible incrementally on an unbounded stream.
             # Stream the RAW segments and run decode + typing per
@@ -801,56 +697,38 @@ class CdcEngine:
                 env = decode_test_decoding(batch_df)
                 return self._typed_flat(env, table, value_schema, "pk")[0]
 
-        else:
-            stream_df = (
-                self.envelope_changes(wal_dir)
-                if transport == "envelope"
-                else self.raw_changes(wal_dir, plugin="wal2json")
-            )
-            if evolve_schema:
-                # one sidecar interpretation per micro-batch, shared by
-                # the typing AND the sink's drop list (calling
-                # _evolved_value_schema twice doubles the sidecar read +
-                # schema parse on the hot streaming path); re-read EVERY
-                # batch because mid-stream DDL (ADD/ALTER TYPE/DROP)
-                # changes the answer between batches
-                batch_schema = {"dropped": ()}
+            return stream_df, to_flat, None
 
-                def to_flat(batch_df):
-                    vschema, dropped = self._evolved_value_schema(
-                        wal_dir, table, value_schema
-                    )
-                    batch_schema["dropped"] = dropped
-                    return self._typed_flat(batch_df, table, vschema, "pk")[0]
-
-                def dropped_now() -> tuple[str, ...]:
-                    # the sink calls this after transform ran for the
-                    # same batch — consumes its cached answer
-                    return batch_schema["dropped"]
-
-            else:
-
-                def to_flat(batch_df):
-                    return self._typed_flat(batch_df, table, value_schema, "pk")[0]
-
-        return snapshot_lsn, mirror_sink(
-            stream_df,
-            state_dir,
-            checkpoint_dir,
-            n_buckets=mirror_buckets,
-            # evolving: inferred per batch from the typed columns
-            value_cols=None if evolve_schema else value_cols,
-            keep_epochs=keep_epochs,
-            transform=lambda batch_df: to_flat(batch_df).filter(
-                F.col("lsn") > snapshot_lsn
-            ),
-            evolve_schema=evolve_schema,
-            backend=backend,
-            dropped_cols=dropped_now,
-            merge_mode=merge_mode,
-            compact_deltas=compact_deltas,
-            **view_kwargs,
+        stream_df = (
+            self.envelope_changes(wal_dir)
+            if transport == "envelope"
+            else self.raw_changes(wal_dir, plugin="wal2json")
         )
+        if not evolve_schema:
+
+            def to_flat(batch_df):
+                return self._typed_flat(batch_df, table, value_schema, "pk")[0]
+
+            return stream_df, to_flat, None
+
+        # one sidecar interpretation per micro-batch, shared by the typing
+        # AND the sink's drop list (calling _evolved_value_schema twice
+        # doubles the sidecar read + schema parse on the hot streaming
+        # path); re-read EVERY batch because mid-stream DDL (ADD/ALTER
+        # TYPE/DROP) changes the answer between batches
+        batch_schema = {"dropped": ()}
+
+        def to_flat(batch_df):
+            vschema, dropped = self._evolved_value_schema(wal_dir, table, value_schema)
+            batch_schema["dropped"] = dropped
+            return self._typed_flat(batch_df, table, vschema, "pk")[0]
+
+        def dropped_now() -> tuple[str, ...]:
+            # the sink calls this after transform ran for the same batch —
+            # consumes its cached answer
+            return batch_schema["dropped"]
+
+        return stream_df, to_flat, dropped_now
 
     def _cooperative_seed(
         self,
@@ -859,16 +737,15 @@ class CdcEngine:
         state_dir,
         snapshot_lsn,
         value_cols,
-        mirror_buckets,
+        table,
+        n_buckets,
         keep_epochs,
-        claim_ttl_s: float = 300.0,
-        drain_timeout_s: float = 600.0,
-        heartbeat_every_s: float | None = None,
-        claim_backend: ClaimBackend = DEFAULT_BACKEND,
-        merge_lock_ttl_s: float | None = None,
+        claim_ttl_s: float,
+        drain_timeout_s: float,
+        claim_backend: ClaimBackend,
     ) -> int:
         """Per-chunk cooperative snapshot seed (O23 at the reference's
-        granularity, worker.go:421-484): each captured table's chunk plan
+        granularity, worker.go:421-484): each seeded table's chunk plan
         is published first-writer-wins to a shared claim queue under
         `state_dir`; every cooperating app drains it — claim, read the
         chunk (`chunk_reader(tcfg, chunk) -> DataFrame` of (pk, *values)),
@@ -885,6 +762,11 @@ class CdcEngine:
         and a later table's (review r7: anchoring at the LAST table's
         LSN silently lost the window in between).
 
+        The seeded tables are `config.snapshot_tables` (default: every
+        configured table), narrowed to `table` when the mirror holds one
+        table: any other table's rows (the heartbeat table's among them)
+        do not belong in it.
+
         A state_dir seeded by the retired whole-table job claim holds a
         `_snapshot_done` marker and no chunk queue. Re-seeding it at a
         fresh LSN would keep rows deleted since the old seed, so that
@@ -894,16 +776,13 @@ class CdcEngine:
         from .snapshot import chunk_queue as cq
         from .streaming.changelog_stream import merge_mirror_batch
 
-        if heartbeat_every_s is None:
-            # default: beat well inside the claim TTL so a chunk whose
-            # read outlasts claim_ttl_s is never reclaimed by a live peer
-            # mid-processing (r7 advisor: no heartbeat meant duplicate
-            # merges for any chunk slower than the TTL)
-            heartbeat_every_s = claim_ttl_s / 4
         wanted = set(
             self.config.snapshot_tables
             or [t.qualified for t in self.config.tables]
         )
+        if table is not None:
+            sch, _, tbl = table.rpartition(".")
+            wanted &= {f"{sch or 'public'}.{tbl}"}
         published: list[int] = []
         for tcfg in self.config.tables:
             if tcfg.qualified not in wanted:
@@ -948,21 +827,19 @@ class CdcEngine:
                     F.lit("R").alias("op"),
                     *value_cols,
                 )
-                lock_kw = (
-                    {} if merge_lock_ttl_s is None
-                    else {"lock_ttl_s": merge_lock_ttl_s}
-                )
                 merge_mirror_batch(
                     rows,
                     state_dir,
-                    n_buckets=mirror_buckets,
+                    n_buckets=n_buckets,
                     value_cols=value_cols,
                     # the seed merge is often the mirror's FIRST write —
                     # it must pin the caller's retention, or
                     # snapshot_only mode silently keeps 1
                     keep_epochs=keep_epochs,
+                    # a peer that died holding the merge lock is taken
+                    # over after the same window as its chunk claims
+                    lock_ttl_s=claim_ttl_s,
                     backend=claim_backend,
-                    **lock_kw,
                 )
                 # rows_processed=0: an exact count would cost one extra
                 # Spark job per chunk; queue progress tracks chunks, and
@@ -974,7 +851,11 @@ class CdcEngine:
                 process,
                 claim_ttl_s=claim_ttl_s,
                 timeout_s=drain_timeout_s,
-                heartbeat_every_s=heartbeat_every_s,
+                # beat well inside the claim TTL so a chunk whose read
+                # outlasts claim_ttl_s is never reclaimed by a live peer
+                # mid-processing (r7 advisor: no heartbeat meant duplicate
+                # merges for any chunk slower than the TTL)
+                heartbeat_every_s=claim_ttl_s / 4,
                 backend=claim_backend,
             )
         return min(published) if published else snapshot_lsn

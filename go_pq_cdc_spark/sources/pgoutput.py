@@ -494,16 +494,6 @@ class PgOutputDecoder:
 _OPS = {Insert: "I", Update: "U", Delete: "D"}
 
 
-def relation_table_struct(rel: Relation):
-    """Typed Spark schema for a live Relation message — OID -> catalog name
-    -> Spark type. Feed the result to `envelope.typed_projection` for the
-    socket path's per-table typed columns (the reference's analogue is the
-    Relation-driven pgtype decode, `pq/message/format/relation.go:68-87`)."""
-    from ..envelope import table_struct
-
-    return table_struct([(col.name, pg_type_name(col.type_oid)) for col in rel.columns])
-
-
 def frames_to_committed_txns(frames, on_relation=None):
     """XLogData frames -> (commit_end_lsn, rows) per COMMITTED
     transaction, in commit order — THE single socket-transport decode

@@ -101,10 +101,6 @@ def replica_identity_sql(table: TableConfig) -> str:
     return f"ALTER TABLE {table.qualified} REPLICA IDENTITY {ri}"
 
 
-# relreplident codes -> config spelling (replica_identity.go:25-30)
-REPLICA_IDENTITY_CODES = {"d": "DEFAULT", "f": "FULL", "n": "NOTHING", "i": "INDEX"}
-
-
 def replica_identity_state_sql(tables: list[TableConfig]) -> str:
     """Current-identity catalog probe (`replica_identity.go:101-127`
     GetReplicaIdentities): relreplident per table plus the replica-identity
@@ -119,30 +115,6 @@ def replica_identity_state_sql(tables: list[TableConfig]) -> str:
         "LEFT JOIN pg_class idx ON idx.oid = i.indexrelid "
         f"WHERE concat(n.nspname, '.', c.relname) IN ({names})"
     )
-
-
-def replica_identity_diff(
-    configured: list[TableConfig],
-    current: dict[str, tuple[str, str | None]],
-) -> list[TableConfig]:
-    """Reconciliation diff (`publication/table.go:115-130` Tables.Diff +
-    replica_identity.go:33-58 SetReplicaIdentities): of the configured
-    tables, return those whose live (identity, index) state — as decoded
-    from `replica_identity_state_sql` via REPLICA_IDENTITY_CODES — differs
-    and therefore needs an ALTER. Unknown tables are included (they error
-    server-side, matching ErrorTablesNotExists visibility)."""
-    out = []
-    for t in configured:
-        live = current.get(t.qualified)
-        want = (t.replica_identity, t.replica_identity_index or None)
-        if live is None:
-            out.append(t)
-            continue
-        ident, index = live
-        ident = REPLICA_IDENTITY_CODES.get(ident, ident)
-        if (ident, index or None) != want:
-            out.append(t)
-    return out
 
 
 # --- O27: heartbeat (pq/heartbeat/heartbeat.go) ----------------------------
@@ -165,15 +137,6 @@ def heartbeat_tick_sql(cfg: EngineConfig) -> str:
 
 
 # --- O9-O16: chunked snapshot over JDBC ------------------------------------
-
-
-def snapshot_export_sql() -> list[str]:
-    """Coordinator: hold a REPEATABLE READ txn open and export its snapshot
-    (`pq/snapshot/coordinator.go:105-180`)."""
-    return [
-        "BEGIN TRANSACTION ISOLATION LEVEL REPEATABLE READ",
-        "SELECT pg_export_snapshot()",
-    ]
 
 
 def chunk_query(
@@ -277,19 +240,6 @@ def snapshot_pin_probe_options(
         "upperBound": str(n_partitions),
         "numPartitions": str(n_partitions),
     }
-
-
-def snapshot_predicates(plan: SnapshotPlan) -> list[str]:
-    """Predicate-per-partition form (``spark.read.jdbc(..., predicates=)``)
-    for ctid-strategy chunks, which are plain WHERE ranges. OFFSET-strategy
-    chunks are NOT predicates (LIMIT/OFFSET can't live in a WHERE clause) —
-    use `snapshot_offset_dbtables` for those."""
-    if plan.strategy is Strategy.OFFSET:
-        raise ValueError(
-            "offset chunks are LIMIT/OFFSET subqueries, not WHERE predicates; "
-            "use snapshot_offset_dbtables()"
-        )
-    return plan.predicates
 
 
 def snapshot_offset_dbtables(

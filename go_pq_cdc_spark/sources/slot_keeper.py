@@ -205,14 +205,6 @@ def read_relation_sidecar(wal_dir: str, table: str) -> dict | None:
     return doc
 
 
-def read_relation_schema(wal_dir: str, table: str) -> list[tuple[str, str]] | None:
-    """Latest persisted column list [(name, pg_type), ...] for a
-    qualified table, or None when the pump has not yet seen a Relation
-    message for it."""
-    doc = read_relation_sidecar(wal_dir, table)
-    return None if doc is None else [(c, t) for c, t in doc["columns"]]
-
-
 def pump_frames(
     frames,
     wal_dir: str,

@@ -150,7 +150,7 @@ def decode_test_decoding(
     watermarked stream-stream machinery), so a streaming `raw` gets
     commit_ts = NULL here; the engine's mirror path instead streams RAW
     segments and runs this decode per micro-batch inside the sink
-    (`engine._start_stream` transport="test_decoding"). The keeper cuts
+    (`CdcEngine.start(transport="test_decoding")`). The keeper cuts
     raw segments at COMMIT boundaries (SlotKeeper.poll_once, r9 — the
     pgoutput pump's whole-transaction contract on the poll arm), so every
     transaction's COMMIT lands in the same micro-batch as its rows and

@@ -92,40 +92,3 @@ def wal2json_rejects(raw: DataFrame, data_col: str = "data") -> DataFrame:
         ~F.col("j.action").isin(*_WAL2JSON_ACTIONS)
     )
     return parsed.filter(bad).drop("j")
-
-
-def route_tables(
-    envelope: DataFrame,
-    tables: list[str] | None = None,
-    *,
-    discover: bool = False,
-) -> dict[str, DataFrame]:
-    """O17 table routing for batch use: split one envelope stream into
-    per-table DataFrames (streaming side uses partitioned foreachBatch —
-    see `streaming.changelog_stream.multi_mirror_sink`).
-
-    Config-first (r7 verdict item 5): pass `tables` — the publication's
-    table list, which the engine always knows from config — and the
-    routing is pure plan metadata, ZERO Spark jobs. The
-    `distinct().collect()` discovery scan is an explicit opt-in
-    (`discover=True`) for ad-hoc exploration only: at scale it is a full
-    pass over the envelope just to learn names the config already holds,
-    and omitting `tables` by accident should fail loudly, not silently
-    launch it."""
-    if tables is None:
-        if not discover:
-            raise ValueError(
-                "route_tables needs the publication's table list (from "
-                "config, e.g. [t.qualified for t in config.tables]); pass "
-                "discover=True to explicitly opt into a full discovery "
-                "scan of the envelope"
-            )
-        tables = [
-            r["t"]
-            for r in envelope.select(
-                F.concat_ws(".", "schema", "table").alias("t")
-            ).distinct().collect()
-        ]
-    return {
-        t: envelope.filter(F.concat_ws(".", "schema", "table") == t) for t in tables
-    }

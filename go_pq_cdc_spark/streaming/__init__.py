@@ -1,5 +1,5 @@
 from .changelog_stream import (  # noqa: F401
-    changelog_stream,
+    file_change_stream,
     lookup_mirror,
     merge_mirror_batch,
     mirror_sink,

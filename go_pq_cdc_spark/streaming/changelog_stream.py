@@ -74,7 +74,7 @@ FLAT_CHANGE_SCHEMA = T.StructType(
 )
 
 
-def changelog_stream(
+def file_change_stream(
     spark: SparkSession, path: str, schema: T.StructType = FLAT_CHANGE_SCHEMA
 ) -> DataFrame:
     """File-transport change stream; one file = one WAL segment's worth of
@@ -1382,12 +1382,15 @@ def mirror_sink(
     unreferenced orphan dirs, which the next GC removes.
 
     `view_state_dir` co-maintains an incremental aggregate view
-    (`streaming.agg_view_stream`) from the SAME micro-batches: before
-    images come from the mirror (bucket-pruned `mirror_befores_for`,
-    read BEFORE the merge; staged deltas make checkpoint replay safe —
-    see `update_agg_view_from_log`), and with `view_minmax=True` the
-    min/max dirty-repair reads the post-merge mirror — the authoritative
-    source the same batch just finished writing. View versions are keyed
+    (`streaming.agg_view_stream`) from the SAME micro-batches. A view
+    with no committed version starts as version 0 = the mirror's state
+    when the sink starts, so a snapshot seed's rows count before the
+    first batch. Before images come from the mirror (bucket-pruned
+    `mirror_befores_for`, read BEFORE the merge; staged deltas make
+    checkpoint replay safe — see `update_agg_view_from_log`), and with
+    `view_minmax=True` the min/max dirty-repair reads the post-merge
+    mirror — the authoritative source the same batch just finished
+    writing. View versions are keyed
     by Spark's foreachBatch id (its own namespace; the mirror-epoch
     collision caveat above concerns mirror epochs only) — which couples
     the view state dir's lifetime to the STREAMING CHECKPOINT's: deleting
@@ -1422,6 +1425,22 @@ def mirror_sink(
     stats dict — plus `rebucket_recommended` — goes to `on_maintenance`
     (wire `observability.CdcMetricsListener.record_mirror` to see it in
     /status)."""
+    if view_state_dir is not None:
+        from .agg_view_stream import latest_version, seed_agg_view_from_state
+
+        if latest_version(view_state_dir, backend=backend) is None:
+            # without version 0, the first stream update of a key already
+            # in the mirror would retract value the view never credited.
+            # Idempotent (recomputes version 0); an empty mirror seeds an
+            # empty view, pinning the minmax-tracking mode either way.
+            seed_agg_view_from_state(
+                read_mirror(stream_df.sparkSession, state_dir, backend),
+                view_state_dir,
+                n_groups=view_groups,
+                value_col=view_value_col,
+                track_minmax=view_minmax,
+                backend=backend,
+            )
     batch_counter = {"n": 0}
 
     def apply(batch_df: DataFrame, _spark_epoch: int) -> None:
@@ -1434,9 +1453,8 @@ def mirror_sink(
                 stage_view_deltas,
             )
 
-            # view version = spark batch id + 1: version 0 is reserved
-            # for the engine's snapshot-seed initialization
-            # (seed_agg_view_from_state)
+            # view version = spark batch id + 1: version 0 is the
+            # mirror-state initialization above
             # thunk, not value: on a checkpoint replay the staged delta
             # dir already exists and stage_view_deltas short-circuits —
             # the manifest read + touched-bucket collect inside

@@ -310,7 +310,7 @@ def test_mirror_sink_co_maintains_view_without_before_images(spark, tmp_path):
 
     from go_pq_cdc_spark.streaming.changelog_stream import (
         FLAT_CHANGE_SCHEMA,
-        changelog_stream,
+        file_change_stream,
         mirror_sink,
         read_mirror,
     )
@@ -339,7 +339,7 @@ def test_mirror_sink_co_maintains_view_without_before_images(spark, tmp_path):
 
     write_batch(0)
     q = mirror_sink(
-        changelog_stream(spark, in_dir + "/*"),
+        file_change_stream(spark, in_dir + "/*"),
         state,
         str(tmp_path / "ckpt"),
         view_state_dir=view,

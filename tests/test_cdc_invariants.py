@@ -70,6 +70,9 @@ def test_planner_chunks_cover_and_partition():
     # 100 rows/block -> 80 blocks/chunk -> 13 chunks, last unbounded
     assert ctid.chunks[-1].block_end is None
     assert ctid.chunks[0].where.startswith("ctid >= '(0,0)'")
+    # the per-partition JDBC predicates; the unbounded tail has no upper edge
+    assert ctid.predicates[0] == "ctid >= '(0,0)'::tid AND ctid < '(80,0)'::tid"
+    assert ctid.predicates[-1] == "ctid >= '(960,0)'::tid"
     for a, b in zip(ctid.chunks, ctid.chunks[1:]):
         assert b.block_start == a.block_end
 

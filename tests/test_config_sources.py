@@ -8,7 +8,7 @@ from pyspark.sql import Row
 
 from go_pq_cdc_spark.config import ConfigError, EngineConfig, TableConfig
 from go_pq_cdc_spark.operators.multimodal import extract_features, media_dedup
-from go_pq_cdc_spark.snapshot import plan_ctid_blocks, plan_integer_range
+from go_pq_cdc_spark.snapshot import plan_integer_range
 from go_pq_cdc_spark.sources import postgres as PG
 
 
@@ -147,28 +147,6 @@ class TestReplicaIdentity:
         assert "i.indisreplident" in sql
         assert "IN ('public.users', 'public.orders')" in sql
 
-    def test_reconciliation_diff(self):
-        """Mirror of Tables.Diff (table.go:115-130): only tables whose live
-        (identity, index) differs from config need an ALTER."""
-        configured = [
-            TableConfig("a", replica_identity="FULL"),
-            TableConfig("b", replica_identity="INDEX", replica_identity_index="b_ux"),
-            TableConfig("c"),  # DEFAULT
-            TableConfig("d", replica_identity="INDEX", replica_identity_index="d_new"),
-            TableConfig("e", replica_identity="NOTHING"),
-        ]
-        live = {
-            "public.a": ("f", None),  # already FULL -> skip
-            "public.b": ("i", "b_ux"),  # already on the right index -> skip
-            "public.c": ("f", None),  # FULL but config wants DEFAULT -> alter
-            "public.d": ("i", "d_old"),  # wrong index -> alter
-            # public.e missing from catalog -> surfaced for server-side error
-        }
-        diff = PG.replica_identity_diff(configured, live)
-        assert [t.qualified for t in diff] == ["public.c", "public.d", "public.e"]
-        stmts = [PG.replica_identity_sql(t) for t in diff]
-        assert stmts[1] == "ALTER TABLE public.d REPLICA IDENTITY USING INDEX d_new"
-
 
 class TestPostgresSQL:
     def test_publication_sql(self):
@@ -220,12 +198,6 @@ class TestPostgresSQL:
         assert opts["partitionColumn"] == "id"
         assert opts["numPartitions"] == "10"
         assert "SET TRANSACTION SNAPSHOT 'SNAP-1'" in opts["sessionInitStatement"]
-
-    def test_ctid_predicates(self):
-        plan = plan_ctid_blocks(relpages=100, reltuples=10_000.0, chunk_size=8000)
-        preds = PG.snapshot_predicates(plan)
-        assert preds[0].startswith("ctid >= '(0,0)'::tid AND ctid < '(80,0)'")
-        assert preds[-1] == "ctid >= '(80,0)'::tid"  # unbounded tail chunk
 
     def test_poll_changes_sql(self):
         """wal2json polling must PEEK (non-consuming) with wal2json options
@@ -320,8 +292,6 @@ def test_snapshot_offset_dbtables():
         "ORDER BY ctid LIMIT 8000 OFFSET 0) AS chunk_0"
     )
     assert subqs[-1].endswith("OFFSET 16000) AS chunk_2")
-    with pytest.raises(ValueError, match="not WHERE predicates"):
-        PG.snapshot_predicates(plan)
 
 
 def test_example_configs_all_load_and_validate():

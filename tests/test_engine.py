@@ -537,12 +537,11 @@ def test_typed_mirror_from_wal2json_envelope(spark, tmp_path):
         pa.Table.from_pandas(pdf, preserve_index=False),
         segment_path(str(wal_dir), 10, 30),
     )
-    q = eng.typed_mirror(
+    q = eng.typed_multi_mirror(
         eng.raw_changes(str(wal_dir), plugin="wal2json"),
         str(tmp_path / "state"),
         str(tmp_path / "ck"),
-        table="public.users",
-        value_schema="name string, qty bigint",
+        tables={"public.users": "name string, qty bigint"},
     )
     try:
         q.processAllAvailable()
@@ -550,7 +549,7 @@ def test_typed_mirror_from_wal2json_envelope(spark, tmp_path):
         q.stop()
     state = {
         r["pk"]: (r["name"], r["qty"])
-        for r in read_mirror(spark, str(tmp_path / "state")).collect()
+        for r in read_mirror(spark, str(tmp_path / "state" / "public__users")).collect()
     }
     assert state == {1: ("alpha2", 5)}
 
@@ -1004,3 +1003,68 @@ def test_cooperative_seed_resumes_partial_queue(spark, tmp_path):
     assert sorted(reads) == [1, 3]  # ONLY the remaining chunks
     state = {r["pk"] for r in read_mirror(spark, state_dir).collect()}
     assert state == set(range(11, 21)) | set(range(31, 41))
+
+
+def test_start_checks_inputs_before_any_ddl(spark, tmp_path):
+    """A bad transport, a typed transport without `table=`, and an
+    unknown or clashing mirror option all raise before the first
+    statement reaches the server."""
+    import pytest
+
+    from go_pq_cdc_spark.snapshot.claim_backend import DEFAULT_BACKEND
+
+    eng = _engine(spark)
+    executed: list[str] = []
+
+    def run_sql(sql):
+        executed.append(sql)
+        return [("0/14",)] if "pg_current_wal_lsn" in sql else []
+
+    def reader(_t, _c):
+        raise AssertionError("a rejected start() must not seed")
+
+    args = (run_sql, str(tmp_path / "wal"), str(tmp_path / "state"),
+            str(tmp_path / "ckpt"))
+    bad = [
+        (ValueError, "unknown transport", {"transport": "kafka"}),
+        (ValueError, "requires table=", {"transport": "envelope"}),
+        (TypeError, "mirror_buckets", {"mirror_buckets": 8}),
+        (TypeError, "backend", {"backend": DEFAULT_BACKEND}),
+        (TypeError, "value_cols", {"value_cols": ("after_val",)}),
+    ]
+    for exc, match, kw in bad:
+        with pytest.raises(exc, match=match):
+            eng.start(*args, chunk_reader=reader, **kw)
+        assert executed == [], kw
+    assert not (tmp_path / "state").exists()
+
+
+def test_start_seeds_only_the_mirrored_table(spark, tmp_path):
+    """A typed transport mirrors one table, so the seed reads only that
+    table — never the heartbeat table the config must also publish."""
+    from pyspark.sql import Row
+
+    from go_pq_cdc_spark.streaming import read_mirror
+
+    eng = _engine(spark)
+    eng.config.snapshot_mode = "snapshot_only"
+    assert eng.config.heartbeat_enabled and eng.config.snapshot_tables is None
+    reads: list[str] = []
+
+    def reader(t, _c):
+        reads.append(t.qualified)
+        return spark.createDataFrame([Row(pk=1, after_val=0.5)])
+
+    state_dir = str(tmp_path / "state")
+    lsn, q = eng.start(
+        lambda sql: [("0/A",)] if "pg_current_wal_lsn" in sql else [],
+        str(tmp_path / "wal"),
+        state_dir,
+        str(tmp_path / "ckpt"),
+        chunk_reader=reader,
+        transport="envelope",
+        table="public.users",
+    )
+    assert (lsn, q) == (10, None)
+    assert reads == ["public.users"]
+    assert {r["pk"]: r["after_val"] for r in read_mirror(spark, state_dir).collect()} == {1: 0.5}

@@ -117,7 +117,7 @@ def test_socket_typed_decode_arrays_numeric_jsonb(spark, ddb):
         PgOutputDecoder,
         XLogData,
         frames_to_envelope,
-        relation_table_struct,
+        pg_type_name,
     )
 
     from .test_pgoutput import insert_msg, relation_msg
@@ -148,7 +148,9 @@ def test_socket_typed_decode_arrays_numeric_jsonb(spark, ddb):
 
     dec = PgOutputDecoder()
     dec.decode(relation_msg(cols=cols))
-    schema = relation_table_struct(dec.relations[16384])
+    schema = table_struct(
+        [(c.name, pg_type_name(c.type_oid)) for c in dec.relations[16384].columns]
+    )
     assert schema["nums"].dataType == T.ArrayType(T.IntegerType())
     assert schema["bal"].dataType == T.DecimalType(38, 18)
     assert schema["doc"].dataType == T.StringType()

@@ -1646,8 +1646,7 @@ eng.start(
     run_sql, wal_dir, state_dir, ckpt,
     chunk_planner=chunk_planner, chunk_reader=chunk_reader,
     value_schema="val string",
-    claim_ttl_s=2.0, heartbeat_every_s=0.5, drain_timeout_s=120,
-    merge_lock_ttl_s=4.0,
+    claim_ttl_s=2.0, drain_timeout_s=120,
 )
 print("DONE", flush=True)
 '''
@@ -1765,8 +1764,7 @@ def test_live_cooperative_seed_chaos_soak(spark, tmp_path):
             run_sql, str(tmp_path / "walP"), state_dir, str(tmp_path / "ckptP"),
             chunk_planner=chunk_planner, chunk_reader=chunk_reader,
             value_schema="val string",
-            claim_ttl_s=2.0, heartbeat_every_s=0.5, drain_timeout_s=120,
-            merge_lock_ttl_s=4.0,
+            claim_ttl_s=2.0, drain_timeout_s=120,
         )
         assert stream is None
         w.wait(timeout=120)

@@ -28,9 +28,7 @@ def no_hadoop_fs(monkeypatch):
     def broken(*_a, **_kw):
         raise AssertionError("a mirror data dir went through Hadoop FS")
 
-    # by module path: the package re-exports a `changelog_stream`
-    # function that shadows the submodule's attribute name. raising=False:
-    # wherever a copy of the helpers lives, it is broken
+    # raising=False: wherever a copy of the helpers lives, it is broken
     for path in ("changelog_stream", "versioned_state"):
         mod = importlib.import_module(f"go_pq_cdc_spark.streaming.{path}")
         for name in ("_hadoop_fs", "_fs_list_names", "_fs_delete"):
@@ -75,3 +73,15 @@ def test_mirror_writes_and_stats_skip_hadoop_fs(spark, tmp_path, no_hadoop_fs):
         for b in os.listdir(os.path.join(eroot, e))
     }
     assert on_disk == set(m["buckets"].values())
+
+
+def test_changelog_stream_submodule_is_not_shadowed():
+    """The package re-exports no name that hides this submodule, so
+    importing it by path (and patching through that name) reaches the
+    module's own globals."""
+    import types
+
+    import go_pq_cdc_spark.streaming.changelog_stream as cs
+
+    assert isinstance(cs, types.ModuleType)
+    assert cs.merge_mirror_batch is merge_mirror_batch

@@ -471,7 +471,7 @@ def test_auto_maintenance_policy_compacts_and_recommends(spark, tmp_path):
 
     from go_pq_cdc_spark.observability import CdcMetricsListener
     from go_pq_cdc_spark.streaming.changelog_stream import (
-        changelog_stream,
+        file_change_stream,
         mirror_sink,
         mirror_stats,
     )
@@ -500,7 +500,7 @@ def test_auto_maintenance_policy_compacts_and_recommends(spark, tmp_path):
             os.path.join(in_dir, f"b{i}")
         )
 
-    stream = changelog_stream(spark, in_dir + "/*")
+    stream = file_change_stream(spark, in_dir + "/*")
     q = mirror_sink(
         stream,
         state,
@@ -544,7 +544,7 @@ def test_maintenance_failure_does_not_fail_the_batch(spark, tmp_path):
     failure (lock race, stats hiccup) must log and let the batch commit
     rather than forcing an idempotent replay of work already done."""
     from go_pq_cdc_spark.streaming.changelog_stream import (
-        changelog_stream,
+        file_change_stream,
         mirror_sink,
     )
 
@@ -564,7 +564,7 @@ def test_maintenance_failure_does_not_fail_the_batch(spark, tmp_path):
         )
 
     q = mirror_sink(
-        changelog_stream(spark, in_dir + "/*"),
+        file_change_stream(spark, in_dir + "/*"),
         state,
         str(tmp_path / "ckpt"),
         maintain_every=1,

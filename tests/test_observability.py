@@ -11,7 +11,7 @@ import tempfile
 from pyspark.sql import Row
 
 from go_pq_cdc_spark.observability import CdcMetricsListener
-from go_pq_cdc_spark.streaming.changelog_stream import FLAT_CHANGE_SCHEMA, changelog_stream
+from go_pq_cdc_spark.streaming.changelog_stream import FLAT_CHANGE_SCHEMA, file_change_stream
 
 
 def test_metrics_listener_and_op_counters(spark):
@@ -27,7 +27,7 @@ def test_metrics_listener_and_op_counters(spark):
         spark.createDataFrame(rows, FLAT_CHANGE_SCHEMA).coalesce(1).write.parquet(
             os.path.join(base, "in", "b0")
         )
-        stream = changelog_stream(spark, os.path.join(base, "in") + "/*")
+        stream = file_change_stream(spark, os.path.join(base, "in") + "/*")
         q = (
             stream.writeStream.outputMode("append")
             .option("checkpointLocation", os.path.join(base, "ck"))

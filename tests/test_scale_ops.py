@@ -20,7 +20,7 @@ from go_pq_cdc_spark.operators.scale import (
     spread_small_input,
     write_bucketed,
 )
-from go_pq_cdc_spark.streaming.changelog_stream import FLAT_CHANGE_SCHEMA, changelog_stream
+from go_pq_cdc_spark.streaming.changelog_stream import FLAT_CHANGE_SCHEMA, file_change_stream
 
 from .conftest import SF_DIR
 
@@ -96,7 +96,7 @@ def test_stream_dedup_absorbs_redelivery(spark):
         spark.createDataFrame([ev(i) for i in range(1, 6)], FLAT_CHANGE_SCHEMA).coalesce(
             1
         ).write.parquet(os.path.join(ind, "b0"))
-        stream = changelog_stream(spark, ind + "/*")
+        stream = file_change_stream(spark, ind + "/*")
         deduped = dedup_within_watermark(stream, ["lsn"])
         q = (
             deduped.writeStream.outputMode("append")

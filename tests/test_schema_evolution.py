@@ -239,25 +239,25 @@ def test_pump_persists_relation_sidecar(tmp_path):
     from go_pq_cdc_spark.sources import lsn_stream
     from go_pq_cdc_spark.sources.slot_keeper import (
         pump_frames,
-        read_relation_schema,
+        read_relation_sidecar,
     )
 
     wal = str(tmp_path / "wal")
     frames = _ddl_frames(struct)
     # pump only the pre-DDL prefix: sidecar holds the 2-column shape
     pump_frames(frames[:4], wal, batch_rows=1)
-    assert read_relation_schema(wal, "public.users") == [
-        ("pk", "int8"),
-        ("name", "text"),
+    assert read_relation_sidecar(wal, "public.users")["columns"] == [
+        ["pk", "int8"],
+        ["name", "text"],
     ]
     # pump the rest: the Relation re-send refreshes the sidecar
     pump_frames(frames[4:], wal, batch_rows=1)
-    assert read_relation_schema(wal, "public.users") == [
-        ("pk", "int8"),
-        ("name", "text"),
-        ("score", "int4"),
+    assert read_relation_sidecar(wal, "public.users")["columns"] == [
+        ["pk", "int8"],
+        ["name", "text"],
+        ["score", "int4"],
     ]
-    assert read_relation_schema(wal, "public.absent") is None
+    assert read_relation_sidecar(wal, "public.absent") is None
     # the underscore dir is invisible to the segment chain
     segs = lsn_stream.list_segments(wal)
     assert len(segs) == 2 and all("_schema" not in p for _s, _e, p in segs)

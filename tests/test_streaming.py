@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from go_pq_cdc_spark.streaming import (
     buffer_streamed_txns,
-    changelog_stream,
+    file_change_stream,
     merge_mirror_batch,
     mirror_sink,
     read_mirror,
@@ -68,7 +68,7 @@ def test_mirror_sink_latest_state(spark, tmpdirs):
         [_ev("I", 1, 10, 1, 1.0), _ev("I", 2, 10, 2, 2.0), _ev("U", 3, 11, 1, 1.5)],
         0,
     )
-    stream = changelog_stream(spark, tmpdirs["in"] + "/*")
+    stream = file_change_stream(spark, tmpdirs["in"] + "/*")
     q = mirror_sink(stream, tmpdirs["state"], tmpdirs["ckpt"])
     try:
         q.processAllAvailable()
@@ -120,7 +120,7 @@ def test_streamed_txn_commit_and_abort(spark, tmpdirs):
         [_ev("I", 10, 100, 1, 1.0), _ev("U", 12, 100, 1, 1.1), _ev("I", 11, 200, 9, 9.0)],
         0,
     )
-    stream = changelog_stream(spark, tmpdirs["in"] + "/*")
+    stream = file_change_stream(spark, tmpdirs["in"] + "/*")
     out = buffer_streamed_txns(stream)
     q = (
         out.writeStream.outputMode("append")
@@ -161,7 +161,7 @@ def test_windowed_agg_with_watermark(spark, tmpdirs):
         [_ev("I", i, 1, i, float(i)) for i in range(25)],
         0,
     )
-    stream = changelog_stream(spark, tmpdirs["in"] + "/*")
+    stream = file_change_stream(spark, tmpdirs["in"] + "/*")
     agg = (
         stream.withWatermark("commit_ts", "30 seconds")
         .groupBy(F.window("commit_ts", "10 seconds"), "op")
@@ -433,7 +433,7 @@ def test_streaming_session_window(spark, tmpdirs):
         + [_ev("I", lsn, 1, 2, float(lsn)) for lsn in (5, 6)],
         0,
     )
-    stream = changelog_stream(spark, tmpdirs["in"] + "/*")
+    stream = file_change_stream(spark, tmpdirs["in"] + "/*")
     agg = (
         stream.withWatermark("commit_ts", "5 minutes")
         .groupBy(F.session_window("commit_ts", "10 seconds"), "pk")

@@ -13,7 +13,7 @@ from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from go_pq_cdc_spark.sources.postgres import capture_slot
-from go_pq_cdc_spark.sources.wal2json import decode_wal2json, route_tables
+from go_pq_cdc_spark.sources.wal2json import decode_wal2json
 from go_pq_cdc_spark.streaming.changelog_stream import multi_mirror_sink, read_mirror
 
 # slow tier (r13 verdict item 1): excluded from the default pytest run
@@ -60,36 +60,6 @@ def test_decode_wal2json(spark):
     assert rows[11]["before"]["name"] == "alice" and rows[11]["after"]["name"] == "alice2"
     assert rows[13]["op"] == "D" and rows[13]["table"] == "orders"
     assert rows[13]["before"]["id"] == "7"
-    routed = route_tables(env, discover=True)  # ad-hoc discovery opt-in
-    assert set(routed) == {"public.users", "public.orders"}
-    assert routed["public.users"].count() == 2
-
-
-def test_route_tables_config_first_runs_zero_jobs(spark):
-    """The default (config-supplied tables) path is pure plan metadata —
-    NO Spark job may run (r7 verdict item 5: the discovery scan is a full
-    envelope pass at scale). Omitting the list without opting into
-    discovery fails loudly instead of silently launching it."""
-    import pytest
-
-    raw = spark.createDataFrame(
-        [Row(lsn=1, xid=1,
-             data='{"action":"I","schema":"public","table":"users",'
-                  '"timestamp":"2024-01-01 00:00:00","columns":'
-                  '[{"name":"id","type":"integer","value":"1"}]}')]
-    )
-    env = decode_wal2json(raw)
-    sc = spark.sparkContext
-    sc.setJobGroup("route_tables_default", "zero-job assertion")
-    try:
-        routed = route_tables(env, tables=["public.users"])
-        assert set(routed) == {"public.users"}
-        ids = sc.statusTracker().getJobIdsForGroup("route_tables_default")
-    finally:
-        sc.setJobGroup("", "")
-    assert list(ids) == [], "config-first routing must launch no Spark job"
-    with pytest.raises(ValueError, match="discover=True"):
-        route_tables(env)  # no tables, no opt-in: loud failure
 
 
 MULTI_SCHEMA = T.StructType(

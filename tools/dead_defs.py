@@ -1,12 +1,14 @@
-"""List the package's top-level functions and classes that nothing
-outside `tests/` references.
+"""List the package's top-level functions and classes, and the methods
+of the classes in `CLASSES`, that nothing outside `tests/` references.
 
 A definition counts as referenced when its name occurs as a whole word
 anywhere outside its own body: in any `.py` file of the repo except
-those under `tests/`, in `README.md` or in an `examples/` page. Queries
-registered through the registry decorator (`@register(...)`) are
-skipped: the registry is their caller. Prints one line per unreferenced
-definition (`path:line name lines`) and the totals last.
+those under `tests/`, in `README.md` or in an `examples/` page. A method
+counts as referenced when `.name` occurs there (a whole-word test would
+count every `start` or `lookup` in prose). Queries registered through
+the registry decorator (`@register(...)`) are skipped: the registry is
+their caller. Prints one line per unreferenced definition
+(`path:line name lines`, methods as `Class.name`) and the totals last.
 
     python3 tools/dead_defs.py [--root .]
 
@@ -23,7 +25,10 @@ import re
 from collections import Counter
 
 PACKAGE = "go_pq_cdc_spark"
+CLASSES = {"CdcEngine"}
 _WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+_ATTR = re.compile(r"\.([A-Za-z_][A-Za-z0-9_]*)")
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _corpus(root: str) -> list[str]:
@@ -51,9 +56,12 @@ def _registered(node: ast.AST) -> bool:
 def dead_defs(root: str) -> list[tuple[str, int, str, int]]:
     """(path, first line, name, line count) per unreferenced definition."""
     words: Counter = Counter()
+    attrs: Counter = Counter()
     for p in _corpus(root):
         with open(p, encoding="utf-8", errors="replace") as f:
-            words.update(_WORD.findall(f.read()))
+            text = f.read()
+        words.update(_WORD.findall(text))
+        attrs.update(_ATTR.findall(text))
     dead = []
     for d, _dirs, files in os.walk(os.path.join(root, PACKAGE)):
         for f in sorted(files):
@@ -63,19 +71,24 @@ def dead_defs(root: str) -> list[tuple[str, int, str, int]]:
             with open(path, encoding="utf-8") as fh:
                 src = fh.read()
             lines = src.splitlines()
-            for node in ast.parse(src).body:
-                if not isinstance(
-                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-                ) or _registered(node):
-                    continue
+
+            def check(node, counter, pattern, label):
                 first = min([node.lineno] + [x.lineno for x in node.decorator_list])
                 body = "\n".join(lines[first - 1:node.end_lineno])
-                own = _WORD.findall(body).count(node.name)
-                if words[node.name] <= own:
+                if counter[node.name] <= pattern.findall(body).count(node.name):
                     dead.append((
-                        os.path.relpath(path, root), first, node.name,
+                        os.path.relpath(path, root), first, label,
                         node.end_lineno - first + 1,
                     ))
+
+            for node in ast.parse(src).body:
+                if not isinstance(node, _DEFS) or _registered(node):
+                    continue
+                check(node, words, _WORD, node.name)
+                if isinstance(node, ast.ClassDef) and node.name in CLASSES:
+                    for m in node.body:
+                        if isinstance(m, _DEFS) and not m.name.startswith("__"):
+                            check(m, attrs, _ATTR, f"{node.name}.{m.name}")
     return sorted(dead)
 
 
