@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from .config import EngineConfig, TableConfig
-from .snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
+from .snapshot.claim_backend import backend_for
 from .snapshot.planner import SnapshotPlan, plan_auto
 from .sources import postgres as pg
 from .streaming.changelog_stream import file_change_stream, mirror_sink
@@ -47,7 +47,7 @@ _log = logging.getLogger(__name__)
 _TRANSPORTS = ("flat", "envelope", "wal2json", "test_decoding")
 # the mirror_sink arguments `start` supplies itself; every other
 # mirror_sink keyword reaches it unchanged through `start(**mirror)`
-_OWN_SINK_ARGS = ("value_cols", "transform", "evolve_schema", "backend", "dropped_cols")
+_OWN_SINK_ARGS = ("value_cols", "transform", "evolve_schema", "dropped_cols")
 
 
 class CdcEngine:
@@ -429,7 +429,6 @@ class CdcEngine:
         n_buckets: int | None = None,
         evolve_schema: bool = False,
         wal_dir: str | None = None,
-        claim_backend: ClaimBackend = DEFAULT_BACKEND,
     ):
         """O17 typed fan-out: ONE slot's envelope stream feeds every
         published table's whole-row mirror (the reference runs one
@@ -468,7 +467,6 @@ class CdcEngine:
                     n_buckets=n_buckets,
                     value_cols=value_cols,
                     evolve_schema=evolve_schema,
-                    backend=claim_backend,
                     dropped_cols=dropped,
                 )
 
@@ -495,14 +493,14 @@ class CdcEngine:
         chunk_reader=None,
         claim_ttl_s: float = 300.0,
         drain_timeout_s: float = 600.0,
-        claim_backend: ClaimBackend = DEFAULT_BACKEND,
         evolve_schema: bool = False,
         **mirror,
     ):
         """The reference's `connector.Start(ctx)` in one call
         (connector.go:57-142 sequencing; SURVEY §3.1-3.3):
 
-        0. check the inputs — transport, `table=`, the mirror options —
+        0. check the inputs — transport, `table=`, the state dir's claim
+           backend, the mirror options —
            so a bad call fails before any statement reaches the server
         1. management DDL via `run_sql` — heartbeat, publication, replica
            identities, slot LAST-but-before-snapshot, so the slot pins WAL
@@ -565,12 +563,12 @@ class CdcEngine:
         goes stale after the same `claim_ttl_s`: a peer that died
         holding it is taken over then. `drain_timeout_s` bounds IDLE
         time — no chunk completing anywhere — not total drain
-        wall-clock. `claim_backend` selects the atomic-marker medium of
-        the queue and the mirror (`snapshot.claim_backend.ClaimBackend`):
-        default POSIX hard-link claims for filesystem/NFS state dirs;
-        pass an `ObjectStoreBackend` when state_dir is S3/GCS, where
-        claims ride conditional PUTs (If-None-Match / If-Match) instead
-        of links.
+        wall-clock. The queue and the mirror coordinate through the
+        backend mounted for `state_dir` (`snapshot.claim_backend.mount`):
+        POSIX hard-link claims for an unmounted local state dir; mount an
+        `ObjectStoreBackend` at an S3/GCS root, where claims ride
+        conditional PUTs (If-None-Match / If-Match) instead of links. An
+        unmounted URI state dir raises before any DDL.
 
         `evolve_schema=True` (envelope transport only) lets the typed
         mirror follow mid-stream DDL: the pump persists every pgoutput
@@ -609,6 +607,7 @@ class CdcEngine:
             raise ValueError(
                 f"snapshot_mode={self.config.snapshot_mode!r} needs a chunk_reader"
             )
+        backend_for(state_dir)  # an unmounted URI root raises here
         # an unknown mirror option, or one start() sets itself, raises
         # TypeError here
         inspect.signature(mirror_sink).bind(
@@ -633,7 +632,6 @@ class CdcEngine:
                 mirror.get("keep_epochs"),
                 claim_ttl_s=claim_ttl_s,
                 drain_timeout_s=drain_timeout_s,
-                claim_backend=claim_backend,
             )
             if self.config.snapshot_mode == "snapshot_only":
                 return snapshot_lsn, None
@@ -650,7 +648,6 @@ class CdcEngine:
                 F.col("lsn") > snapshot_lsn
             ),
             evolve_schema=evolve_schema,
-            backend=claim_backend,
             dropped_cols=dropped_now,
             **mirror,
         )
@@ -742,7 +739,6 @@ class CdcEngine:
         keep_epochs,
         claim_ttl_s: float,
         drain_timeout_s: float,
-        claim_backend: ClaimBackend,
     ) -> int:
         """Per-chunk cooperative snapshot seed (O23 at the reference's
         granularity, worker.go:421-484): each seeded table's chunk plan
@@ -790,8 +786,8 @@ class CdcEngine:
             qdir = os.path.join(
                 state_dir, "chunks", tcfg.qualified.replace(".", "__")
             )
-            if not cq.read_manifest(qdir, backend=claim_backend) and (
-                claim_backend.exists(os.path.join(state_dir, "_snapshot_done"))
+            if not cq.read_manifest(qdir) and backend_for(state_dir).exists(
+                os.path.join(state_dir, "_snapshot_done")
             ):
                 raise RuntimeError(
                     f"{state_dir} was seeded by the retired whole-table "
@@ -805,18 +801,15 @@ class CdcEngine:
                 # the reference's metadata wipe, this is a
                 # start-the-fleet-after action, not safe concurrent with a
                 # live peer's drain.
-                cq.reset(qdir, backend=claim_backend)
+                cq.reset(qdir)
             cq.init_chunk_queue(
                 qdir,
                 chunk_planner(tcfg),
                 meta={"snapshot_lsn": snapshot_lsn},
-                backend=claim_backend,
             )
             # first-writer-wins: adopt THIS table's PUBLISHED handoff point
             table_lsn = int(
-                cq.read_queue_meta(qdir, backend=claim_backend).get(
-                    "snapshot_lsn", snapshot_lsn
-                )
+                cq.read_queue_meta(qdir).get("snapshot_lsn", snapshot_lsn)
             )
             published.append(table_lsn)
 
@@ -839,7 +832,6 @@ class CdcEngine:
                     # a peer that died holding the merge lock is taken
                     # over after the same window as its chunk claims
                     lock_ttl_s=claim_ttl_s,
-                    backend=claim_backend,
                 )
                 # rows_processed=0: an exact count would cost one extra
                 # Spark job per chunk; queue progress tracks chunks, and
@@ -856,31 +848,22 @@ class CdcEngine:
                 # mid-processing (r7 advisor: no heartbeat meant duplicate
                 # merges for any chunk slower than the TTL)
                 heartbeat_every_s=claim_ttl_s / 4,
-                backend=claim_backend,
             )
         return min(published) if published else snapshot_lsn
 
-    def current_state(
-        self, state_dir: str, claim_backend: ClaimBackend = DEFAULT_BACKEND
-    ) -> DataFrame:
+    def current_state(self, state_dir: str) -> DataFrame:
         from .streaming import read_mirror
 
-        return read_mirror(self.spark, state_dir, backend=claim_backend)
+        return read_mirror(self.spark, state_dir)
 
-    def lookup(
-        self, state_dir: str, pks: list[int],
-        claim_backend: ClaimBackend = DEFAULT_BACKEND,
-    ) -> DataFrame:
+    def lookup(self, state_dir: str, pks: list[int]) -> DataFrame:
         """Bucket-pruned point lookup in the mirror: reads only the bucket
         files the keys hash into (~len(pks)/n_buckets of the state)."""
         from .streaming import lookup_mirror
 
-        return lookup_mirror(self.spark, state_dir, pks, backend=claim_backend)
+        return lookup_mirror(self.spark, state_dir, pks)
 
-    def register_view(
-        self, state_dir: str, name: str,
-        claim_backend: ClaimBackend = DEFAULT_BACKEND,
-    ) -> DataFrame:
+    def register_view(self, state_dir: str, name: str) -> DataFrame:
         """Expose the mirror to SQL: `spark.sql(f"SELECT ... FROM {name}")`
         resolves to the state at the LAST MERGE COMMIT (SURVEY §7's
         catalog-resolution nice-to-have, done the Spark-first way).
@@ -895,7 +878,7 @@ class CdcEngine:
         readers are required."""
         from .streaming.changelog_stream import register_mirror_view
 
-        return register_mirror_view(self.spark, state_dir, name, backend=claim_backend)
+        return register_mirror_view(self.spark, state_dir, name)
 
     # -- observability (O33) ------------------------------------------------
 

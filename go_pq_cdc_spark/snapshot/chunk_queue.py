@@ -24,12 +24,13 @@ shared medium is the same state_dir the mirror lives in:
     state_dir/chunks/done.<i>.json    completed row: instance_id,
                                       rows_processed, finished_at
 
-All marker I/O goes through a pluggable `ClaimBackend`
-(`snapshot.claim_backend`): the default `PosixLinkBackend` keeps the
-original scheme — a claim is a hard LINK of a privately-written tmp file
-(create-with-content; a peer can never see a torn claim), takeover is an
-`os.replace` allowed only once the current heartbeat is `claim_ttl_s`
-stale, and completion markers are link-created. The POSIX takeover swap
+All marker I/O goes through the `ClaimBackend` mounted for the state
+dir (`snapshot.claim_backend.backend_for`): the default
+`PosixLinkBackend` keeps the original scheme — a claim is a hard LINK
+of a privately-written tmp file (create-with-content; a peer can never
+see a torn claim), takeover is an `os.replace` allowed only once the
+current heartbeat is `claim_ttl_s` stale, and completion markers are
+link-created. The POSIX takeover swap
 is last-writer-wins inside the (rare) window where two apps pass the
 staleness check together — acceptable exactly as in the reference, whose
 chunk work is idempotent (re-reading a chunk re-merges the same rows;
@@ -50,7 +51,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from .claim_backend import DEFAULT_BACKEND, ClaimBackend
+from .claim_backend import backend_for
 
 MANIFEST = "_manifest.json"
 
@@ -87,7 +88,6 @@ def init_chunk_queue(
     state_dir: str,
     chunks: list[dict],
     meta: dict | None = None,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> list[dict]:
     """Publish the chunk manifest (the reference's insertChunks step).
     Idempotent and first-writer-wins: every cooperating app calls this
@@ -100,28 +100,25 @@ def init_chunk_queue(
     stream filter at ONE shared point (read it back with
     `read_queue_meta`)."""
     qdir = _qdir(state_dir)
+    backend = backend_for(state_dir)
     backend.ensure_dir(qdir)
     norm = [
         {**c, "chunk_index": int(c.get("chunk_index", i))}
         for i, c in enumerate(chunks)
     ]
     backend.put_if_absent(f"{qdir}/{MANIFEST}", {"chunks": norm, "meta": meta or {}})
-    return read_manifest(state_dir, backend=backend)
+    return read_manifest(state_dir)
 
 
-def read_manifest(
-    state_dir: str, backend: ClaimBackend = DEFAULT_BACKEND
-) -> list[dict]:
-    doc, _ = backend.read(f"{_qdir(state_dir)}/{MANIFEST}")
+def read_manifest(state_dir: str) -> list[dict]:
+    doc, _ = backend_for(state_dir).read(f"{_qdir(state_dir)}/{MANIFEST}")
     return list(doc["chunks"]) if doc and "chunks" in doc else []
 
 
-def read_queue_meta(
-    state_dir: str, backend: ClaimBackend = DEFAULT_BACKEND
-) -> dict:
+def read_queue_meta(state_dir: str) -> dict:
     """The PUBLISHED manifest's meta (first-writer-wins, like the chunk
     list itself)."""
-    doc, _ = backend.read(f"{_qdir(state_dir)}/{MANIFEST}")
+    doc, _ = backend_for(state_dir).read(f"{_qdir(state_dir)}/{MANIFEST}")
     return dict(doc.get("meta", {})) if doc else {}
 
 
@@ -132,7 +129,9 @@ class ChunkClaim:
     state_dir: str
     instance_id: str
     chunk: dict = field(default_factory=dict)
-    backend: ClaimBackend = DEFAULT_BACKEND
+
+    def __post_init__(self) -> None:
+        self.backend = backend_for(self.state_dir)
 
     @property
     def index(self) -> int:
@@ -190,7 +189,6 @@ def claim_next_chunk(
     state_dir: str,
     instance_id: str | None = None,
     claim_ttl_s: float = 300.0,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> ChunkClaim | None:
     """Backend analogue of `claimNextChunk` (worker.go:421-484): walk
     chunks in chunk_index order and take the first that is pending (no
@@ -200,7 +198,8 @@ def claim_next_chunk(
     peers hold the remainder (the caller's drain loop polls/waits, like
     the reference worker idling on an empty SKIP LOCKED result)."""
     instance_id = instance_id or f"app-{uuid.uuid4().hex[:12]}"
-    for chunk in sorted(read_manifest(state_dir, backend), key=lambda c: c["chunk_index"]):
+    backend = backend_for(state_dir)
+    for chunk in sorted(read_manifest(state_dir), key=lambda c: c["chunk_index"]):
         idx = int(chunk["chunk_index"])
         if backend.exists(_done_path(state_dir, idx)):
             continue
@@ -213,13 +212,13 @@ def claim_next_chunk(
         }
         path = _claim_path(state_dir, idx)
         if backend.put_if_absent(path, doc):
-            return ChunkClaim(state_dir, instance_id, chunk, backend)
+            return ChunkClaim(state_dir, instance_id, chunk)
         cur, etag = backend.read(path)
         if cur is None:
             if not backend.exists(path):
                 # owner released between publish failure and read: retry
                 if backend.put_if_absent(path, doc):
-                    return ChunkClaim(state_dir, instance_id, chunk, backend)
+                    return ChunkClaim(state_dir, instance_id, chunk)
                 continue
             # torn claim object (crashed writer): replace it; waiting
             # would spin forever, since staleness needs a heartbeat
@@ -229,21 +228,18 @@ def claim_next_chunk(
         if stale and backend.swap(path, doc, etag):
             # POSIX: last-writer-wins takeover; object store: a TRUE CAS
             # — losing the swap means a peer took it first; move on
-            return ChunkClaim(state_dir, instance_id, chunk, backend)
+            return ChunkClaim(state_dir, instance_id, chunk)
     return None
 
 
-def chunk_queue_stats(
-    state_dir: str,
-    backend: ClaimBackend = DEFAULT_BACKEND,
-    with_rows: bool = True,
-) -> dict:
+def chunk_queue_stats(state_dir: str, with_rows: bool = True) -> dict:
     """pending/in_progress/completed counts + total rows_processed (the
     reference's jobs-table `completed_chunks` / progress metrics).
     `with_rows=False` skips summing rows_processed so every marker probe
     is an existence check (a HEAD on object stores) instead of a
     full-body read — the drain loop's per-poll fast path (r8 advisor)."""
-    chunks = read_manifest(state_dir, backend)
+    backend = backend_for(state_dir)
+    chunks = read_manifest(state_dir)
     done = in_prog = rows = 0
     for c in chunks:
         idx = int(c["chunk_index"])
@@ -267,17 +263,16 @@ def chunk_queue_stats(
     }
 
 
-def all_chunks_completed(
-    state_dir: str, backend: ClaimBackend = DEFAULT_BACKEND
-) -> bool:
-    chunks = read_manifest(state_dir, backend)
+def all_chunks_completed(state_dir: str) -> bool:
+    backend = backend_for(state_dir)
+    chunks = read_manifest(state_dir)
     return bool(chunks) and all(
         backend.exists(_done_path(state_dir, int(c["chunk_index"])))
         for c in chunks
     )
 
 
-def reset(state_dir: str, backend: ClaimBackend = DEFAULT_BACKEND) -> None:
+def reset(state_dir: str) -> None:
     """Force-resnapshot support (reference config.go:328 `Resnapshot`;
     the coordinator wipes `cdc_snapshot_chunks` and restarts an
     incomplete/forced job, coordinator.go:28-61):
@@ -287,6 +282,7 @@ def reset(state_dir: str, backend: ClaimBackend = DEFAULT_BACKEND) -> None:
     before starting the cooperating fleet, not concurrently with a live
     peer's drain (the wipe would un-done chunks mid-flight)."""
     qdir = _qdir(state_dir)
+    backend = backend_for(state_dir)
     for name in backend.list_names(qdir):
         if (
             name == MANIFEST
@@ -304,7 +300,6 @@ def drain(
     poll_s: float = 0.2,
     timeout_s: float = 600.0,
     heartbeat_every_s: float | None = None,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> list[int]:
     """Worker loop (the reference's `processChunks`, worker.go:150-200):
     claim → process → complete until every chunk is done. `process_chunk`
@@ -335,7 +330,7 @@ def drain(
         # all_chunks_completed + chunk_queue_stats pair cost two O(chunks)
         # marker sweeps (full-object GETs on a store) per 0.2s poll
         # (r8 advisor).
-        stats = chunk_queue_stats(state_dir, backend, with_rows=False)
+        stats = chunk_queue_stats(state_dir, with_rows=False)
         if stats["total"] and stats["completed"] == stats["total"]:
             break
         done_now = stats["completed"]
@@ -346,9 +341,9 @@ def drain(
             raise TimeoutError(
                 f"chunk queue for {state_dir} idle (no chunk completed "
                 f"anywhere) for {timeout_s}s: "
-                f"{chunk_queue_stats(state_dir, backend)}"
+                f"{chunk_queue_stats(state_dir)}"
             )
-        claim = claim_next_chunk(state_dir, instance_id, claim_ttl_s, backend)
+        claim = claim_next_chunk(state_dir, instance_id, claim_ttl_s)
         if claim is None:
             time.sleep(poll_s)  # live peers own the rest — wait/retry
             continue

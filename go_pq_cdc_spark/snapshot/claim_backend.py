@@ -32,6 +32,14 @@ in-memory implementation of the same contract with real precondition
 failures, so claim/steal/complete races are exercised without a cloud
 dependency.
 
+Which backend coordinates a path is a deployment setting, chosen once
+per state root like the reference's one Postgres connection (not passed
+call by call): `mount(root, backend)` registers a backend for every path
+under `root`, and the coordination code resolves its own directory with
+`backend_for(path)`. An unmounted local path gets `PosixLinkBackend`; an
+unmounted `scheme://` path raises, since POSIX calls on it would
+silently create a local `s3a:` directory.
+
 The POSIX arm has one documented weakening: `swap` ignores the etag
 (rename is unconditional), so two processes passing the staleness check
 together are last-writer-wins — acceptable because chunk work is
@@ -267,3 +275,41 @@ class FakeObjectStore:
 
 
 DEFAULT_BACKEND = PosixLinkBackend()
+
+_MOUNTS: dict[str, ClaimBackend] = {}
+
+
+def root_key(path: str) -> str:
+    """One spelling per state root: URIs (`s3a://b/state/`) lose their
+    trailing slashes, local paths go through abspath."""
+    if "://" in path:
+        return path.rstrip("/")
+    return os.path.abspath(path)
+
+
+def mount(root: str, backend: ClaimBackend | None) -> None:
+    """Coordinate every path under `root` through `backend` (None removes
+    the mount)."""
+    if backend is None:
+        _MOUNTS.pop(root_key(root), None)
+    else:
+        _MOUNTS[root_key(root)] = backend
+
+
+def backend_for(path: str) -> ClaimBackend:
+    """The backend of the longest mounted root containing `path`, matched
+    on whole path components (`/a/st` does not contain `/a/state`)."""
+    key = root_key(path)
+    hits = [
+        (len(root), backend)
+        for root, backend in tuple(_MOUNTS.items())
+        if key == root or key.startswith(root.rstrip("/") + "/")
+    ]
+    if hits:
+        return max(hits, key=lambda hit: hit[0])[1]
+    if "://" in key:
+        raise ValueError(
+            f"no claim backend is mounted for {path!r}: call "
+            "snapshot.claim_backend.mount(<root>, backend) first"
+        )
+    return DEFAULT_BACKEND

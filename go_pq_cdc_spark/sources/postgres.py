@@ -101,22 +101,6 @@ def replica_identity_sql(table: TableConfig) -> str:
     return f"ALTER TABLE {table.qualified} REPLICA IDENTITY {ri}"
 
 
-def replica_identity_state_sql(tables: list[TableConfig]) -> str:
-    """Current-identity catalog probe (`replica_identity.go:101-127`
-    GetReplicaIdentities): relreplident per table plus the replica-identity
-    index name where one is set (pg_index.indisreplident)."""
-    names = ", ".join(f"'{t.qualified}'" for t in tables)
-    return (
-        "SELECT n.nspname AS schema_name, c.relname AS table_name, "
-        "c.relreplident AS replica_identity, idx.relname AS replica_identity_index "
-        "FROM pg_class c "
-        "JOIN pg_namespace n ON c.relnamespace = n.oid "
-        "LEFT JOIN pg_index i ON i.indrelid = c.oid AND i.indisreplident "
-        "LEFT JOIN pg_class idx ON idx.oid = i.indexrelid "
-        f"WHERE concat(n.nspname, '.', c.relname) IN ({names})"
-    )
-
-
 # --- O27: heartbeat (pq/heartbeat/heartbeat.go) ----------------------------
 
 

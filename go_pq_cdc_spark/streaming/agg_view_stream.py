@@ -23,8 +23,8 @@ batch fold (property the tests pin).
 
 State layout: the shared `streaming.versioned_state.VersionedState`
 discipline — `state_dir/v{batch_id}/` parquet (grp, n_keys, sum_cents,
-...) committed by a `meta/v{batch_id}.json` marker that rides the same
-pluggable `ClaimBackend` as the mirror's coordination, so the state_dir
+...) committed by a `meta/v{batch_id}.json` marker that rides the
+`ClaimBackend` mounted for the state_dir, so the state_dir
 can live on raw object storage (conditional-request markers + Hadoop-FS
 parquet — r10 verdict item 5). A retried batch recomputes v{N} from
 v{N-1} — which a retry never modifies — and OVERWRITES v{N}:
@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import agg_view_deltas, log_view_deltas, value_group
-from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
 from .versioned_state import VersionedState, _fs_delete, _fs_list_names, _hadoop_fs
 
 STATE_SCHEMA = (
@@ -74,26 +73,24 @@ def _check_group_ceiling(
 def latest_version(
     state_dir: str,
     below: int | None = None,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> int | None:
     """Highest committed state version, optionally restricted to
     versions < `below` (a retry must ignore its own torn previous write
     of the same version). Committed-ness is the meta marker's existence —
     written strictly after the parquet, so a crash in between leaves the
     version invisible, not a reader-crashing torn state (r10 review)."""
-    return VersionedState(state_dir, backend).latest_version(below)
+    return VersionedState(state_dir).latest_version(below)
 
 
 def _read_state(
     spark: SparkSession,
     state_dir: str,
     version: int,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     meta: dict | None = None,
 ) -> tuple[dict, dict]:
     """Pass a pre-read `meta` to avoid a second backend GET per fold —
     the ceiling pre-check already read it (r12 review)."""
-    vs = VersionedState(state_dir, backend)
+    vs = VersionedState(state_dir)
     rows = spark.read.schema(STATE_SCHEMA).parquet(vs.version_dir(version)).collect()
     return (
         {
@@ -118,7 +115,6 @@ def update_agg_view_state(
     before_col: str = "before_val",
     after_col: str = "after_val",
     authoritative=None,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     max_groups: int = 100_000,
 ) -> None:
     """foreachBatch body: fold this micro-batch's signed deltas into the
@@ -165,7 +161,6 @@ def update_agg_view_state(
         state_dir,
         n_groups,
         authoritative,
-        backend,
         max_groups,
     )
 
@@ -178,7 +173,6 @@ def update_agg_view_from_log(
     n_groups: int = 8,
     value_col: str = "after_val",
     authoritative=None,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     max_groups: int = 100_000,
 ) -> None:
     """foreachBatch IVM WITHOUT shipped before images — the production
@@ -209,7 +203,7 @@ def update_agg_view_from_log(
     )
     fold_staged_view_deltas(
         batch_df.sparkSession, batch_id, state_dir, n_groups, authoritative,
-        backend, max_groups,
+        max_groups,
     )
 
 
@@ -266,7 +260,6 @@ def fold_staged_view_deltas(
     state_dir: str,
     n_groups: int = 8,
     authoritative=None,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     max_groups: int = 100_000,
 ) -> None:
     """Fold the staged delta dir for `batch_id` into the persisted view
@@ -276,7 +269,7 @@ def fold_staged_view_deltas(
         spark.read.schema(_DELTA_SCHEMA).parquet(ddir), max_groups
     )
     _fold_into_state(
-        spark, rows, batch_id, state_dir, n_groups, authoritative, backend,
+        spark, rows, batch_id, state_dir, n_groups, authoritative,
         max_groups,
     )
     _gc_delta_dirs(spark, state_dir, below=batch_id - 1)
@@ -324,13 +317,11 @@ def _summary_rows(cents: DataFrame, max_groups: int = 100_000) -> list:
     )
 
 
-def _check_not_shadowed(
-    state_dir: str, batch_id: int, backend: ClaimBackend = DEFAULT_BACKEND
-) -> None:
+def _check_not_shadowed(state_dir: str, batch_id: int) -> None:
     """Checkpoint/view-state lifecycle guard (r10 advisor) — see
     `VersionedState.check_not_shadowed`. Recovery: rebuild the view (or
     move/delete the view state dir with the checkpoint)."""
-    VersionedState(state_dir, backend).check_not_shadowed(batch_id, "view state")
+    VersionedState(state_dir).check_not_shadowed(batch_id, "view state")
 
 
 def _gc_delta_dirs(spark: SparkSession, state_dir: str, below: int) -> None:
@@ -346,7 +337,6 @@ def seed_agg_view_from_state(
     n_groups: int = 8,
     value_col: str = "after_val",
     track_minmax: bool = False,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> None:
     """Initialize the view (version 0) from an EXISTING state table — the
     engine calls this with the seeded mirror before the stream starts:
@@ -386,7 +376,7 @@ def seed_agg_view_from_state(
         for r in rows
         if r["n_keys"]
     }
-    _write_state(spark, state, state_dir, 0, n_groups, 0, track_minmax, backend)
+    _write_state(spark, state, state_dir, 0, n_groups, 0, track_minmax)
 
 
 def _fold_into_state(
@@ -396,23 +386,22 @@ def _fold_into_state(
     state_dir: str,
     n_groups: int,
     authoritative,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     max_groups: int = 100_000,
 ) -> None:
     _check_group_ceiling(len(batch_rows), max_groups, state_dir, "batch")
-    _check_not_shadowed(state_dir, batch_id, backend)
-    prev = latest_version(state_dir, below=batch_id, backend=backend)
+    _check_not_shadowed(state_dir, batch_id)
+    prev = latest_version(state_dir, below=batch_id)
     repairs = 0
     if prev is not None:
         # refuse BEFORE the state collect when the persisted meta already
         # proves the ceiling is blown (state written under a larger
         # max_groups, re-opened under a smaller one); the meta read here
         # is reused by _read_state — one GET per fold
-        meta = VersionedState(state_dir, backend).read_meta(prev)
+        meta = VersionedState(state_dir).read_meta(prev)
         _check_group_ceiling(
             int(meta.get("groups", 0)), max_groups, state_dir, "state"
         )
-        state, meta = _read_state(spark, state_dir, prev, backend, meta=meta)
+        state, meta = _read_state(spark, state_dir, prev, meta=meta)
         if meta["n_groups"] != n_groups:
             raise ValueError(
                 f"state at {state_dir} was built with n_groups "
@@ -473,7 +462,7 @@ def _fold_into_state(
             state[g] = (k, c, q, mn, mx)
 
     _write_state(
-        spark, state, state_dir, batch_id, n_groups, repairs, track, backend
+        spark, state, state_dir, batch_id, n_groups, repairs, track
     )
 
 
@@ -485,9 +474,8 @@ def _write_state(
     n_groups: int,
     repairs: int,
     track: bool,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> None:
-    vs = VersionedState(state_dir, backend)
+    vs = VersionedState(state_dir)
     key = lambda g: (g is None, g)  # noqa: E731 — None sorts last, stable write
     (
         spark.createDataFrame(
@@ -519,13 +507,12 @@ def _write_state(
 def read_agg_view(
     spark: SparkSession,
     state_dir: str,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame:
     """Current view: (grp, n_keys, sum_val, var_val, min_val, max_val) —
     monetary columns leave as DOUBLE via one exact cents/100 division;
     variance from the exactly-maintained second moment. min/max are NULL
     when the update ran without an authoritative source."""
-    ver = latest_version(state_dir, backend=backend)
+    ver = latest_version(state_dir)
     if ver is None:
         return spark.createDataFrame(
             [],
@@ -543,7 +530,7 @@ def read_agg_view(
     var_d = (ssq_d - sum_d * sum_d / F.col("n_keys")) / F.col("n_keys")
     return (
         spark.read.schema(STATE_SCHEMA)
-        .parquet(VersionedState(state_dir, backend).version_dir(ver))
+        .parquet(VersionedState(state_dir).version_dir(ver))
         .select(
             "grp",
             "n_keys",

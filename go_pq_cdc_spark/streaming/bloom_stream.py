@@ -34,7 +34,6 @@ from ..operators.sketch import (
     bloom_cells,
     bloom_merge_cells,
 )
-from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
 from .versioned_state import VersionedState
 
 STATE_SCHEMA = "grp string, word int, bits long"
@@ -43,9 +42,8 @@ STATE_SCHEMA = "grp string, word int, bits long"
 def latest_version(
     state_dir: str,
     below: int | None = None,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> int | None:
-    return VersionedState(state_dir, backend).latest_version(below)
+    return VersionedState(state_dir).latest_version(below)
 
 
 def update_bloom_state(
@@ -56,7 +54,6 @@ def update_bloom_state(
     value_col: str,
     k: int = BLOOM_K,
     bits: int = BLOOM_BITS,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> None:
     """foreachBatch body: OR this micro-batch's Bloom cells into the
     persisted per-group state. Raises when the committed state was
@@ -91,26 +88,24 @@ def update_bloom_state(
         {"k": k, "bits": bits, "batch_id": batch_id},
         check,
         what="bloom state",
-        backend=backend,
     )
 
 
 def bloom_state_fingerprint(
     spark: SparkSession,
     state_dir: str,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame:
     """(grp, n_words, bits_set, state_sum) over the committed state —
     the exact-int64 fingerprint q_bloom_merge reports, so a folded
     stream state is comparable bit-for-bit with a direct batch build
     (and with the DuckDB oracle). Empty frame when nothing committed."""
-    ver = latest_version(state_dir, backend=backend)
+    ver = latest_version(state_dir)
     if ver is None:
         return spark.createDataFrame(
             [], "grp string, n_words long, bits_set long, state_sum long"
         )
     st = spark.read.schema(STATE_SCHEMA).parquet(
-        VersionedState(state_dir, backend).version_dir(ver)
+        VersionedState(state_dir).version_dir(ver)
     )
     return st.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n_words"),

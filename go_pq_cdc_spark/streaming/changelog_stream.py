@@ -22,9 +22,11 @@ consistent snapshot readable — no rename pair to die between.
 
 Coordination medium (r8 verdict item 1): every coordination FILE — the
 merge lock, the live manifest, the per-epoch manifest snapshots — goes
-through the same pluggable `snapshot.claim_backend.ClaimBackend` the
-cooperative chunk queue uses. The default `PosixLinkBackend` keeps the
-pre-r9 on-disk layout byte-compatible; an `ObjectStoreBackend` maps the
+through the `snapshot.claim_backend.ClaimBackend` mounted for the state
+dir (`backend_for`), the same resolution the cooperative chunk queue
+uses; no function here takes a backend. An unmounted local state dir
+gets `PosixLinkBackend`, which keeps the pre-r9 on-disk layout
+byte-compatible; an `ObjectStoreBackend` maps the
 lock's acquire/heartbeat/takeover and the MANIFEST SWAP ITSELF to
 conditional requests, where the swap becomes a true compare-and-swap
 (If-Match on the etag read at merge start) — the residual POSIX
@@ -57,7 +59,7 @@ from ..operators.bucket_fold import (
     BucketTask,
     arrow_uri,
 )
-from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
+from ..snapshot.claim_backend import backend_for, root_key
 
 # Flat envelope used by the streaming tests/fixtures (a typed projection of
 # envelope.CHANGE_EVENT_SCHEMA for a single table).
@@ -146,13 +148,12 @@ def _bucket_of(pk: int, n_buckets: int) -> int:
     return signed % n_buckets  # Python's % is already pmod for n > 0
 
 
-def _read_manifest_versioned(
-    state_dir: str, backend: ClaimBackend
-) -> tuple[dict, object]:
+def _read_manifest_versioned(state_dir: str) -> tuple[dict, object]:
     """(manifest, etag). The etag is the commit-time CAS token: a merge
     that read the manifest at etag E may only swap it while it is still
     at E (enforced on etag-bearing backends; None on POSIX, where the
     lock's pre-swap ownership fence is the guard)."""
+    backend = backend_for(state_dir)
     p = os.path.join(state_dir, _MANIFEST)
     doc, etag = backend.read(p)
     if doc is None:
@@ -165,19 +166,15 @@ def _read_manifest_versioned(
     return doc, etag
 
 
-def _read_manifest(
-    state_dir: str, backend: ClaimBackend = DEFAULT_BACKEND
-) -> dict:
-    return _read_manifest_versioned(state_dir, backend)[0]
+def _read_manifest(state_dir: str) -> dict:
+    return _read_manifest_versioned(state_dir)[0]
 
 
 def _snapshot_manifest_path(state_dir: str, epoch: int) -> str:
     return os.path.join(state_dir, "manifests", f"e{epoch:09d}.json")
 
 
-def _publish_manifest_snapshot(
-    state_dir: str, manifest: dict, backend: ClaimBackend
-) -> None:
+def _publish_manifest_snapshot(state_dir: str, manifest: dict) -> None:
     """Pre-commit publish of the per-epoch manifest copy — the time-travel
     commit log (the single-table analogue of a Delta/Iceberg snapshot
     list). Written BEFORE the live-manifest swap so a retained epoch is
@@ -199,11 +196,12 @@ def _publish_manifest_snapshot(
     swap (`commit_manifest`), which bumps the etag and invalidates any
     pre-commit read a still-racing zombie holds — its conditional
     replace can then never land on top of committed state."""
+    backend = backend_for(state_dir)
     p = _snapshot_manifest_path(state_dir, manifest["epoch"])
     backend.ensure_dir(os.path.dirname(p))
     if backend.put_if_absent(p, manifest):
         return
-    live, _ = _read_manifest_versioned(state_dir, backend)
+    live, _ = _read_manifest_versioned(state_dir)
     if int(live.get("epoch", -1)) >= int(manifest["epoch"]):
         raise MirrorLockLost(
             f"epoch {manifest['epoch']} snapshot at {state_dir} was already "
@@ -379,7 +377,6 @@ def read_mirror_as_of(
     spark: SparkSession,
     state_dir: str,
     epoch: int,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame:
     """TIME-TRAVEL read: the mirror exactly as of `epoch`'s commit. Reads
     the retained immutable manifest snapshot; raises a clear error when
@@ -394,7 +391,7 @@ def read_mirror_as_of(
     Size `keep_epochs` to cover the longest reader, exactly like a Delta
     VACUUM horizon."""
     p = _snapshot_manifest_path(state_dir, epoch)
-    manifest, _ = backend.read(p)
+    manifest, _ = backend_for(state_dir).read(p)
     if manifest is None:
         raise ValueError(
             f"mirror epoch {epoch} is not retained at {state_dir} "
@@ -403,43 +400,33 @@ def read_mirror_as_of(
     return _manifest_df(spark, state_dir, manifest)
 
 
-def read_mirror(
-    spark: SparkSession, state_dir: str, backend: ClaimBackend = DEFAULT_BACKEND
-) -> DataFrame:
+def read_mirror(spark: SparkSession, state_dir: str) -> DataFrame:
     """The queryable current state: union of every bucket's live directory
     as recorded by the manifest (consistent at the last merge commit).
     Column shape comes from the manifest's pinned value schema (mirrors
     created before multi-column support default to `after_val double`)."""
-    manifest = _read_manifest(state_dir, backend)
+    manifest = _read_manifest(state_dir)
     return _manifest_df(spark, state_dir, manifest)
 
 
-_MIRROR_VIEWS: dict[str, set[str]] = {}  # state_dir key -> view names
-
-
-def _views_key(state_dir: str) -> str:
-    # URIs (s3a://...) must not go through abspath but DO normalize
-    # trailing slashes — 's3a://b/state' and 's3a://b/state/' are the
-    # same mirror and must share one registry key, or merge-time view
-    # refresh misses one spelling and its stale plan can reference
-    # GC-deleted bucket dirs (ADVICE r9). Local paths go through abspath.
-    if "://" in state_dir:
-        return state_dir.rstrip("/")
-    return os.path.abspath(state_dir)
+# `root_key(state_dir)` -> view names. One key per mirror: 's3a://b/state'
+# and 's3a://b/state/' must share it, or merge-time view refresh misses
+# one spelling and its stale plan can reference GC-deleted bucket dirs
+# (ADVICE r9).
+_MIRROR_VIEWS: dict[str, set[str]] = {}
 
 
 def register_mirror_view(
     spark: SparkSession,
     state_dir: str,
     name: str,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame:
     """Temp view over the mirror's current manifest, KEPT CURRENT across
     writes: `_mirror_write` re-registers every view recorded here right
     after its manifest swap (and before GC deletes the superseded
     bucket dirs the old view plan referenced — ADVICE r4)."""
-    _MIRROR_VIEWS.setdefault(_views_key(state_dir), set()).add(name)
-    df = read_mirror(spark, state_dir, backend)
+    _MIRROR_VIEWS.setdefault(root_key(state_dir), set()).add(name)
+    df = read_mirror(spark, state_dir)
     df.createOrReplaceTempView(name)
     return df
 
@@ -448,7 +435,6 @@ def lookup_mirror(
     spark: SparkSession,
     state_dir: str,
     pks: list[int],
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame:
     """Point lookup with bucket pruning: each pk hashes to exactly one
     bucket (`_bucket_col`, the same deterministic expression the merge
@@ -467,7 +453,7 @@ def lookup_mirror(
     the manifest and retries."""
     want = sorted({int(p) for p in pks})
     for attempt in range(3):
-        manifest = _read_manifest(state_dir, backend)
+        manifest = _read_manifest(state_dir)
         n = int(manifest.get("n_buckets") or MIRROR_BUCKETS)
         struct = _mirror_struct(spark, manifest)
         files = _bucket_files(spark, state_dir, manifest)
@@ -491,7 +477,6 @@ def mirror_befores_for(
     state_dir: str,
     keys_df: DataFrame,
     value_col: str = "after_val",
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame | None:
     """Pre-batch images for a batch's keys — the before-image source for
     incremental view maintenance on streams WITHOUT replica identity
@@ -501,7 +486,7 @@ def mirror_befores_for(
     touched-BUCKET id set, bounded by n_buckets exactly like the merge's
     own touched-bucket routing. None = fresh mirror (no state, every
     batch key is new)."""
-    manifest = _read_manifest(state_dir, backend)
+    manifest = _read_manifest(state_dir)
     all_deltas = manifest.get("deltas") or {}
     if not manifest["buckets"] and not any(all_deltas.values()):
         return None
@@ -524,9 +509,7 @@ def mirror_befores_for(
     )
 
 
-def _gc_epochs(
-    state_dir: str, manifest: dict, backend: ClaimBackend = DEFAULT_BACKEND
-) -> None:
+def _gc_epochs(state_dir: str, manifest: dict) -> None:
     """Remove bucket dirs referenced by NO retained manifest: the live
     one plus the last `keep_epochs - 1` snapshot manifests (time-travel
     retention, the live manifest's pin). Snapshot manifests older than
@@ -538,6 +521,7 @@ def _gc_epochs(
     Manifest snapshots are coordination files (ClaimBackend); the bucket
     dirs are listed and deleted through pyarrow.fs, the layer the bucket
     tasks write them through, with one filesystem handle for the pass."""
+    backend = backend_for(state_dir)
     keep_epochs = int(manifest.get("keep_epochs", 1))
     mroot = os.path.join(state_dir, "manifests")
     retained: list[dict] = [manifest]
@@ -596,8 +580,8 @@ def _gc_epochs(
 # (pre-swap, so the mirror is untouched) if the lock was lost.
 #
 # The lock rides the same ClaimBackend as every other coordination file
-# (r8 verdict item 1): POSIX default keeps the hard-link scheme; an
-# object-store backend makes acquire/heartbeat/takeover TRUE conditional
+# of the state dir (r8 verdict item 1): POSIX keeps the hard-link scheme;
+# an object-store backend makes acquire/heartbeat/takeover TRUE conditional
 # requests AND the commit itself a CAS — the manifest swap carries the
 # etag read at merge start, so a zombie passing the ownership fence
 # still loses the swap (the POSIX residual window does not exist there).
@@ -616,18 +600,13 @@ class MirrorLockLost(RuntimeError):
 
 
 class _MergeLock:
-    def __init__(
-        self,
-        state_dir: str,
-        ttl_s: float = _MERGE_LOCK_TTL_S,
-        backend: ClaimBackend = DEFAULT_BACKEND,
-    ):
+    def __init__(self, state_dir: str, ttl_s: float = _MERGE_LOCK_TTL_S):
         import uuid
 
         self.path = os.path.join(state_dir, _MERGE_LOCK)
         self.owner = f"merge-{uuid.uuid4().hex[:12]}"
         self.ttl_s = ttl_s
-        self.backend = backend
+        self.backend = backend_for(state_dir)
         self._beat_stop = None
         self._beat_thread = None
 
@@ -717,7 +696,6 @@ def _commit_manifest(
     manifest: dict,
     manifest_etag: object,
     lock: _MergeLock,
-    backend: ClaimBackend,
 ) -> None:
     """The commit point of `_mirror_write`.
     Fence (ownership), guarded snapshot pre-publish (time travel —
@@ -731,7 +709,8 @@ def _commit_manifest(
     snapshot AFTER the swap, invalidating any etag a still-racing zombie
     captured pre-commit."""
     lock.check_owned()  # fence: never swap a manifest we no longer own
-    _publish_manifest_snapshot(state_dir, manifest, backend)
+    _publish_manifest_snapshot(state_dir, manifest)
+    backend = backend_for(state_dir)
     if not backend.swap(
         os.path.join(state_dir, _MANIFEST), manifest, manifest_etag
     ):
@@ -755,7 +734,6 @@ def _mirror_write(
     epoch: int | None = None,
     keep_epochs: int | None = None,
     lock_ttl_s: float = _MERGE_LOCK_TTL_S,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> dict | None:
     """THE mirror write transaction; a merge, a compaction and a rebucket
     differ only in `body(manifest, epoch_rel)`. It gets the NEXT manifest
@@ -764,13 +742,13 @@ def _mirror_write(
     without committing. The manifest then commits by CAS on the etag read
     here, views re-point, and GC drops every unreferenced data dir.
     Returns the committed manifest, or None."""
-    backend.ensure_dir(state_dir)
-    lock = _MergeLock(state_dir, ttl_s=lock_ttl_s, backend=backend)
+    lock = _MergeLock(state_dir, ttl_s=lock_ttl_s)
+    lock.backend.ensure_dir(state_dir)
     lock.acquire()
     try:
         # the commit swap is conditional on the manifest version read here
         # (etag-enforcing backends make that a true CAS)
-        manifest, manifest_etag = _read_manifest_versioned(state_dir, backend)
+        manifest, manifest_etag = _read_manifest_versioned(state_dir)
         if epoch is None:
             epoch = manifest["epoch"] + 1
         elif epoch <= manifest["epoch"]:
@@ -808,12 +786,12 @@ def _mirror_write(
         if results is None:
             return None
         _apply_results(manifest, results)
-        _commit_manifest(state_dir, manifest, manifest_etag, lock, backend)
+        _commit_manifest(state_dir, manifest, manifest_etag, lock)
         # refresh registered SQL views BEFORE GC deletes the bucket dirs
         # their old plans reference (register_mirror_view / ADVICE r4)
-        for view_name in _MIRROR_VIEWS.get(_views_key(state_dir), ()):
-            read_mirror(spark, state_dir, backend).createOrReplaceTempView(view_name)
-        _gc_epochs(state_dir, manifest, backend)
+        for view_name in _MIRROR_VIEWS.get(root_key(state_dir), ()):
+            read_mirror(spark, state_dir).createOrReplaceTempView(view_name)
+        _gc_epochs(state_dir, manifest)
         return manifest
     finally:
         lock.release()
@@ -882,7 +860,6 @@ def merge_mirror_batch(
     keep_epochs: int | None = None,
     lock_ttl_s: float = _MERGE_LOCK_TTL_S,
     evolve_schema: bool = False,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     dropped_cols: tuple[str, ...] | None = None,
     merge_mode: str = "cow",
     compact_deltas: int = 8,
@@ -938,13 +915,13 @@ def merge_mirror_batch(
     (rebuild) — un-masking would resurrect pre-drop values as the new
     column's.
 
-    `backend` selects the coordination medium for the lock, the live
-    manifest, and the epoch manifest snapshots (the data parquet is
-    written by the Python workers through pyarrow.fs either way): default POSIX for
-    filesystem/NFS mirrors; an `ObjectStoreBackend` for S3/GCS state
-    dirs, where the commit-point manifest swap is a TRUE CAS on the etag
-    read at merge start — a zombie that slipped past the ownership fence
-    still loses the swap and raises `MirrorLockLost`.
+    The lock, the live manifest and the epoch manifest snapshots go
+    through the backend mounted for `state_dir` (the data parquet is
+    written by the Python workers through pyarrow.fs either way):
+    POSIX for filesystem/NFS mirrors; an `ObjectStoreBackend` for S3/GCS
+    state dirs, where the commit-point manifest swap is a TRUE CAS on
+    the etag read at merge start — a zombie that slipped past the
+    ownership fence still loses the swap and raises `MirrorLockLost`.
 
     `merge_mode` (r9 verdict item 1 — the 100 TB write-amplification
     fix): "cow" (default) rewrites every affected bucket in full per
@@ -1160,7 +1137,7 @@ def merge_mirror_batch(
     # epochs (r6 review).
     _mirror_write(
         spark, state_dir, fold, epoch=epoch, keep_epochs=keep_epochs,
-        lock_ttl_s=lock_ttl_s, backend=backend,
+        lock_ttl_s=lock_ttl_s,
     )
 
 
@@ -1170,7 +1147,6 @@ def compact_mirror(
     min_deltas: int = 1,
     keep_epochs: int | None = None,
     lock_ttl_s: float = _MERGE_LOCK_TTL_S,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> int:
     """Explicit delta-debt compaction — the maintenance half of the
     merge-on-read arm (budget-driven compaction inside `merge_mirror_batch`
@@ -1204,8 +1180,7 @@ def compact_mirror(
         )
 
     _mirror_write(
-        spark, state_dir, fold, keep_epochs=keep_epochs,
-        lock_ttl_s=lock_ttl_s, backend=backend,
+        spark, state_dir, fold, keep_epochs=keep_epochs, lock_ttl_s=lock_ttl_s
     )
     return len(owed)
 
@@ -1213,7 +1188,6 @@ def compact_mirror(
 def mirror_stats(
     spark: SparkSession,
     state_dir: str,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     target_rewrite_bytes: int = 512 << 20,
 ) -> dict:
     """Operational sizing/debt report for a mirror — the input side of
@@ -1233,7 +1207,7 @@ def mirror_stats(
     the bucket tasks write them through, one handle per call) — no Spark
     jobs, no JVM call, no full-state scan; at 100 TB this is a listing of
     n_buckets directories, not a read."""
-    manifest = _read_manifest(state_dir, backend)
+    manifest = _read_manifest(state_dir)
     fs, root = _data_fs(state_dir)
 
     def du(rel_paths: list[str]) -> tuple[int, int]:
@@ -1273,7 +1247,6 @@ def rebucket_mirror(
     factor: int = 2,
     keep_epochs: int | None = None,
     lock_ttl_s: float = _MERGE_LOCK_TTL_S,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> int:
     """ONLINE bucket-count migration, N -> N*factor (r9 verdict item 6):
     a mirror sized for today's state needs more buckets after 100x
@@ -1326,8 +1299,7 @@ def rebucket_mirror(
         return results
 
     return _mirror_write(
-        spark, state_dir, rewrite, keep_epochs=keep_epochs,
-        lock_ttl_s=lock_ttl_s, backend=backend,
+        spark, state_dir, rewrite, keep_epochs=keep_epochs, lock_ttl_s=lock_ttl_s
     )["n_buckets"]
 
 
@@ -1340,7 +1312,6 @@ def mirror_sink(
     keep_epochs: int | None = None,
     transform=None,
     evolve_schema: bool = False,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     dropped_cols=None,
     merge_mode: str = "cow",
     compact_deltas: int = 8,
@@ -1428,18 +1399,23 @@ def mirror_sink(
     if view_state_dir is not None:
         from .agg_view_stream import latest_version, seed_agg_view_from_state
 
-        if latest_version(view_state_dir, backend=backend) is None:
+        if latest_version(view_state_dir) is None:
             # without version 0, the first stream update of a key already
             # in the mirror would retract value the view never credited.
             # Idempotent (recomputes version 0); an empty mirror seeds an
-            # empty view, pinning the minmax-tracking mode either way.
+            # empty view, pinning the minmax-tracking mode either way. A
+            # mirror with no manifest has no pinned row shape to read (its
+            # default `after_val double` may lack the view's column).
+            spark = stream_df.sparkSession
+            manifest = _read_manifest(state_dir)
             seed_agg_view_from_state(
-                read_mirror(stream_df.sparkSession, state_dir, backend),
+                _manifest_df(spark, state_dir, manifest)
+                if manifest["epoch"] >= 0
+                else spark.createDataFrame([], f"`{view_value_col}` double"),
                 view_state_dir,
                 n_groups=view_groups,
                 value_col=view_value_col,
                 track_minmax=view_minmax,
-                backend=backend,
             )
     batch_counter = {"n": 0}
 
@@ -1465,7 +1441,7 @@ def mirror_sink(
                 _spark_epoch + 1,
                 view_state_dir,
                 before_df=lambda: mirror_befores_for(
-                    spark, state_dir, batch_df, view_value_col, backend
+                    spark, state_dir, batch_df, view_value_col
                 ),
                 n_groups=view_groups,
                 value_col=view_value_col,
@@ -1477,7 +1453,7 @@ def mirror_sink(
         merge_mirror_batch(
             batch_df, state_dir, epoch=None, n_buckets=n_buckets,
             value_cols=value_cols, keep_epochs=keep_epochs,
-            evolve_schema=evolve_schema, backend=backend,
+            evolve_schema=evolve_schema,
             dropped_cols=dc, merge_mode=merge_mode,
             compact_deltas=compact_deltas,
         )
@@ -1492,7 +1468,7 @@ def mirror_sink(
                     # grp MUST come from the same value_group the staged
                     # deltas used — a second inline definition could
                     # silently repair the wrong groups (r10 review)
-                    return read_mirror(spark, state_dir, backend).select(
+                    return read_mirror(spark, state_dir).select(
                         value_group(view_groups)(dec).alias("grp"),
                         (dec * 100).cast("long").alias("v_cents"),
                     )
@@ -1503,7 +1479,6 @@ def mirror_sink(
                 view_state_dir,
                 n_groups=view_groups,
                 authoritative=authoritative,
-                backend=backend,
             )
         batch_counter["n"] += 1
         if maintain_every and batch_counter["n"] % maintain_every == 0:
@@ -1518,7 +1493,6 @@ def mirror_sink(
                     state_dir,
                     min_deltas=maintain_min_deltas,
                     target_rewrite_bytes=maintain_target_rewrite_bytes,
-                    backend=backend,
                     on_maintenance=on_maintenance,
                     auto_rebucket=maintain_auto_rebucket,
                 )
@@ -1543,7 +1517,6 @@ def run_mirror_maintenance(
     state_dir: str,
     min_deltas: int = 4,
     target_rewrite_bytes: int = 512 << 20,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     on_maintenance=None,
     auto_rebucket: bool = False,
 ) -> dict:
@@ -1565,8 +1538,7 @@ def run_mirror_maintenance(
     `rebucket_performed` (the new bucket count) and re-read stats."""
     def read_stats() -> dict:
         s = mirror_stats(
-            spark, state_dir, backend,
-            target_rewrite_bytes=target_rewrite_bytes,
+            spark, state_dir, target_rewrite_bytes=target_rewrite_bytes
         )
         s["rebucket_recommended"] = s["suggested_buckets"] > s["n_buckets"]
         return s
@@ -1574,15 +1546,13 @@ def run_mirror_maintenance(
     stats = read_stats()
     debt = stats["delta_debt"]
     if debt and max(debt.values()) >= min_deltas:
-        compact_mirror(spark, state_dir, min_deltas=min_deltas, backend=backend)
+        compact_mirror(spark, state_dir, min_deltas=min_deltas)
         stats = read_stats()
     if auto_rebucket and stats["rebucket_recommended"]:
         factor = 2
         while stats["n_buckets"] * factor < stats["suggested_buckets"]:
             factor *= 2
-        new_n = rebucket_mirror(
-            spark, state_dir, factor=factor, backend=backend
-        )
+        new_n = rebucket_mirror(spark, state_dir, factor=factor)
         stats = read_stats()
         stats["rebucket_performed"] = new_n
     if on_maintenance is not None:
@@ -1597,7 +1567,6 @@ def multi_mirror_sink(
     table_col: str = "tbl",
     n_buckets: int | None = None,
     keep_epochs: int | None = None,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     merge_mode: str = "cow",
     compact_deltas: int = 8,
 ):
@@ -1621,7 +1590,6 @@ def multi_mirror_sink(
                     epoch=None,
                     n_buckets=n_buckets,
                     keep_epochs=keep_epochs,
-                    backend=backend,
                     merge_mode=merge_mode,
                     compact_deltas=compact_deltas,
                 )

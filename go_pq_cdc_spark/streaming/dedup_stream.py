@@ -27,8 +27,8 @@ Failure semantics: pairs are written with dynamic partition overwrite to
 idempotent); the index append is guarded by a per-batch marker under
 `<index>/_batches/` (a retried batch skips the append instead of
 double-inserting band rows). The marker is a COORDINATION object and
-rides the pluggable `ClaimBackend` (r11 — the view state's medium
-split: markers on conditional requests when the
+rides the `ClaimBackend` mounted for the index path (r11 — the view
+state's medium split: markers on conditional requests when the
 index lives on an object store, data via Spark's Hadoop FS); the index
 existence probe goes through the Hadoop FS for the same reason.
 Candidate generation additionally `dropDuplicates` on the pair key, so
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import dedup as D
-from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
+from ..snapshot.claim_backend import backend_for
 from .versioned_state import _fs_list_names
 
 PAIR_SCHEMA = "doc_a bigint, doc_b bigint, jaccard double"
@@ -68,7 +68,6 @@ def dedup_batch_against_index(
     portable: bool = True,
     n_buckets: int = D.MINHASH_INDEX_BUCKETS,
     within_batch: bool = True,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> None:
     """One micro-batch: look up near-dups against the index (plus, by
     default, within the batch itself — new duplicates often arrive
@@ -117,6 +116,7 @@ def dedup_batch_against_index(
         )
         marker_dir = os.path.join(index_path, "_batches")
         marker = os.path.join(marker_dir, f"{int(batch_id)}.json")
+        backend = backend_for(marker_dir)
         # the bare-name probe covers pre-r11 markers (POSIX-only era), so
         # an in-place upgrade's replayed batch still skips its landed
         # append instead of double-inserting band rows (r11 review)

@@ -39,7 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.sketch import mg_partition_summaries
-from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
 from .versioned_state import VersionedState
 
 STATE_SCHEMA = "item string, cnt long"
@@ -58,22 +57,20 @@ def _mg_fold(counts: dict[str, int], capacity: int) -> dict[str, int]:
 def latest_version(
     state_dir: str,
     below: int | None = None,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> int | None:
     """Highest committed state version (meta marker exists — written
     AFTER the parquet, so a crash in between leaves the version
     invisible), optionally restricted to versions < `below` (a retry
     must ignore its own torn previous write of the same version)."""
-    return VersionedState(state_dir, backend).latest_version(below)
+    return VersionedState(state_dir).latest_version(below)
 
 
 def _read_state(
     spark: SparkSession,
     state_dir: str,
     version: int,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> tuple[dict[str, int], int, int]:
-    vs = VersionedState(state_dir, backend)
+    vs = VersionedState(state_dir)
     rows = spark.read.schema(STATE_SCHEMA).parquet(vs.version_dir(version)).collect()
     meta = vs.read_meta(version)
     return (
@@ -89,7 +86,6 @@ def update_heavy_hitter_state(
     state_dir: str,
     value_col: str = "item",
     capacity: int = 128,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> None:
     """foreachBatch body: fold this micro-batch into the persisted MG
     state. Distributed summary pass over the batch, bounded driver-side
@@ -99,7 +95,7 @@ def update_heavy_hitter_state(
     # version above this batch_id means a restarted checkpoint against
     # surviving state — without the guard the restarted folds would be
     # both shadowed by and GC'd under the stale versions (r11 review)
-    VersionedState(state_dir, backend).check_not_shadowed(
+    VersionedState(state_dir).check_not_shadowed(
         batch_id, "heavy-hitter state"
     )
     items = batch_df.select(value_col)
@@ -113,9 +109,9 @@ def update_heavy_hitter_state(
     summaries = [r for r in rows if r["item"] is not None]
     n_batch = sum(r["cnt"] for r in rows if r["item"] is None)
 
-    prev = latest_version(state_dir, below=batch_id, backend=backend)
+    prev = latest_version(state_dir, below=batch_id)
     if prev is not None:
-        counts, n_total, prev_cap = _read_state(spark, state_dir, prev, backend)
+        counts, n_total, prev_cap = _read_state(spark, state_dir, prev)
         if prev_cap != capacity:
             raise ValueError(
                 f"state at {state_dir} was built with capacity {prev_cap}, "
@@ -129,7 +125,7 @@ def update_heavy_hitter_state(
     counts = _mg_fold(counts, capacity)
     n_total += n_batch
 
-    vs = VersionedState(state_dir, backend)
+    vs = VersionedState(state_dir)
     (
         spark.createDataFrame(
             [(i, c) for i, c in sorted(counts.items())], STATE_SCHEMA
@@ -149,19 +145,18 @@ def heavy_hitter_candidates(
     spark: SparkSession,
     state_dir: str,
     phi: float,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame:
     """Candidate phi-heavy hitters from the current state with count
     bounds: true count is within [cnt_lower, cnt_upper] (MG guarantee),
     so any item whose UPPER bound clears phi*n_total is a candidate and
     no true heavy hitter is missing. Returns
     (item, cnt_lower, cnt_upper, n_total)."""
-    ver = latest_version(state_dir, backend=backend)
+    ver = latest_version(state_dir)
     if ver is None:
         return spark.createDataFrame(
             [], "item string, cnt_lower long, cnt_upper long, n_total long"
         )
-    counts, n_total, capacity = _read_state(spark, state_dir, ver, backend)
+    counts, n_total, capacity = _read_state(spark, state_dir, ver)
     err = n_total // (capacity + 1)
     rows = [
         (i, c, c + err, n_total)

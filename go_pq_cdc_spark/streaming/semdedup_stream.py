@@ -19,8 +19,8 @@ cell scan, which scales with the CELL mass the batch touches, not |I|.
 Failure semantics (same discipline as dedup_stream): pairs land in
 `pairs_dir/batch_id=N` with dynamic partition overwrite (a retried batch
 rewrites its own partition); the index append is guarded by a per-batch
-marker under `<index>/_batches/` riding the pluggable `ClaimBackend`
-(r11 — markers are coordination objects; the existence probe goes
+marker under `<index>/_batches/` riding the `ClaimBackend` mounted
+for the index path (r11 — markers are coordination objects; the existence probe goes
 through Spark's Hadoop FS). Retried lookups stay idempotent
 because index rows matching the batch on (id AND vector) — the retried
 batch's own already-landed append, or an unchanged re-ingest — are
@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions import portable as P
 from ..operators.similarity import IVF_INDEX_SCHEMA, ivf_assign
-from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
+from ..snapshot.claim_backend import backend_for
 
 SEM_PAIR_SCHEMA = "vec_id bigint, dup_of bigint, cos_sim double"
 
@@ -59,7 +59,6 @@ def semdedup_batch_against_index(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     within_batch: bool = True,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> None:
     """One micro-batch: assign to cells, find cos >= threshold pairs
     against the pruned index cells (plus, by default, within the batch —
@@ -162,6 +161,7 @@ def semdedup_batch_against_index(
         )
         marker_dir = os.path.join(index_path, "_batches")
         marker = os.path.join(marker_dir, f"{int(batch_id)}.json")
+        backend = backend_for(marker_dir)
         # bare-name probe covers pre-r11 POSIX-era markers (r11 review —
         # see dedup_stream)
         if backend.exists(marker) or os.path.exists(

@@ -17,7 +17,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
 from .versioned_state import VersionedState
 
 
@@ -30,7 +29,6 @@ def update_sketch_state(
     meta: dict,
     meta_check: Callable[[dict], None],
     what: str = "sketch state",
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> None:
     """Fold one micro-batch's sketch cells into the persisted state:
     union with the previous committed version (declared `schema` read),
@@ -38,7 +36,7 @@ def update_sketch_state(
     `meta_check(prev_meta)` raises when the committed state's geometry
     is incompatible with this fold's."""
     spark = batch_cells.sparkSession
-    vs = VersionedState(state_dir, backend)
+    vs = VersionedState(state_dir)
     vs.check_not_shadowed(batch_id, what)
     prev = vs.latest_version(below=batch_id)
     cells = batch_cells
@@ -58,11 +56,10 @@ def read_sketch_state(
     spark: SparkSession,
     state_dir: str,
     schema: str,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame | None:
     """The latest committed state (declared-schema read), or None when
     nothing has committed yet."""
-    vs = VersionedState(state_dir, backend)
+    vs = VersionedState(state_dir)
     ver = vs.latest_version()
     if ver is None:
         return None
@@ -80,7 +77,6 @@ def update_hll_view_state(
     state_dir: str,
     group_col: str,
     value_col: str,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> None:
     """foreachBatch body of the incremental DISTINCT-COUNT view: fold the
     batch's (group, value) rows into per-group HLL registers by
@@ -121,14 +117,12 @@ def update_hll_view_state(
         {"hll_m": HLL_M, "batch_id": batch_id},
         check,
         what="hll view state",
-        backend=backend,
     )
 
 
 def read_hll_view(
     spark: SparkSession,
     state_dir: str,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame:
     """(grp, est_distinct, n_buckets) from the committed register state —
     the same estimator as the batch q_hll_* queries, so a folded stream
@@ -136,7 +130,7 @@ def read_hll_view(
     oracle. Empty frame when nothing committed."""
     from ..operators.sketch import hll_estimate
 
-    st = read_sketch_state(spark, state_dir, HLL_STATE_SCHEMA, backend)
+    st = read_sketch_state(spark, state_dir, HLL_STATE_SCHEMA)
     if st is None:
         return spark.createDataFrame(
             [], "grp bigint, est_distinct double, n_buckets bigint"

@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.cdc import agg_view_deltas, value_group
-from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
 from .agg_view_stream import _check_group_ceiling, latest_version
 from .versioned_state import VersionedState
 
@@ -55,12 +54,11 @@ def _read_state(
     spark: SparkSession,
     state_dir: str,
     version: int,
-    backend: ClaimBackend = DEFAULT_BACKEND,
     meta: dict | None = None,
 ):
     """Pass a pre-read `meta` to avoid a second backend GET per fold —
     the ceiling pre-check already read it (r12 review)."""
-    vs = VersionedState(state_dir, backend)
+    vs = VersionedState(state_dir)
     rows = spark.read.schema(STATE_SCHEMA).parquet(vs.version_dir(version)).collect()
     if meta is None:
         meta = vs.read_meta(version)
@@ -84,7 +82,6 @@ def update_topk_view_state(
     n_groups: int = 8,
     before_col: str = "before_val",
     after_col: str = "after_val",
-    backend: ClaimBackend = DEFAULT_BACKEND,
     max_groups: int = 50_000,
 ) -> None:
     """foreachBatch body. `authoritative` is REQUIRED (unlike the sum
@@ -160,19 +157,19 @@ def update_topk_view_state(
     # be shadowed by the stale higher version (r10 advisor)
     from .agg_view_stream import _check_not_shadowed
 
-    _check_not_shadowed(state_dir, batch_id, backend)
-    prev = latest_version(state_dir, below=batch_id, backend=backend)
+    _check_not_shadowed(state_dir, batch_id)
+    prev = latest_version(state_dir, below=batch_id)
     repairs = 0
     if prev is not None:
         # refuse BEFORE the state collect when the persisted meta already
         # proves the ceiling is blown (a state written under a larger
         # max_groups, re-opened under a smaller one); the meta read here
         # is reused by _read_state — one GET per fold
-        meta = VersionedState(state_dir, backend).read_meta(prev)
+        meta = VersionedState(state_dir).read_meta(prev)
         _check_group_ceiling(
             int(meta.get("groups", 0)), max_groups, state_dir, "state"
         )
-        state, meta = _read_state(spark, state_dir, prev, backend, meta=meta)
+        state, meta = _read_state(spark, state_dir, prev, meta=meta)
         if meta["k"] != k or meta["n_groups"] != n_groups:
             raise ValueError(
                 f"state at {state_dir} was built with k={meta['k']} "
@@ -290,7 +287,7 @@ def update_topk_view_state(
             state[g] = (sorted(fixed[g], reverse=True), n_keys)
 
     _check_group_ceiling(len(state), max_groups, state_dir, "state")
-    vs = VersionedState(state_dir, backend)
+    vs = VersionedState(state_dir)
     out = [
         (g, i + 1, pk, v, n_keys)
         for g, (pairs, n_keys) in sorted(state.items())
@@ -315,15 +312,14 @@ def update_topk_view_state(
 def read_topk_view(
     spark: SparkSession,
     state_dir: str,
-    backend: ClaimBackend = DEFAULT_BACKEND,
 ) -> DataFrame:
     """Current top-k: (grp, rnk, pk, val), rnk 1..k per group."""
-    ver = latest_version(state_dir, backend=backend)
+    ver = latest_version(state_dir)
     if ver is None:
         return spark.createDataFrame(
             [], "grp long, rnk int, pk long, val double"
         )
-    vs = VersionedState(state_dir, backend)
+    vs = VersionedState(state_dir)
     k = int(vs.read_meta(ver)["k"])
     return (
         spark.read.schema(STATE_SCHEMA)

@@ -8,16 +8,17 @@ Layout under `state_dir`:
     meta/v{N:012d}.json   commit marker + metadata     (ClaimBackend)
 
 Media split: coordination objects — the meta markers that define which
-versions EXIST — ride the pluggable `snapshot.claim_backend.ClaimBackend`,
-so a state_dir on S3/GCS coordinates through conditional requests with no
-POSIX anywhere; the parquet DATA is written and read by Spark, so it is
-also listed and GC'd through Spark's own Hadoop filesystem (`_hadoop_fs`
-and the two helpers below it, shared with the aggregate view's staged
-deltas and the dedup index probe), which resolves file://, s3a:// and
-gs:// with the session's credentials. The default `PosixLinkBackend`
-keeps everything on the local filesystem. (The mirror's bucket dirs are
-written by Python workers through pyarrow.fs and are listed and deleted
-through that layer instead — `streaming.changelog_stream`.)
+versions EXIST — ride the `snapshot.claim_backend.ClaimBackend` mounted
+for the state_dir (`backend_for`), so a state_dir on S3/GCS coordinates
+through conditional requests with no POSIX anywhere; the parquet DATA
+is written and read by Spark, so it is also listed and GC'd through
+Spark's own Hadoop filesystem (`_hadoop_fs` and the two helpers below
+it, shared with the aggregate view's staged deltas and the dedup index
+probe), which resolves file://, s3a:// and gs:// with the session's
+credentials. An unmounted local state_dir gets `PosixLinkBackend` and
+keeps everything on the local filesystem. (The mirror's bucket dirs
+are written by Python workers through pyarrow.fs and are listed and
+deleted through that layer instead — `streaming.changelog_stream`.)
 
 Commit protocol: the meta object is PUT strictly AFTER the version's
 parquet write returns, and a version is committed IFF its meta exists.
@@ -40,7 +41,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from ..snapshot.claim_backend import DEFAULT_BACKEND, ClaimBackend
+from ..snapshot.claim_backend import backend_for
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -69,11 +70,12 @@ LEGACY_META_NAMES = ("_view_meta.json", "_hh_meta.json")
 
 
 class VersionedState:
-    """Versioned state rooted at `state_dir`, coordinated via `backend`."""
+    """Versioned state rooted at `state_dir`, coordinated via the backend
+    mounted for it."""
 
-    def __init__(self, state_dir: str, backend: ClaimBackend = DEFAULT_BACKEND):
+    def __init__(self, state_dir: str):
         self.state_dir = state_dir
-        self.backend = backend
+        self.backend = backend_for(state_dir)
 
     # -- paths ----------------------------------------------------------
     def version_dir(self, version: int) -> str:

@@ -22,6 +22,24 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def mount_backend():
+    """`claim_backend.mount(root, backend)` for one test: returns the
+    backend, and every mount it made is removed when the test ends."""
+    from go_pq_cdc_spark.snapshot.claim_backend import mount
+
+    roots: list[str] = []
+
+    def _mount(root, backend):
+        mount(root, backend)
+        roots.append(root)
+        return backend
+
+    yield _mount
+    for root in roots:
+        mount(root, None)
+
+
 @pytest.fixture(scope="session")
 def ddb():
     con = duckdb.connect()

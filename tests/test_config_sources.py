@@ -141,12 +141,6 @@ class TestReplicaIdentity:
         with pytest.raises(ConfigError, match="only be set"):
             TableConfig("users", replica_identity_index="users_ux").validate()
 
-    def test_state_probe_sql(self):
-        sql = PG.replica_identity_state_sql([TableConfig("users"), TableConfig("orders")])
-        assert "c.relreplident" in sql
-        assert "i.indisreplident" in sql
-        assert "IN ('public.users', 'public.orders')" in sql
-
 
 class TestPostgresSQL:
     def test_publication_sql(self):

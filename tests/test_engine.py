@@ -1006,9 +1006,9 @@ def test_cooperative_seed_resumes_partial_queue(spark, tmp_path):
 
 
 def test_start_checks_inputs_before_any_ddl(spark, tmp_path):
-    """A bad transport, a typed transport without `table=`, and an
-    unknown or clashing mirror option all raise before the first
-    statement reaches the server."""
+    """A bad transport, a typed transport without `table=`, an unmounted
+    URI state dir, and an unknown or clashing mirror option all raise
+    before the first statement reaches the server."""
     import pytest
 
     from go_pq_cdc_spark.snapshot.claim_backend import DEFAULT_BACKEND
@@ -1030,6 +1030,7 @@ def test_start_checks_inputs_before_any_ddl(spark, tmp_path):
         (ValueError, "requires table=", {"transport": "envelope"}),
         (TypeError, "mirror_buckets", {"mirror_buckets": 8}),
         (TypeError, "backend", {"backend": DEFAULT_BACKEND}),
+        (TypeError, "claim_backend", {"claim_backend": DEFAULT_BACKEND}),
         (TypeError, "value_cols", {"value_cols": ("after_val",)}),
     ]
     for exc, match, kw in bad:
@@ -1037,6 +1038,68 @@ def test_start_checks_inputs_before_any_ddl(spark, tmp_path):
             eng.start(*args, chunk_reader=reader, **kw)
         assert executed == [], kw
     assert not (tmp_path / "state").exists()
+    with pytest.raises(ValueError, match="mount"):
+        eng.start(run_sql, args[1], "s3a://unmounted/state", args[3],
+                  chunk_reader=reader)
+    assert executed == []
+
+
+def test_start_view_over_fresh_multi_column_mirror(spark, tmp_path):
+    """snapshot_mode="never" with a view on one column of a multi-column
+    value schema: the mirror has no manifest when the sink starts, so
+    view version 0 is seeded empty instead of being read through the
+    default `after_val double` row shape, which has no `qty`."""
+    import datetime
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from go_pq_cdc_spark.streaming.agg_view_stream import read_agg_view
+
+    eng = CdcEngine(
+        EngineConfig(
+            tables=[TableConfig("users"), TableConfig("cdc_heartbeat")],
+            snapshot_mode="never",
+        ),
+        spark,
+    )
+
+    def run_sql(sql):
+        return [("0/14",)] if "pg_current_wal_lsn" in sql else []  # LSN 20
+
+    wal_dir = tmp_path / "wal"
+    wal_dir.mkdir()
+    ts = datetime.datetime(2024, 1, 1)
+    pdf = pd.DataFrame(
+        [("I", 25, 2, ts, 10, "a", 9.75), ("I", 30, 3, ts, 30, "b", 12.60)],
+        columns=["op", "lsn", "xid", "commit_ts", "pk", "name", "qty"],
+    )
+    pq.write_table(
+        pa.Table.from_pandas(pdf, preserve_index=False),
+        str(wal_dir / "seg.parquet"),
+        coerce_timestamps="us",
+    )
+    view_dir = str(tmp_path / "view")
+    _, q = eng.start(
+        run_sql,
+        str(wal_dir),
+        str(tmp_path / "state"),
+        str(tmp_path / "ckpt"),
+        value_schema="name string, qty double",
+        view_state_dir=view_dir,
+        view_value_col="qty",
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {
+        r["grp"]: (r["n_keys"], r["sum_val"])
+        for r in read_agg_view(spark, view_dir).collect()
+    }
+    # floor(9.75) % 8 = 1, floor(12.60) % 8 = 4
+    assert got == {1: (1, 9.75), 4: (1, 12.60)}
 
 
 def test_start_seeds_only_the_mirrored_table(spark, tmp_path):

@@ -323,22 +323,19 @@ def test_schema_evolution_and_drop_over_delta_arm(spark, tmp_path):
     assert (row["name"], row["qty"], row["note"]) == ("a", 7, None)
 
 
-def test_delta_arm_on_object_store_backend(spark, tmp_path):
+def test_delta_arm_on_object_store_backend(spark, tmp_path, mount_backend):
     """Coordination parity: the delta manifest fields ride the same
     ClaimBackend CAS commit as COW (FakeObjectStore enforces real etag
     semantics), and the data dirs stay Spark-filesystem."""
-    store = FakeObjectStore()
-    backend = ObjectStoreBackend(store)
     d = str(tmp_path / "m")
+    mount_backend(d, ObjectStoreBackend(FakeObjectStore()))
     for rows in _LOG:
-        merge_mirror_batch(
-            _batch(spark, rows), d, merge_mode="delta", backend=backend
-        )
+        merge_mirror_batch(_batch(spark, rows), d, merge_mode="delta")
     assert {
         r["pk"]: (r["after_val"], r["lsn"])
-        for r in read_mirror(spark, d, backend=backend).collect()
+        for r in read_mirror(spark, d).collect()
     } == _LOG_FINAL
-    m = _read_manifest(d, backend)
+    m = _read_manifest(d)
     assert any(m.get("deltas", {}).values())
 
 

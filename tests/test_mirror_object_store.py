@@ -44,8 +44,10 @@ pytestmark = pytest.mark.slow
 
 
 @pytest.fixture()
-def be():
-    return ObjectStoreBackend(FakeObjectStore())
+def be(mount_backend, tmp_path):
+    """A fake store mounted at the test's tmp root: every mirror under it
+    coordinates through the store, with no backend argument anywhere."""
+    return mount_backend(str(tmp_path), ObjectStoreBackend(FakeObjectStore()))
 
 
 def _ev(op, lsn, xid, pk, val):
@@ -71,22 +73,20 @@ def test_merge_and_reads_over_object_store(spark, tmp_path, be):
     merge_mirror_batch(
         _batch(spark, [_ev("I", i, 1, i, float(i)) for i in range(1, 9)]),
         state,
-        backend=be,
     )
     merge_mirror_batch(
         _batch(spark, [_ev("U", 20, 2, 3, 33.0), _ev("D", 21, 2, 5, None)]),
         state,
-        backend=be,
     )
     got = {
         r["pk"]: r["after_val"]
-        for r in read_mirror(spark, state, backend=be).collect()
+        for r in read_mirror(spark, state).collect()
     }
     assert got == {1: 1.0, 2: 2.0, 3: 33.0, 4: 4.0, 6: 6.0, 7: 7.0, 8: 8.0}
     # bucket-pruned lookup through the store-held manifest
     assert {
         r["pk"]: r["after_val"]
-        for r in lookup_mirror(spark, state, [3, 5, 8], backend=be).collect()
+        for r in lookup_mirror(spark, state, [3, 5, 8]).collect()
     } == {3: 33.0, 8: 8.0}
     # coordination lives in the store...
     keys = set(be.client.objects)
@@ -106,24 +106,24 @@ def test_time_travel_and_gc_over_object_store(spark, tmp_path, be):
     epoch dirs from the data filesystem."""
     state = str(tmp_path / "state")
     merge_mirror_batch(
-        _batch(spark, [_ev("I", 1, 1, 1, 1.0)]), state, backend=be,
+        _batch(spark, [_ev("I", 1, 1, 1, 1.0)]), state,
         keep_epochs=2,
     )
     merge_mirror_batch(
-        _batch(spark, [_ev("U", 2, 2, 1, 2.0)]), state, backend=be
+        _batch(spark, [_ev("U", 2, 2, 1, 2.0)]), state
     )
     merge_mirror_batch(
-        _batch(spark, [_ev("U", 3, 3, 1, 3.0)]), state, backend=be
+        _batch(spark, [_ev("U", 3, 3, 1, 3.0)]), state
     )
     as_of = {
         e: {r["pk"]: r["after_val"]
-            for r in read_mirror_as_of(spark, state, e, backend=be).collect()}
+            for r in read_mirror_as_of(spark, state, e).collect()}
         for e in (1, 2)
     }
     assert as_of == {1: {1: 2.0}, 2: {1: 3.0}}
     # epoch 0 aged out of the retention window (store-side delete)
     with pytest.raises(ValueError, match="not retained"):
-        read_mirror_as_of(spark, state, 0, backend=be)
+        read_mirror_as_of(spark, state, 0)
     snaps = sorted(k for k in be.client.objects if "/manifests/e" in k)
     assert [s.rsplit("/", 1)[1] for s in snaps] == [
         "e000000001.json", "e000000002.json",
@@ -131,7 +131,7 @@ def test_time_travel_and_gc_over_object_store(spark, tmp_path, be):
     # GC removed the data dirs no retained manifest references
     live = set()
     for e in (1, 2):
-        m, _ = _read_manifest_versioned(state, be)
+        m, _ = _read_manifest_versioned(state)
     m1, _ = be.read(f"{state}/manifests/e000000001.json")
     m2, _ = be.read(f"{state}/manifests/e000000002.json")
     live = {v for m in (m1, m2) for v in m["buckets"].values()}
@@ -151,12 +151,12 @@ def test_lock_loss_aborts_before_commit(spark, tmp_path, be):
     survive, the loser's epoch dir is an unreferenced orphan."""
     state = str(tmp_path / "state")
     merge_mirror_batch(
-        _batch(spark, [_ev("I", 1, 1, 1, 1.0)]), state, backend=be
+        _batch(spark, [_ev("I", 1, 1, 1, 1.0)]), state
     )
     # zombie takes the lock, then a peer steals it (TTL 0 -> stale at once)
-    zombie = _MergeLock(state, ttl_s=3600, backend=be)
+    zombie = _MergeLock(state, ttl_s=3600)
     zombie.acquire()
-    peer = _MergeLock(state, ttl_s=0.0, backend=be)
+    peer = _MergeLock(state, ttl_s=0.0)
     peer.acquire()
     with pytest.raises(MirrorLockLost):
         zombie.check_owned()
@@ -166,10 +166,10 @@ def test_lock_loss_aborts_before_commit(spark, tmp_path, be):
     peer.release()
     # and the mirror still merges normally afterwards
     merge_mirror_batch(
-        _batch(spark, [_ev("U", 2, 2, 1, 9.0)]), state, backend=be
+        _batch(spark, [_ev("U", 2, 2, 1, 9.0)]), state
     )
     assert {
-        r["after_val"] for r in read_mirror(spark, state, backend=be).collect()
+        r["after_val"] for r in read_mirror(spark, state).collect()
     } == {9.0}
 
 
@@ -185,7 +185,7 @@ def test_zombie_past_fence_loses_manifest_cas(spark, tmp_path, be, monkeypatch):
     # dirs — the zombie must reach its COMMIT point (not die early on a
     # GC'd input path) for this test to prove the CAS specifically
     merge_mirror_batch(
-        _batch(spark, [_ev("I", 1, 1, 1, 1.0)]), state, backend=be,
+        _batch(spark, [_ev("I", 1, 1, 1, 1.0)]), state,
         keep_epochs=2,
     )
 
@@ -201,13 +201,12 @@ def test_zombie_past_fence_loses_manifest_cas(spark, tmp_path, be, monkeypatch):
             and in_zombie_merge["active"]
         ):
             # between the zombie's manifest read and its commit, a peer
-            # commits a full merge (its own backend view, same store)
+            # commits a full merge (same store)
             fired["done"] = True
             in_zombie_merge["active"] = False
             merge_mirror_batch(
                 _batch(spark, [_ev("U", 5, 5, 1, 55.0)]),
                 state,
-                backend=ObjectStoreBackend(be.client),
                 lock_ttl_s=0.0,  # steals the zombie's (stale-judged) lock
             )
         return doc, etag
@@ -222,11 +221,11 @@ def test_zombie_past_fence_loses_manifest_cas(spark, tmp_path, be, monkeypatch):
         # peer") or, had it slipped past that too, at the manifest CAS —
         # either way BEFORE touching committed state
         merge_mirror_batch(
-            _batch(spark, [_ev("U", 9, 9, 1, 99.0)]), state, backend=be
+            _batch(spark, [_ev("U", 9, 9, 1, 99.0)]), state
         )
     # the peer's commit is intact; the zombie's value never landed
     live = {
-        r["after_val"] for r in read_mirror(spark, state, backend=be).collect()
+        r["after_val"] for r in read_mirror(spark, state).collect()
     }
     assert live == {55.0}
     # and the peer's EPOCH SNAPSHOT is intact too (review r9: the zombie's
@@ -237,7 +236,7 @@ def test_zombie_past_fence_loses_manifest_cas(spark, tmp_path, be, monkeypatch):
     assert snap == m
     assert {
         r["after_val"]
-        for r in read_mirror_as_of(spark, state, m["epoch"], backend=be).collect()
+        for r in read_mirror_as_of(spark, state, m["epoch"]).collect()
     } == {55.0}
 
 
@@ -247,14 +246,14 @@ def test_heartbeat_cannot_reinstall_after_takeover(be, tmp_path):
     store the refresh is an etag CAS: once the peer swapped, the old
     holder's swap (with its stale etag) returns False."""
     state = str(tmp_path / "state")
-    a = _MergeLock(state, ttl_s=3600, backend=be)
+    a = _MergeLock(state, ttl_s=3600)
     a.acquire()
     path = a.path
     # a's beat reads the doc (this is where the pause happens)...
     doc_a, etag_a = be.read(path)
     assert doc_a["owner"] == a.owner
     # ...peer takes over meanwhile
-    b = _MergeLock(state, ttl_s=0.0, backend=be)
+    b = _MergeLock(state, ttl_s=0.0)
     b.acquire()
     # ...a resumes its beat: the CAS with the pre-takeover etag must fail
     assert be.swap(path, doc_a, etag_a) is False
@@ -273,7 +272,7 @@ def test_crash_orphan_snapshot_is_replaced_on_retry(spark, tmp_path, be):
     orphan as a peer's commit)."""
     state = str(tmp_path / "state")
     merge_mirror_batch(
-        _batch(spark, [_ev("I", 1, 1, 1, 1.0)]), state, backend=be
+        _batch(spark, [_ev("I", 1, 1, 1, 1.0)]), state
     )
     # fabricate the crash artifact: epoch 1's snapshot exists with stale
     # content while the live manifest is still at epoch 0
@@ -283,14 +282,14 @@ def test_crash_orphan_snapshot_is_replaced_on_retry(spark, tmp_path, be):
     assert be.put_if_absent(f"{state}/manifests/e000000001.json", orphan)
 
     merge_mirror_batch(
-        _batch(spark, [_ev("U", 2, 2, 1, 2.0)]), state, backend=be
+        _batch(spark, [_ev("U", 2, 2, 1, 2.0)]), state
     )
     m2, _ = be.read(f"{state}/manifest.json")
     assert m2["epoch"] == 1
     snap, _ = be.read(f"{state}/manifests/e000000001.json")
     assert snap == m2  # the orphan was replaced by the committed manifest
     assert {
-        r["after_val"] for r in read_mirror(spark, state, backend=be).collect()
+        r["after_val"] for r in read_mirror(spark, state).collect()
     } == {2.0}
 
 
@@ -328,9 +327,7 @@ def test_streaming_mirror_sink_over_object_store(spark, tmp_path, be):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = mirror_sink(
-        stream, state, str(tmp_path / "ck"), backend=be
-    )
+    q = mirror_sink(stream, state, str(tmp_path / "ck"))
     try:
         q.processAllAvailable()
         write_batch([_ev("U", 3, 2, 1, 11.0), _ev("D", 4, 2, 2, None)],
@@ -340,8 +337,42 @@ def test_streaming_mirror_sink_over_object_store(spark, tmp_path, be):
         q.stop()
     assert {
         r["pk"]: r["after_val"]
-        for r in read_mirror(spark, state, backend=be).collect()
+        for r in read_mirror(spark, state).collect()
     } == {1: 11.0}
     m, _ = be.read(f"{state}/manifest.json")
     assert m["epoch"] >= 1
     assert not os.path.exists(os.path.join(state, "manifest.json"))
+
+
+def test_mounted_root_reads_need_no_backend_argument(spark, tmp_path, be):
+    """A mirror written through a mounted object store is read back by
+    calls that name no backend: the engine's `current_state` and
+    `lookup`, time travel and `mirror_stats` each resolve the store from
+    the path. A read that fell back to POSIX would find no manifest.json
+    and serve an empty mirror without an error."""
+    from go_pq_cdc_spark.config import EngineConfig, TableConfig
+    from go_pq_cdc_spark.engine import CdcEngine
+    from go_pq_cdc_spark.streaming.changelog_stream import mirror_stats
+
+    state = str(tmp_path / "state")
+    merge_mirror_batch(
+        _batch(spark, [_ev("I", i, 1, i, float(i)) for i in range(1, 6)]),
+        state,
+        keep_epochs=2,
+    )
+    assert f"{state}/manifest.json" in be.client.objects
+    assert not os.path.exists(os.path.join(state, "manifest.json"))
+    eng = CdcEngine(
+        EngineConfig(tables=[TableConfig("users"), TableConfig("cdc_heartbeat")]),
+        spark,
+    )
+    want = {i: float(i) for i in range(1, 6)}
+
+    def rows(df):
+        return {r["pk"]: r["after_val"] for r in df.collect()}
+
+    assert rows(eng.current_state(state)) == want
+    assert rows(eng.lookup(state, [2, 4, 9])) == {2: 2.0, 4: 4.0}
+    assert rows(read_mirror_as_of(spark, state, 0)) == want
+    stats = mirror_stats(spark, state)
+    assert stats["epoch"] == 0 and stats["base_files"] > 0

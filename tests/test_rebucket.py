@@ -48,11 +48,8 @@ def _batch(spark, rows):
     return spark.createDataFrame(rows, FLAT_CHANGE_SCHEMA)
 
 
-def _state(spark, d, backend=None):
-    kw = {"backend": backend} if backend is not None else {}
-    return {
-        r["pk"]: r["after_val"] for r in read_mirror(spark, d, **kw).collect()
-    }
+def _state(spark, d):
+    return {r["pk"]: r["after_val"] for r in read_mirror(spark, d).collect()}
 
 
 def test_rebucket_doubles_preserves_state_and_lookup(spark, tmp_path):
@@ -129,17 +126,16 @@ def test_rebucket_time_travel_across_epoch(spark, tmp_path):
     assert _state(spark, d) == {1: 2.0, 2: 6.0}
 
 
-def test_rebucket_zombie_loses_manifest_cas(spark, tmp_path, monkeypatch):
+def test_rebucket_zombie_loses_manifest_cas(
+    spark, tmp_path, monkeypatch, mount_backend
+):
     """A rebucket racing a merge either queues on the lock (normal) or —
     as a fence-bypassing zombie — loses the manifest CAS at the commit
     point: the peer merge's state survives, the zombie's full-rewrite
     epoch dir is an unreferenced orphan."""
-    store = FakeObjectStore()
-    be = ObjectStoreBackend(store)
     d = str(tmp_path / "m")
-    merge_mirror_batch(
-        _batch(spark, [_ev("I", 1, 1, 1, 1.0)]), d, backend=be, keep_epochs=2
-    )
+    be = mount_backend(d, ObjectStoreBackend(FakeObjectStore()))
+    merge_mirror_batch(_batch(spark, [_ev("I", 1, 1, 1, 1.0)]), d, keep_epochs=2)
 
     fired = {"done": False}
     in_rebucket = {"active": False}
@@ -154,13 +150,12 @@ def test_rebucket_zombie_loses_manifest_cas(spark, tmp_path, monkeypatch):
             and doc is not None
         ):
             # between the rebucket's manifest read and its commit, a
-            # peer merge commits through its own backend view
+            # peer merge commits through the same store
             fired["done"] = True
             in_rebucket["active"] = False
             merge_mirror_batch(
                 _batch(spark, [_ev("U", 5, 5, 1, 55.0)]),
                 d,
-                backend=ObjectStoreBackend(store),
                 lock_ttl_s=0.0,
             )
         return doc, etag
@@ -169,9 +164,9 @@ def test_rebucket_zombie_loses_manifest_cas(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(_MergeLock, "check_owned", lambda self: None)
     in_rebucket["active"] = True
     with pytest.raises(MirrorLockLost):
-        rebucket_mirror(spark, d, backend=be)
+        rebucket_mirror(spark, d)
     # peer's merge intact, bucket count unchanged
-    assert _state(spark, d, backend=be) == {1: 55.0}
+    assert _state(spark, d) == {1: 55.0}
     m, _ = be.read(f"{d}/manifest.json")
     assert m["n_buckets"] == 32
 

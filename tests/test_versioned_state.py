@@ -27,6 +27,7 @@ from hypothesis import given, settings, strategies as st
 from go_pq_cdc_spark.snapshot.claim_backend import (
     FakeObjectStore,
     ObjectStoreBackend,
+    mount,
 )
 from go_pq_cdc_spark.streaming.versioned_state import VersionedState
 
@@ -54,10 +55,10 @@ def _mk_backend(kind):
 @given(steps=st.lists(_STEP, min_size=1, max_size=12))
 @settings(max_examples=40, deadline=None)
 def test_versioned_state_protocol_model(spark, kind, steps):
-    backend = _mk_backend(kind)
     root = tempfile.mkdtemp(prefix="vs_prop_")
+    mount(root, _mk_backend(kind))
     try:
-        vs = VersionedState(root, backend)
+        vs = VersionedState(root)
         committed: list[int] = []  # model: committed ids, ascending
         batch = 0
         for inc, action in steps:
@@ -100,6 +101,7 @@ def test_versioned_state_protocol_model(spark, kind, steps):
                 if e.startswith("v") and e[1:].isdigit():
                     assert int(e[1:]) >= cutoff, f"unswept dir {e}"
     finally:
+        mount(root, None)
         shutil.rmtree(root, ignore_errors=True)
 
 

@@ -14,6 +14,7 @@ shadow-guard / GC behaviors are identical to the POSIX arm.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -21,6 +22,8 @@ import pytest
 from go_pq_cdc_spark.snapshot.claim_backend import (
     FakeObjectStore,
     ObjectStoreBackend,
+    PosixLinkBackend,
+    mount,
 )
 from go_pq_cdc_spark.streaming.agg_view_stream import (
     latest_version,
@@ -51,8 +54,20 @@ def store():
 
 
 @pytest.fixture()
-def be(store):
-    return ObjectStoreBackend(store)
+def be(store, mount_backend, tmp_path):
+    """The store, mounted at the test's tmp root."""
+    return mount_backend(str(tmp_path), ObjectStoreBackend(store))
+
+
+@contextlib.contextmanager
+def _posix_arm(state_dir: str):
+    """Resolve `state_dir` to the POSIX backend inside the block: a mount
+    at the dir itself is longer than the store's mount at the tmp root."""
+    mount(state_dir, PosixLinkBackend())
+    try:
+        yield
+    finally:
+        mount(state_dir, None)
 
 
 def _no_local_meta(state_dir: str) -> None:
@@ -69,38 +84,39 @@ def test_agg_view_over_object_store(spark, tmp_path, store, be):
     b1 = [(1, "I", None, 10.00), (2, "I", None, 20.00), (3, "I", None, 21.00)]
     b2 = [(2, "U", 20.00, 12.00), (3, "D", 21.00, None)]
     update_agg_view_state(
-        spark.createDataFrame(b1, _BATCH_SCHEMA), 1, state, backend=be
+        spark.createDataFrame(b1, _BATCH_SCHEMA), 1, state
     )
     update_agg_view_state(
-        spark.createDataFrame(b2, _BATCH_SCHEMA), 2, state, backend=be
+        spark.createDataFrame(b2, _BATCH_SCHEMA), 2, state
     )
     got = {
         r["grp"]: (r["n_keys"], r["sum_val"])
-        for r in read_agg_view(spark, state, backend=be).collect()
+        for r in read_agg_view(spark, state).collect()
     }
     # live: pk1=10.00 (grp 2), pk2=12.00 (grp 4); pk3 deleted
     assert got == {2: (1, 10.0), 4: (1, 12.0)}
-    assert latest_version(state, backend=be) == 2
+    assert latest_version(state) == 2
     # POSIX arm sees NO committed versions (metas are store-only), and no
     # coordination file ever landed on local disk
-    assert latest_version(state) is None
+    with _posix_arm(state):
+        assert latest_version(state) is None
     _no_local_meta(state)
     assert any("meta/v" in k for k in store.objects)
 
     # retry of batch 2 recomputes from v1 and overwrites — same result
     update_agg_view_state(
-        spark.createDataFrame(b2, _BATCH_SCHEMA), 2, state, backend=be
+        spark.createDataFrame(b2, _BATCH_SCHEMA), 2, state
     )
     again = {
         r["grp"]: (r["n_keys"], r["sum_val"])
-        for r in read_agg_view(spark, state, backend=be).collect()
+        for r in read_agg_view(spark, state).collect()
     }
     assert again == got
 
     # checkpoint-restart shadow guard fires through the backend too
     with pytest.raises(RuntimeError, match="stale"):
         update_agg_view_state(
-            spark.createDataFrame(b1, _BATCH_SCHEMA), 1, state, backend=be
+            spark.createDataFrame(b1, _BATCH_SCHEMA), 1, state
         )
 
 
@@ -109,7 +125,7 @@ def test_agg_view_gc_keeps_two_versions(spark, tmp_path, store, be):
     for i in range(1, 5):
         batch = [(100 + i, "I", None, float(i))]
         update_agg_view_state(
-            spark.createDataFrame(batch, _BATCH_SCHEMA), i, state, backend=be
+            spark.createDataFrame(batch, _BATCH_SCHEMA), i, state
         )
     metas = sorted(k for k in store.objects if "meta/v" in k)
     assert len(metas) == 2
@@ -119,7 +135,7 @@ def test_agg_view_gc_keeps_two_versions(spark, tmp_path, store, be):
     entries = {e for e in os.listdir(state) if e.startswith("v")}
     assert entries == {"v000000000003", "v000000000004"}
     # the kept state is still readable and correct
-    got = read_agg_view(spark, state, backend=be)
+    got = read_agg_view(spark, state)
     assert got.count() > 0
 
 
@@ -144,24 +160,24 @@ def test_topk_view_over_object_store(spark, tmp_path, store, be):
         state,
         authoritative,
         k=2,
-        backend=be,
     )
-    got = {(r["grp"], r["rnk"]): r["pk"] for r in read_topk_view(spark, state, backend=be).collect()}
+    got = {(r["grp"], r["rnk"]): r["pk"] for r in read_topk_view(spark, state).collect()}
     # all values are multiples of 8 -> grp 0; top-2 by value desc: pk 6, 5
     assert got == {(0, 1): 6, (0, 2): 5}
     _no_local_meta(state)
-    assert latest_version(state) is None  # POSIX arm blind to store metas
+    with _posix_arm(state):
+        assert latest_version(state) is None  # POSIX arm blind to store metas
 
 
 def test_heavy_hitters_over_object_store(spark, tmp_path, store, be):
     state = str(tmp_path / "hh")
     rows = [("hot",)] * 600 + [(f"w{i}",) for i in range(60)]
     df = spark.createDataFrame(rows, "item string")
-    update_heavy_hitter_state(df, 1, state, capacity=16, backend=be)
-    update_heavy_hitter_state(df, 2, state, capacity=16, backend=be)
+    update_heavy_hitter_state(df, 1, state, capacity=16)
+    update_heavy_hitter_state(df, 2, state, capacity=16)
     cand = {
         r["item"]
-        for r in heavy_hitter_candidates(spark, state, 0.4, backend=be).collect()
+        for r in heavy_hitter_candidates(spark, state, 0.4).collect()
     }
     assert "hot" in cand
     _no_local_meta(state)
@@ -249,9 +265,9 @@ def test_dedup_index_marker_rides_backend(spark, tmp_path, store, be):
     batch = spark.createDataFrame(
         [(1, text), (2, text + " tail")], "doc_id long, text string"
     )
-    dedup_batch_against_index(batch, 0, index_path, pairs_dir, backend=be)
+    dedup_batch_against_index(batch, 0, index_path, pairs_dir)
     n = spark.read.schema(D.MINHASH_INDEX_SCHEMA).parquet(index_path).count()
-    dedup_batch_against_index(batch, 0, index_path, pairs_dir, backend=be)
+    dedup_batch_against_index(batch, 0, index_path, pairs_dir)
     assert (
         spark.read.schema(D.MINHASH_INDEX_SCHEMA).parquet(index_path).count()
         == n

@@ -28,8 +28,8 @@ Migration per version dir, crash-safe and idempotent:
 
 The legacy layout was POSIX-only by construction (the r10 defect this
 replaced), so the DATA side is walked with os.*; only the new meta
-markers go through the ClaimBackend (default: PosixLinkBackend — pass a
-different backend via `migrate_state_dir` when coordinating elsewhere).
+markers go through the ClaimBackend mounted for the state dir
+(`snapshot.claim_backend.mount`; PosixLinkBackend when none is).
 
 CLI:  python tools/migrate_versioned_state.py STATE_DIR [STATE_DIR ...]
 """
@@ -42,24 +42,18 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from go_pq_cdc_spark.snapshot.claim_backend import (  # noqa: E402
-    DEFAULT_BACKEND,
-    ClaimBackend,
-)
 from go_pq_cdc_spark.streaming.versioned_state import (  # noqa: E402
     LEGACY_META_NAMES,
     VersionedState,
 )
 
 
-def migrate_state_dir(
-    state_dir: str, backend: ClaimBackend = DEFAULT_BACKEND
-) -> dict:
+def migrate_state_dir(state_dir: str) -> dict:
     """Migrate one pre-r11 state dir in place. Returns a report dict:
     {"migrated": [versions], "torn_dropped": [versions],
     "already": [versions]} — `already` counts committed legacy versions
     whose meta/ marker existed before this run (re-run after a crash)."""
-    vs = VersionedState(state_dir, backend)
+    vs = VersionedState(state_dir)
     report: dict = {"migrated": [], "torn_dropped": [], "already": []}
     if not os.path.isdir(state_dir):
         return report
@@ -86,7 +80,7 @@ def migrate_state_dir(
             continue  # already-new or bare data dir: nothing legacy here
         committed = os.path.exists(os.path.join(vdir, "_SUCCESS"))
         if committed:
-            if backend.exists(vs._meta_path(ver)):
+            if vs.backend.exists(vs._meta_path(ver)):
                 report["already"].append(ver)
             else:
                 with open(sidecars[0], encoding="utf-8") as f:
