@@ -23,8 +23,8 @@ One-call lifecycle (the reference's `connector.Start`):
         # reconnect-with-backoff, durable-log resume  (own thread/process)
     lsn, q = eng.start(run_sql, wal_dir, state_dir, ckpt_dir,
                        chunk_reader=...)
-        # DDL -> snapshot seeds the mirror at the handoff LSN ->
-        # post-handoff changes stream into the same mirror
+        # DDL -> the stream starts while the snapshot seeds the mirror
+        # at the handoff LSN -> post-handoff changes merge after the seed
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ from __future__ import annotations
 import inspect
 import logging
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -56,6 +57,11 @@ class CdcEngine:
         self.config = config
         self.spark = spark
         self._structs: dict[str, StructType] = {}
+        # wall seconds of the last `start`'s phases, by phase name;
+        # `status_server` exports them (see `start`)
+        self.start_phases: dict[str, float] = {}
+        # (query id, perf_counter) when the last `start` opened its gate
+        self.gate_opened: tuple[str, float] | None = None
 
     def _ddl_struct(self, ddl: str) -> StructType:
         """DDL string -> StructType, parsed once per engine: a parse is a
@@ -262,15 +268,9 @@ class CdcEngine:
     def envelope_changes(self, wal_dir: str) -> DataFrame:
         """Streaming change envelope from socket-transport segments (already
         decoded driver-side by the pgoutput pump — no JVM decode step)."""
-        from .sources import lsn_stream
+        from .sources.lsn_stream import wal_stream
 
-        lsn_stream.register(self.spark)
-        return (
-            self.spark.readStream.format("pq_cdc_wal")
-            .option("path", wal_dir)
-            .option("envelope", "true")
-            .load()
-        )
+        return wal_stream(self.spark, wal_dir, "envelope")
 
     def raw_changes(self, wal_dir: str, plugin: str | None = None) -> DataFrame:
         """Streaming change envelope from slot-keeper segments: raw
@@ -285,7 +285,7 @@ class CdcEngine:
         class the rejects accessors exist to prevent (r8 advisor).
         pgoutput is socket-framed, not poll-segment text — use
         `envelope_changes` for that transport."""
-        from .sources import lsn_stream
+        from .sources.lsn_stream import wal_stream
 
         if plugin is None:
             plugin = self.config.slot_plugin
@@ -295,13 +295,7 @@ class CdcEngine:
                 "COPY-BOTH frames, no text poll segments) — use "
                 "envelope_changes(wal_dir) instead of raw_changes"
             )
-        lsn_stream.register(self.spark)
-        raw = (
-            self.spark.readStream.format("pq_cdc_wal")
-            .option("path", wal_dir)
-            .option("raw", "true")
-            .load()
-        )
+        raw = wal_stream(self.spark, wal_dir, "raw")
         if plugin == "wal2json":
             from .sources.wal2json import decode_wal2json
 
@@ -507,22 +501,37 @@ class CdcEngine:
            from before any snapshot row is read (O28 ordering)
         2. record the snapshot LSN (`pg_current_wal_lsn`) with the slot in
            place — the handoff watermark
-        3. `initial` / `snapshot_only`: seed the mirrored table into the
-           bucketed mirror as op='R' rows at the snapshot LSN through the
-           cooperative chunk queue (`_cooperative_seed`):
-           `chunk_reader(tcfg, chunk) -> DataFrame` with (pk, *value
-           columns), e.g. a `snapshot_jdbc`/`snapshot_parquet` read, reads
-           one chunk. A completed seed is skipped on restart and its
-           stored snapshot LSN reused; `config.resnapshot` clears the
-           queue so every chunk reprocesses (config.go:328).
-        4. `snapshot_only`: done. `initial`/`never`: start the changelog
+        3. `initial` / `snapshot_only`: publish each seeded table's chunk
+           plan to the cooperative chunk queue and adopt the snapshot LSN
+           published with it (`_publish_seed`). A completed seed is
+           skipped on restart and its stored snapshot LSN reused;
+           `config.resnapshot` clears the queue so every chunk
+           reprocesses (config.go:328).
+        4. `initial`/`never`: on a helper thread, start the changelog
            stream from `wal_dir`, dropping events at or below the snapshot
            LSN (O28 — no gap, no duplicate) and merging into the mirror
-           through one `mirror_sink` call.
+           through one `mirror_sink` call. Its batches wait at a gate
+           until step 5 ends, so the stream's start-up overlaps the seed.
+        5. meanwhile drain the queues on the calling thread
+           (`_drain_seed`): seed the mirrored table into the bucketed
+           mirror as op='R' rows at the snapshot LSN.
+           `chunk_reader(tcfg, chunk) -> DataFrame` with (pk, *value
+           columns), e.g. a `snapshot_jdbc`/`snapshot_parquet` read, reads
+           one chunk. `snapshot_only` runs this step alone and is done.
+        6. open the gate: the stream's first merge comes after the seed's
+           last one, so a stream DELETE is never undone by a seed row (the
+           fold keeps no tombstones). If the seed raises, the gate carries
+           the error, the query is stopped, and `start` re-raises it; if
+           the stream fails to start, `start` raises that error once the
+           seed has drained.
 
         The transport runs separately (`slot_keeper` / `replicate` fill
         `wal_dir` with segments); this sequences control plane + data
         plane. Returns (snapshot_lsn, streaming_query_or_None).
+        `start_phases` then holds the wall seconds of `ddl` (steps 1-2),
+        `publish` (3), `stream_start` (4), `seed_drain` (5) and, once the
+        status server's listener sees the query's first progress event,
+        `gate_to_first_commit`; `status_server` exports them.
 
         `value_schema` is the captured table's VALUE-column DDL (default
         the single after_val column): the chunk reader must produce
@@ -587,6 +596,8 @@ class CdcEngine:
         `streaming.changelog_stream.mirror_sink` unchanged — see it for
         their meaning. The seed writes the mirror with the same
         `n_buckets` and `keep_epochs`."""
+        from concurrent.futures import Future, ThreadPoolExecutor
+
         from pyspark.sql import functions as F
 
         from .sources.slot_keeper import lsn_to_int
@@ -615,42 +626,84 @@ class CdcEngine:
             **dict.fromkeys(_OWN_SINK_ARGS), **mirror,
         )
         value_cols = tuple(f.name for f in self._ddl_struct(value_schema).fields)
+        phases = self.start_phases
+        phases.clear()
+        self.gate_opened = None
+        t = time.perf_counter()
         for stmt in self.setup_sql():
             run_sql(stmt)
         (row,) = run_sql(pg.current_wal_lsn_sql())
         snapshot_lsn = lsn_to_int(row[0])
+        phases["ddl"] = time.perf_counter() - t
 
+        queues = []
         if seeding:
-            snapshot_lsn = self._cooperative_seed(
-                chunk_planner or (lambda _tcfg: [{}]),
+            t = time.perf_counter()
+            queues, snapshot_lsn = self._publish_seed(
+                chunk_planner or (lambda _tcfg: [{}]), state_dir, snapshot_lsn, table
+            )
+            phases["publish"] = time.perf_counter() - t
+
+        def drain() -> None:
+            t = time.perf_counter()
+            self._drain_seed(
+                queues,
                 chunk_reader,
                 state_dir,
-                snapshot_lsn,
                 value_cols,
-                table,
                 mirror.get("n_buckets"),
                 mirror.get("keep_epochs"),
                 claim_ttl_s=claim_ttl_s,
                 drain_timeout_s=drain_timeout_s,
             )
-            if self.config.snapshot_mode == "snapshot_only":
-                return snapshot_lsn, None
-        stream_df, to_flat, dropped_now = self._change_stream(
-            wal_dir, transport, table, value_schema, evolve_schema
-        )
-        return snapshot_lsn, mirror_sink(
-            stream_df,
-            state_dir,
-            checkpoint_dir,
-            # evolving: inferred per batch from the typed columns
-            value_cols=None if evolve_schema else value_cols,
-            transform=lambda batch_df: to_flat(batch_df).filter(
-                F.col("lsn") > snapshot_lsn
-            ),
-            evolve_schema=evolve_schema,
-            dropped_cols=dropped_now,
-            **mirror,
-        )
+            phases["seed_drain"] = time.perf_counter() - t
+
+        if self.config.snapshot_mode == "snapshot_only":
+            drain()
+            return snapshot_lsn, None
+        # the stream's batches wait at this gate until the seed has
+        # committed: no stream epoch can precede the seed epoch
+        gate = Future()
+
+        def start_stream():
+            t = time.perf_counter()
+            stream_df, to_flat, dropped_now = self._change_stream(
+                wal_dir, transport, table, value_schema, evolve_schema
+            )
+
+            def transform(batch_df):
+                gate.result()  # raises the seed's error
+                return to_flat(batch_df).filter(F.col("lsn") > snapshot_lsn)
+
+            query = mirror_sink(
+                stream_df,
+                state_dir,
+                checkpoint_dir,
+                # evolving: inferred per batch from the typed columns
+                value_cols=None if evolve_schema else value_cols,
+                transform=transform,
+                evolve_schema=evolve_schema,
+                dropped_cols=dropped_now,
+                **mirror,
+            )
+            phases["stream_start"] = time.perf_counter() - t
+            return query
+
+        # the stream starts on a helper thread while this one drains the
+        # seed: the seed's merges stay on the calling thread
+        with ThreadPoolExecutor(1, thread_name_prefix="cdc-stream-start") as pool:
+            started = pool.submit(start_stream)
+            try:
+                drain()
+            except BaseException as exc:
+                gate.set_exception(exc)
+                if started.exception() is None:  # waits for the start
+                    started.result().stop()
+                raise
+            query = started.result()  # a failed stream start raises here
+        self.gate_opened = (str(query.id), time.perf_counter())
+        gate.set_result(None)
+        return snapshot_lsn, query
 
     def _change_stream(self, wal_dir, transport, table, value_schema, evolve_schema):
         """`start`'s data-plane input for one transport: (the change
@@ -679,16 +732,10 @@ class CdcEngine:
             # degraded case is a txn that out-sizes the keeper's bounded
             # window escalation, which ships with NULL commit_ts, never a
             # wrong one; ordering rides (lsn, txn_seq), not commit_ts).
-            from .sources import lsn_stream
+            from .sources.lsn_stream import wal_stream
             from .sources.test_decoding import decode_test_decoding
 
-            lsn_stream.register(self.spark)
-            stream_df = (
-                self.spark.readStream.format("pq_cdc_wal")
-                .option("path", wal_dir)
-                .option("raw", "true")
-                .load()
-            )
+            stream_df = wal_stream(self.spark, wal_dir, "raw")
 
             def to_flat(batch_df):
                 env = decode_test_decoding(batch_df)
@@ -727,36 +774,25 @@ class CdcEngine:
 
         return stream_df, to_flat, dropped_now
 
-    def _cooperative_seed(
-        self,
-        chunk_planner,
-        chunk_reader,
-        state_dir,
-        snapshot_lsn,
-        value_cols,
-        table,
-        n_buckets,
-        keep_epochs,
-        claim_ttl_s: float,
-        drain_timeout_s: float,
-    ) -> int:
-        """Per-chunk cooperative snapshot seed (O23 at the reference's
-        granularity, worker.go:421-484): each seeded table's chunk plan
-        is published first-writer-wins to a shared claim queue under
-        `state_dir`; every cooperating app drains it — claim, read the
-        chunk (`chunk_reader(tcfg, chunk) -> DataFrame` of (pk, *values)),
-        merge, mark done — with crashed peers' chunks reclaimed after
-        their heartbeat TTL. The FIRST app's snapshot LSN is published in
-        the queue manifest and adopted by everyone (one shared handoff
-        point); chunk reads later than that LSN may see newer data, which
-        the max-(lsn,txn_seq)-wins stream merge reconciles — the
-        reference's multi-pod model. Returns the shared snapshot LSN —
-        the MINIMUM of the published per-table LSNs: with several tables
-        the queues can be published by different apps at different WAL
-        positions (e.g. after a crash-restart), and the single stream
-        filter must not drop any table's events between its own anchor
-        and a later table's (review r7: anchoring at the LAST table's
-        LSN silently lost the window in between).
+    def _publish_seed(self, chunk_planner, state_dir, snapshot_lsn, table):
+        """The cooperative snapshot seed's first half (O23 at the
+        reference's granularity, worker.go:421-484): publish each seeded
+        table's chunk plan first-writer-wins to a shared claim queue under
+        `state_dir`, and adopt the handoff LSN published with it. Returns
+        ([(table config, queue dir, its published LSN)], the shared
+        snapshot LSN).
+
+        The FIRST app's snapshot LSN is published in the queue manifest
+        and adopted by everyone (one shared handoff point); chunk reads
+        later than that LSN may see newer data, which the
+        max-(lsn,txn_seq)-wins stream merge reconciles — the reference's
+        multi-pod model. The shared LSN is the MINIMUM of the published
+        per-table LSNs: with several tables the queues can be published by
+        different apps at different WAL positions (e.g. after a
+        crash-restart), and the single stream filter must not drop any
+        table's events between its own anchor and a later table's (review
+        r7: anchoring at the LAST table's LSN silently lost the window in
+        between).
 
         The seeded tables are `config.snapshot_tables` (default: every
         configured table), narrowed to `table` when the mirror holds one
@@ -767,10 +803,7 @@ class CdcEngine:
         `_snapshot_done` marker and no chunk queue. Re-seeding it at a
         fresh LSN would keep rows deleted since the old seed, so that
         layout raises instead: rebuild the state dir."""
-        from pyspark.sql import functions as F
-
         from .snapshot import chunk_queue as cq
-        from .streaming.changelog_stream import merge_mirror_batch
 
         wanted = set(
             self.config.snapshot_tables
@@ -779,7 +812,7 @@ class CdcEngine:
         if table is not None:
             sch, _, tbl = table.rpartition(".")
             wanted &= {f"{sch or 'public'}.{tbl}"}
-        published: list[int] = []
+        queues = []
         for tcfg in self.config.tables:
             if tcfg.qualified not in wanted:
                 continue
@@ -811,7 +844,32 @@ class CdcEngine:
             table_lsn = int(
                 cq.read_queue_meta(qdir).get("snapshot_lsn", snapshot_lsn)
             )
-            published.append(table_lsn)
+            queues.append((tcfg, qdir, table_lsn))
+        return queues, min((q[2] for q in queues), default=snapshot_lsn)
+
+    def _drain_seed(
+        self,
+        queues,
+        chunk_reader,
+        state_dir,
+        value_cols,
+        n_buckets,
+        keep_epochs,
+        claim_ttl_s: float,
+        drain_timeout_s: float,
+    ) -> None:
+        """The cooperative seed's second half: every cooperating app
+        drains the published queues — claim, read the chunk
+        (`chunk_reader(tcfg, chunk) -> DataFrame` of (pk, *values)) as
+        op='R' rows at its table's published LSN, merge, mark done — with
+        crashed peers' chunks reclaimed after their heartbeat TTL. The
+        merges run on the calling thread."""
+        from pyspark.sql import functions as F
+
+        from .snapshot import chunk_queue as cq
+        from .streaming.changelog_stream import merge_mirror_batch
+
+        for tcfg, qdir, table_lsn in queues:
 
             def process(chunk, claim, tcfg=tcfg, lsn=table_lsn):
                 rows = chunk_reader(tcfg, chunk).select(
@@ -849,7 +907,6 @@ class CdcEngine:
                 # merges for any chunk slower than the TTL)
                 heartbeat_every_s=claim_ttl_s / 4,
             )
-        return min(published) if published else snapshot_lsn
 
     def current_state(self, state_dir: str) -> DataFrame:
         from .streaming import read_mirror
@@ -891,10 +948,14 @@ class CdcEngine:
         review); per-server listeners keep stop() leak-free without the
         cross-interference. Pass `wal_dir` so /slot serves live
         confirmed/current LSNs from the segment log. Returns the started
-        `StatusServer` (`.port`, `.listener`, `.stop()`)."""
+        `StatusServer` (`.port`, `.listener`, `.stop()`). /metrics also
+        carries this engine's `start_phases`; start the server before
+        `start` so its listener sees the gated query's first progress
+        event, which ends `gate_to_first_commit`."""
         from .observability import CdcMetricsListener, StatusServer
 
         listener = CdcMetricsListener()
+        listener.attach_engine(self)
         self.spark.streams.addListener(listener)
         if wal_dir is not None:
             listener.attach_wal_dir(wal_dir, self.config.slot_name)

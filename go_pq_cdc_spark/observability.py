@@ -16,6 +16,7 @@ format so any scraper-side HTTP shim can serve it.
 from __future__ import annotations
 
 import threading
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql.streaming import StreamingQueryListener
@@ -49,6 +50,7 @@ class CdcMetricsListener(StreamingQueryListener):
         self.metrics = CdcMetrics()
         self._wal_dir: str | None = None
         self._active_queries: set[str] = set()
+        self._engine = None
 
     def attach_wal_dir(self, wal_dir: str, slot_name: str | None = None) -> None:
         """Serve live LSNs from the segment log: each /slot request re-reads
@@ -60,6 +62,13 @@ class CdcMetricsListener(StreamingQueryListener):
             self._wal_dir = wal_dir
             if slot_name is not None:
                 self.metrics.slot_name = slot_name
+
+    def attach_engine(self, engine) -> None:
+        """Export the phases of `engine`'s last `start`
+        (`CdcEngine.start_phases`), and time its `gate_to_first_commit`
+        phase at the first progress event of the query that start gated."""
+        with self._lock:
+            self._engine = engine
 
     # -- listener callbacks -------------------------------------------------
 
@@ -77,6 +86,12 @@ class CdcMetricsListener(StreamingQueryListener):
                 (p.durationMs or {}).get("triggerExecution", 0)
             )
             m.last_event_time = p.timestamp
+            eng = self._engine
+        gate = eng and eng.gate_opened
+        if gate and gate[0] == str(p.id):
+            eng.start_phases.setdefault(
+                "gate_to_first_commit", time.perf_counter() - gate[1]
+            )
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         with self._lock:
@@ -198,6 +213,15 @@ class CdcMetricsListener(StreamingQueryListener):
                     "go_pq_cdc_spark_mirror_rebucket_recommended "
                     f"{int(bool(mir['rebucket_recommended']))}"
                 )
+        with self._lock:
+            eng = self._engine
+        phases = dict(eng.start_phases) if eng is not None else {}
+        if phases:
+            lines.append("# TYPE go_pq_cdc_spark_start_phase_seconds gauge")
+            lines += [
+                f'go_pq_cdc_spark_start_phase_seconds{{phase="{k}"}} {v:.3f}'
+                for k, v in phases.items()
+            ]
         slot = self.get_slot()
         if slot["current_lsn"] is not None:
             lines.append(f"go_pq_cdc_spark_current_lsn {slot['current_lsn']}")

@@ -11,10 +11,11 @@ processes it, heartbeating (`worker.go:383-399`) until
 plus `rows_processed`.
 
 This queue is the engine's only snapshot-seed coordinator
-(`CdcEngine._cooperative_seed`): two or more Spark APPLICATIONS split
-one giant table's chunks, and a whole-table seed is the one-chunk plan
-`[{}]` (one app seeds, peers wait on its claim, restarts skip it). The
-shared medium is the same state_dir the mirror lives in:
+(`CdcEngine._publish_seed` / `_drain_seed`): two or more Spark
+APPLICATIONS split one giant table's chunks, and a whole-table seed is
+the one-chunk plan `[{}]` (one app seeds, peers wait on its claim,
+restarts skip it). The shared medium is the same state_dir the mirror
+lives in:
 
     state_dir/chunks/_manifest.json   all chunk descriptors (immutable,
                                       first-writer-wins — the reference's
@@ -196,40 +197,57 @@ def claim_next_chunk(
     ttl, the `claimTimeout` arm). Returns None when nothing is claimable
     — either all chunks are done (check `all_chunks_completed`) or live
     peers hold the remainder (the caller's drain loop polls/waits, like
-    the reference worker idling on an empty SKIP LOCKED result)."""
+    the reference worker idling on an empty SKIP LOCKED result). Every
+    won claim re-checks the done marker, so a chunk a peer completed
+    meanwhile is never processed twice."""
     instance_id = instance_id or f"app-{uuid.uuid4().hex[:12]}"
     backend = backend_for(state_dir)
     for chunk in sorted(read_manifest(state_dir), key=lambda c: c["chunk_index"]):
         idx = int(chunk["chunk_index"])
-        if backend.exists(_done_path(state_dir, idx)):
+        done = _done_path(state_dir, idx)
+        if backend.exists(done) or not _put_claim(
+            backend, _claim_path(state_dir, idx), instance_id, idx, claim_ttl_s
+        ):
             continue
-        now = time.time()
-        doc = {
-            "instance_id": instance_id,
-            "chunk_index": idx,
-            "claimed_at": now,
-            "heartbeat_at": now,
-        }
-        path = _claim_path(state_dir, idx)
-        if backend.put_if_absent(path, doc):
-            return ChunkClaim(state_dir, instance_id, chunk)
-        cur, etag = backend.read(path)
-        if cur is None:
-            if not backend.exists(path):
-                # owner released between publish failure and read: retry
-                if backend.put_if_absent(path, doc):
-                    return ChunkClaim(state_dir, instance_id, chunk)
-                continue
-            # torn claim object (crashed writer): replace it; waiting
-            # would spin forever, since staleness needs a heartbeat
-            stale = True
-        else:
-            stale = now - float(cur.get("heartbeat_at", 0)) > claim_ttl_s
-        if stale and backend.swap(path, doc, etag):
-            # POSIX: last-writer-wins takeover; object store: a TRUE CAS
-            # — losing the swap means a peer took it first; move on
-            return ChunkClaim(state_dir, instance_id, chunk)
+        claim = ChunkClaim(state_dir, instance_id, chunk)
+        if backend.exists(done):
+            # `complete` writes the done marker, then deletes its claim: a
+            # peer that finished this chunk since the probe above left a
+            # free claim slot behind it. Give the slot back.
+            claim.release()
+            continue
+        return claim
     return None
+
+
+def _put_claim(
+    backend, path: str, instance_id: str, idx: int, claim_ttl_s: float
+) -> bool:
+    """Write this instance's claim row for chunk `idx`: a fresh claim, a
+    retry after the owner released between our failed put and the read,
+    or a takeover of a torn or stale claim. True when the claim is ours."""
+    now = time.time()
+    doc = {
+        "instance_id": instance_id,
+        "chunk_index": idx,
+        "claimed_at": now,
+        "heartbeat_at": now,
+    }
+    if backend.put_if_absent(path, doc):
+        return True
+    cur, etag = backend.read(path)
+    if cur is None:
+        if not backend.exists(path):
+            # owner released between publish failure and read: retry
+            return backend.put_if_absent(path, doc)
+        # torn claim object (crashed writer): replace it; waiting
+        # would spin forever, since staleness needs a heartbeat
+        stale = True
+    else:
+        stale = now - float(cur.get("heartbeat_at", 0)) > claim_ttl_s
+    # POSIX: last-writer-wins takeover; object store: a TRUE CAS — losing
+    # the swap means a peer took it first; move on
+    return stale and backend.swap(path, doc, etag)
 
 
 def chunk_queue_stats(state_dir: str, with_rows: bool = True) -> dict:

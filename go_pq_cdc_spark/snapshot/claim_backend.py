@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 
 
@@ -238,6 +239,8 @@ class FakeObjectStore:
     def __init__(self):
         self.objects: dict[str, tuple[bytes, int]] = {}
         self._etag = 0
+        # a conditional request is atomic on a real store
+        self._lock = threading.Lock()
 
     def _next(self) -> int:
         self._etag += 1
@@ -252,26 +255,29 @@ class FakeObjectStore:
         return None if got is None else got[1]
 
     def put(self, key, data, if_none_match=False, if_match=None):
-        cur = self.objects.get(key)
-        if if_none_match and cur is not None:
-            return None  # 412: key exists
-        if if_match is not None and (cur is None or cur[1] != if_match):
-            return None  # 412: etag mismatch
-        etag = self._next()
-        self.objects[key] = (data, etag)
-        return etag
+        with self._lock:
+            cur = self.objects.get(key)
+            if if_none_match and cur is not None:
+                return None  # 412: key exists
+            if if_match is not None and (cur is None or cur[1] != if_match):
+                return None  # 412: etag mismatch
+            etag = self._next()
+            self.objects[key] = (data, etag)
+            return etag
 
     def delete(self, key, if_match=None):
-        cur = self.objects.get(key)
-        if cur is None:
-            return False
-        if if_match is not None and cur[1] != if_match:
-            return False
-        del self.objects[key]
-        return True
+        with self._lock:
+            cur = self.objects.get(key)
+            if cur is None:
+                return False
+            if if_match is not None and cur[1] != if_match:
+                return False
+            del self.objects[key]
+            return True
 
     def list(self, prefix):
-        return sorted(k for k in self.objects if k.startswith(prefix))
+        with self._lock:
+            return sorted(k for k in self.objects if k.startswith(prefix))
 
 
 DEFAULT_BACKEND = PosixLinkBackend()

@@ -230,6 +230,21 @@ def register(spark) -> None:
     spark.dataSource.register(LsnStreamDataSource)
 
 
+def wal_stream(spark, wal_dir: str, segments: str):
+    """The change stream over `wal_dir`: `segments` is "envelope" (the
+    socket pump's decoded envelope segments) or "raw" (the slot keeper's
+    undecoded (lsn, xid, data) segments). The JVM's first Python data
+    source registration spends 1.5-2 s scanning the Python path for
+    `pyspark_*` sources in a fresh worker; later ones take milliseconds."""
+    register(spark)
+    return (
+        spark.readStream.format("pq_cdc_wal")
+        .option("path", wal_dir)
+        .option(segments, "true")
+        .load()
+    )
+
+
 def confirmed_lsn(dir_path: str) -> int | None:
     """What the slot keeper would flush to the server."""
     p = os.path.join(dir_path, "_confirmed")

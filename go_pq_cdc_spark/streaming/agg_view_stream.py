@@ -338,9 +338,9 @@ def seed_agg_view_from_state(
     value_col: str = "after_val",
     track_minmax: bool = False,
 ) -> None:
-    """Initialize the view (version 0) from an EXISTING state table — the
-    engine calls this with the seeded mirror before the stream starts:
-    without it, the first stream update of a snapshot-seeded key would
+    """Initialize the view (version 0) from an EXISTING state table —
+    `mirror_sink` calls this with the seeded mirror at its first batch,
+    before any stream merge: without it, the first stream update of a snapshot-seeded key would
     retract value the view never credited. One bounded-output aggregate
     over the state; idempotent (recomputes the same version 0)."""
     spark = df.sparkSession

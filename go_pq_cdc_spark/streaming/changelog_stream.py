@@ -954,6 +954,38 @@ def merge_mirror_batch(
     the exact rel paths."""
     if merge_mode not in ("cow", "delta"):
         raise ValueError(f"merge_mode must be 'cow' or 'delta', got {merge_mode!r}")
+    # An empty batch still commits its epoch (same buckets) so
+    # read_mirror_as_of works for it and the retention window counts
+    # epochs (r6 review).
+    _mirror_write(
+        batch_df.sparkSession,
+        state_dir,
+        _merge_body(
+            batch_df, state_dir, n_buckets, value_cols, evolve_schema,
+            dropped_cols, merge_mode, compact_deltas,
+        ),
+        epoch=epoch,
+        keep_epochs=keep_epochs,
+        lock_ttl_s=lock_ttl_s,
+    )
+
+
+def _merge_body(
+    batch_df: DataFrame,
+    state_dir: str,
+    n_buckets: int | None,
+    value_cols: tuple[str, ...] | None,
+    evolve_schema: bool,
+    dropped_cols: tuple[str, ...] | None,
+    merge_mode: str = "cow",
+    compact_deltas: int = 8,
+    rows: bool = True,
+):
+    """`merge_mirror_batch`'s `_mirror_write` body: pin the batch's shape
+    in the manifest (bucket count, value schema, drops), then fold its
+    rows into the buckets they touch. `rows=False` is a batch known to
+    be empty: the body stops after the pins, and the epoch commits with
+    the same buckets and no Spark job."""
     spark = batch_df.sparkSession
     if value_cols is None:
         value_cols = tuple(
@@ -1093,6 +1125,8 @@ def merge_mirror_batch(
                     "new column — rebuild required"
                 )
 
+        if not rows:
+            return []
         # Event-order key: commit-rewritten envelopes carry (lsn, txn_seq) —
         # all rows of one transaction share the commit lsn and txn_seq splits
         # them; flat fixtures without txn_seq get 0 (their lsns are unique).
@@ -1132,13 +1166,7 @@ def merge_mirror_batch(
             manifest.pop("deltas", None)
         return results
 
-    # An empty batch still commits its epoch (same buckets) so
-    # read_mirror_as_of works for it and the retention window counts
-    # epochs (r6 review).
-    _mirror_write(
-        spark, state_dir, fold, epoch=epoch, keep_epochs=keep_epochs,
-        lock_ttl_s=lock_ttl_s,
-    )
+    return fold
 
 
 def compact_mirror(
@@ -1339,7 +1367,13 @@ def mirror_sink(
     joins that Structured Streaming would reject pre-sink are legal
     here): the stream carries raw transport rows and the decode/typing
     happens per batch. Used by the test_decoding transport, whose
-    commit-ts stamp is a per-xid aggregate+join.
+    commit-ts stamp is a per-xid aggregate+join. It runs first in each
+    batch, before the view's version 0 and the merge: `CdcEngine.start`
+    holds its batches there until the snapshot seed has committed.
+
+    A batch whose source input has no partitions (the first batch over an
+    empty segment log) commits a manifest-only epoch — same buckets, the
+    merge's pins — without a Spark job, and does not touch the view.
 
     Epoch numbering comes from the MIRROR's manifest counter, NOT from
     Spark's foreachBatch batch id: the two counters live in different
@@ -1355,10 +1389,11 @@ def mirror_sink(
     `view_state_dir` co-maintains an incremental aggregate view
     (`streaming.agg_view_stream`) from the SAME micro-batches. A view
     with no committed version starts as version 0 = the mirror's state
-    when the sink starts, so a snapshot seed's rows count before the
-    first batch. Before images come from the mirror (bucket-pruned
-    `mirror_befores_for`, read BEFORE the merge; staged deltas make
-    checkpoint replay safe — see `update_agg_view_from_log`), and with
+    at the sink's first batch (after `transform`, so after the engine's
+    seed has committed), so a snapshot seed's rows count. Before images
+    come from the mirror (bucket-pruned `mirror_befores_for`, read
+    BEFORE the merge; staged deltas make checkpoint replay safe — see
+    `update_agg_view_from_log`), and with
     `view_minmax=True` the min/max dirty-repair reads the post-merge
     mirror — the authoritative source the same batch just finished
     writing. View versions are keyed
@@ -1396,34 +1431,40 @@ def mirror_sink(
     stats dict — plus `rebucket_recommended` — goes to `on_maintenance`
     (wire `observability.CdcMetricsListener.record_mirror` to see it in
     /status)."""
-    if view_state_dir is not None:
-        from .agg_view_stream import latest_version, seed_agg_view_from_state
-
-        if latest_version(view_state_dir) is None:
-            # without version 0, the first stream update of a key already
-            # in the mirror would retract value the view never credited.
-            # Idempotent (recomputes version 0); an empty mirror seeds an
-            # empty view, pinning the minmax-tracking mode either way. A
-            # mirror with no manifest has no pinned row shape to read (its
-            # default `after_val double` may lack the view's column).
-            spark = stream_df.sparkSession
-            manifest = _read_manifest(state_dir)
-            seed_agg_view_from_state(
-                _manifest_df(spark, state_dir, manifest)
-                if manifest["epoch"] >= 0
-                else spark.createDataFrame([], f"`{view_value_col}` double"),
-                view_state_dir,
-                n_groups=view_groups,
-                value_col=view_value_col,
-                track_minmax=view_minmax,
-            )
     batch_counter = {"n": 0}
 
     def apply(batch_df: DataFrame, _spark_epoch: int) -> None:
+        raw = batch_df
         if transform is not None:
+            # runs first: the engine's start gate waits in here
             batch_df = transform(batch_df)
         spark = batch_df.sparkSession
-        if view_state_dir is not None:
+        if view_state_dir is not None and batch_counter["n"] == 0:
+            from .agg_view_stream import latest_version, seed_agg_view_from_state
+
+            if latest_version(view_state_dir) is None:
+                # without version 0, the first stream update of a key
+                # already in the mirror would retract value the view
+                # never credited. Idempotent (recomputes version 0); an
+                # empty mirror seeds an empty view, pinning the
+                # minmax-tracking mode either way. A mirror with no
+                # manifest has no pinned row shape to read (its default
+                # `after_val double` may lack the view's column).
+                manifest = _read_manifest(state_dir)
+                seed_agg_view_from_state(
+                    _manifest_df(spark, state_dir, manifest)
+                    if manifest["epoch"] >= 0
+                    else spark.createDataFrame([], f"`{view_value_col}` double"),
+                    view_state_dir,
+                    n_groups=view_groups,
+                    value_col=view_value_col,
+                    track_minmax=view_minmax,
+                )
+        # planning only, no Spark job: a batch with no input partitions
+        # (the first batch over an empty segment log) commits its epoch
+        # with the merge's pins and no fold, and leaves the view as is
+        rows = raw.rdd.getNumPartitions() > 0
+        if rows and view_state_dir is not None:
             from .agg_view_stream import (
                 fold_staged_view_deltas,
                 stage_view_deltas,
@@ -1450,14 +1491,25 @@ def mirror_sink(
         # engine's Relation-sidecar drop detection — a mid-stream DROP
         # COLUMN changes the answer between batches) or a static tuple
         dc = dropped_cols() if callable(dropped_cols) else dropped_cols
-        merge_mirror_batch(
-            batch_df, state_dir, epoch=None, n_buckets=n_buckets,
-            value_cols=value_cols, keep_epochs=keep_epochs,
-            evolve_schema=evolve_schema,
-            dropped_cols=dc, merge_mode=merge_mode,
-            compact_deltas=compact_deltas,
-        )
-        if view_state_dir is not None:
+        if rows:
+            merge_mirror_batch(
+                batch_df, state_dir, epoch=None, n_buckets=n_buckets,
+                value_cols=value_cols, keep_epochs=keep_epochs,
+                evolve_schema=evolve_schema,
+                dropped_cols=dc, merge_mode=merge_mode,
+                compact_deltas=compact_deltas,
+            )
+        else:
+            _mirror_write(
+                spark,
+                state_dir,
+                _merge_body(
+                    batch_df, state_dir, n_buckets, value_cols,
+                    evolve_schema, dc, rows=False,
+                ),
+                keep_epochs=keep_epochs,
+            )
+        if rows and view_state_dir is not None:
             authoritative = None
             if view_minmax:
                 from ..operators.cdc import value_group

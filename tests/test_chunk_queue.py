@@ -10,14 +10,18 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import signal
 import subprocess
 import sys
+import threading
 import time
+from collections import Counter
 
 import pytest
 
 from go_pq_cdc_spark.snapshot import chunk_queue as Q
+from go_pq_cdc_spark.snapshot.claim_backend import FakeObjectStore, ObjectStoreBackend
 from go_pq_cdc_spark.snapshot.planner import plan_integer_range
 
 
@@ -317,3 +321,79 @@ def test_reset_clears_queue_for_resnapshot(tmp_path):
     }
     mine = Q.drain(state, lambda c, cl: 0, "me", timeout_s=5.0)
     assert mine == [0]
+
+
+class _RemoteStore(FakeObjectStore):
+    """Each request takes a round trip, as on a real store: a write lands
+    after its request travels, a read's answer arrives after the lookup
+    and may be stale by then."""
+
+    def get(self, key):
+        got = super().get(key)
+        time.sleep(random.uniform(0, 0.0002))
+        return got
+
+    def head(self, key):
+        got = super().head(key)
+        time.sleep(random.uniform(0, 0.0002))
+        return got
+
+    def put(self, key, data, **kw):
+        time.sleep(random.uniform(0, 0.0002))
+        return super().put(key, data, **kw)
+
+    def delete(self, key, **kw):
+        time.sleep(random.uniform(0, 0.0002))
+        return super().delete(key, **kw)
+
+
+def _drain_with_three_threads(state: str, seed: int) -> Counter:
+    """Times each chunk was processed by 3 concurrent drains, with 0-3 ms
+    of work per chunk."""
+    seen: Counter = Counter()
+    lock = threading.Lock()
+    errors: list[BaseException] = []
+
+    def worker(who: str) -> None:
+        rng = random.Random(f"{seed}:{who}")
+
+        def work(chunk, _claim):
+            time.sleep(rng.uniform(0, 0.003))
+            with lock:
+                seen[chunk["chunk_index"]] += 1
+            return 1
+
+        try:
+            Q.drain(state, work, who, poll_s=0.005, timeout_s=30)
+        except BaseException as exc:  # noqa: BLE001 — asserted below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker, args=(f"w{i}",)) for i in range(3)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    return seen
+
+
+@pytest.mark.parametrize("medium", ["posix", "object_store"])
+def test_concurrent_drains_process_each_chunk_once(tmp_path, medium, mount_backend):
+    """Exactly-once chunk processing under concurrent drains: `complete`
+    writes the done marker and then deletes the claim, so a peer that
+    probed the chunk before the marker landed finds a free claim slot on
+    a finished chunk. A claim must re-check the marker after it wins."""
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # more interleavings per round
+    try:
+        for rnd in range(20):
+            state = str(tmp_path / f"q{rnd}")
+            if medium == "object_store":
+                mount_backend(state, ObjectStoreBackend(_RemoteStore()))
+            Q.init_chunk_queue(state, [{"chunk_index": i} for i in range(60)])
+            seen = _drain_with_three_threads(state, rnd)
+            twice = sorted(i for i, n in seen.items() if n > 1)
+            assert twice == [] and sorted(seen) == list(range(60)), (rnd, twice)
+    finally:
+        sys.setswitchinterval(switch)

@@ -1131,3 +1131,159 @@ def test_start_seeds_only_the_mirrored_table(spark, tmp_path):
     assert (lsn, q) == (10, None)
     assert reads == ["public.users"]
     assert {r["pk"]: r["after_val"] for r in read_mirror(spark, state_dir).collect()} == {1: 0.5}
+
+
+def _gated_start(spark, tmp_path, reader, **mirror):
+    """`start` on the envelope transport with a fake server at snapshot
+    LSN 20, seeding public.users through `reader`."""
+    eng = _engine(spark)
+    wal_dir = tmp_path / "wal"
+    wal_dir.mkdir(exist_ok=True)
+    lsn, q = eng.start(
+        lambda sql: [("0/14",)] if "pg_current_wal_lsn" in sql else [],
+        str(wal_dir),
+        str(tmp_path / "state"),
+        str(tmp_path / "ckpt"),
+        chunk_reader=reader,
+        transport="envelope",
+        table="public.users",
+        **mirror,
+    )
+    assert lsn == 20
+    return eng, q
+
+
+def _seed_rows(spark):
+    from pyspark.sql import Row
+
+    return spark.createDataFrame([Row(pk=10, after_val=1.0), Row(pk=20, after_val=2.0)])
+
+
+def test_start_gates_stream_merges_behind_the_seed(spark, tmp_path):
+    """The stream starts before the seed drains. A segment written during
+    the drain deletes a seeded key above the snapshot LSN; its batch waits
+    at the gate, so its merge lands after the seed's and the key stays
+    deleted (the fold keeps no tombstones: merged first, the delete would
+    be undone by the seed row)."""
+    import time
+
+    from go_pq_cdc_spark.sources.slot_keeper import write_envelope_segment
+    from go_pq_cdc_spark.streaming import read_mirror, read_mirror_as_of
+    from go_pq_cdc_spark.streaming.changelog_stream import _read_manifest
+
+    def reader(_t, _c):
+        delete = {"op": "D", "lsn": 30, "xid": 7, "commit_ts_us": 0,
+                  "schema": "public", "table": "users",
+                  "before": {"pk": "20"}, "after": None}
+        write_envelope_segment(str(tmp_path / "wal"), 21, [delete])
+        # hold the seed until the live query has a batch in flight, and
+        # then long enough for that batch to commit if nothing held it
+        deadline = time.time() + 30
+        while time.time() < deadline and not any(
+            q.status["isTriggerActive"] for q in spark.streams.active
+        ):
+            time.sleep(0.05)
+        deadline = time.time() + 8
+        while time.time() < deadline and not (tmp_path / "state" / "manifest.json").exists():
+            time.sleep(0.05)
+        return _seed_rows(spark)
+
+    _eng, q = _gated_start(spark, tmp_path, reader, keep_epochs=8)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    state = str(tmp_path / "state")
+    assert {r["pk"] for r in read_mirror(spark, state).collect()} == {10}
+    # epoch 0 is the seed's, with both rows; the delete came later
+    assert {r["pk"] for r in read_mirror_as_of(spark, state, 0).collect()} == {10, 20}
+    assert _read_manifest(state)["epoch"] > 0
+
+
+def test_start_seed_error_stops_the_query(spark, tmp_path):
+    """A chunk reader that raises makes `start` raise that error, and the
+    query started before the drain is stopped, not left running."""
+    import pytest
+
+    before = {q.id for q in spark.streams.active}
+
+    def reader(_t, _c):
+        raise OSError("chunk read failed")
+
+    with pytest.raises(OSError, match="chunk read failed"):
+        _gated_start(spark, tmp_path, reader)
+    assert {q.id for q in spark.streams.active} == before
+
+
+def test_start_view_version_0_counts_the_seed(spark, tmp_path):
+    """The view's version 0 is taken at the first batch, after the gate,
+    so it reads the seeded mirror even though the query started before
+    the seed."""
+    from go_pq_cdc_spark.streaming.agg_view_stream import latest_version, read_agg_view
+
+    view_dir = str(tmp_path / "view")
+    _eng, q = _gated_start(
+        spark, tmp_path, lambda _t, _c: _seed_rows(spark), view_state_dir=view_dir
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert latest_version(view_dir) == 0  # the first batch is empty
+    got = {r["grp"]: (r["n_keys"], r["sum_val"]) for r in read_agg_view(spark, view_dir).collect()}
+    assert got == {1: (1, 1.0), 2: (1, 2.0)}
+
+
+def test_start_first_empty_batch_runs_no_spark_job(spark, tmp_path):
+    """Spark runs batch 0 over an empty segment log (range (-1, -1]). It
+    commits a manifest-only epoch, pins included, without a Spark job."""
+    from go_pq_cdc_spark.streaming import read_mirror_as_of
+    from go_pq_cdc_spark.streaming.changelog_stream import _read_manifest
+
+    _eng, q = _gated_start(spark, tmp_path, lambda _t, _c: _seed_rows(spark), keep_epochs=4)
+    try:
+        q.processAllAvailable()
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    finally:
+        q.stop()
+    assert q.lastProgress["batchId"] == 0 and q.lastProgress["numInputRows"] == 0
+    assert list(jobs) == []
+    state = str(tmp_path / "state")
+    manifest = _read_manifest(state)
+    assert manifest["epoch"] == 1 and manifest["value_schema"] == "after_val double"
+    assert {r["pk"] for r in read_mirror_as_of(spark, state, 1).collect()} == {10, 20}
+
+
+def test_start_phases_reach_metrics(spark, tmp_path):
+    """`start` times its phases on the engine, and the status server's
+    /metrics exports them, `gate_to_first_commit` once the gated query's
+    first batch has committed."""
+    import time
+    import urllib.request
+
+    eng = _engine(spark)
+    srv = eng.status_server()
+    try:
+        wal_dir = tmp_path / "wal"
+        wal_dir.mkdir()
+        _lsn, q = eng.start(
+            lambda sql: [("0/14",)] if "pg_current_wal_lsn" in sql else [],
+            str(wal_dir), str(tmp_path / "state"), str(tmp_path / "ckpt"),
+            chunk_reader=lambda _t, _c: _seed_rows(spark),
+            transport="envelope", table="public.users",
+        )
+        try:
+            q.processAllAvailable()
+            deadline = time.time() + 30  # progress events arrive asynchronously
+            while "gate_to_first_commit" not in eng.start_phases and time.time() < deadline:
+                time.sleep(0.05)
+        finally:
+            q.stop()
+        body = urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/metrics").read().decode()
+    finally:
+        srv.stop()
+    phases = ("ddl", "publish", "stream_start", "seed_drain", "gate_to_first_commit")
+    assert set(eng.start_phases) == set(phases)
+    for phase in phases:
+        assert eng.start_phases[phase] >= 0
+        assert f'go_pq_cdc_spark_start_phase_seconds{{phase="{phase}"}}' in body

@@ -2430,7 +2430,9 @@ def test_live_engine_incremental_view(spark, tmp_path):
             view_minmax=True,
         )
         assert snapshot_lsn > 0
-        # the seed initialized view version 0 from the snapshot mirror
+        # the stream's first batch (empty: nothing is pumped yet) takes
+        # view version 0 from the seeded mirror
+        stream_q.processAllAvailable()
         seed = {
             r["grp"]: (r["n_keys"], r["sum_val"])
             for r in read_agg_view(spark, view_dir).collect()
