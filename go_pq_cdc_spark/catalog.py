@@ -67,12 +67,6 @@ def _schema_cache_key(path: str) -> tuple:
     return (path, st.st_mtime, n, max_m, total)
 
 
-def clear_schema_cache() -> None:
-    """Drop every cached schema — the hook for write paths that refresh
-    a table in place and want the next read to re-infer unconditionally."""
-    _SCHEMA_CACHE.clear()
-
-
 def _read_with_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     try:
         key = _schema_cache_key(path)
@@ -127,9 +121,3 @@ def table_row_bound(sf_dir: str, name: str) -> int:
         else [path]
     )
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register each captured table as a temp view for the SQL surface."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

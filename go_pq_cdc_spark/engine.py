@@ -48,7 +48,7 @@ _log = logging.getLogger(__name__)
 _TRANSPORTS = ("flat", "envelope", "wal2json", "test_decoding")
 # the mirror_sink arguments `start` supplies itself; every other
 # mirror_sink keyword reaches it unchanged through `start(**mirror)`
-_OWN_SINK_ARGS = ("value_cols", "transform", "evolve_schema", "dropped_cols")
+_OWN_SINK_ARGS = ("value_cols", "transform", "evolve_schema")
 
 
 class CdcEngine:
@@ -65,8 +65,7 @@ class CdcEngine:
 
     def _ddl_struct(self, ddl: str) -> StructType:
         """DDL string -> StructType, parsed once per engine: a parse is a
-        JVM round trip and the typed transports re-type every
-        micro-batch. DDL-aware — a naive split(',') would shred types
+        JVM round trip. DDL-aware — a naive split(',') would shred types
         that contain commas (decimal(10,2), map<...>, struct<...>)."""
         if ddl not in self._structs:
             self._structs[ddl] = self.spark.createDataFrame([], ddl).schema
@@ -306,41 +305,50 @@ class CdcEngine:
             return decode_test_decoding(raw)
         raise ValueError(f"unknown poll plugin {plugin!r}")
 
-    def _typed_flat(self, changes, table: str, value_schema: str, pk_col: str):
-        """Envelope -> typed flat change rows for one table: filter, type
-        the after image per the declared DDL (pk from the before image for
-        DELETEs), project to the mirror's (op, lsn, xid, commit_ts, pk,
-        *values) shape. Pure DataFrame transforms — works identically on a
-        stream and on a foreachBatch micro-batch."""
+    def _typer(self, table, value_schema, *, with_seq, pk_col="pk",
+               evolve_from=None, lsn_floor=None):
+        """The typed transports' one typing step: `type_batch(envelope)
+        -> (rows, dropped_cols)`, the rows of `table` above `lsn_floor`
+        in the mirror's (op, lsn, [txn_seq], xid, commit_ts, pk, *values)
+        shape (pk from the before image on DELETE). Like the reference's
+        Relation cache (relation.go:68-87), the predicate and each DDL's
+        columns are built once; a batch is one `where` + one `select`.
+        With `evolve_from` (the pump's wal_dir) the DDL and the drop list
+        come from its Relation sidecar per batch; without it, the
+        declared DDL and None."""
         from pyspark.sql import functions as F
 
         from .envelope import typed_projection
 
-        val_struct = self._ddl_struct(value_schema)
-        value_cols = tuple(f.name for f in val_struct.fields)
         sch, _, tbl = table.rpartition(".")
-        env = changes.filter(
-            (F.col("schema") == (sch or "public")) & (F.col("table") == tbl)
-        ).withColumn(
-            "_img", F.when(F.col("op") == "D", F.col("before")).otherwise(F.col("after"))
-        )
-        typed = typed_projection(
-            typed_projection(env, "_img", self._ddl_struct(f"{pk_col} bigint")),
-            "after",
-            val_struct,
-        )
-        flat = typed.select(
+        where = (F.col("schema") == (sch or "public")) & (F.col("table") == tbl)
+        if lsn_floor is not None:
+            where &= F.col("lsn") > lsn_floor
+        img = F.when(F.col("op") == "D", F.col("before")).otherwise(F.col("after"))
+        (pk,) = typed_projection(img, self._ddl_struct(f"{pk_col} bigint"))
+        head = [
             "op",
             "lsn",
             # commit-rewritten envelopes carry the intra-transaction order
             # key — keep it so the mirror merge orders same-commit events
-            *(["txn_seq"] if "txn_seq" in typed.columns else []),
+            *(["txn_seq"] if with_seq else []),
             "xid",
             "commit_ts",
-            F.col(pk_col).alias("pk"),
-            *value_cols,
-        )
-        return flat, value_cols
+            pk.alias("pk"),
+        ]
+        selects: dict[str, list] = {}  # value DDL -> its flat columns
+
+        def type_batch(env):
+            ddl, dropped = value_schema, None
+            if evolve_from is not None:
+                ddl, dropped = self._evolved_value_schema(evolve_from, table, ddl)
+            if ddl not in selects:
+                selects[ddl] = head + typed_projection(
+                    F.col("after"), self._ddl_struct(ddl)
+                )
+            return env.where(where).select(*selects[ddl]), dropped
+
+        return type_batch
 
     def _evolved_value_schema(
         self, wal_dir: str, table: str, declared_ddl: str
@@ -443,14 +451,16 @@ class CdcEngine:
         if evolve_schema and wal_dir is None:
             raise ValueError("evolve_schema=True requires wal_dir=")
 
+        with_seq = "txn_seq" in changes.columns
+        evolve_from = wal_dir if evolve_schema else None
+        typers = {
+            t: self._typer(t, ddl, pk_col=pk_col, with_seq=with_seq, evolve_from=evolve_from)
+            for t, ddl in tables.items()
+        }
+
         def apply(batch_df, _spark_epoch: int) -> None:
-            for table, vschema in tables.items():
-                dropped = None
-                if evolve_schema:
-                    vschema, dropped = self._evolved_value_schema(
-                        wal_dir, table, vschema
-                    )
-                flat, value_cols = self._typed_flat(batch_df, table, vschema, pk_col)
+            for table, type_batch in typers.items():
+                flat, dropped = type_batch(batch_df)
                 # epoch=None: each mirror numbers epochs from its own
                 # manifest counter — Spark's batch id collides with any
                 # epoch a seed already wrote (see mirror_sink)
@@ -459,7 +469,7 @@ class CdcEngine:
                     os.path.join(state_root, table.replace(".", "__")),
                     epoch=None,
                     n_buckets=n_buckets,
-                    value_cols=value_cols,
+                    value_cols=None,  # inferred from the typed columns
                     evolve_schema=evolve_schema,
                     dropped_cols=dropped,
                 )
@@ -590,6 +600,10 @@ class CdcEngine:
         DEFAULT backfills, so NULL is the honest CDC answer until the row
         is next written.
 
+        A column the sidecar shows dropped is masked from that batch's
+        epoch on: `transform` returns each batch's drop list with its
+        rows (there is no `dropped_cols` option).
+
         Every other keyword is a mirror option (`n_buckets`,
         `keep_epochs`, `merge_mode`, `compact_deltas`, `view_*`,
         `maintain_*`, `on_maintenance`) and goes to
@@ -597,8 +611,6 @@ class CdcEngine:
         their meaning. The seed writes the mirror with the same
         `n_buckets` and `keep_epochs`."""
         from concurrent.futures import Future, ThreadPoolExecutor
-
-        from pyspark.sql import functions as F
 
         from .sources.slot_keeper import lsn_to_int
 
@@ -667,13 +679,13 @@ class CdcEngine:
 
         def start_stream():
             t = time.perf_counter()
-            stream_df, to_flat, dropped_now = self._change_stream(
-                wal_dir, transport, table, value_schema, evolve_schema
+            stream_df, to_flat = self._change_stream(
+                wal_dir, transport, table, value_schema, evolve_schema, snapshot_lsn
             )
 
             def transform(batch_df):
                 gate.result()  # raises the seed's error
-                return to_flat(batch_df).filter(F.col("lsn") > snapshot_lsn)
+                return to_flat(batch_df)
 
             query = mirror_sink(
                 stream_df,
@@ -683,7 +695,6 @@ class CdcEngine:
                 value_cols=None if evolve_schema else value_cols,
                 transform=transform,
                 evolve_schema=evolve_schema,
-                dropped_cols=dropped_now,
                 **mirror,
             )
             phases["stream_start"] = time.perf_counter() - t
@@ -705,11 +716,15 @@ class CdcEngine:
         gate.set_result(None)
         return snapshot_lsn, query
 
-    def _change_stream(self, wal_dir, transport, table, value_schema, evolve_schema):
-        """`start`'s data-plane input for one transport: (the change
-        stream from `wal_dir`, the per-micro-batch function turning its
-        rows into flat typed change rows, the per-batch dropped-column
-        callable or None)."""
+    def _change_stream(
+        self, wal_dir, transport, table, value_schema, evolve_schema, snapshot_lsn
+    ):
+        """`start`'s data-plane input: (the change stream from `wal_dir`,
+        `to_flat(batch) -> (flat rows above the snapshot LSN, dropped
+        columns or None)`). The typed transports differ only in their
+        stream and their decode step."""
+        from pyspark.sql import functions as F
+
         if transport == "flat":
             stream_df = file_change_stream(
                 self.spark,
@@ -719,8 +734,10 @@ class CdcEngine:
                     f"pk bigint, {value_schema}"
                 ),
             )
-            return stream_df, lambda batch_df: batch_df, None
+            after = F.col("lsn") > snapshot_lsn
+            return stream_df, lambda batch: (batch.where(after), None)
 
+        decode = None
         if transport == "test_decoding":
             # The text grammar's commit-ts stamp is a per-xid aggregate +
             # join — not expressible incrementally on an unbounded stream.
@@ -736,43 +753,22 @@ class CdcEngine:
             from .sources.test_decoding import decode_test_decoding
 
             stream_df = wal_stream(self.spark, wal_dir, "raw")
-
-            def to_flat(batch_df):
-                env = decode_test_decoding(batch_df)
-                return self._typed_flat(env, table, value_schema, "pk")[0]
-
-            return stream_df, to_flat, None
-
-        stream_df = (
-            self.envelope_changes(wal_dir)
-            if transport == "envelope"
-            else self.raw_changes(wal_dir, plugin="wal2json")
+            decode = decode_test_decoding
+        elif transport == "envelope":
+            stream_df = self.envelope_changes(wal_dir)
+        else:
+            stream_df = self.raw_changes(wal_dir, plugin="wal2json")
+        type_batch = self._typer(
+            table,
+            value_schema,
+            # only the socket pump's envelope segments carry txn_seq
+            with_seq=transport == "envelope",
+            evolve_from=wal_dir if evolve_schema else None,
+            lsn_floor=snapshot_lsn,
         )
-        if not evolve_schema:
-
-            def to_flat(batch_df):
-                return self._typed_flat(batch_df, table, value_schema, "pk")[0]
-
-            return stream_df, to_flat, None
-
-        # one sidecar interpretation per micro-batch, shared by the typing
-        # AND the sink's drop list (calling _evolved_value_schema twice
-        # doubles the sidecar read + schema parse on the hot streaming
-        # path); re-read EVERY batch because mid-stream DDL (ADD/ALTER
-        # TYPE/DROP) changes the answer between batches
-        batch_schema = {"dropped": ()}
-
-        def to_flat(batch_df):
-            vschema, dropped = self._evolved_value_schema(wal_dir, table, value_schema)
-            batch_schema["dropped"] = dropped
-            return self._typed_flat(batch_df, table, vschema, "pk")[0]
-
-        def dropped_now() -> tuple[str, ...]:
-            # the sink calls this after transform ran for the same batch —
-            # consumes its cached answer
-            return batch_schema["dropped"]
-
-        return stream_df, to_flat, dropped_now
+        if decode is None:
+            return stream_df, type_batch
+        return stream_df, lambda batch: type_batch(decode(batch))
 
     def _publish_seed(self, chunk_planner, state_dir, snapshot_lsn, table):
         """The cooperative snapshot seed's first half (O23 at the

@@ -15,7 +15,7 @@ Ops (reference tag bytes, `pq/message/message.go:42-73`):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -122,8 +122,10 @@ def _as_string_leaves(dt: T.DataType) -> T.DataType:
     return T.StringType()
 
 
-def typed_projection(df: DataFrame, image: str, schema: T.StructType) -> DataFrame:
-    """Project a string-map change image (`before`/`after`) to typed columns.
+def typed_projection(image: Column, schema: T.StructType) -> list[Column]:
+    """The typed Columns of a string-map change image (`before`/`after`,
+    or any map-valued expression), one per `schema` field, aliased by
+    field name.
 
     Transport keeps maps for schema-evolution safety; consumers get typed
     columns via per-field cast — the engine-side analogue of the reference's
@@ -137,7 +139,7 @@ def typed_projection(df: DataFrame, image: str, schema: T.StructType) -> DataFra
     fully JVM-side: from_json + cast, no Python in the hot path."""
     cols = []
     for fld in schema.fields:
-        raw = F.element_at(F.col(image), fld.name)
+        raw = F.element_at(image, fld.name)
         if isinstance(fld.dataType, T.ArrayType):
             typed = F.from_json(raw, _as_string_leaves(fld.dataType)).cast(fld.dataType)
         elif isinstance(fld.dataType, T.BinaryType):
@@ -152,7 +154,7 @@ def typed_projection(df: DataFrame, image: str, schema: T.StructType) -> DataFra
         else:
             typed = raw.cast(fld.dataType)
         cols.append(typed.alias(fld.name))
-    return df.select(*df.columns, *cols)
+    return cols
 
 
 def toast_coalesce(after: Column, before: Column) -> Column:

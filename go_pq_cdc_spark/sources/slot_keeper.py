@@ -65,12 +65,23 @@ def int_to_lsn(v: int) -> str:
     return f"{v >> 32:X}/{v & 0xFFFFFFFF:X}"
 
 
+def _publish_segment(wal_dir: str, start_lsn: int, end_lsn: int, table) -> None:
+    """Publish one segment covering [start_lsn, end_lsn] atomically (tmp +
+    rename): the stream source must never list a partial file. The one
+    place a segment reaches its final name."""
+    import pyarrow.parquet as pq
+
+    final = lsn_stream.segment_path(wal_dir, start_lsn, end_lsn)
+    tmp = final + ".tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, final)
+
+
 def write_raw_segment(wal_dir: str, start_lsn: int, rows: list[tuple]) -> int:
     """Write one (lsn, xid, data) segment covering [start_lsn, max lsn],
     atomically (tmp + rename — the stream source must never list a partial
     file). Returns the segment end LSN."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     end_lsn = max(lsn_to_int(r[0]) for r in rows)
     table = pa.table(
@@ -82,10 +93,7 @@ def write_raw_segment(wal_dir: str, start_lsn: int, rows: list[tuple]) -> int:
             "data": pa.array([r[2] for r in rows], pa.string()),
         }
     )
-    final = lsn_stream.segment_path(wal_dir, start_lsn, end_lsn)
-    tmp = final + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, final)
+    _publish_segment(wal_dir, start_lsn, end_lsn, table)
     return end_lsn
 
 
@@ -113,7 +121,6 @@ def write_envelope_segment(
     LSNs are NOT monotonic in commit order and may fall below the segment
     range; only commit ends are safe chain boundaries."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     if end_lsn is None:
         end_lsn = max(r["lsn"] for r in rows)
@@ -134,10 +141,7 @@ def write_envelope_segment(
             "after": pa.array([as_items(r["after"]) for r in rows], map_t),
         }
     )
-    final = lsn_stream.segment_path(wal_dir, start_lsn, end_lsn)
-    tmp = final + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, final)
+    _publish_segment(wal_dir, start_lsn, end_lsn, table)
     return end_lsn
 
 
@@ -205,6 +209,12 @@ def read_relation_sidecar(wal_dir: str, table: str) -> dict | None:
     return doc
 
 
+def _segment_frontier(wal_dir: str, floor: int = 0) -> int:
+    """The durable segment log's end: the highest segment end LSN under
+    `wal_dir`, or `floor` when it holds no segment."""
+    return max((e for _s, e, _p in lsn_stream.list_segments(wal_dir)), default=floor)
+
+
 def pump_frames(
     frames,
     wal_dir: str,
@@ -241,11 +251,7 @@ def pump_frames(
     `ReplicationConnection.send_standby_status`."""
     from .pgoutput import PrimaryKeepalive, frames_to_committed_txns, pg_type_name
 
-    segs = lsn_stream.list_segments(wal_dir)
-    frontier = max(
-        (e for _s, e, _p in segs),
-        default=start_lsn if start_lsn is not None else 0,
-    )
+    frontier = _segment_frontier(wal_dir, start_lsn or 0)
     pending: list[dict] = []
     last_end = frontier
     # Ack watermark for EMPTY transactions (commits with no rows for the
@@ -342,9 +348,7 @@ def run_replication(
     from .replication_client import ReplicationConnection
 
     os.makedirs(wal_dir, exist_ok=True)
-    frontier = max(
-        (e for _s, e, _p in lsn_stream.list_segments(wal_dir)), default=start_lsn
-    )
+    frontier = _segment_frontier(wal_dir, start_lsn)
     conn = ReplicationConnection.connect(host, port, user, database, password)
     try:
         conn.start_replication(slot, frontier, publications, proto_version)
@@ -357,12 +361,6 @@ def run_replication(
         )
     finally:
         conn.close()
-
-
-def _segment_frontier(wal_dir: str, floor: int = 0) -> int:
-    if not os.path.isdir(wal_dir):
-        return floor
-    return max((e for _s, e, _p in lsn_stream.list_segments(wal_dir)), default=floor)
 
 
 def run_replication_resilient(
@@ -466,8 +464,7 @@ class SlotKeeper:
         os.makedirs(wal_dir, exist_ok=True)
         # Frontier recovery (crash between write and advance): the durable
         # segment log is authoritative for what has been received.
-        segs = lsn_stream.list_segments(wal_dir)
-        self.frontier = max((e for _s, e, _p in segs), default=start_lsn)
+        self.frontier = _segment_frontier(wal_dir, start_lsn)
         self._advanced = -1
         self._last_activity = self._clock()
 

@@ -1134,8 +1134,9 @@ def _merge_body(
             F.col("txn_seq") if "txn_seq" in batch_df.columns else F.lit(0)
         ).cast("long")
         incoming = batch_df.select(
-            "pk", "lsn", "op", seq_in.alias("txn_seq"), *value_cols
-        ).withColumn("pb", _bucket_col(n_buckets=n_buckets))
+            "pk", "lsn", "op", seq_in.alias("txn_seq"), *value_cols,
+            _bucket_col(n_buckets=n_buckets).alias("pb"),
+        )
         files = _bucket_files(spark, state_dir, manifest)
         # ONE Spark job: each touched bucket's task folds its stored state
         # (read by manifest path) with the batch rows and writes the bucket's
@@ -1340,7 +1341,6 @@ def mirror_sink(
     keep_epochs: int | None = None,
     transform=None,
     evolve_schema: bool = False,
-    dropped_cols=None,
     merge_mode: str = "cow",
     compact_deltas: int = 8,
     view_state_dir: str | None = None,
@@ -1362,14 +1362,16 @@ def mirror_sink(
     `compact_deltas` select the merge-on-read arm per micro-batch (write
     ∝ batch at state≫batch — see merge_mirror_batch).
 
-    `transform(batch_df) -> DataFrame`, when given, runs INSIDE each
-    foreachBatch on the micro-batch (batch semantics — aggregates and
-    joins that Structured Streaming would reject pre-sink are legal
-    here): the stream carries raw transport rows and the decode/typing
-    happens per batch. Used by the test_decoding transport, whose
-    commit-ts stamp is a per-xid aggregate+join. It runs first in each
-    batch, before the view's version 0 and the merge: `CdcEngine.start`
-    holds its batches there until the snapshot seed has committed.
+    `transform(batch_df) -> (rows, dropped_cols)`, when given, runs
+    INSIDE each foreachBatch on the micro-batch (batch semantics —
+    aggregates and joins that Structured Streaming would reject pre-sink
+    are legal here): the stream carries raw transport rows and the
+    decode/typing happens per batch. The batch merges `rows` with
+    `dropped_cols` as `merge_mirror_batch`'s drop list (the engine's
+    per-batch Relation-sidecar answer under `evolve_schema`, else None);
+    there is no drop-list option. It runs first in each batch, before
+    the view's version 0 and the merge: `CdcEngine.start` holds its
+    batches there until the snapshot seed has committed.
 
     A batch whose source input has no partitions (the first batch over an
     empty segment log) commits a manifest-only epoch — same buckets, the
@@ -1434,10 +1436,10 @@ def mirror_sink(
     batch_counter = {"n": 0}
 
     def apply(batch_df: DataFrame, _spark_epoch: int) -> None:
-        raw = batch_df
+        raw, dropped_cols = batch_df, None
         if transform is not None:
             # runs first: the engine's start gate waits in here
-            batch_df = transform(batch_df)
+            batch_df, dropped_cols = transform(batch_df)
         spark = batch_df.sparkSession
         if view_state_dir is not None and batch_counter["n"] == 0:
             from .agg_view_stream import latest_version, seed_agg_view_from_state
@@ -1487,16 +1489,12 @@ def mirror_sink(
                 n_groups=view_groups,
                 value_col=view_value_col,
             )
-        # dropped_cols may be a callable re-evaluated PER BATCH (the
-        # engine's Relation-sidecar drop detection — a mid-stream DROP
-        # COLUMN changes the answer between batches) or a static tuple
-        dc = dropped_cols() if callable(dropped_cols) else dropped_cols
         if rows:
             merge_mirror_batch(
                 batch_df, state_dir, epoch=None, n_buckets=n_buckets,
                 value_cols=value_cols, keep_epochs=keep_epochs,
                 evolve_schema=evolve_schema,
-                dropped_cols=dc, merge_mode=merge_mode,
+                dropped_cols=dropped_cols, merge_mode=merge_mode,
                 compact_deltas=compact_deltas,
             )
         else:
@@ -1505,7 +1503,7 @@ def mirror_sink(
                 state_dir,
                 _merge_body(
                     batch_df, state_dir, n_buckets, value_cols,
-                    evolve_schema, dc, rows=False,
+                    evolve_schema, dropped_cols, rows=False,
                 ),
                 keep_epochs=keep_epochs,
             )

@@ -82,9 +82,7 @@ def test_typed_projection_and_toast(spark):
         ).otherwise(F.col("after")),
     )
     struct = table_struct([("id", "int8"), ("name", "text"), ("bio", "text")])
-    typed = typed_projection(
-        repaired.withColumn("after", F.col("after_fixed")), "after", struct
-    )
+    typed = repaired.select(*typed_projection(F.col("after_fixed"), struct))
     out = {r["id"]: r for r in typed.collect()}
     assert out[1]["bio"] == "long-toast-text"  # TOAST repaired from old image
     assert out[1]["name"] == "alice2"  # real update kept
@@ -101,7 +99,7 @@ def test_typed_projection_bytea_hex_decode(spark):
         "after map<string,string>",
     )
     schema = table_struct([("payload", "bytea"), ("raw", "bytea")])
-    out = typed_projection(df, "after", schema).collect()[0]
+    out = df.select(*typed_projection(F.col("after"), schema)).collect()[0]
     assert bytes(out["payload"]) == b"hello"
     assert bytes(out["raw"]) == b"already-binary"  # non-hex falls through
 
@@ -156,7 +154,7 @@ def test_socket_typed_decode_arrays_numeric_jsonb(spark, ddb):
     assert schema["doc"].dataType == T.StringType()
 
     df = spark.createDataFrame([Row(after=row["after"])], "after map<string,string>")
-    out = typed_projection(df, "after", schema).collect()[0]
+    out = df.select(*typed_projection(F.col("after"), schema)).collect()[0]
 
     assert out["id"] == 7
     assert out["doc"] == '{"k": [1, 2]}'

@@ -861,7 +861,7 @@ def test_live_typed_decode_arrays_numeric_jsonb(spark, tmp_path):
         assert _json.loads(after["doc"]) == {"k": [1, 2]}
 
         # and the typed projection turns the live wire text into real types
-        from pyspark.sql import Row, types as ST
+        from pyspark.sql import Row, functions as F, types as ST
 
         from go_pq_cdc_spark.envelope import typed_projection
 
@@ -876,7 +876,7 @@ def test_live_typed_decode_arrays_numeric_jsonb(spark, tmp_path):
             ]
         )
         df = spark.createDataFrame([Row(after=after)], "after map<string,string>")
-        out = typed_projection(df, "after", schema).collect()[0]
+        out = df.select(*typed_projection(F.col("after"), schema)).collect()[0]
         assert out["id"] == 7
         assert out["nums"] == [1, 2, None]
         assert out["tags"] == ["x", "y z", "a,b"]

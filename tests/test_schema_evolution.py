@@ -37,12 +37,12 @@ def test_new_column_mid_stream(spark):
 
     # old consumer schema: unaffected by the unknown key
     v1 = table_struct([("id", "int8"), ("name", "text")])
-    out1 = {r["id"]: r for r in typed_projection(df, "after", v1).collect()}
+    out1 = {r["id"]: r for r in df.select(*typed_projection(F.col("after"), v1)).collect()}
     assert out1[2]["name"] == "bob" and "score" not in out1[2].asDict() or True
 
     # updated schema: new column becomes visible, NULL for pre-DDL rows
     v2 = table_struct([("id", "int8"), ("name", "text"), ("score", "float8")])
-    out2 = {r["id"]: r for r in typed_projection(df, "after", v2).collect()}
+    out2 = {r["id"]: r for r in df.select(*typed_projection(F.col("after"), v2)).collect()}
     assert out2[1]["score"] is None
     assert abs(out2[2]["score"] - 9.5) < 1e-9
     assert isinstance(out2[2]["score"], float)
