@@ -35,9 +35,9 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from .config import EngineConfig, TableConfig
+from .envelope import ddl_struct
 from .snapshot.claim_backend import backend_for
 from .snapshot.planner import SnapshotPlan, plan_auto
 from .sources import postgres as pg
@@ -56,20 +56,11 @@ class CdcEngine:
         config.validate()
         self.config = config
         self.spark = spark
-        self._structs: dict[str, StructType] = {}
         # wall seconds of the last `start`'s phases, by phase name;
         # `status_server` exports them (see `start`)
         self.start_phases: dict[str, float] = {}
         # (query id, perf_counter) when the last `start` opened its gate
         self.gate_opened: tuple[str, float] | None = None
-
-    def _ddl_struct(self, ddl: str) -> StructType:
-        """DDL string -> StructType, parsed once per engine: a parse is a
-        JVM round trip. DDL-aware — a naive split(',') would shred types
-        that contain commas (decimal(10,2), map<...>, struct<...>)."""
-        if ddl not in self._structs:
-            self._structs[ddl] = self.spark.createDataFrame([], ddl).schema
-        return self._structs[ddl]
 
     # -- management plane (O25-O27): DDL the operator executes against PG --
 
@@ -325,7 +316,7 @@ class CdcEngine:
         if lsn_floor is not None:
             where &= F.col("lsn") > lsn_floor
         img = F.when(F.col("op") == "D", F.col("before")).otherwise(F.col("after"))
-        (pk,) = typed_projection(img, self._ddl_struct(f"{pk_col} bigint"))
+        (pk,) = typed_projection(img, ddl_struct(f"{pk_col} bigint"))
         head = [
             "op",
             "lsn",
@@ -344,7 +335,7 @@ class CdcEngine:
                 ddl, dropped = self._evolved_value_schema(evolve_from, table, ddl)
             if ddl not in selects:
                 selects[ddl] = head + typed_projection(
-                    F.col("after"), self._ddl_struct(ddl)
+                    F.col("after"), ddl_struct(ddl)
                 )
             return env.where(where).select(*selects[ddl]), dropped
 
@@ -388,7 +379,7 @@ class CdcEngine:
         ever_seen = set(sidecar["seen"])
         declared = [
             (f.name, f.dataType.simpleString())
-            for f in self._ddl_struct(declared_ddl).fields
+            for f in ddl_struct(declared_ddl).fields
         ]
         rel_types = {n: pg_type_to_spark(t).simpleString() for n, t in rel_cols}
         out: list[tuple[str, str]] = []
@@ -637,7 +628,7 @@ class CdcEngine:
             None, state_dir, checkpoint_dir,
             **dict.fromkeys(_OWN_SINK_ARGS), **mirror,
         )
-        value_cols = tuple(f.name for f in self._ddl_struct(value_schema).fields)
+        value_cols = tuple(f.name for f in ddl_struct(value_schema).fields)
         phases = self.start_phases
         phases.clear()
         self.gate_opened = None
@@ -729,7 +720,7 @@ class CdcEngine:
             stream_df = file_change_stream(
                 self.spark,
                 wal_dir,
-                schema=self._ddl_struct(
+                schema=ddl_struct(
                     "op string, lsn bigint, xid bigint, commit_ts timestamp, "
                     f"pk bigint, {value_schema}"
                 ),

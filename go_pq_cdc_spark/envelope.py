@@ -114,6 +114,20 @@ def table_struct(columns: list[tuple[str, str]]) -> T.StructType:
     return T.StructType([T.StructField(n, pg_type_to_spark(t), True) for n, t in columns])
 
 
+_STRUCTS: dict[str, T.StructType] = {}
+
+
+def ddl_struct(ddl: str) -> T.StructType:
+    """DDL string -> StructType, parsed once per process (the parser runs
+    in the JVM: one round trip, no DataFrame). DDL-aware — a naive
+    split(',') would shred types that contain commas (decimal(10,2),
+    map<...>, struct<...>)."""
+    st = _STRUCTS.get(ddl)
+    if st is None:
+        st = _STRUCTS[ddl] = T.StructType.fromDDL(ddl)
+    return st
+
+
 def _as_string_leaves(dt: T.DataType) -> T.DataType:
     """Mirror an (arbitrarily nested) ArrayType with StringType leaves —
     the parse schema for the transport's JSON-encoded array text."""

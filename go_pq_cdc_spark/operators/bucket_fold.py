@@ -233,16 +233,20 @@ class BucketFiles:
         """The bucket's current rows: base + pending deltas, folded."""
         return fold_bucket(self.events(b, pks), self.value_cols, self.dead)
 
-    def write(self, rel: str, table: pa.Table) -> None:
+    def write(self, rel: str, table: pa.Table) -> int:
         """Write `table` as the dir's one file, `part-0.parquet`, via a
         hidden temp file and a rename: a retried or speculative task
-        attempt never leaves a torn file, and readers skip the temp."""
+        attempt never leaves a torn file, and readers skip the temp.
+        Returns the file's size in bytes."""
         fs, root = self.fs()
         d = f"{root}/{rel}"
         fs.create_dir(d, recursive=True)
         tmp = f"{d}/.part-0.{uuid.uuid4().hex}.tmp"
-        pq.write_table(table, tmp, filesystem=fs)
+        with fs.open_output_stream(tmp) as out:
+            pq.write_table(table, out)
+            size = out.tell()
         fs.move(tmp, f"{d}/part-0.parquet")
+        return size
 
     def fold_ids(self, batches):
         """mapInArrow body: bucket ids in, their folded rows out."""
@@ -255,7 +259,8 @@ class BucketFiles:
 
 RESULT_SCHEMA = pa.schema([
     ("pb", pa.int32()), ("kind", pa.string()), ("rel", pa.string()),
-    ("rows", pa.int64()), ("t_lsn", pa.int64()), ("t_seq", pa.int64()),
+    ("rows", pa.int64()), ("bytes", pa.int64()), ("t_lsn", pa.int64()),
+    ("t_seq", pa.int64()),
 ])
 
 
@@ -264,7 +269,7 @@ class BucketTask:
     bucket's stored state with its batch rows and write the new base
     (kind 'base'; rel None = every key deleted), or append the rows as a
     delta file while the bucket is under its delta `budget` (kind
-    'delta'). A batch row TRUNCATE is reported (kind 'truncate', with its
+    'delta'); `bytes` is the size of the file written. A batch row TRUNCATE is reported (kind 'truncate', with its
     position) instead, unless `truncated_at` is set: then stored state is
     dead and only rows after that position fold."""
 
@@ -276,7 +281,7 @@ class BucketTask:
     def run(self, b: int, rows: pa.Table | None) -> dict:
         files = self.files
         rows = files.schema.empty_table() if rows is None else conform(rows, files.schema)
-        out = {"pb": b, "kind": "base", "rel": None, "rows": 0,
+        out = {"pb": b, "kind": "base", "rel": None, "rows": 0, "bytes": 0,
                "t_lsn": None, "t_seq": None}
         if self.truncated_at is None:
             is_t = pc.fill_null(pc.equal(rows["op"], "T"), False)
@@ -288,16 +293,17 @@ class BucketTask:
                 len(files.deltas.get(str(b), ())) < self.budget
             ):
                 rel = os.path.join(self.epoch_rel + ".d", f"pb={b}")
-                files.write(rel, rows.sort_by(
+                size = files.write(rel, rows.sort_by(
                     [("pk", "ascending"), ("lsn", "ascending"), ("txn_seq", "ascending")]
                 ))
-                return {**out, "kind": "delta", "rel": rel, "rows": rows.num_rows}
+                return {**out, "kind": "delta", "rel": rel,
+                        "rows": rows.num_rows, "bytes": size}
             rows = pa.concat_tables([files.events(b), rows])
         state = fold_bucket(rows, files.value_cols, files.dead, self.truncated_at)
         if state.num_rows:
             out["rel"] = os.path.join(self.epoch_rel, f"pb={b}")
             out["rows"] = state.num_rows
-            files.write(out["rel"], state)
+            out["bytes"] = files.write(out["rel"], state)
         return out
 
     def by_group(self):

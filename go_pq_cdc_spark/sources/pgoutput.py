@@ -197,6 +197,15 @@ class PrimaryKeepalive:
     reply_requested: bool
 
 
+class Idle:
+    """Not a wire frame: what `ReplicationConnection.frames()` yields when
+    no message arrived within `slot_keeper.SEGMENT_AGE_S`, so the pump can
+    cut a segment on a quiet stream. It carries no payload."""
+
+
+IDLE = Idle()
+
+
 def parse_copy_data(frame: bytes) -> XLogData | PrimaryKeepalive:
     """One CopyData payload -> XLogData ('w') or keepalive ('k')
     (stream.go:302-348 demux; format from the PG docs §55.4)."""
@@ -525,8 +534,9 @@ def frames_to_committed_txns(frames, on_relation=None):
     PG text-array format to JSON text so the envelope carries the SAME
     encoding the wal2json path does — `envelope.typed_projection` turns
     either into a typed array column (pgtype-parity,
-    `pq/message/tuple/data.go:97-102`). Keepalive frames are skipped —
-    the caller answers them with `standby_status_update`.
+    `pq/message/tuple/data.go:97-102`). Keepalive frames and idle ticks
+    are skipped — the caller answers keepalives with
+    `standby_status_update`.
 
     `on_relation(rel)`, when given, fires for every decoded Relation
     message (initial AND re-sends after DDL — relation.go:11-19): the
@@ -549,7 +559,7 @@ def frames_to_committed_txns(frames, on_relation=None):
         return rows
 
     for frame in frames:
-        if isinstance(frame, PrimaryKeepalive):
+        if isinstance(frame, (PrimaryKeepalive, Idle)):
             continue
         msg = dec.decode(frame.payload)
         if isinstance(msg, Begin):

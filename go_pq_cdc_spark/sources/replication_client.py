@@ -9,7 +9,7 @@ no driver library needed:
 
     conn = ReplicationConnection.connect(host, port, user, db, password)
     conn.start_replication("cdc_slot", start_lsn, ["pub"])
-    for frame in conn.frames():          # XLogData | PrimaryKeepalive
+    for frame in conn.frames():          # XLogData | PrimaryKeepalive | IDLE
         ...                               # decode via sources.pgoutput
         conn.send_standby_status(received, flushed, applied)
 
@@ -25,13 +25,20 @@ from __future__ import annotations
 import hashlib
 import hmac
 import os
+import select
 import socket
 import struct
 from base64 import b64decode, b64encode
 from dataclasses import dataclass, field
 
-from .pgoutput import PrimaryKeepalive, XLogData, parse_copy_data, standby_status_update
-from .slot_keeper import int_to_lsn
+from .pgoutput import (
+    IDLE,
+    PrimaryKeepalive,
+    XLogData,
+    parse_copy_data,
+    standby_status_update,
+)
+from .slot_keeper import SEGMENT_AGE_S, int_to_lsn
 
 PROTOCOL_VERSION = 196608  # 3.0
 
@@ -239,8 +246,20 @@ class ReplicationConnection:
 
     def frames(self):
         """Yield XLogData / PrimaryKeepalive until CopyDone (stream.go
-        read loop). Feed payloads to `pgoutput.PgOutputDecoder`."""
+        read loop). Feed payloads to `pgoutput.PgOutputDecoder`. Between
+        messages the socket is awaited for at most `SEGMENT_AGE_S`; when
+        nothing arrives, `pgoutput.IDLE` is yielded instead, the pump's
+        cue to cut a segment on a quiet stream."""
         while True:
+            if not self._buf:
+                if self.sock.fileno() < 0:  # closed by another thread
+                    raise ReplicationError("connection closed")
+                # poll, not select: select rejects an fd >= FD_SETSIZE
+                waiter = select.poll()
+                waiter.register(self.sock, select.POLLIN)
+                if not waiter.poll(SEGMENT_AGE_S * 1000):
+                    yield IDLE
+                    continue
             tag, body = self._read_message()
             if tag == b"d":  # CopyData wraps a replication frame
                 msg = parse_copy_data(body)

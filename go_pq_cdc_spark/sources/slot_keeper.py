@@ -52,6 +52,12 @@ _WAL2JSON_COMMIT_RE = re.compile(r'"action"\s*:\s*"C"')
 # Raw segment schema (decode happens JVM-side via wal2json.decode_wal2json).
 RAW_WAL_SCHEMA_DDL = lsn_stream.RAW_WAL_SCHEMA_DDL
 
+# The longest a received commit waits in the pump for its segment. It
+# also bounds how long `ReplicationConnection.frames()` waits on a quiet
+# socket before yielding an idle tick, so a lone commit is cut about
+# this long after it arrived.
+SEGMENT_AGE_S = 0.25
+
 
 def lsn_to_int(lsn: str | int) -> int:
     """'X/Y' pg_lsn text -> 64-bit int (hi<<32 | lo)."""
@@ -66,15 +72,26 @@ def int_to_lsn(v: int) -> str:
 
 
 def _publish_segment(wal_dir: str, start_lsn: int, end_lsn: int, table) -> None:
-    """Publish one segment covering [start_lsn, end_lsn] atomically (tmp +
-    rename): the stream source must never list a partial file. The one
-    place a segment reaches its final name."""
+    """Publish one segment covering [start_lsn, end_lsn] atomically and
+    durably: write a temp file and fsync it, rename it into place, fsync
+    the directory. The stream source never lists a partial file, and a
+    segment whose end the pump then acks survives a power loss (the
+    server may drop the acked WAL). The one place a segment reaches its
+    final name."""
     import pyarrow.parquet as pq
 
     final = lsn_stream.segment_path(wal_dir, start_lsn, end_lsn)
     tmp = final + ".tmp"
-    pq.write_table(table, tmp)
+    with open(tmp, "wb") as f:
+        pq.write_table(table, f)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, final)
+    fd = os.open(os.path.dirname(final) or ".", os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def write_raw_segment(wal_dir: str, start_lsn: int, rows: list[tuple]) -> int:
@@ -229,10 +246,18 @@ def pump_frames(
     the in-process handler channel).
 
     Transactions are delivered WHOLE (`pgoutput.frames_to_committed_txns`
-    buffers per top-level xid, like the reference's per-XID assembly) and segments cut
-    at COMMIT boundaries once `batch_rows` rows have accumulated, so a
-    transaction never spans a segment edge (replay after a crash re-reads
-    whole transactions — at-least-once, idempotent downstream).
+    buffers per top-level xid, like the reference's per-XID assembly) and
+    segments cut at COMMIT boundaries, so a transaction never spans a
+    segment edge (replay after a crash re-reads whole transactions —
+    at-least-once, idempotent downstream). A segment is cut once
+    `batch_rows` rows are pending, or once the oldest pending commit has
+    waited `SEGMENT_AGE_S`: a commit on a paced or quiet stream is not
+    held back for rows that have not arrived yet. The age runs from the
+    local monotonic time the pump received the commit, never from its
+    commit timestamp, so a retained backlog drained at once is still cut
+    by rows. It is checked on every frame, keepalives included, and on
+    the idle ticks `ReplicationConnection.frames()` yields on a quiet
+    socket (which the decoder skips).
 
     The durable frontier and replay dedup work at TRANSACTION granularity
     on the COMMIT record's end LSN — the position the server's own
@@ -254,6 +279,7 @@ def pump_frames(
     frontier = _segment_frontier(wal_dir, start_lsn or 0)
     pending: list[dict] = []
     last_end = frontier
+    oldest = None  # monotonic receipt time of the oldest pending commit
     # Ack watermark for EMPTY transactions (commits with no rows for the
     # published tables — a busy server with a quiet published table emits
     # them continuously): they add nothing durable, but the slot's
@@ -269,16 +295,20 @@ def pump_frames(
             send_status(pos, pos, pos)
 
     def flush():
-        nonlocal frontier, pending
+        nonlocal frontier, pending, oldest
         if pending and last_end > frontier:
             write_envelope_segment(wal_dir, frontier + 1, pending, end_lsn=last_end)
             frontier = last_end
-        pending = []
+        pending, oldest = [], None
         ack()
 
     def dml_frames():
-        # envelope decode skips keepalives — tee them here for acking
+        # pending holds whole transactions whenever the decoder asks for
+        # a frame, so an age cut here still ends at a commit boundary
         for f in frames:
+            if oldest is not None and time.monotonic() - oldest >= SEGMENT_AGE_S:
+                flush()
+            # envelope decode skips keepalives — tee them here for acking
             if isinstance(f, PrimaryKeepalive):
                 if f.reply_requested:
                     ack()
@@ -315,6 +345,8 @@ def pump_frames(
             continue
         pending.extend(rows)
         last_end = end_lsn
+        if oldest is None:
+            oldest = time.monotonic()
         if len(pending) >= batch_rows:
             flush()
     if pending:

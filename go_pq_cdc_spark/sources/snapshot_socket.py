@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import TableConfig
+from ..envelope import ddl_struct
 from ..snapshot.planner import SnapshotPlan, Strategy
 from .postgres import (
     chunk_query,
@@ -91,7 +92,7 @@ def _read_chunks(
     executor with the stage, not once per task with the function). Each
     task fetches its chunk as string columns through `mapInArrow`, so the
     workers never import pandas, and Catalyst casts them to `schema_ddl`."""
-    fields = spark.createDataFrame([], schema_ddl).schema
+    fields = ddl_struct(schema_ddl)
     names = [f.name for f in fields]
     str_schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
 

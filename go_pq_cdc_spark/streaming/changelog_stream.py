@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..envelope import ddl_struct
 from ..operators.bucket_fold import (
     STORED_ROW_SEQ,
     BucketFiles,
@@ -238,21 +239,16 @@ def _children(fs: pafs.FileSystem, path: str) -> list:
     return fs.get_file_info(pafs.FileSelector(path, allow_not_found=True))
 
 
-_STRUCTS: dict[str, T.StructType] = {}
-
-
-def _mirror_struct(spark: SparkSession, manifest: dict) -> T.StructType:
-    """StructType of a manifest's stored mirror row shape (parsed once per
-    value DDL: a parse is a JVM round trip, and a point lookup needs the
-    struct on every call). Mirrors created before multi-column support
-    pin no DDL and store `after_val double`."""
+def _mirror_ddl(manifest: dict) -> str:
+    """DDL of a manifest's stored mirror row shape. Mirrors created
+    before multi-column support pin no DDL and store `after_val double`."""
     value_schema = manifest.get("value_schema", "after_val double")
-    st = _STRUCTS.get(value_schema)
-    if st is None:
-        st = _STRUCTS[value_schema] = spark.createDataFrame(
-            [], f"pk bigint, lsn bigint, op string, {value_schema}"
-        ).schema
-    return st
+    return f"pk bigint, lsn bigint, op string, {value_schema}"
+
+
+def _mirror_struct(manifest: dict) -> T.StructType:
+    """StructType of a manifest's stored mirror row shape."""
+    return ddl_struct(_mirror_ddl(manifest))
 
 
 def _masked_cols(struct, dropped) -> list:
@@ -271,34 +267,73 @@ def _masked_cols(struct, dropped) -> list:
     ]
 
 
-_RESULT_DDL = "pb int, kind string, rel string, rows long, t_lsn long, t_seq long"
+_RESULT_DDL = (
+    "pb int, kind string, rel string, rows long, bytes long, t_lsn long, t_seq long"
+)
 _ID_STRUCT = T.StructType([T.StructField("pb", T.IntegerType())])
 
+# Stored bytes one fold task covers. A Python task costs ~0.06 s before
+# it folds anything, and `BucketTask.run` folds 220-400 MB/s
+# (`tools/py_task_floor.py`, 4 CPUs: a task pays for itself at ~17 MB).
+# A mirror under this size folds in one task and leaves the other cores
+# to lookups; one of 16 MB per core or more gets a task per core.
+FOLD_TASK_BYTES = 16 << 20
 
-def _event_schema(spark: SparkSession, struct: T.StructType) -> pa.Schema:
+_EVENT_SCHEMAS: dict[str, pa.Schema] = {}
+
+
+def _event_schema(spark: SparkSession, manifest: dict) -> pa.Schema:
     """Arrow schema of a fold input row: the mirror row with txn_seq as
-    the 4th column, in the Arrow types Spark exchanges with Python."""
+    the 4th column, in the Arrow types Spark exchanges with Python. Built
+    once per row shape: reading the session's Arrow type setting is a
+    JVM round trip, and a point lookup needs the schema on every call."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    s = to_arrow_schema(
-        struct, prefers_large_types=spark._jconf.arrowUseLargeVarTypes()
-    )
-    return s.insert(3, pa.field("txn_seq", pa.int64()))
+    ddl = _mirror_ddl(manifest)
+    s = _EVENT_SCHEMAS.get(ddl)
+    if s is None:
+        s = _EVENT_SCHEMAS[ddl] = to_arrow_schema(
+            _mirror_struct(manifest),
+            prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
+        ).insert(3, pa.field("txn_seq", pa.int64()))
+    return s
 
 
 def _bucket_files(spark: SparkSession, state_dir: str, manifest: dict) -> BucketFiles:
     """The manifest's bucket files, typed by its row shape."""
-    return BucketFiles(
-        state_dir, manifest, _event_schema(spark, _mirror_struct(spark, manifest))
-    )
+    return BucketFiles(state_dir, manifest, _event_schema(spark, manifest))
 
 
-def _fold_groups(rows: DataFrame, task: BucketTask, n_buckets: int) -> list:
+def _manifest_rels(manifest: dict) -> list[str]:
+    """Data dirs a manifest references: bucket bases, then pending deltas."""
+    return [*manifest["buckets"].values(),
+            *(r for rels in (manifest.get("deltas") or {}).values() for r in rels)]
+
+
+def _stored_bytes(manifest: dict) -> int | None:
+    """Bytes of the files a manifest references, as the fold tasks that
+    wrote them reported; None when one of them has no recorded size
+    (written before sizes were recorded)."""
+    sizes = manifest.get("bytes", {})
+    rels = _manifest_rels(manifest)
+    if any(r not in sizes for r in rels):
+        return None
+    return sum(sizes[r] for r in rels)
+
+
+def _fold_groups(
+    rows: DataFrame, task: BucketTask, n_buckets: int, stored_bytes: int | None
+) -> list:
     """Run `task` once per bucket of `rows` (which carry `pb`): one Spark
-    job, a shuffle on pb into one task per core, capped at the bucket
-    count. Returns the per-bucket result rows."""
+    job, a shuffle on pb into at most one task per core and per bucket.
+    The task count follows what the fold reads: one task per
+    `FOLD_TASK_BYTES` of `stored_bytes` (the mirror's, `_stored_bytes`).
+    Unknown stored bytes get the cap. Returns the per-bucket result
+    rows."""
     spark = rows.sparkSession
     tasks = min(spark.sparkContext.defaultParallelism, max(n_buckets, 1))
+    if stored_bytes is not None:
+        tasks = min(tasks, max(-(-stored_bytes // FOLD_TASK_BYTES), 1))
     return (
         rows.repartition(tasks, "pb")
         .groupBy("pb")
@@ -310,9 +345,14 @@ def _fold_groups(rows: DataFrame, task: BucketTask, n_buckets: int) -> list:
 def _apply_results(manifest: dict, results) -> None:
     """Record per-bucket task results in the manifest: a delta file
     appends to the bucket's debt; a new base (or none: every key
-    deleted) replaces the bucket and clears its debt."""
+    deleted) replaces the bucket and clears its debt. The size of each
+    file written is kept in `bytes` (by rel path), pruned to the files
+    the manifest references."""
+    sizes = manifest.get("bytes", {})
     for r in results:
         b = str(r["pb"])
+        if r["rel"] is not None:
+            sizes[r["rel"]] = r["bytes"]
         if r["kind"] == "delta":
             manifest.setdefault("deltas", {}).setdefault(b, []).append(r["rel"])
             continue
@@ -321,6 +361,8 @@ def _apply_results(manifest: dict, results) -> None:
         else:
             manifest["buckets"][b] = r["rel"]
         (manifest.get("deltas") or {}).pop(b, None)
+    live = set(_manifest_rels(manifest))
+    manifest["bytes"] = {r: n for r, n in sizes.items() if r in live}
 
 
 def _manifest_df(
@@ -347,7 +389,7 @@ def _manifest_df(
     same log); buckets with NO deltas read directly, zero fold overhead
     — the read cost of delta debt is bounded by the compaction budget,
     never paid by untouched buckets."""
-    struct = _mirror_struct(spark, manifest)
+    struct = _mirror_struct(manifest)
     dead = set(manifest.get("dropped", {}))
     buckets = manifest["buckets"]
     deltas = [b for b, rels in (manifest.get("deltas") or {}).items() if rels]
@@ -455,7 +497,7 @@ def lookup_mirror(
     for attempt in range(3):
         manifest = _read_manifest(state_dir)
         n = int(manifest.get("n_buckets") or MIRROR_BUCKETS)
-        struct = _mirror_struct(spark, manifest)
+        struct = _mirror_struct(manifest)
         files = _bucket_files(spark, state_dir, manifest)
         routed: dict[int, list[int]] = {}
         for p in want:
@@ -538,14 +580,8 @@ def _gc_epochs(state_dir: str, manifest: dict) -> None:
         doc, _ = backend.read(os.path.join(mroot, f))
         if doc is not None:
             retained.append(doc)
-    live = {m["buckets"][b] for m in retained for b in m["buckets"]}
-    # delta dirs referenced by ANY retained manifest stay (merge-on-read)
-    live |= {
-        rel
-        for m in retained
-        for rels in (m.get("deltas") or {}).values()
-        for rel in rels
-    }
+    # base and delta dirs referenced by ANY retained manifest stay
+    live = {rel for m in retained for rel in _manifest_rels(m)}
     fs, root = _data_fs(state_dir)
     for edir in _children(fs, f"{root}/epochs"):
         if edir.type != pafs.FileType.Directory:
@@ -1052,7 +1088,7 @@ def _merge_body(
             # wider pin). A non-widenable change is still a rebuild.
             stored_fields = [
                 (f.name, f.dataType.simpleString())
-                for f in _mirror_struct(spark, manifest).fields[3:]
+                for f in _mirror_struct(manifest).fields[3:]
             ]
             st_types = dict(stored_fields)
             in_types = dict(incoming_fields)
@@ -1104,7 +1140,7 @@ def _merge_body(
         if dropped_cols:
             if not evolve_schema:
                 raise ValueError("dropped_cols= requires evolve_schema=True")
-            pinned = _mirror_struct(spark, manifest).names[3:]
+            pinned = _mirror_struct(manifest).names[3:]
             drops = manifest.setdefault("dropped", {})
             for c in dropped_cols:
                 if c in pinned and c not in drops:
@@ -1146,8 +1182,9 @@ def _merge_body(
         # task. Dead (dropped) columns are masked on every fold input, so the
         # TOAST fill never resurrects their stored values.
         budget = max(int(compact_deltas), 1) if merge_mode == "delta" else None
+        stored = _stored_bytes(manifest)
         results = _fold_groups(
-            incoming, BucketTask(files, epoch_rel, budget), n_buckets
+            incoming, BucketTask(files, epoch_rel, budget), n_buckets, stored
         )
         cut = max(
             ((r["t_lsn"], r["t_seq"]) for r in results if r["kind"] == "truncate"),
@@ -1161,7 +1198,8 @@ def _merge_body(
             # rerun does not rewrite leaves the manifest, all delta debt with
             # it. The first run's files are overwritten or left for GC.
             results = _fold_groups(
-                incoming, BucketTask(files, epoch_rel, truncated_at=cut), n_buckets
+                incoming, BucketTask(files, epoch_rel, truncated_at=cut),
+                n_buckets, stored,
             )
             manifest["buckets"] = {}
             manifest.pop("deltas", None)
@@ -1315,13 +1353,15 @@ def rebucket_mirror(
         state = _manifest_df(spark, state_dir, manifest).select(
             "pk", "lsn", "op",
             F.lit(STORED_ROW_SEQ).cast("long").alias("txn_seq"),
-            *_mirror_struct(spark, manifest).names[3:],
+            *_mirror_struct(manifest).names[3:],
             _bucket_col(n_buckets=new_n).alias("pb"),
         )
         files = _bucket_files(
             spark, state_dir, {**manifest, "buckets": {}, "deltas": {}}
         )
-        results = _fold_groups(state, BucketTask(files, epoch_rel), new_n)
+        results = _fold_groups(
+            state, BucketTask(files, epoch_rel), new_n, _stored_bytes(manifest)
+        )
         manifest["buckets"] = {}
         manifest.pop("deltas", None)  # folded into the rewrite
         manifest["n_buckets"] = new_n

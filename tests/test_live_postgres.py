@@ -2055,6 +2055,77 @@ def test_live_engine_schema_evolution_into_mirror(spark, tmp_path):
         sql.close()
 
 
+def test_live_engine_lone_commit_visible_on_idle_stream(spark, tmp_path):
+    """One committed row on an otherwise idle stream reaches the mirror
+    within seconds, with no processAllAvailable and the pump's default
+    1,000-row batch: the pump cuts the lone commit's segment once it is
+    SEGMENT_AGE_S old (the socket's idle tick), and the free-running
+    stream picks it up. Before the age cut, the row waited for 999 more."""
+    from go_pq_cdc_spark.config import EngineConfig, TableConfig
+    from go_pq_cdc_spark.engine import CdcEngine
+    from go_pq_cdc_spark.sources.replication_client import ReplicationConnection
+    from go_pq_cdc_spark.sources.slot_keeper import pump_frames
+    from go_pq_cdc_spark.streaming import lookup_mirror
+
+    T9, SLOT9, PUB9 = "eng_idle_t", "eng_idle_slot", "eng_idle_pub"
+    sql = _sql_conn()
+    q = sql.simple_query
+    q(f"DROP PUBLICATION IF EXISTS {PUB9}")
+    _drop_slot_with_retry(q, slot=SLOT9)
+    q(f"DROP TABLE IF EXISTS {T9}")
+    q(f"CREATE TABLE {T9} (pk bigint PRIMARY KEY, val text)")
+    cfg = EngineConfig(
+        publication_name=PUB9, slot_name=SLOT9, tables=[TableConfig(name=T9)],
+        heartbeat_enabled=False, snapshot_mode="never",
+    )
+    wal_dir = str(tmp_path / "wal")
+    os.makedirs(wal_dir, exist_ok=True)
+    state_dir = str(tmp_path / "state")
+    stream_q = conn = pump_t = None
+    try:
+        _lsn, stream_q = CdcEngine(cfg, spark).start(
+            q, wal_dir, state_dir, str(tmp_path / "ckpt"),
+            value_schema="val string", transport="envelope", table=f"public.{T9}",
+        )
+        conn = ReplicationConnection.connect(**_conn_args(), replication=True)
+        conn.sock.settimeout(None)
+        conn.start_replication(SLOT9, 0, [PUB9])
+
+        def pump():
+            try:
+                pump_frames(conn.frames(), wal_dir, conn.send_standby_status)
+            except Exception:
+                pass  # socket close on teardown ends the pump
+
+        pump_t = threading.Thread(target=pump, daemon=True)
+        pump_t.start()
+        time.sleep(1.0)  # the stream is idle, the pump is waiting
+        q(f"INSERT INTO {T9} VALUES (1, 'lone')")
+        committed = time.monotonic()
+        got = []
+        while time.monotonic() - committed < WAIT_S and not got:
+            try:
+                got = [r["val"] for r in lookup_mirror(spark, state_dir, [1]).collect()]
+            except Exception:
+                pass  # the mirror's first epoch is not committed yet
+            if not got:
+                time.sleep(0.1)
+        visible_after = time.monotonic() - committed
+        assert got == ["lone"]
+        assert visible_after < 10.0, f"visible after {visible_after:.1f}s"
+    finally:
+        if stream_q is not None:
+            stream_q.stop()
+        if conn is not None:
+            conn.close()
+        if pump_t is not None:
+            pump_t.join(timeout=5)
+        _drop_slot_with_retry(q, slot=SLOT9)
+        q(f"DROP PUBLICATION IF EXISTS {PUB9}")
+        q(f"DROP TABLE IF EXISTS {T9}")
+        sql.close()
+
+
 # --- r9 live additions: proto v1, partitioned root, split-txn commit_ts,
 # --- type-change + column-drop evolution (r8 verdict items 3, 4, 5, 7)
 

@@ -15,7 +15,7 @@ from base64 import b64decode, b64encode
 
 import pytest
 
-from go_pq_cdc_spark.sources.pgoutput import PgOutputDecoder, Insert, PrimaryKeepalive
+from go_pq_cdc_spark.sources.pgoutput import Idle, Insert, PgOutputDecoder, PrimaryKeepalive
 from go_pq_cdc_spark.sources.replication_client import (
     ReplicationConnection,
     ReplicationError,
@@ -257,6 +257,8 @@ def test_full_replication_session(auth):
         if isinstance(frame, PrimaryKeepalive):
             if frame.reply_requested:
                 conn.send_standby_status(frame.wal_end + 1, frame.wal_end + 1, frame.wal_end + 1)
+            continue
+        if isinstance(frame, Idle):  # the fake server paused for a while
             continue
         events.append(dec.decode(frame.payload))
     conn.close()
@@ -764,3 +766,140 @@ def test_pump_segments_recode_arrays_as_json(tmp_path):
     (row,) = pq.read_table(path).to_pylist()
     after = dict(row["after"])
     assert after["nums"] == '["1", "2", null]'  # JSON, not PG '{1,2,NULL}'
+
+
+def _txn_frames(begin_lsn: int, rows, commit_ts_us: int = 0) -> list:
+    """XLogData frames of one transaction inserting `rows` ((id, val)
+    text pairs); its COMMIT ends at begin_lsn + len(rows) + 2."""
+    from go_pq_cdc_spark.sources.pgoutput import XLogData
+
+    end = begin_lsn + len(rows) + 1
+    return [
+        XLogData(begin_lsn, begin_lsn, 0,
+                 b"B" + struct.pack(">QqI", end, commit_ts_us, begin_lsn)),
+        *(XLogData(begin_lsn + 1 + i, begin_lsn + 1 + i, 0, insert_msg(vals=r))
+          for i, r in enumerate(rows)),
+        XLogData(end, end, 0,
+                 b"C" + struct.pack(">bQQq", 0, end, end + 1, commit_ts_us)),
+    ]
+
+
+def test_pump_cuts_a_lone_commit_on_the_idle_tick(tmp_path):
+    """One commit, then silence: `frames()` yields an idle tick once the
+    socket has been quiet for SEGMENT_AGE_S, and the pump cuts the
+    pending commit's segment and acks it, though `batch_rows` is far from
+    reached."""
+    import os
+    import time
+
+    from go_pq_cdc_spark.sources import lsn_stream
+    from go_pq_cdc_spark.sources.pgoutput import XLogData
+    from go_pq_cdc_spark.sources.slot_keeper import SEGMENT_AGE_S, pump_frames
+
+    def wire(f: XLogData) -> bytes:
+        return _msg(b"d", b"w" + struct.pack(">QQq", f.wal_start, f.wal_end, 0) + f.payload)
+
+    wal_dir = str(tmp_path / "wal")
+    os.makedirs(wal_dir)
+    ours, server = socket.socketpair()
+    conn = ReplicationConnection(ours)
+    errors = []
+
+    def run():
+        try:
+            pump_frames(conn.frames(), wal_dir, conn.send_standby_status, batch_rows=1000)
+        except ReplicationError:
+            pass  # the server side hangs up at the end
+        except Exception as exc:  # noqa: BLE001 — surfaced below
+            errors.append(exc)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    frames = [XLogData(5, 5, 0, relation_msg()), *_txn_frames(9, [("1", "1.0")])]
+    sent = time.monotonic()
+    server.sendall(b"".join(wire(f) for f in frames))
+    server.settimeout(10)
+    buf = b""
+    while len(buf) < 5 or len(buf) < 1 + struct.unpack_from(">i", buf, 1)[0]:
+        buf += server.recv(4096)
+    acked_after = time.monotonic() - sent
+    try:
+        assert buf[:1] == b"d" and buf[5:6] == b"r"
+        assert struct.unpack_from(">Q", buf, 6)[0] == 13  # commit end 12, + 1
+        assert [(s, e) for s, e, _ in lsn_stream.list_segments(wal_dir)] == [(1, 12)]
+        assert SEGMENT_AGE_S <= acked_after < SEGMENT_AGE_S + 2.0
+    finally:
+        server.close()
+        t.join(timeout=5)
+        conn.close()
+    assert not errors, errors
+
+
+def test_pump_cuts_a_received_burst_by_rows(tmp_path, monkeypatch):
+    """1,000 one-row commits received at once, each committed long ago
+    (commit_ts at the PostgreSQL epoch): the age bound runs from local
+    receipt, not from commit_ts, so the pump cuts by rows alone — one
+    segment of 1,000 rows, not one per transaction."""
+    import os
+    import time
+
+    from go_pq_cdc_spark.sources import lsn_stream
+    from go_pq_cdc_spark.sources.pgoutput import XLogData
+    from go_pq_cdc_spark.sources.slot_keeper import pump_frames
+
+    wal_dir = str(tmp_path / "wal")
+    os.makedirs(wal_dir)
+    frames = [XLogData(5, 5, 0, relation_msg())]
+    for i in range(1001):
+        frames += _txn_frames(10 + 4 * i, [(str(i), "1.0")])
+    # every frame arrives at one instant
+    monkeypatch.setattr(time, "monotonic", lambda: 1000.0)
+    pump_frames(frames, wal_dir, batch_rows=1000)
+    segs = lsn_stream.list_segments(wal_dir)
+    import pyarrow.parquet as pq
+
+    assert [pq.ParquetFile(p).metadata.num_rows for _s, _e, p in segs] == [1000, 1]
+
+
+def test_segment_is_durable_before_its_ack(tmp_path, monkeypatch):
+    """A segment's bytes and its directory entry reach the disk before
+    the pump acks its end LSN (the server may then drop that WAL):
+    fsync(file) < rename < fsync(dir) < standby status."""
+    import os
+    import stat
+
+    from go_pq_cdc_spark.sources.pgoutput import XLogData
+    from go_pq_cdc_spark.sources.slot_keeper import pump_frames
+
+    wal_dir = str(tmp_path / "wal")
+    os.makedirs(wal_dir)
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        kind = "dir" if stat.S_ISDIR(os.fstat(fd).st_mode) else "file"
+        events.append(f"fsync({kind})")
+        real_fsync(fd)
+
+    def replace(src, dst):
+        events.append("replace")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    frames = [XLogData(5, 5, 0, relation_msg()), *_txn_frames(9, [("1", "1.0")])]
+    pump_frames(frames, wal_dir, send_status=lambda *_a: events.append("ack"),
+                batch_rows=1, record_schema=False)
+    # the segment's flush, then the shutdown ack
+    assert events == ["fsync(file)", "replace", "fsync(dir)", "ack", "ack"]
+
+
+def test_frames_on_a_closed_connection_raise():
+    """A connection closed by another thread ends `frames()` with a
+    ReplicationError before it waits on the socket."""
+    ours, server = socket.socketpair()
+    conn = ReplicationConnection(ours)
+    conn.close()
+    server.close()
+    with pytest.raises(ReplicationError, match="connection closed"):
+        next(conn.frames())
